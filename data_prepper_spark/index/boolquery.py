@@ -739,13 +739,6 @@ def damerau_within(
         t = terms[ti]
         mat[r, : len(t)] = [code[ord(c)] for c in t]
     q = np.fromiter((code[ord(c)] for c in query), np.int64, qlen)
-    # L[c, j] = last column j' in 1..j-1 with q[j'-1] == c (0 = none) —
-    # shared across candidates (the query is common)
-    L = np.zeros((n_sym, qlen + 1), dtype=np.int64)
-    for j in range(1, qlen + 1):
-        L[:, j] = L[:, j - 1]
-        if j >= 2:
-            L[q[j - 2], j] = j - 1
     nc = cand.size
     maxdist = maxlen + qlen
     D = np.full((nc, maxlen + 2, qlen + 2), maxdist, dtype=np.int64)

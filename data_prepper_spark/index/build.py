@@ -44,8 +44,6 @@ from ..hashing import xxh64_signed
 from .codec import (
     PFOR_TAG,
     VARINT_TAG,
-    encode_docids,
-    encode_uints,
     pack_f32,
     pack_i64,
     pfor_encode_runs,
@@ -65,6 +63,91 @@ class BuildKilled(RuntimeError):
     """Raised by test fault injectors to simulate a mid-build crash."""
 
 
+def _cuts(buf: bytes, off) -> list[bytes]:
+    """``[buf[off[i]:off[i+1]] ...]`` — per-row slices of a batch-wide
+    byte stream."""
+    off = off.tolist()
+    return [buf[a:z] for a, z in zip(off[:-1], off[1:])]
+
+
+def run_bounds(
+    tf: np.ndarray, dl: np.ndarray, runs: np.ndarray,
+    avgdl: float, k1: float, b: float, block_size: int,
+):
+    """Block-max skip data for postings concatenated run by run (one run
+    = one slice row, ``runs`` = each run's start index, no empty runs).
+
+    The BM25 per-posting upper bound factor lives here and only here:
+    ``tf·(k1+1) / (tf + k1·(1-b+b·dl/avgdl))``, idf-independent, rounded
+    UP to float32 (nextafter) so the stored bound never undercuts the
+    float64 score.  Blocks restart at each run, and one global
+    ``reduceat`` takes every run's block maxima.
+
+    Returns ``(gbs, nb_off, cols)``: the global start index of every
+    block, the exclusive cumsum of the runs' block counts (run *i* owns
+    blocks ``nb_off[i]:nb_off[i+1]``), and the ``block_ubs`` / ``max_ub``
+    slice columns."""
+    norm = tf.astype(np.float64) * (k1 + 1.0) / (
+        tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
+    )
+    ub32 = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
+    sizes = np.diff(runs, append=tf.size)
+    nb = (sizes + block_size - 1) // block_size
+    nb_off = np.concatenate(([0], np.cumsum(nb)))
+    within = np.arange(nb_off[-1]) - np.repeat(nb_off[:-1], nb)
+    gbs = np.repeat(runs, nb) + within * block_size
+    block_ubs = np.maximum.reduceat(ub32, gbs)
+    cols = {
+        "block_ubs": _cuts(pack_f32(block_ubs), nb_off * 4),
+        "max_ub": np.maximum.reduceat(block_ubs, nb_off[:-1]).astype(np.float32),
+    }
+    return gbs, nb_off, cols
+
+
+def encode_runs(
+    d: np.ndarray, tf: np.ndarray, dl: np.ndarray, runs: np.ndarray,
+    avgdl: float, k1: float, b: float, block_size: int, codec: str,
+) -> dict:
+    """Encoded slice columns (``df_slice`` … ``n_blocks``) for postings
+    concatenated run by run, docIDs sorted within each run — the
+    group-at-once encoder shared by the build and purge kernels (the
+    merge kernel needs only :func:`run_bounds`).
+
+    docID deltas (restarting at each run), tfs and dls are each encoded
+    in ONE vectorized pass over all runs; each row's blob is then a byte
+    slice of the stream — LEB128 is per-value self-delimiting, and the
+    PFor kernel (codec.pfor_encode_runs) restarts its 128-value blocks at
+    every run boundary, so in both codecs the concatenation of per-run
+    encodings IS the batch encoding.  Byte-identical to encoding each run
+    alone with ``encode_docids`` / ``encode_uints``."""
+    gbs, nb_off, bounds = run_bounds(tf, dl, runs, avgdl, k1, b, block_size)
+    u = d.astype(np.uint64) + np.uint64(1 << 63)  # signed→unsigned order
+    stream = np.empty_like(u)
+    stream[0] = u[0]
+    stream[1:] = u[1:] - u[:-1]
+    stream[runs] = u[runs]  # delta restarts at each run boundary
+    tag = PFOR_TAG if codec == "pfor" else VARINT_TAG
+    blobs = []
+    for vals in (stream, tf.astype(np.uint64), dl.astype(np.uint64)):
+        if codec == "pfor":
+            buf, ends = pfor_encode_runs(vals, runs)
+        else:
+            out, vends = varint_encode_arr(vals)
+            # per-run byte ranges = value-end offsets at the run ends
+            buf, ends = out.tobytes(), vends[np.append(runs[1:], vals.size) - 1]
+        blobs.append([tag + x for x in _cuts(buf, np.concatenate(([0], ends)))])
+    return {
+        "df_slice": np.diff(runs, append=d.size).astype(np.int64),
+        "cf_slice": np.add.reduceat(tf, runs).astype(np.int64),
+        "doc_ids": blobs[0],
+        "tfs": blobs[1],
+        "dls": blobs[2],
+        "block_firsts": _cuts(pack_i64(d[gbs]), nb_off * 8),
+        **bounds,
+        "n_blocks": np.diff(nb_off).astype(np.int32),
+    }
+
+
 def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: str = "varint", positions: bool = False):
     """applyInPandas kernel over a COARSE (term_bucket, range_id) group:
     emits one encoded slice row per term present in the group.
@@ -78,16 +161,9 @@ def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: s
     Skew stays bounded: a group holds ~|tokens|/(buckets×ranges) rows by
     construction, head terms included (range_id splits them).
 
-    BOTH codecs encode GROUP-AT-ONCE: docID deltas (restarting at each
-    term-run boundary), tfs and dls are each encoded in one vectorized
-    pass over the whole group, then the per-term blobs are byte-slices of
-    the three streams — LEB128 is per-value self-delimiting, and the PFor
-    kernel (codec.pfor_encode_runs) restarts its 128-value blocks at
-    every run boundary, so in both cases the concatenation of per-term
-    encodings IS the whole-group encoding.  This drops per-term
-    Python/numpy call overhead — previously ~50 numpy calls per term,
-    dominating the encode stage on large vocabularies — to 5 byte-slices
-    per term.  Output is byte-identical to the per-term loop (pinned by
+    The group encodes GROUP-AT-ONCE through :func:`encode_runs`, one run
+    per term, so per-term Python work is a few byte-slices (pinned
+    against per-term encodes by
     tests/test_codec.py::test_encode_kernel_vectorized_identity and
     ::test_encode_kernel_pfor_identity)."""
 
@@ -103,139 +179,26 @@ def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: s
         # decoded tfs, so nothing extra is stored.
         cols = cols + ["positions"]
 
-    def _prep(pdf: pd.DataFrame):
-        terms = pdf["term_id"].to_numpy(np.int64)
-        d = pdf["doc_id"].to_numpy(np.int64)
-        tf = pdf["tf"].to_numpy(np.int64)
-        dl = pdf["dl"].to_numpy(np.int64)
-        order = np.lexsort((d, terms))
-        terms, d, tf, dl = terms[order], d[order], tf[order], dl[order]
-        pos_blobs = (
-            pdf["pos_blob"].to_numpy()[order] if positions else None
-        )
-        # per-posting score upper bound factor (idf-independent, BMW-style)
-        norm = tf.astype(np.float64) * (k1 + 1.0) / (
-            tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
-        )
-        ub32 = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
-        # term run boundaries
-        new_run = np.empty(len(terms), dtype=bool)
-        new_run[0] = True
-        new_run[1:] = terms[1:] != terms[:-1]
-        runs = np.flatnonzero(new_run)
-        ends = np.append(runs[1:], len(terms))
-        return terms, d, tf, dl, ub32, runs, ends, pos_blobs
-
-    def encode_loop(pdf: pd.DataFrame) -> pd.DataFrame:
-        if not len(pdf):
-            return pd.DataFrame([], columns=cols)
-        terms, d, tf, dl, ub32, runs, ends, pos_blobs = _prep(pdf)
-        range_id = np.int32(pdf["range_id"].iloc[0])
-        rows = []
-        for s, e in zip(runs, ends):
-            td, ttf, tdl, tub = d[s:e], tf[s:e], dl[s:e], ub32[s:e]
-            starts = np.arange(0, td.size, block_size)
-            block_ubs = np.maximum.reduceat(tub, starts)
-            row = (
-                np.int64(terms[s]),
-                range_id,
-                np.int64(td.size),
-                np.int64(ttf.sum()),
-                encode_docids(td, codec),
-                encode_uints(ttf.astype(np.uint64), codec),
-                encode_uints(tdl.astype(np.uint64), codec),
-                pack_i64(td[starts]),
-                pack_f32(block_ubs),
-                np.float32(block_ubs.max()),
-                np.int32(starts.size),
-            )
-            if positions:
-                row = row + (VARINT_TAG + b"".join(pos_blobs[s:e]),)
-            rows.append(row)
-        return pd.DataFrame(rows, columns=cols)
-
     def encode_vectorized(pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(pdf):
             return pd.DataFrame([], columns=cols)
-        terms, d, tf, dl, ub32, runs, ends, pos_blobs = _prep(pdf)
-        n_terms = runs.size
-        sizes = ends - runs
-
-        # --- the three posting streams, one vectorized pass each ---
-        u = d.astype(np.uint64) + np.uint64(1 << 63)  # signed→unsigned order
-        stream = np.empty_like(u)
-        stream[0] = u[0]
-        stream[1:] = u[1:] - u[:-1]
-        stream[runs] = u[runs]  # delta restarts at each term-run boundary
-        if codec == "pfor":
-            # PFor blocks restart at run boundaries, so per-term blobs are
-            # byte slices of the group-wide streams (codec.pfor_encode_runs)
-            doc_bytes, doc_e = pfor_encode_runs(stream, runs)
-            tf_bytes, tf_e = pfor_encode_runs(tf.astype(np.uint64), runs)
-            dl_bytes, dl_e = pfor_encode_runs(dl.astype(np.uint64), runs)
-            tag = PFOR_TAG
-        else:
-            doc_out, doc_ends = varint_encode_arr(stream)
-            tf_out, tf_ends = varint_encode_arr(tf.astype(np.uint64))
-            dl_out, dl_ends = varint_encode_arr(dl.astype(np.uint64))
-            doc_bytes, tf_bytes, dl_bytes = (
-                doc_out.tobytes(), tf_out.tobytes(), dl_out.tobytes()
-            )
-            # per-term byte ranges = value-end offsets at the run boundaries
-            last = ends - 1
-            doc_e = doc_ends[last]
-            tf_e = tf_ends[last]
-            dl_e = dl_ends[last]
-            tag = VARINT_TAG
-
-        # --- block-max skip metadata, one global reduceat ---
-        nb = (sizes + block_size - 1) // block_size
-        nb_off = np.concatenate(([0], np.cumsum(nb)))
-        n_blocks_total = int(nb_off[-1])
-        within = np.arange(n_blocks_total) - np.repeat(nb_off[:-1], nb)
-        gbs = np.repeat(runs, nb) + within * block_size  # global block starts
-        block_ubs_all = np.maximum.reduceat(ub32, gbs)
-        firsts_bytes = pack_i64(d[gbs])
-        ubs_bytes = pack_f32(block_ubs_all)
-        max_ub = np.maximum.reduceat(block_ubs_all, nb_off[:-1])
-        cf = np.add.reduceat(tf, runs)
-
-        pos_col = (
-            {"positions": [
+        terms = pdf["term_id"].to_numpy(np.int64)
+        d = pdf["doc_id"].to_numpy(np.int64)
+        order = np.lexsort((d, terms))
+        terms, d = terms[order], d[order]
+        tf = pdf["tf"].to_numpy(np.int64)[order]
+        dl = pdf["dl"].to_numpy(np.int64)[order]
+        runs = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])  # term runs
+        out = encode_runs(d, tf, dl, runs, avgdl, k1, b, block_size, codec)
+        if positions:
+            pos_blobs = pdf["pos_blob"].to_numpy()[order]
+            ends = np.append(runs[1:], d.size)
+            out["positions"] = [
                 VARINT_TAG + b"".join(pos_blobs[s:e]) for s, e in zip(runs, ends)
-            ]}
-            if positions
-            else {}
-        )
-        doc_b = np.concatenate(([0], doc_e[:-1])).tolist()
-        tf_b = np.concatenate(([0], tf_e[:-1])).tolist()
-        dl_b = np.concatenate(([0], dl_e[:-1])).tolist()
-        doc_el, tf_el, dl_el = doc_e.tolist(), tf_e.tolist(), dl_e.tolist()
-        f_off = (nb_off * 8).tolist()
-        u_off = (nb_off * 4).tolist()
-        return pd.DataFrame(
-            {
-                "term_id": terms[runs],
-                "range_id": np.full(n_terms, np.int32(pdf["range_id"].iloc[0])),
-                "df_slice": sizes.astype(np.int64),
-                "cf_slice": cf.astype(np.int64),
-                "doc_ids": [
-                    tag + doc_bytes[s:e] for s, e in zip(doc_b, doc_el)
-                ],
-                "tfs": [tag + tf_bytes[s:e] for s, e in zip(tf_b, tf_el)],
-                "dls": [tag + dl_bytes[s:e] for s, e in zip(dl_b, dl_el)],
-                "block_firsts": [
-                    firsts_bytes[f_off[i] : f_off[i + 1]] for i in range(n_terms)
-                ],
-                "block_ubs": [
-                    ubs_bytes[u_off[i] : u_off[i + 1]] for i in range(n_terms)
-                ],
-                "max_ub": max_ub.astype(np.float32),
-                "n_blocks": nb.astype(np.int32),
-                **pos_col,
-            },
-            columns=cols,
-        )
+            ]
+        out["term_id"] = terms[runs]
+        out["range_id"] = np.full(runs.size, np.int32(pdf["range_id"].iloc[0]))
+        return pd.DataFrame(out, columns=cols)
 
     return encode_vectorized
 

@@ -418,60 +418,62 @@ def _pfor_decode_block(b_arr: np.ndarray, off: int) -> tuple[np.ndarray, int]:
     return vals, off
 
 
+def _ranges(starts: np.ndarray, lens: np.ndarray) -> np.ndarray:
+    """Concatenated ``arange(starts[i], starts[i] + lens[i])``."""
+    return np.repeat(starts - (np.cumsum(lens) - lens), lens) + np.arange(lens.sum())
+
+
 def pfor_decode_indexed(
     b_arr: np.ndarray, offs: np.ndarray, cum: np.ndarray
 ) -> np.ndarray:
-    """Full-stream PFor decode, vectorized: full (128-value) blocks of
-    equal width unpack in ONE batched np.unpackbits per width (their
-    packed payload is exactly 16·b bytes — no per-block padding), tail
-    blocks decode individually, and ALL full-block exception varints
-    decode in one gathered LEB128 pass.  Replaces the per-block Python
-    loop that made a stopword's full decode (the BMW MAX_SEG brute
-    fallback) 2 s at 1M docs."""
-    if b_arr.size == 0:
+    """Full-stream PFor decode, every block at once (full and tail
+    blocks alike, no per-block Python): each value's ``b`` bits are read
+    from a 9-byte little-endian window at its first packed byte, and ALL
+    exception varints decode in one gathered LEB128 pass.  The stream may
+    be many streams' blocks back to back (codec.decode_uints_batch).
+    Values are processed in slabs so transient memory stays bounded.
+    Replaces the per-block loop that made a stopword's full decode (the
+    BMW MAX_SEG brute fallback) 2 s at 1M docs."""
+    if cum.size == 0:
         return np.empty(0, dtype=np.uint64)
     widths = b_arr[offs].astype(np.int64)
-    ns = np.diff(np.concatenate(([np.int64(0)], cum)))
+    ns = np.diff(cum, prepend=0)
     n_excs = b_arr[offs + 2].astype(np.int64)
-    starts = np.concatenate(([np.int64(0)], cum[:-1]))
+    starts = cum - ns
     packed_off = offs + 3 + n_excs
-    packed_len = (ns * widths + 7) // 8
-    out = np.zeros(int(cum[-1]), dtype=np.uint64)
-    full = np.flatnonzero(ns == _PFOR_BLOCK)
-    for b in np.unique(widths[full]):
-        if b == 0:
-            continue
-        sel = full[widths[full] == b]
-        bufs = np.concatenate(
-            [b_arr[packed_off[i] : packed_off[i] + packed_len[i]] for i in sel]
+    out = np.empty(int(cum[-1]), dtype=np.uint64)
+    pad = np.concatenate((b_arr, np.zeros(9, dtype=np.uint8)))
+    windows = np.lib.stride_tricks.as_strided(
+        pad, shape=(b_arr.size + 1, 8), strides=(1, 1), writeable=False
+    )
+    blk = np.repeat(np.arange(offs.size), ns)
+    SLAB = 1 << 18
+    for a in range(0, out.size, SLAB):
+        vb = blk[a : a + SLAB]
+        w = widths[vb]
+        bit = packed_off[vb] * 8 + (np.arange(a, a + vb.size) - starts[vb]) * w
+        q, sh = bit >> 3, (bit & 7).astype(np.uint64)
+        vals = windows[q].view("<u8").ravel() >> sh
+        # bits past the 8-byte window come from a 9th byte (b + shift > 64)
+        ninth = pad[q + 8].astype(np.uint64) << (np.uint64(64) - sh) % np.uint64(64)
+        vals |= np.where(sh > 0, ninth, np.uint64(0))
+        vals &= np.where(
+            w >= 64,
+            np.uint64(0xFFFFFFFFFFFFFFFF),
+            (np.uint64(1) << np.minimum(w, 63).astype(np.uint64)) - np.uint64(1),
         )
-        bits = np.unpackbits(bufs, bitorder="little").reshape(
-            sel.size, _PFOR_BLOCK, int(b)
-        )
-        vals = np.zeros((sel.size, _PFOR_BLOCK), dtype=np.uint64)
-        for j in range(int(b)):
-            vals |= bits[:, :, j].astype(np.uint64) << np.uint64(j)
-        pos = (starts[sel][:, None] + np.arange(_PFOR_BLOCK)[None, :]).ravel()
-        out[pos] = vals.ravel()
-    for i in np.flatnonzero(ns != _PFOR_BLOCK):
-        vals, _ = _pfor_decode_block(b_arr, int(offs[i]))
-        out[int(starts[i]) : int(cum[i])] = vals
-    exc_blocks = np.flatnonzero((n_excs > 0) & (ns == _PFOR_BLOCK))
-    if exc_blocks.size:
-        next_off = np.concatenate((offs[1:], [np.int64(b_arr.size)]))
-        parts, pos_parts, width_rep = [], [], []
-        for i in exc_blocks:
-            lo = int(packed_off[i] + packed_len[i])
-            parts.append(b_arr[lo : int(next_off[i])])
-            epos = b_arr[
-                int(offs[i]) + 3 : int(offs[i]) + 3 + int(n_excs[i])
-            ].astype(np.int64)
-            pos_parts.append(int(starts[i]) + epos)
-            width_rep.append(
-                np.full(int(n_excs[i]), widths[i], dtype=np.uint64)
-            )
-        high = varint_decode(np.concatenate(parts).tobytes())
-        out[np.concatenate(pos_parts)] |= high << np.concatenate(width_rep)
+        out[a : a + vb.size] = vals
+    exc = np.flatnonzero(n_excs)
+    if exc.size:
+        ne = n_excs[exc]
+        epos = b_arr[_ranges(offs[exc] + 3, ne)].astype(np.int64)
+        # a block's exception varints run from its packed end to the next block
+        v_start = packed_off[exc] + (ns[exc] * widths[exc] + 7) // 8
+        v_end = np.append(offs[1:], b_arr.size)[exc]
+        high = varint_decode(b_arr[_ranges(v_start, v_end - v_start)])
+        out[np.repeat(starts[exc], ne) + epos] |= high << np.repeat(
+            widths[exc], ne
+        ).astype(np.uint64)
     return out
 
 
@@ -570,6 +572,60 @@ def decode_docids(buf: bytes) -> np.ndarray:
         return np.empty(0, dtype=np.int64)
     u = np.cumsum(stream, dtype=np.uint64)
     return (u - _BIAS).astype(np.int64)
+
+
+def decode_uints_batch(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """Decode many tagged uint streams (one per row) in one pass.
+
+    Returns ``(values, counts)``: every row's values concatenated in row
+    order, and each row's value count.  Rows are grouped by tag and each
+    group decodes as ONE stream: LEB128 values are self-delimiting and
+    PFor blocks never span streams, so a group's concatenated payloads
+    are themselves a valid stream of that codec.  Row *i* equals
+    ``decode_uints(bufs[i])``."""
+    n = len(bufs)
+    lens = np.fromiter(map(len, bufs), np.int64, n)
+    raw = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    starts = np.cumsum(lens) - lens
+    nonempty = lens > 0
+    tags = np.full(n, _TAG_VARINT, dtype=np.uint8)
+    tags[nonempty] = raw[starts[nonempty]]
+    row_of = np.repeat(np.arange(n), lens)
+    payload = np.ones(raw.size, dtype=bool)
+    payload[starts[nonempty]] = False  # drop the tag bytes
+    counts = np.zeros(n, dtype=np.int64)
+    groups = []
+    for tag in np.unique(tags):
+        sel = payload & (tags[row_of] == tag)
+        b, rows = raw[sel], row_of[sel]
+        if tag == _TAG_PFOR:
+            offs, cum = pfor_block_index(b)
+            vals = pfor_decode_indexed(b, offs, cum)
+            np.add.at(counts, rows[offs], np.diff(cum, prepend=0))
+        else:
+            vals = varint_decode(b)
+            counts += np.bincount(rows[(b & 0x80) == 0], minlength=n)
+        groups.append((tags == tag, vals))
+    if len(groups) == 1:
+        return groups[0][1], counts
+    # mixed codecs: scatter each group's values back into row order
+    values = np.empty(int(counts.sum()), dtype=np.uint64)
+    off = np.cumsum(counts) - counts
+    for in_group, vals in groups:
+        values[_ranges(off[in_group], counts[in_group])] = vals
+    return values, counts
+
+
+def decode_docids_batch(bufs) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`decode_docids` over many rows at once → ``(doc_ids,
+    counts)``.  Each row's deltas restart at its first value, so ONE
+    wrapping uint64 cumsum over all rows, minus the running total at each
+    row start, undoes every row's deltas."""
+    stream, counts = decode_uints_batch(bufs)
+    total = np.cumsum(stream, dtype=np.uint64)
+    before = np.concatenate(([np.uint64(0)], total))[np.cumsum(counts) - counts]
+    u = total - np.repeat(before, counts)
+    return (u - _BIAS).astype(np.int64), counts
 
 
 def pack_i64(values: np.ndarray) -> bytes:

@@ -11,20 +11,24 @@ Lucene's delete model, recast on the engine's immutable parquet segments:
   full index until a purge — exactly Lucene's liveDocs bitmap, where
   docFreq still counts deleted docs until segments merge.
 - :func:`purge_deletes` rewrites the index without the deleted docs:
-  posting streams are decoded, masked and re-encoded per slice
-  (mapInPandas — embarrassingly parallel, no shuffle), block-max bounds
-  are recomputed exactly under the post-delete avgdl (they are
-  avgdl-baked, same rule as index/merge.py), and docmeta / stats /
-  termstats are rebuilt.  The purged index is rank-identical to a fresh
-  build over the surviving corpus (pinned by tests/test_deletes.py and
-  the ft_purged_bm25 oracle entry).
+  posting streams are decoded, masked and re-encoded (mapInPandas —
+  embarrassingly parallel, no shuffle), block-max bounds are recomputed
+  exactly under the post-delete avgdl (they are avgdl-baked, same rule
+  as index/merge.py), and docmeta / stats / termstats are rebuilt.  The
+  kernel works GROUP-AT-ONCE over each Arrow batch of slice rows: one
+  batch decode per stream, one cumsum to undo every row's docID deltas,
+  one membership mask, and one re-encode with delta and block restarts
+  at row boundaries (build.encode_runs, the build's own encoder) — no
+  per-row Python beyond byte slicing.  The purged index is
+  rank-identical to a fresh build over the surviving corpus (pinned by
+  tests/test_deletes.py and the ft_purged_bm25 oracle entry).
 
 Scale notes: tombstones are bounded by the delete rate, not the corpus —
 the searcher ships the sorted doc_id array to range tasks (at a large
 delete backlog, range-partition the tombstone table and cogroup on
 range_id instead; purging is the pressure valve either way).  The purge
 itself touches every posting byte once: decode → mask → encode per
-slice row, no shuffle, partition layout preserved.
+Arrow batch, no shuffle, partition layout preserved.
 
 Reference anchor: the opensearch sink's delete/update bulk actions
 (/root/reference/data-prepper-plugins/opensearch/.../OpenSearchSink.java
@@ -38,22 +42,17 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import SparkSession, functions as F
 
 from ..hashing import xxh64_signed
-from .build import _paths, _write_termstats
+from .build import _cuts, _paths, _write_termstats, encode_runs
 from .codec import (
     VARINT_TAG,
-    decode_docids,
-    decode_uints,
-    encode_docids,
-    encode_uints,
-    pack_f32,
-    pack_i64,
+    decode_docids_batch,
+    decode_uints_batch,
     varint_value_ends,
 )
 from .config import IndexConfig
@@ -130,66 +129,66 @@ def mask_term_slice(s, deleted: np.ndarray):
 
 def _purge_fn(deleted: np.ndarray, cfg: IndexConfig, avgdl: float):
     """mapInPandas kernel: rewrite posting-slice rows without the deleted
-    docs.  Per row: decode the three streams, mask, re-encode with the
-    index codec, recompute block_firsts / block_ubs (exactly, under the
-    POST-delete avgdl — stored bounds are avgdl-baked) / max_ub /
-    n_blocks / df_slice / cf_slice; rows with no survivors drop.  The
-    positions stream (when present) is carried by BYTE slices of the
-    per-doc LEB128 blobs — per-doc boundaries are the decoded tfs, so no
-    re-encode of position deltas is needed."""
-    bs, k1, b, codec = cfg.block_size, cfg.k1, cfg.b, cfg.codec
-    has_pos = cfg.positions
+    docs, group-at-once over each Arrow batch.  The survivors re-encode
+    with the index codec through build.encode_runs, which also recomputes
+    block_firsts / block_ubs (under the POST-delete avgdl — stored bounds
+    are avgdl-baked) / max_ub / n_blocks / df_slice / cf_slice.  Rows
+    with no survivors drop.  The positions stream (when present) is
+    carried by BYTE slices of the per-doc LEB128 blobs — per-doc
+    boundaries are the decoded tfs, so no position is re-encoded.
+    Output is byte-identical to re-encoding each row alone (pinned by
+    tests/test_deletes.py)."""
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 yield pdf
                 continue
-            rows = []
-            for row in pdf.to_dict("records"):
-                d = decode_docids(bytes(row["doc_ids"]))
-                keep = ~_member(d, deleted)
-                if not keep.any():
-                    continue
-                tf = decode_uints(bytes(row["tfs"])).astype(np.int64)
-                dl = decode_uints(bytes(row["dls"])).astype(np.int64)
-                if has_pos:
-                    stream = np.frombuffer(bytes(row["positions"]), dtype=np.uint8)[1:]
-                    ends = varint_value_ends(stream)  # inclusive terminator idx
-                    vend = np.cumsum(tf)  # per-doc value counts → value idx
-                    byte_end = ends[vend - 1].astype(np.int64) + 1  # exclusive
-                    byte_start = np.concatenate(([0], byte_end[:-1]))
-                    sb = stream.tobytes()
-                    pos_blob = VARINT_TAG + b"".join(
-                        sb[a:z]
-                        for a, z, kp in zip(byte_start, byte_end, keep)
-                        if kp
-                    )
-                d, tf, dl = d[keep], tf[keep], dl[keep]
-                norm = tf.astype(np.float64) * (k1 + 1.0) / (
-                    tf + k1 * (1.0 - b + b * dl.astype(np.float64) / avgdl)
+            d, counts = decode_docids_batch(pdf["doc_ids"])
+            tf = decode_uints_batch(pdf["tfs"])[0].astype(np.int64)
+            dl = decode_uints_batch(pdf["dls"])[0].astype(np.int64)
+            keep = ~_member(d, deleted)
+            row_of = np.repeat(np.arange(len(pdf)), counts)
+            kept = np.bincount(row_of[keep], minlength=len(pdf))
+            out = pdf[kept > 0].copy()
+            if not len(out):
+                yield out
+                continue
+            kept = kept[kept > 0]
+            runs = np.cumsum(kept) - kept
+            cols = encode_runs(
+                d[keep], tf[keep], dl[keep], runs,
+                avgdl, cfg.k1, cfg.b, cfg.block_size, cfg.codec,
+            )
+            if cfg.positions:
+                cols["positions"] = _kept_positions(
+                    pdf["positions"], tf, keep, runs
                 )
-                ub32 = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
-                starts = np.arange(0, d.size, bs)
-                block_ubs = np.maximum.reduceat(ub32, starts)
-                new = dict(row)
-                new.update(
-                    df_slice=np.int64(d.size),
-                    cf_slice=np.int64(tf.sum()),
-                    doc_ids=encode_docids(d, codec),
-                    tfs=encode_uints(tf.astype(np.uint64), codec),
-                    dls=encode_uints(dl.astype(np.uint64), codec),
-                    block_firsts=pack_i64(d[starts]),
-                    block_ubs=pack_f32(block_ubs),
-                    max_ub=np.float32(block_ubs.max()),
-                    n_blocks=np.int32(starts.size),
-                )
-                if has_pos:
-                    new["positions"] = pos_blob
-                rows.append(new)
-            yield pd.DataFrame(rows, columns=list(pdf.columns)) if rows else pdf.iloc[0:0]
+            for c, v in cols.items():
+                out[c] = v
+            yield out
 
     return fn
+
+
+def _kept_positions(blobs, tf, keep, runs) -> list[bytes]:
+    """Positions blobs of the kept postings, one per run of kept postings
+    (``runs`` = run starts).  Every row's payload (after its tag byte)
+    holds ``tf`` LEB128 values per posting, so with tag bytes dropped the
+    batch is one stream whose posting *i* ends at value
+    ``cumsum(tf)[i]``."""
+    raw = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    lens = np.fromiter(map(len, blobs), np.int64, len(blobs))
+    payload = np.ones(raw.size, dtype=bool)
+    payload[(np.cumsum(lens) - lens)[lens > 0]] = False  # tag bytes
+    stream = raw[payload]
+    ends = varint_value_ends(stream)  # inclusive terminator idx
+    byte_end = ends[np.cumsum(tf) - 1].astype(np.int64) + 1  # exclusive
+    nbytes = np.diff(byte_end, prepend=0)
+    kept = stream[np.repeat(keep, nbytes)].tobytes()
+    kb = nbytes[keep]
+    off = np.concatenate(([0], np.cumsum(kb)))[np.append(runs, kb.size)]
+    return [VARINT_TAG + x for x in _cuts(kept, off)]
 
 
 def purge_deletes(

@@ -134,9 +134,9 @@ def _bool_query(searcher, body, k, distributed, tie_round):
         qtext = " ".join(toks)
         kind, spec = next(iter(feats[0].items()))
         if kind == "rank_feature":
-            field = spec.pop("field")
+            shape = {key: v for key, v in spec.items() if key != "field"}
             return search_rank_feature(
-                searcher, qtext, field, spec, k=k,
+                searcher, qtext, spec["field"], shape, k=k,
                 distributed=distributed, tie_round=tie_round)
         field = spec["field"]
         return search_distance_feature(
@@ -238,7 +238,7 @@ def search_dsl(
             searcher, str(opts["value"]), k=k,
             max_edits=int(opts.get("fuzziness", 2)),
             prefix_len=int(opts.get("prefix_length", 0)),
-            transpositions=bool(opts.get("transpositions", False)),
+            transpositions=bool(opts.get("transpositions", True)),
             distributed=distributed, tie_round=tie_round)
     if kind in ("prefix", "wildcard", "regexp"):
         from . import boolquery as bq

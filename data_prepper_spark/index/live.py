@@ -40,7 +40,7 @@ from .build import build_oneshot
 from .config import IndexConfig
 from .deletes import delete_docs, purge_deletes, read_tombstones
 from .ledger import Ledger
-from .merge import merge_indexes
+from .merge import _read_stats, merge_indexes
 
 
 def _read_current(index_dir: str) -> tuple[int, int] | None:
@@ -202,7 +202,7 @@ def _fold(
         by micro-batch order);
       - on-disk tombstones of each source (live_delete_docs) are applied;
       - older copies + tombstoned docs are physically purged
-        (index/deletes.py purge_deletes — per-slice decode→mask→encode,
+        (index/deletes.py purge_deletes — group-at-once decode→mask→encode,
         no shuffle) so the merge inputs are disjoint doc spaces again and
         merge_indexes' invariant holds.
     """
@@ -234,9 +234,9 @@ def _fold(
         )
         if has_base and i == 0:
             superseded = _superseded_in_base(spark, src, newer)
-            src_n = (
-                spark.read.parquet(os.path.join(src, "docmeta")).count()
-            )
+            # every writer (build, purge, merge) stores the docmeta row
+            # count as n_docs, so the base is counted without a Spark job
+            src_n = int(_read_stats(src)["n_docs"])
         else:
             superseded = np.intersect1d(
                 delta_sets[d], newer, assume_unique=False

@@ -13,9 +13,12 @@ The ONE stored quantity that depends on corpus-wide state is the
 per-block score upper bound (block_ubs / max_ub, baked at build time
 with that index's avgdl).  Under the merged avgdl the old bounds are not
 upper bounds in general (avgdl↑ ⇒ per-posting norm↑), which would break
-BMW pruning exactness — so the merge decodes just the tf/dl streams per
-slice and recomputes the bounds exactly, vectorized, embarrassingly
-parallel, with the docID stream passed through untouched.  Rank identity
+BMW pruning exactness — so the merge decodes just the tf/dl streams and
+recomputes the bounds exactly, with the docID stream passed through
+untouched.  The kernel works GROUP-AT-ONCE over each Arrow batch of
+slice rows: one batch decode per stream (codec.decode_uints_batch) and
+one reduceat over every row's blocks, through the same bound code as
+the build (build.run_bounds) — no per-row Python.  Rank identity
 of the merged index vs a from-scratch build over the union corpus is
 pinned by tests/test_merge.py and the ft_merged_bm25 oracle entry.
 
@@ -44,8 +47,8 @@ import pyarrow.dataset as pads
 from pyspark.sql import SparkSession, functions as F
 
 from ..hashing import xxh64_signed
-from .build import _paths, _write_termstats
-from .codec import decode_uints, pack_f32
+from .build import _paths, _write_termstats, run_bounds
+from .codec import decode_uints_batch
 from .config import IndexConfig
 from .ledger import Ledger
 
@@ -56,28 +59,25 @@ def _read_stats(index_dir: str) -> dict:
 
 def recompute_ubs_fn(avgdl: float, k1: float, b: float, block_size: int):
     """mapInPandas kernel: exact per-block upper bounds under the merged
-    corpus's avgdl (same nextafter-float32 inflation as the build kernel,
-    so merged bounds are bit-compatible with built bounds)."""
+    corpus's avgdl, GROUP-AT-ONCE over each Arrow batch — the batch's tf
+    and dl streams decode in one pass each (codec.decode_uints_batch) and
+    build.run_bounds recomputes every row's block_ubs / max_ub with one
+    reduceat (the build's own bound code, so merged bounds are
+    bit-compatible with built bounds).  The docID stream passes through
+    untouched."""
 
     def fn(batches):
         for pdf in batches:
             if not len(pdf):
                 yield pdf
                 continue
-            ubs = []
-            mx = np.empty(len(pdf), dtype=np.float32)
-            for i, (tf_b, dl_b) in enumerate(zip(pdf["tfs"], pdf["dls"])):
-                tf = decode_uints(bytes(tf_b)).astype(np.float64)
-                dl = decode_uints(bytes(dl_b)).astype(np.float64)
-                norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-                ub32 = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
-                starts = np.arange(0, ub32.size, block_size)
-                bubs = np.maximum.reduceat(ub32, starts)
-                ubs.append(pack_f32(bubs))
-                mx[i] = bubs.max()
+            tf, counts = decode_uints_batch(pdf["tfs"])
+            dl = decode_uints_batch(pdf["dls"])[0]
+            runs = np.cumsum(counts) - counts
+            cols = run_bounds(tf, dl, runs, avgdl, k1, b, block_size)[2]
             out = pdf.copy()
-            out["block_ubs"] = ubs
-            out["max_ub"] = mx
+            out["block_ubs"] = cols["block_ubs"]
+            out["max_ub"] = cols["max_ub"]
             yield out
 
     return fn

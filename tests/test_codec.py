@@ -81,16 +81,13 @@ def _fake_group(rng, n_rows, n_terms, range_id=3):
 
 
 def test_encode_kernel_vectorized_identity():
-    """The group-at-once varint kernel must emit byte-identical rows to the
-    per-term loop — same blobs, same stats, same row order."""
+    """The group-at-once varint kernel must emit, for every term, the rows
+    a per-term encode gives — same blobs, same stats.  Block size 4 forces
+    multi-block terms."""
     from data_prepper_spark.index.build import encode_slice_fn
 
     rng = np.random.default_rng(7)
     vec = encode_slice_fn(142.7, 1.2, 0.75, block_size=4, codec="varint")
-    # the loop path is what codec='pfor' uses; rebuild it with varint blobs
-    # by calling the underlying loop via a pfor fn's closure is not possible,
-    # so pin identity through the public surface: encode with block sizes
-    # that force multi-block terms and compare against a hand loop.
     from data_prepper_spark.index.codec import (
         encode_docids,
         encode_uints,
@@ -140,9 +137,9 @@ def test_encode_kernel_vectorized_identity():
 
 
 def test_encode_kernel_pfor_identity():
-    """The group-at-once PFor kernel (codec='pfor' now uses
-    encode_vectorized via pfor_encode_runs) must emit per-term blobs
-    byte-identical to a straight per-term pfor re-encode."""
+    """The group-at-once PFor kernel (blobs sliced out of one
+    pfor_encode_runs pass) must emit per-term blobs byte-identical to a
+    straight per-term pfor re-encode."""
     from data_prepper_spark.index.build import encode_slice_fn
     from data_prepper_spark.index.codec import encode_docids, encode_uints
 
@@ -246,3 +243,41 @@ def test_pfor_vectorized_identity():
         a = pfor_encode(x)
         assert a == _pfor_encode_block_loop(x)
         assert np.array_equal(pfor_decode(a), x)
+
+
+def test_decode_batch_matches_per_row_decode():
+    """decode_uints_batch / decode_docids_batch return every row's values
+    in row order plus per-row counts, equal to decoding row by row —
+    across both codecs mixed in one batch, empty payloads (tag only),
+    empty blobs, multi-block PFor rows and 64-bit docIDs."""
+    from data_prepper_spark.index.codec import (
+        decode_docids,
+        decode_docids_batch,
+        decode_uints,
+        decode_uints_batch,
+        encode_docids,
+        encode_uints,
+    )
+
+    rng = np.random.default_rng(31)
+    sizes = [0, 1, 5, 127, 128, 129, 300, 0, 2, 1000]
+    for codecs in (["varint"], ["pfor"], ["varint", "pfor"]):
+        ubufs, dbufs = [], []
+        for i, n in enumerate(sizes):
+            c = codecs[i % len(codecs)]
+            hi = 2 ** int(rng.integers(1, 64))
+            ubufs.append(encode_uints(rng.integers(0, hi, size=n, dtype=np.uint64), c))
+            d = np.sort(rng.integers(-(2**63), 2**63 - 1, size=n, dtype=np.int64))
+            dbufs.append(encode_docids(d, c))
+        ubufs.append(b"")
+        vals, counts = decode_uints_batch(ubufs)
+        per_row = [decode_uints(x) for x in ubufs]
+        assert counts.tolist() == [r.size for r in per_row]
+        assert np.array_equal(vals, np.concatenate(per_row))
+        ids, counts = decode_docids_batch(dbufs)
+        per_row = [decode_docids(x) for x in dbufs]
+        assert counts.tolist() == [r.size for r in per_row]
+        assert ids.dtype == np.int64
+        assert np.array_equal(ids, np.concatenate(per_row))
+    vals, counts = decode_uints_batch([])
+    assert vals.size == 0 and counts.size == 0

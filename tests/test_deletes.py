@@ -177,3 +177,132 @@ def test_purge_positional_phrase(spark, tiny_corpus_path, workdir):
         drv = phrase_topk(s_tomb, ph, k=10, distributed=False)
         dst = phrase_topk(s_tomb, ph, k=10, distributed=True)
         assert [d for d, _ in drv] == [d for d, _ in dst], ph
+
+
+# ---- purge kernel: group-at-once vs a per-row reference (no Spark) ----
+
+
+def _slice_batch(rng, codec, positions, block_size=4, n_tok=3000):
+    """Encoded posting-slice rows as a mapInPandas batch sees them: the
+    build kernel's output plus the table's partition columns.  Term
+    sizes span 1 posting to many blocks."""
+    import pandas as pd
+
+    from data_prepper_spark.index.build import encode_slice_fn
+    from data_prepper_spark.index.codec import varint_encode
+
+    docs = rng.integers(-(2**62), 2**62, size=400, dtype=np.int64)
+    dls = rng.integers(5, 900, size=docs.size)
+    terms = rng.integers(-(2**62), 2**62, size=60, dtype=np.int64)
+    # skewed term choice: a few head terms, a long tail of 1-2 postings
+    t = terms[np.minimum(rng.geometric(0.08, size=n_tok) - 1, terms.size - 1)]
+    di = rng.integers(0, docs.size, size=n_tok)
+    pdf = pd.DataFrame({
+        "term_id": t, "range_id": np.full(n_tok, 2, dtype=np.int32),
+        "doc_id": docs[di], "tf": rng.integers(1, 9, size=n_tok),
+        "dl": dls[di],
+    }).drop_duplicates(["term_id", "doc_id"]).reset_index(drop=True)
+    if positions:
+        pdf["pos_blob"] = [
+            varint_encode(rng.integers(0, 300, size=n).astype(np.uint64))
+            for n in pdf["tf"]
+        ]
+    out = encode_slice_fn(150.0, 1.2, 0.75, block_size, codec, positions)(pdf)
+    out["bgroup"] = np.int32(0)
+    out["term_bucket"] = (out["term_id"] % 8).astype(np.int32)
+    return out, np.unique(pdf["doc_id"].to_numpy())
+
+
+def _purge_rows_ref(pdf, deleted, cfg, avgdl):
+    """One row at a time: decode, mask, re-encode with the index codec."""
+    from data_prepper_spark.index.codec import (
+        VARINT_TAG,
+        decode_docids,
+        decode_uints,
+        encode_docids,
+        encode_uints,
+        pack_f32,
+        pack_i64,
+        varint_value_ends,
+    )
+
+    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
+    rows = []
+    for row in pdf.to_dict("records"):
+        d = decode_docids(bytes(row["doc_ids"]))
+        keep = ~np.isin(d, deleted)
+        if not keep.any():
+            continue
+        tf = decode_uints(bytes(row["tfs"])).astype(np.int64)
+        dl = decode_uints(bytes(row["dls"])).astype(np.int64)
+        new = dict(row)
+        if cfg.positions:
+            stream = np.frombuffer(bytes(row["positions"]), dtype=np.uint8)[1:]
+            end = varint_value_ends(stream)[np.cumsum(tf) - 1] + 1
+            start = np.concatenate(([0], end[:-1]))
+            sb = stream.tobytes()
+            new["positions"] = VARINT_TAG + b"".join(
+                sb[a:z] for a, z, kp in zip(start, end, keep) if kp
+            )
+        d, tf, dl = d[keep], tf[keep], dl[keep]
+        norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        ub = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
+        starts = np.arange(0, d.size, bs)
+        block_ubs = np.maximum.reduceat(ub, starts)
+        new.update(
+            df_slice=d.size, cf_slice=tf.sum(),
+            doc_ids=encode_docids(d, cfg.codec),
+            tfs=encode_uints(tf.astype(np.uint64), cfg.codec),
+            dls=encode_uints(dl.astype(np.uint64), cfg.codec),
+            block_firsts=pack_i64(d[starts]), block_ubs=pack_f32(block_ubs),
+            max_ub=np.float32(block_ubs.max()), n_blocks=starts.size,
+        )
+        rows.append(new)
+    return rows
+
+
+@pytest.mark.parametrize("codec", ["varint", "pfor"])
+@pytest.mark.parametrize("positions", [False, True])
+def test_purge_kernel_matches_per_row_reference(codec, positions):
+    """The group-at-once purge kernel emits, byte for byte, what
+    decoding, masking and re-encoding each row alone emits — including
+    rows that lose every posting (dropped), multi-block rows
+    (block_size=4), a batch whose source rows mix both codecs, and an
+    empty batch."""
+    import pandas as pd
+
+    from data_prepper_spark.index.config import IndexConfig
+    from data_prepper_spark.index.deletes import _purge_fn
+
+    rng = np.random.default_rng(41)
+    cfg = IndexConfig(block_size=4, codec=codec, positions=positions)
+    pdf, docs = _slice_batch(rng, codec, positions)
+    other = "pfor" if codec == "varint" else "varint"
+    mixed = pd.concat(
+        [pdf, _slice_batch(rng, other, positions)[0]], ignore_index=True
+    )
+    sizes = pdf["df_slice"].to_numpy()
+    assert sizes.min() == 1 and sizes.max() > 4 * cfg.block_size
+    from data_prepper_spark.index.codec import decode_docids
+
+    # every doc of the first single-posting row goes, so that row drops
+    lone = decode_docids(pdf.loc[np.argmin(sizes), "doc_ids"])
+    deleted = np.unique(np.concatenate([lone, docs[rng.random(docs.size) < 0.2]]))
+    avgdl = 171.25
+    for batch in (pdf, mixed):
+        got = list(_purge_fn(deleted, cfg, avgdl)(iter([batch])))
+        assert len(got) == 1
+        want = _purge_rows_ref(batch, deleted, cfg, avgdl)
+        assert 0 < len(want) < len(batch)
+        assert list(got[0].columns) == list(batch.columns)
+        got_rows = got[0].to_dict("records")
+        assert len(got_rows) == len(want)
+        for g, w in zip(got_rows, want):
+            assert g.keys() == w.keys()
+            for c in w:
+                assert g[c] == w[c], c
+    empty = list(_purge_fn(deleted, cfg, avgdl)(iter([pdf.iloc[0:0]])))
+    assert len(empty) == 1 and len(empty[0]) == 0
+    # nothing deleted → every row re-encodes to itself
+    same = next(_purge_fn(np.empty(0, np.int64), cfg, 150.0)(iter([pdf])))
+    assert same.reset_index(drop=True).equals(pdf)

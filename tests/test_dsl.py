@@ -153,6 +153,37 @@ def test_dsl_scoring_shapes(spark, pos_dir):
         k=10, tie_round=4)
 
 
+def test_dsl_fuzzy_transpositions_default_true(spark, pos_dir):
+    """OpenSearch's fuzzy query counts a transposition as one edit unless
+    the body says otherwise: "hte" is one edit from "the" only then."""
+    from data_prepper_spark.index.boolquery import search_fuzzy
+
+    s = BM25Searcher(spark, pos_dir)
+    got = search_dsl(
+        s, {"query": {"fuzzy": {"body": {"value": "hte", "fuzziness": 1}}}})
+    assert got == search_fuzzy(s, "hte", k=10, max_edits=1,
+                               transpositions=True, tie_round=4)
+    assert got != search_fuzzy(s, "hte", k=10, max_edits=1,
+                               transpositions=False, tie_round=4)
+
+
+def test_dsl_rank_feature_leaves_body_intact(spark, pos_dir):
+    """Dispatching a rank_feature body must not mutate it: the same dict
+    dispatched twice gives the same hits."""
+    import copy
+
+    s = BM25Searcher(spark, pos_dir)
+    rf = {"query": {"bool": {
+        "must": [{"match": {"body": "the data"}}],
+        "should": [{"rank_feature": {"field": "n_chars",
+                                     "saturation": {"pivot": 50}}}],
+    }}}
+    before = copy.deepcopy(rf)
+    first = search_dsl(s, rf)
+    assert rf == before
+    assert search_dsl(s, rf) == first
+
+
 def test_dsl_rejections(spark, pos_dir):
     s = BM25Searcher(spark, pos_dir)
     for bad in [

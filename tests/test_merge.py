@@ -211,3 +211,48 @@ def test_merged_bool_and_filtered_not_clobbered(spark, merged_index, tiny_index,
         assert a == b, (must, should, must_not)
     assert search_prefix(s_m, "th", k=10) == search_prefix(s_f, "th", k=10)
     assert search_fuzzy(s_m, "tha", k=10) == search_fuzzy(s_f, "tha", k=10)
+
+
+@pytest.mark.parametrize("codec", ["varint", "pfor"])
+def test_recompute_ubs_kernel_matches_per_row_reference(codec):
+    """The group-at-once bound kernel gives each row exactly the
+    block_ubs / max_ub of a per-row recompute under the new avgdl, over
+    multi-block rows (block_size=4) and across batches; every other
+    column, the docID stream included, passes through untouched.  No
+    Spark."""
+    import numpy as np
+    import pandas as pd
+
+    from data_prepper_spark.index.build import encode_slice_fn
+    from data_prepper_spark.index.codec import decode_uints, pack_f32
+    from data_prepper_spark.index.merge import recompute_ubs_fn
+
+    rng = np.random.default_rng(5)
+    k1, b, bs, avgdl = 1.2, 0.75, 4, 97.5
+    n = 2500
+    docs = rng.integers(-(2**62), 2**62, size=300, dtype=np.int64)
+    di = rng.integers(0, docs.size, size=n)
+    terms = rng.integers(-(2**62), 2**62, size=40, dtype=np.int64)
+    toks = pd.DataFrame({
+        "term_id": terms[np.minimum(rng.geometric(0.1, size=n) - 1, 39)],
+        "range_id": np.zeros(n, dtype=np.int32), "doc_id": docs[di],
+        "tf": rng.integers(1, 12, size=n),
+        "dl": rng.integers(3, 700, size=docs.size)[di],
+    }).drop_duplicates(["term_id", "doc_id"])
+    pdf = encode_slice_fn(210.0, k1, b, bs, codec)(toks)
+    assert pdf["n_blocks"].max() > 1
+    batches = [pdf.iloc[:7], pdf.iloc[7:], pdf.iloc[0:0]]
+    got = list(recompute_ubs_fn(avgdl, k1, b, bs)(iter(batches)))
+    assert [len(g) for g in got] == [len(x) for x in batches]
+    out = pd.concat(got)
+    for (_, g), (_, r) in zip(out.iterrows(), pdf.iterrows()):
+        tf = decode_uints(r["tfs"]).astype(np.float64)
+        dl = decode_uints(r["dls"]).astype(np.float64)
+        norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        ub = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
+        bubs = np.maximum.reduceat(ub, np.arange(0, ub.size, bs))
+        assert g["block_ubs"] == pack_f32(bubs)
+        assert g["max_ub"] == np.float32(bubs.max())
+        for c in pdf.columns:
+            if c not in ("block_ubs", "max_ub"):
+                assert g[c] == r[c], c
