@@ -56,6 +56,7 @@ from ..textproc import tokenize
 from .deletes import mask_term_slice
 from .scoring import (
     TermSlice,
+    _member_sorted,
     decode_slice,
     decode_slice_lazy,
     idf_value,
@@ -80,13 +81,6 @@ def _norm_terms(terms) -> list[str]:
             seen.add(t)
             uniq.append(t)
     return uniq
-
-
-def _member(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
-    if sorted_set.size == 0:
-        return np.zeros(ids.shape, dtype=bool)
-    loc = np.clip(np.searchsorted(sorted_set, ids), 0, sorted_set.size - 1)
-    return sorted_set[loc] == ids
 
 
 def _range_eval(slices_by_id, must_ids, not_ids, scoring, k1, b, avgdl,
@@ -128,7 +122,7 @@ def _range_eval(slices_by_id, must_ids, not_ids, scoring, k1, b, avgdl,
             return empty  # too few live should clauses in this range
         u, cnt = np.unique(np.concatenate(arrs), return_counts=True)
         ok = u[cnt >= msm]
-        cand = cand[_member(cand, ok)]
+        cand = cand[_member_sorted(cand, ok)]
         if cand.size == 0:
             return empty
     if not_ids:
@@ -137,7 +131,7 @@ def _range_eval(slices_by_id, must_ids, not_ids, scoring, k1, b, avgdl,
         ]
         if excl:
             ex = np.unique(np.concatenate(excl))
-            cand = cand[~_member(cand, ex)]
+            cand = cand[~_member_sorted(cand, ex)]
             if cand.size == 0:
                 return empty
     # score candidates only: filter each scoring slice to the candidates
@@ -146,7 +140,7 @@ def _range_eval(slices_by_id, must_ids, not_ids, scoring, k1, b, avgdl,
         s = slices_by_id.get(i)
         if s is None or s.doc_ids.size == 0:
             continue
-        keep = _member(s.doc_ids, cand)
+        keep = _member_sorted(s.doc_ids, cand)
         if not keep.any():
             continue
         from .scoring import TermSlice
@@ -192,7 +186,7 @@ def _range_eval_lazy(lz: dict, must_ids, not_ids, scoring, k1, b, avgdl,
     cand = first.block_docids(np.arange(first.block_firsts.size))
     for s in must[1:]:
         ids = s.block_docids(s.covering_blocks(cand))
-        cand = cand[_member(cand, ids)]
+        cand = cand[_member_sorted(cand, ids)]
         if cand.size == 0:
             return empty
     if msm > 0 and should_ids:
@@ -204,7 +198,7 @@ def _range_eval_lazy(lz: dict, must_ids, not_ids, scoring, k1, b, avgdl,
             if s is None or s.n == 0:
                 continue
             ids = s.block_docids(s.covering_blocks(cand))
-            cnt += _member(cand, ids)
+            cnt += _member_sorted(cand, ids)
         cand = cand[cnt >= msm]
         if cand.size == 0:
             return empty
@@ -213,7 +207,7 @@ def _range_eval_lazy(lz: dict, must_ids, not_ids, scoring, k1, b, avgdl,
         if s is None or s.n == 0:
             continue
         ids = s.block_docids(s.covering_blocks(cand))
-        cand = cand[~_member(cand, ids)]
+        cand = cand[~_member_sorted(cand, ids)]
         if cand.size == 0:
             return empty
     subs = []
@@ -222,7 +216,7 @@ def _range_eval_lazy(lz: dict, must_ids, not_ids, scoring, k1, b, avgdl,
         if s is None or s.n == 0:
             continue
         ids, tfs, dls = s.block_values(s.covering_blocks(cand))
-        keep = _member(ids, cand)
+        keep = _member_sorted(ids, cand)
         if not keep.any():
             continue
         subs.append(

@@ -42,9 +42,10 @@ import pandas as pd
 import pyarrow.dataset as pads
 from pyspark.sql import functions as F
 
-from .boolquery import _decode_range, _member
+from .boolquery import _decode_range
 from .scoring import (
     TermSlice,
+    _member_sorted,
     idf_value,
     score_bmw_lazy,
     score_brute,
@@ -328,7 +329,7 @@ def _eval_filtered(slices_by_id, is_lazy, cand, scoring, k1, b, avgdl):
             ids_, tfs, dls = s.doc_ids, s.tfs, s.dls
             if ids_.size == 0:
                 continue
-        keep = _member(ids_, cand)
+        keep = _member_sorted(ids_, cand)
         if not keep.any():
             continue
         subs.append(
@@ -399,7 +400,7 @@ def _filtered_core(
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
     allowed, _ = _meta_ids_vals(searcher, filters)
     if searcher.deleted.size:
-        allowed = allowed[~_member(allowed, searcher.deleted)]
+        allowed = allowed[~_member_sorted(allowed, searcher.deleted)]
     if allowed.size == 0:
         return empty
     rows = searcher._pruned_slice_rows(list(ids), buckets)
@@ -460,24 +461,6 @@ def _filtered_core(
     if not out_ids:
         return empty
     return np.concatenate(out_ids), np.concatenate(out_sc)
-
-
-def _matched_union(slices_by_id, is_lazy) -> np.ndarray:
-    """Sorted union of all slices' docIDs in one range.  Lazy slices
-    decode ONLY the docID stream (tf/dl never touched — field-sorted
-    queries don't score)."""
-    parts = []
-    for s in slices_by_id.values():
-        if is_lazy:
-            if s.n == 0:
-                continue
-            parts.append(s.block_docids(np.arange(s.block_firsts.size)))
-        else:
-            if s.doc_ids.size:
-                parts.append(s.doc_ids)
-    if not parts:
-        return np.empty(0, dtype=np.int64)
-    return np.unique(np.concatenate(parts))
 
 
 # match-union consumers never score — tf/dl byte columns are dead weight,
@@ -605,8 +588,8 @@ def search_sorted(
     for rr in rows_by_range.values():
         matched = _union_docids_rows(rr, searcher.legacy_codec)
         if searcher.deleted.size:
-            matched = matched[~_member(matched, searcher.deleted)]
-        keep = _member(matched, meta_ids)  # filter membership
+            matched = matched[~_member_sorted(matched, searcher.deleted)]
+        keep = _member_sorted(matched, meta_ids)  # filter membership
         matched = matched[keep]
         if matched.size == 0:
             continue
@@ -801,7 +784,7 @@ def search_function_score(
         if not subs:
             continue
         i_r, s_r = score_brute(subs, cfg.k1, cfg.b, searcher.avgdl)
-        keep = _member(i_r, meta_ids)  # filters drop non-members
+        keep = _member_sorted(i_r, meta_ids)  # filters drop non-members
         i_r, s_r = i_r[keep], s_r[keep]
         if i_r.size == 0:
             continue
@@ -849,7 +832,7 @@ def _function_score_distributed(
         meta_vals = meta_pdf["v"].to_numpy()
         order = np.argsort(meta_ids)
         meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        keep = _member(i_r, meta_ids)
+        keep = _member_sorted(i_r, meta_ids)
         i_r, s_r = i_r[keep], s_r[keep]
         if i_r.size == 0:
             return pd.DataFrame({"doc_id": [], "score": []})
@@ -1022,9 +1005,9 @@ def _matched_docids_df(searcher, labels, buckets, filters):
             return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         return pd.DataFrame({"doc_id": matched})
 
     meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
@@ -1170,8 +1153,8 @@ def search_terms_set(
         i_r, s_r = score_brute(subs, cfg.k1, cfg.b, avgdl)
         cnt = np.zeros(i_r.size, dtype=np.int64)
         for s in subs:
-            cnt += _member(i_r, s.doc_ids)
-        keep = _member(i_r, meta_ids)  # filters / missing-field drop
+            cnt += _member_sorted(i_r, s.doc_ids)
+        keep = _member_sorted(i_r, meta_ids)  # filters / missing-field drop
         i_r, s_r, cnt = i_r[keep], s_r[keep], cnt[keep]
         if i_r.size == 0:
             return None
@@ -1276,8 +1259,8 @@ def _matched_with_values(searcher, ids, buckets, filters, value_field):
     for rr in rows_by_range.values():
         matched = _union_docids_rows(rr, searcher.legacy_codec)
         if searcher.deleted.size:
-            matched = matched[~_member(matched, searcher.deleted)]
-        matched = matched[_member(matched, meta_ids)]
+            matched = matched[~_member_sorted(matched, searcher.deleted)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size:
             out.append(meta_vals[np.searchsorted(meta_ids, matched)])
     if not out:
@@ -1317,8 +1300,8 @@ def _matched_with_cols(searcher, ids, buckets, filters, fields):
     for rr in rows_by_range.values():
         matched = _union_docids_rows(rr, searcher.legacy_codec)
         if searcher.deleted.size:
-            matched = matched[~_member(matched, searcher.deleted)]
-        matched = matched[_member(matched, meta_ids)]
+            matched = matched[~_member_sorted(matched, searcher.deleted)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size:
             id_parts.append(matched)
             pos = np.searchsorted(meta_ids, matched)
@@ -1467,12 +1450,12 @@ def _agg_distributed(
             return pd.DataFrame({"bucket": [], "n": []})
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         meta_vals = meta_pdf["v"].to_numpy()
         order = np.argsort(meta_ids)
         meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return pd.DataFrame({"bucket": [], "n": []})
         b = bucketer(meta_vals[np.searchsorted(meta_ids, matched)])
@@ -1539,12 +1522,12 @@ def _matched_values_distributed(searcher, labels, buckets, field, filters):
             return pd.DataFrame({"v": [], "n": []})
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         meta_vals = meta_pdf["v"].to_numpy()
         order = np.argsort(meta_ids)
         meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return pd.DataFrame({"v": [], "n": []})
         uniq, counts = np.unique(
@@ -1923,13 +1906,13 @@ def _terms_stats_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
         keys = meta_pdf["k"].to_numpy()[order]
         vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -2037,7 +2020,7 @@ def match_agg_significant_terms(
         }
         meta_ids, meta_vals = _meta_ids_vals(searcher, filters, field)
         if searcher.deleted.size:
-            live = ~_member(meta_ids, searcher.deleted)
+            live = ~_member_sorted(meta_ids, searcher.deleted)
             meta_vals = meta_vals[live]
         bu, bc = np.unique(meta_vals, return_counts=True)
         bg = {
@@ -2123,13 +2106,13 @@ def _top_hits_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
         keys = meta_pdf["k"].to_numpy()[order]
         vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -2187,12 +2170,12 @@ def _search_sorted_distributed(
             return pd.DataFrame({"doc_id": [], "sort_v": []})
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         meta_vals = meta_pdf["sort_v"].to_numpy()
         order = np.argsort(meta_ids)
         meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return pd.DataFrame({"doc_id": [], "sort_v": []})
         vals = meta_vals[np.searchsorted(meta_ids, matched)]
@@ -2235,7 +2218,7 @@ def _search_filtered_distributed(
             return pd.DataFrame({"doc_id": [], "score": []})
         cand = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
         if deleted.size:
-            cand = cand[~_member(cand, deleted)]
+            cand = cand[~_member_sorted(cand, deleted)]
         slices_by_id, is_lazy = _decode_range(
             post_pdf.to_dict("records"), labels, idf, legacy, no_tombs,
             cfg.block_size,
@@ -2376,11 +2359,11 @@ def _composite_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -2668,13 +2651,13 @@ def _distinct_pairs_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
         keys = meta_pdf["k"].to_numpy()[order]
         vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -2841,9 +2824,9 @@ def _lowest_matched_distributed(searcher, labels, buckets, filters, k: int):
             return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         return pd.DataFrame({"doc_id": np.sort(matched)[:k]})
 
     meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
@@ -2875,7 +2858,7 @@ def search_ids(searcher, doc_ids, k: int = 10) -> list[tuple[int, float]]:
                       filter=pads.field("doc_id").isin(want))
     present = np.unique(tbl["doc_id"].to_numpy(zero_copy_only=False))
     if searcher.deleted.size and present.size:
-        present = present[~_member(present, searcher.deleted)]
+        present = present[~_member_sorted(present, searcher.deleted)]
     return [(int(d), 1.0) for d in present[:k]]
 
 
@@ -2976,13 +2959,13 @@ def _weighted_avg_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
         v = meta_pdf["v"].to_numpy()[order]
         w = meta_pdf["w"].to_numpy()[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -3125,13 +3108,13 @@ def _matrix_stats_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
         x = meta_pdf["x"].to_numpy()[order]
         y = meta_pdf["y"].to_numpy()[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -3582,11 +3565,11 @@ def _top_metrics_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -3767,11 +3750,11 @@ def _sampler_candidates_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         matched = np.sort(matched)
@@ -3841,9 +3824,9 @@ def search_has_child(
         return []
     # parenthood requires a LIVE parent doc
     live = _docvalues_ids(searcher)
-    m = _member(pids, live)
+    m = _member_sorted(pids, live)
     if searcher.deleted.size:
-        m &= ~_member(pids, searcher.deleted)
+        m &= ~_member_sorted(pids, searcher.deleted)
     pids, ns = pids[m], ns[m]
     order = np.argsort(pids)[:k]
     return [(int(p), int(n)) for p, n in zip(pids[order], ns[order])]
@@ -3922,7 +3905,7 @@ def search_has_child_scored(
             meta_p = meta_pdf["p"].to_numpy(np.int64)
             order = np.argsort(meta_ids)
             meta_ids, meta_p = meta_ids[order], meta_p[order]
-            keep = _member(i_r, meta_ids)
+            keep = _member_sorted(i_r, meta_ids)
             i_r, s_r = i_r[keep], s_r[keep]
             if i_r.size == 0:
                 return empty
@@ -3994,7 +3977,7 @@ def search_has_child_scored(
         if scored is None:
             continue
         i_r, s_r = scored
-        keep = _member(i_r, meta_ids)
+        keep = _member_sorted(i_r, meta_ids)
         i_r, s_r = i_r[keep], s_r[keep]
         if i_r.size == 0:
             continue
@@ -4019,9 +4002,9 @@ def search_has_child_scored(
     pids, s_f, n_f, mx_f, mn_f = (
         pids[keep], s_f[keep], n_f[keep], mx_f[keep], mn_f[keep])
     live = _docvalues_ids(searcher)
-    m = _member(pids, live)
+    m = _member_sorted(pids, live)
     if deleted.size:
-        m &= ~_member(pids, deleted)
+        m &= ~_member_sorted(pids, deleted)
     pids = pids[m]
     score = _CHILD_FOLDS[score_mode](s_f[m], n_f[m], mx_f[m], mn_f[m])
     order = np.lexsort((pids, -np.round(score, tie_round)))[:k]
@@ -4089,7 +4072,7 @@ def search_has_parent(
             zero_copy_only=False).astype(np.int64)
         pid = tbl[parent_field].to_numpy(zero_copy_only=False)
     if searcher.deleted.size:
-        keep = ~_member(child_ids, searcher.deleted)
+        keep = ~_member_sorted(child_ids, searcher.deleted)
         child_ids, pid = child_ids[keep], pid[keep]
     order = np.argsort(child_ids)[:k]
     return [(int(c), int(p))
@@ -4102,7 +4085,7 @@ def _matched_union(searcher, ids, buckets) -> np.ndarray:
                                        columns=_UNION_COLS)
     matched = _union_docids_rows(rows, searcher.legacy_codec)
     if searcher.deleted.size:
-        matched = matched[~_member(matched, searcher.deleted)]
+        matched = matched[~_member_sorted(matched, searcher.deleted)]
     return np.sort(matched)
 
 

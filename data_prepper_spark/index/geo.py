@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from .boolquery import _member
+from .scoring import _member_sorted
 from .filtered import (
     _UNION_COLS,
     _check_filters,
@@ -180,11 +180,11 @@ def _geo_distance_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)
@@ -238,11 +238,11 @@ def _agg2_distributed(
             return empty
         matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         order = np.argsort(meta_ids)
         meta_ids = meta_ids[order]
-        matched = matched[_member(matched, meta_ids)]
+        matched = matched[_member_sorted(matched, meta_ids)]
         if matched.size == 0:
             return empty
         pos = np.searchsorted(meta_ids, matched)

@@ -4,7 +4,10 @@ The north star's accept→filter→transform→index pipeline, run as a
 STREAM: each micro-batch of new pages builds a DELTA index (the normal
 one-shot build, unchanged) and MERGES it into the serving index via
 index/merge.py — Lucene's segment-commit model recast on Spark's
-exactly-once micro-batch engine.
+exactly-once micro-batch engine.  The fold is one merge_indexes call:
+docs superseded by a newer delta (upserts) and tombstoned docs are
+dropped inside the same posting rewrite, so the base is rewritten once
+per fold.
 
 Layout under *index_dir*:
     CURRENT            — "<version>,<last_batch_id>" (atomic pointer)
@@ -38,9 +41,10 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .build import build_oneshot
 from .config import IndexConfig
-from .deletes import delete_docs, purge_deletes, read_tombstones
+from .deletes import delete_docs, read_tombstones
+from .deletes import purge_deletes  # noqa: F401  (traced by attribute in perfbench/run.py)
 from .ledger import Ledger
-from .merge import _read_stats, merge_indexes
+from .merge import merge_indexes
 
 
 def _read_current(index_dir: str) -> tuple[int, int] | None:
@@ -150,37 +154,11 @@ def apply_batch(
 def _doc_id_set(spark: SparkSession, index_dir: str) -> np.ndarray:
     """Sorted doc_ids of one DELTA segment (from docmeta).  Collected to
     the driver: delta docsets are bounded by a micro-batch's worth of
-    docs.  The BASE index's docmeta is never collected — see
-    :func:`_superseded_in_base`."""
+    docs.  The BASE index's docmeta is never collected — merge_indexes
+    semi-joins it against the drop set Spark-side."""
     rows = (
         spark.read.parquet(os.path.join(index_dir, "docmeta"))
         .select("doc_id")
-        .collect()
-    )
-    return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
-
-
-def _superseded_in_base(
-    spark: SparkSession, base_dir: str, newer: np.ndarray
-) -> np.ndarray:
-    """doc_ids of the BASE index that reappear in *newer* (the union of
-    all pending-delta docsets), computed Spark-side: the base docmeta is
-    scanned distributed and semi-joined against the broadcast delta-id
-    set, so only the intersection — bounded by |newer|, a few
-    micro-batches of ids — ever reaches the driver.  At 10^12 base docs
-    the old collect-the-base approach would ship ~TBs of int64 to the
-    driver; this ships at most the upsert set."""
-    from pyspark.sql import functions as F
-
-    if newer.size == 0:
-        return np.empty(0, dtype=np.int64)
-    newer_df = spark.createDataFrame(
-        [(int(x),) for x in newer], "doc_id long"
-    )
-    rows = (
-        spark.read.parquet(os.path.join(base_dir, "docmeta"))
-        .select("doc_id")
-        .join(F.broadcast(newer_df), "doc_id", "semi")
         .collect()
     )
     return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
@@ -193,18 +171,22 @@ def _fold(
     batch_id: int,
     keep_versions: int = 1,
 ) -> None:
-    """Fold base + pending deltas into a new version, resolving UPDATES
-    and DELETES first (Lucene's update-by-delete-and-add):
+    """Fold base + pending deltas into a new version with ONE
+    merge_indexes call, which resolves UPDATES and DELETES while it
+    rewrites (Lucene's update-by-delete-and-add):
 
       - a doc_id present in more than one source keeps only its NEWEST
         copy (sources are ordered base → oldest delta → newest delta, so
         re-ingesting a url replaces the old version — last-writer-wins
-        by micro-batch order);
-      - on-disk tombstones of each source (live_delete_docs) are applied;
-      - older copies + tombstoned docs are physically purged
-        (index/deletes.py purge_deletes — group-at-once decode→mask→encode,
-        no shuffle) so the merge inputs are disjoint doc spaces again and
-        merge_indexes' invariant holds.
+        by micro-batch order): each source's drop set is the union of
+        the docsets of the deltas newer than it;
+      - merge_indexes adds each source's on-disk tombstones
+        (live_delete_docs) to its drop set, keeps only the dropped docs
+        each source really holds (a Spark-side semi-join, so the BASE
+        docmeta is never collected), and drops their postings in the
+        same pass that recomputes the merged bounds.
+
+    A lone source with nothing to drop is published without a rewrite.
     """
     cur = _read_current(index_dir)
     version = cur[0] if cur is not None else -1
@@ -216,58 +198,21 @@ def _fold(
     v_new = version + 1
     dest = os.path.join(index_dir, f"v={v_new}")
     shutil.rmtree(dest, ignore_errors=True)
-    tmp_root = os.path.join(index_dir, "_purge")
-    shutil.rmtree(tmp_root, ignore_errors=True)
 
-    has_base = version >= 0
-    # only DELTA docsets are collected (micro-batch bounded); the base's
-    # superseded set is computed Spark-side (_superseded_in_base)
+    # only DELTA docsets are collected (micro-batch bounded)
     delta_sets = [_doc_id_set(spark, s) for s in pending]
-    merge_srcs: list[str] = []
-    for i, src in enumerate(sources):
-        d = i - 1 if has_base else i  # index into delta_sets (-1 = base)
-        newer_sets = delta_sets[d + 1 :]
-        newer = (
-            np.unique(np.concatenate(newer_sets))
-            if newer_sets
-            else np.empty(0, dtype=np.int64)
-        )
-        if has_base and i == 0:
-            superseded = _superseded_in_base(spark, src, newer)
-            # every writer (build, purge, merge) stores the docmeta row
-            # count as n_docs, so the base is counted without a Spark job
-            src_n = int(_read_stats(src)["n_docs"])
-        else:
-            superseded = np.intersect1d(
-                delta_sets[d], newer, assume_unique=False
-            )
-            src_n = delta_sets[d].size
-        tomb = read_tombstones(src)
-        drop = np.unique(np.concatenate([superseded, tomb]))
-        if drop.size == 0:
-            merge_srcs.append(src)
-        elif drop.size < src_n:
-            dst = os.path.join(tmp_root, f"src{i}")
-            purge_deletes(spark, src, dst, extra_deleted=drop)
-            merge_srcs.append(dst)
-        # else: every doc superseded/deleted — source contributes nothing
-
-    if not merge_srcs:
-        raise ValueError(
-            "fold would produce an empty index (every doc deleted or "
-            "superseded by nothing) — refusing to publish an empty version"
-        )
-    if len(merge_srcs) == 1:
-        src = merge_srcs[0]
-        if src in pending or src.startswith(tmp_root):
-            shutil.move(src, dest)
-        else:
-            shutil.copytree(src, dest)  # base survives unchanged; keep it
+    first = len(sources) - len(pending)  # 1 when a base version exists
+    empty = np.empty(0, dtype=np.int64)
+    drops = [
+        np.unique(np.concatenate([empty, *delta_sets[i + 1 - first :]]))
+        for i in range(len(sources))
+    ]
+    if sources == pending[:1] and read_tombstones(sources[0]).size == 0:
+        shutil.move(sources[0], dest)  # lone delta, nothing to drop
     else:
-        merge_indexes(spark, merge_srcs, dest)
+        merge_indexes(spark, sources, dest, drop=drops)
     for d in pending:
         shutil.rmtree(d, ignore_errors=True)
-    shutil.rmtree(tmp_root, ignore_errors=True)
     _write_current(index_dir, v_new, batch_id)
     _prune(index_dir, v_new, keep_versions)
 

@@ -1,4 +1,5 @@
-"""Stage 6 — segment merge: N built indexes → one queryable index.
+"""Stage 6 — segment merge: N built indexes → one queryable index, with
+deleted and superseded docs dropped in the same pass.
 
 The incremental-ingest story at 10^12 docs: build a small delta index
 over the day's new pages, then MERGE it into the base index instead of
@@ -6,21 +7,30 @@ rebuilding.  Because posting slices are keyed by (term_id, range_id)
 under term-hash-bucket directories and the query path already merges any
 set of slices per term associatively (driver and distributed modes both
 score slice lists), an index merge over DISJOINT doc-id spaces is a
-metadata-level union of posting rows: no re-tokenize, no posting
-shuffle, no docID-stream decode.
+union of posting rows: no re-tokenize, no posting shuffle.
 
-The ONE stored quantity that depends on corpus-wide state is the
-per-block score upper bound (block_ubs / max_ub, baked at build time
+:func:`merge_indexes` is also the only code that drops docs from
+postings (Lucene's SegmentMerger skipping docs cleared in liveDocs;
+Delta Lake applying deletes inside its compaction rewrite).  Every
+source carries a drop set — its own tombstones (index/deletes.py) plus
+whatever the caller passes (the live fold passes docs superseded by
+newer deltas) — and the merged index is rank-identical to a fresh build
+over the surviving union.  ``purge_deletes`` is the one-source case.
+
+The stored quantities that depend on corpus-wide state are the
+per-block score upper bounds (block_ubs / max_ub, baked at build time
 with that index's avgdl).  Under the merged avgdl the old bounds are not
 upper bounds in general (avgdl↑ ⇒ per-posting norm↑), which would break
-BMW pruning exactness — so the merge decodes just the tf/dl streams and
-recomputes the bounds exactly, with the docID stream passed through
-untouched.  The kernel works GROUP-AT-ONCE over each Arrow batch of
-slice rows: one batch decode per stream (codec.decode_uints_batch) and
-one reduceat over every row's blocks, through the same bound code as
-the build (build.run_bounds) — no per-row Python.  Rank identity
-of the merged index vs a from-scratch build over the union corpus is
-pinned by tests/test_merge.py and the ft_merged_bm25 oracle entry.
+BMW pruning exactness, so one group-at-once kernel (:func:`fold_fn`)
+recomputes every row's bounds exactly — through the build's own bound
+code, so merged bounds are bit-compatible with built bounds — and
+re-encodes only the rows that lost postings.
+
+Corpus stats come from data in hand: the sources' stored stats minus
+the dropped docs' doc_len, fetched by one semi-join collect bounded by
+the drop sets (the docmeta itself never reaches the driver).  Rank
+identity is pinned by tests/test_merge.py, tests/test_deletes.py and
+the ft_merged_bm25 / ft_purged_bm25 oracle entries.
 
 Each merge stage commits to the checkpoint ledger, so a killed merge
 resumes without recomputation — the same lease/positive-ack recast as
@@ -34,7 +44,10 @@ n_buckets (directory routing), same block_size (block boundaries), no
 legacy untagged-varint segments (streams must be tag-byte
 self-describing so mixed-codec sources decode per row).  range_bits MAY
 differ — range_id is only a grouping key carried in the rows.  Doc-id
-spaces must be disjoint; overlap is detected from docmeta and rejected.
+spaces must be disjoint once the drop sets are applied; overlap is
+detected from docmeta and rejected.  A fields index cannot drop docs:
+docmeta stores no per-field lengths, so its per-field stats could not
+be recomputed.
 """
 
 from __future__ import annotations
@@ -47,24 +60,35 @@ import pyarrow.dataset as pads
 from pyspark.sql import SparkSession, functions as F
 
 from ..hashing import xxh64_signed
-from .build import _paths, _write_termstats, run_bounds
-from .codec import decode_uints_batch
+from .build import _cuts, _paths, _write_termstats, encode_runs, run_bounds
+from .codec import (
+    VARINT_TAG,
+    decode_docids_batch,
+    decode_uints_batch,
+    varint_value_ends,
+)
 from .config import IndexConfig
+from .deletes import read_tombstones
 from .ledger import Ledger
+from .scoring import _member_sorted
 
 
 def _read_stats(index_dir: str) -> dict:
     return pads.dataset(os.path.join(index_dir, "stats")).to_table().to_pylist()[0]
 
 
-def recompute_ubs_fn(avgdl: float, k1: float, b: float, block_size: int):
-    """mapInPandas kernel: exact per-block upper bounds under the merged
-    corpus's avgdl, GROUP-AT-ONCE over each Arrow batch — the batch's tf
-    and dl streams decode in one pass each (codec.decode_uints_batch) and
-    build.run_bounds recomputes every row's block_ubs / max_ub with one
-    reduceat (the build's own bound code, so merged bounds are
-    bit-compatible with built bounds).  The docID stream passes through
-    untouched."""
+def fold_fn(drop: np.ndarray, avgdl: float, cfg: IndexConfig):
+    """mapInPandas kernel over one source's slice rows: drop the postings
+    of the sorted doc_ids *drop* and give every surviving row exact
+    block bounds under the merged *avgdl*, group-at-once over each Arrow
+    batch (one batch decode per stream).  Rows that lost nothing keep
+    their streams and get :func:`build.run_bounds`; rows that lost
+    postings re-encode their survivors with :func:`build.encode_runs`
+    in ``cfg.codec``; rows that lost everything drop.  Output is
+    byte-identical to masking and re-encoding each row alone and then
+    recomputing its bounds (pinned by tests/test_deletes.py and
+    tests/test_merge.py)."""
+    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
 
     def fn(batches):
         for pdf in batches:
@@ -72,25 +96,116 @@ def recompute_ubs_fn(avgdl: float, k1: float, b: float, block_size: int):
                 yield pdf
                 continue
             tf, counts = decode_uints_batch(pdf["tfs"])
-            dl = decode_uints_batch(pdf["dls"])[0]
-            runs = np.cumsum(counts) - counts
-            cols = run_bounds(tf, dl, runs, avgdl, k1, b, block_size)[2]
+            tf = tf.astype(np.int64)
+            dl = decode_uints_batch(pdf["dls"])[0].astype(np.int64)
+            keep = np.ones(tf.size, dtype=bool)
+            if drop.size:
+                d = decode_docids_batch(pdf["doc_ids"])[0]
+                keep = ~_member_sorted(d, drop)
+            row_of = np.repeat(np.arange(len(pdf)), counts)
+            kept = np.bincount(row_of[keep], minlength=len(pdf))
             out = pdf.copy()
-            out["block_ubs"] = cols["block_ubs"]
-            out["max_ub"] = cols["max_ub"]
-            yield out
+
+            def put(rows, cols):
+                for c, v in cols.items():
+                    col = out[c].to_numpy(copy=True)
+                    col[rows] = np.asarray(v, dtype=col.dtype)
+                    out[c] = col
+
+            intact = kept == counts
+            if intact.any():
+                sel = np.repeat(intact, counts)
+                n = counts[intact]
+                put(intact, run_bounds(
+                    tf[sel], dl[sel], np.cumsum(n) - n, avgdl, k1, b, bs
+                )[2])
+            cut = ~intact & (kept > 0)
+            if cut.any():
+                in_cut = np.repeat(cut, counts)
+                sel = keep & in_cut
+                n = kept[cut]
+                runs = np.cumsum(n) - n
+                cols = encode_runs(
+                    d[sel], tf[sel], dl[sel], runs, avgdl, k1, b, bs, cfg.codec
+                )
+                if cfg.positions:
+                    cols["positions"] = _kept_positions(
+                        pdf["positions"].to_numpy()[cut],
+                        tf[in_cut], keep[in_cut], runs,
+                    )
+                put(cut, cols)
+            yield out[kept > 0]
 
     return fn
 
 
+def _kept_positions(blobs, tf, keep, runs) -> list[bytes]:
+    """Positions blobs of the kept postings, one per run of kept postings
+    (``runs`` = run starts).  Every row's payload (after its tag byte)
+    holds ``tf`` LEB128 values per posting, so with tag bytes dropped the
+    batch is one stream whose posting *i* ends at value
+    ``cumsum(tf)[i]``."""
+    raw = np.frombuffer(b"".join(blobs), dtype=np.uint8)
+    lens = np.fromiter(map(len, blobs), np.int64, len(blobs))
+    payload = np.ones(raw.size, dtype=bool)
+    payload[(np.cumsum(lens) - lens)[lens > 0]] = False  # tag bytes
+    stream = raw[payload]
+    ends = varint_value_ends(stream)  # inclusive terminator idx
+    byte_end = ends[np.cumsum(tf) - 1].astype(np.int64) + 1  # exclusive
+    nbytes = np.diff(byte_end, prepend=0)
+    kept = stream[np.repeat(keep, nbytes)].tobytes()
+    kb = nbytes[keep]
+    off = np.concatenate(([0], np.cumsum(kb)))[np.append(runs, kb.size)]
+    return [VARINT_TAG + x for x in _cuts(kept, off)]
+
+
+def _dropped_docs(
+    spark: SparkSession, src_dirs: list[str], drops: list[np.ndarray]
+) -> list[tuple[np.ndarray, int]]:
+    """Per source: the sorted doc_ids of its drop set that its docmeta
+    holds, and their summed doc_len.  One semi-join collect against the
+    broadcast (source, doc_id) drop keys — the result is bounded by the
+    drop sets; the docmeta itself never reaches the driver."""
+    out = [(np.empty(0, dtype=np.int64), 0)] * len(src_dirs)
+    keyed = [(i, int(x)) for i, ids in enumerate(drops) for x in ids]
+    if not keyed:
+        return out
+    dm = None
+    for i, d in enumerate(src_dirs):
+        if drops[i].size:
+            part = spark.read.parquet(os.path.join(d, "docmeta")).select(
+                F.lit(i).alias("src"), "doc_id", "doc_len"
+            )
+            dm = part if dm is None else dm.unionByName(part)
+    keys = spark.createDataFrame(keyed, "src int, doc_id long")
+    rows = dm.join(F.broadcast(keys), ["src", "doc_id"], "semi").collect()
+    src = np.array([r["src"] for r in rows], dtype=np.int64)
+    ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
+    lens = np.array([r["doc_len"] for r in rows], dtype=np.int64)
+    return [
+        (np.sort(ids[src == i]), int(lens[src == i].sum()))
+        for i in range(len(src_dirs))
+    ]
+
+
 def merge_indexes(
-    spark: SparkSession, src_dirs: list[str], out_dir: str
+    spark: SparkSession,
+    src_dirs: list[str],
+    out_dir: str,
+    drop: list | None = None,
 ) -> dict:
-    """Merge built indexes at *src_dirs* into a new index at *out_dir*.
+    """Merge built indexes at *src_dirs* into a new index at *out_dir*,
+    leaving out each source's tombstoned docs and the doc_ids of its
+    entry in *drop* (one iterable of doc_ids per source, or None).  A
+    single source is accepted (the purge case).
 
     Returns the merged stats dict (same shape as build_index's)."""
-    if len(src_dirs) < 2:
-        raise ValueError("merge_indexes needs at least two source indexes")
+    if not src_dirs:
+        raise ValueError("merge_indexes needs at least one source index")
+    if drop is None:
+        drop = [None] * len(src_dirs)
+    if len(drop) != len(src_dirs):
+        raise ValueError("merge_indexes needs one drop set per source index")
     stats = [_read_stats(d) for d in src_dirs]
     cfgs = [IndexConfig.from_dict(s) for s in stats]
     base = cfgs[0]
@@ -107,38 +222,59 @@ def merge_indexes(
                 f"{d}: incompatible config (k1/b/n_buckets/block_size/"
                 "positions must match across merge sources)"
             )
-    n_docs = sum(int(s["n_docs"]) for s in stats)
-    total_tokens = sum(int(s["total_tokens"]) for s in stats)
-    avgdl = (total_tokens / n_docs) if n_docs else 0.0
+    drops = [
+        np.union1d(read_tombstones(d), np.asarray([] if x is None else x, np.int64))
+        for d, x in zip(src_dirs, drop)
+    ]
+    for d, s, x in zip(src_dirs, stats, drops):
+        if x.size and s.get("fields_json"):
+            raise ValueError(
+                f"{d}: cannot drop docs from a fields index — docmeta stores "
+                "no per-field lengths, so fields_json cannot be recomputed"
+            )
+    gone = _dropped_docs(spark, src_dirs, drops)
+    n_docs = sum(int(s["n_docs"]) - g[0].size for s, g in zip(stats, gone))
+    total_tokens = sum(int(s["total_tokens"]) - g[1] for s, g in zip(stats, gone))
+    if n_docs == 0:
+        raise ValueError(
+            "merge would produce an empty index (every doc deleted or "
+            "superseded) — refusing to publish an empty version"
+        )
+    avgdl = total_tokens / n_docs
     # multi-field sources: per-field stats are stored as ADDITIVE sums
     # (n_docs, total_tokens), so disjoint-doc-space merge is exact
     # summation; every source must agree on the field set (all-or-none)
-    import json as _json
-
     field_sets = [
-        set(_json.loads(s["fields_json"])) if s.get("fields_json") else set()
+        set(json.loads(s["fields_json"])) if s.get("fields_json") else set()
         for s in stats
     ]
     if any(field_sets) and not all(fs == field_sets[0] for fs in field_sets):
         raise ValueError(
             f"merge sources disagree on fields: {sorted(map(sorted, field_sets))}"
         )
-    merged_fields_json = None
+    merged_stats = {
+        "n_docs": n_docs,
+        "total_tokens": total_tokens,
+        "avgdl": avgdl,
+        **base.to_dict(),
+    }
     if field_sets[0]:
         acc: dict = {}
         for s in stats:
-            for f, v in _json.loads(s["fields_json"]).items():
+            for f, v in json.loads(s["fields_json"]).items():
                 a = acc.setdefault(f, {"n_docs": 0, "total_tokens": 0})
                 a["n_docs"] += int(v["n_docs"])
                 a["total_tokens"] += int(v["total_tokens"])
-        merged_fields_json = _json.dumps(acc, sort_keys=True)
+        merged_stats["fields_json"] = json.dumps(acc, sort_keys=True)
 
     p = _paths(out_dir)
     fp = format(
         xxh64_signed(
             json.dumps(
                 [[os.path.abspath(d) for d in src_dirs],
-                 [[int(s["n_docs"]), int(s["total_tokens"])] for s in stats]],
+                 [[int(s["n_docs"]), int(s["total_tokens"])] for s in stats],
+                 [format(xxh64_signed(x.tobytes()) & ((1 << 64) - 1), "x")
+                  for x in drops]],
                 sort_keys=True,
             )
         )
@@ -147,12 +283,17 @@ def merge_indexes(
     )
     ledger = Ledger(out_dir)
 
-    # ---- stage: doc metadata union + disjointness check + stats ----
+    # ---- stage: doc metadata union minus drops + disjointness + stats ----
     if 0 not in ledger.completed("merge_docmeta", fp):
-        dms = [spark.read.parquet(os.path.join(d, "docmeta")) for d in src_dirs]
-        dm = dms[0]
-        for other in dms[1:]:
-            dm = dm.unionByName(other)
+        dm = None
+        for d, (ids, _) in zip(src_dirs, gone):
+            part = spark.read.parquet(os.path.join(d, "docmeta"))
+            if ids.size:
+                ids_df = spark.createDataFrame(
+                    [(int(x),) for x in ids], "doc_id long"
+                )
+                part = part.join(F.broadcast(ids_df), "doc_id", "left_anti")
+            dm = part if dm is None else dm.unionByName(part)
         dup = dm.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
         if dup:
             raise ValueError(
@@ -165,39 +306,29 @@ def merge_indexes(
             .write.mode("overwrite")
             .parquet(p["docmeta"])
         )
-        merged_stats = {
-            "n_docs": n_docs,
-            "total_tokens": total_tokens,
-            "avgdl": avgdl,
-            **base.to_dict(),
-            **({"fields_json": merged_fields_json} if merged_fields_json else {}),
-        }
         spark.createDataFrame([merged_stats]).coalesce(1).write.mode(
             "overwrite"
         ).parquet(p["stats"])
         ledger.commit("merge_docmeta", 0, token_count=total_tokens, input_fingerprint=fp)
 
-    # ---- stage: posting union + exact bound recompute (no shuffle) ----
+    # ---- stage: posting union, drops applied, exact bounds (no shuffle) ----
     if 0 not in ledger.completed("merge_postings", fp):
-        parts = []
-        for i, d in enumerate(src_dirs):
-            src = spark.read.parquet(os.path.join(d, "postings"))
+        posts = None
+        for i, (d, c, (ids, _)) in enumerate(zip(src_dirs, cfgs, gone)):
             # collapse each source's bucket-groups into one bgroup id per
             # source: the dir level is only a physical grouping, and a
             # stable per-source id keeps the merged layout deterministic
-            parts.append(src.withColumn("bgroup", F.lit(i).cast("int")))
-        posts = parts[0]
-        for other in parts[1:]:
-            posts = posts.unionByName(other)
-        fixed = posts.mapInPandas(
-            recompute_ubs_fn(avgdl, base.k1, base.b, base.block_size),
-            schema=posts.schema,
-        )
+            src = spark.read.parquet(os.path.join(d, "postings")).withColumn(
+                "bgroup", F.lit(i).cast("int")
+            )
+            # dropped postings re-encode in their own source's codec
+            part = src.mapInPandas(fold_fn(ids, avgdl, c), schema=src.schema)
+            posts = part if posts is None else posts.unionByName(part)
         (
             # narrow local sort only — input files are term_id-sorted and
             # never shuffled, this just restores per-output-file order when
             # a task coalesced several small input files
-            fixed.sortWithinPartitions("bgroup", "term_bucket", "term_id")
+            posts.sortWithinPartitions("bgroup", "term_bucket", "term_id")
             .write.mode("overwrite")
             .option("parquet.block.size", 1 << 20)
             .partitionBy("bgroup", "term_bucket")
@@ -215,7 +346,9 @@ def merge_indexes(
             input_fingerprint=fp,
         )
 
-    # ---- stage: term dictionary union + global termstats ----
+    # ---- stage: term dictionary union + global termstats (terms whose
+    # postings all dropped keep a harmless termdict entry: termstats
+    # inner-joins postings, so df=0 terms vanish) ----
     if 0 not in ledger.completed("termstats", fp):
         tds = [spark.read.parquet(os.path.join(d, "termdict")) for d in src_dirs]
         td = tds[0]
@@ -232,9 +365,4 @@ def merge_indexes(
         ledger.commit("termstats", 0, input_fingerprint=fp)
 
     ledger.commit("finalize", 0, input_fingerprint=fp)
-    return {
-        "n_docs": n_docs,
-        "total_tokens": total_tokens,
-        "avgdl": avgdl,
-        **base.to_dict(),
-    }
+    return merged_stats

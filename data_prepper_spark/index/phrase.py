@@ -375,9 +375,9 @@ def phrase_match_triples(
         tfs.extend(tf)
         dls.extend(dl)
     if searcher.deleted.size and docs:
-        from .deletes import _member
+        from .scoring import _member_sorted
 
-        keep = ~_member(np.asarray(docs, dtype=np.int64), searcher.deleted)
+        keep = ~_member_sorted(np.asarray(docs, dtype=np.int64), searcher.deleted)
         docs = [d for d, kp in zip(docs, keep) if kp]
         tfs = [t for t, kp in zip(tfs, keep) if kp]
         dls = [l for l, kp in zip(dls, keep) if kp]
@@ -419,9 +419,9 @@ def intervals_match_triples(
         tfs.extend(tf)
         dls.extend(dl)
     if searcher.deleted.size and docs:
-        from .deletes import _member
+        from .scoring import _member_sorted
 
-        keep = ~_member(np.asarray(docs, dtype=np.int64), searcher.deleted)
+        keep = ~_member_sorted(np.asarray(docs, dtype=np.int64), searcher.deleted)
         docs = [d for d, kp in zip(docs, keep) if kp]
         tfs = [t for t, kp in zip(tfs, keep) if kp]
         dls = [l for l, kp in zip(dls, keep) if kp]
@@ -615,9 +615,9 @@ def phrase_prefix_topk(
             tfs.extend(tf)
             dls.extend(dl)
         if searcher.deleted.size and docs:
-            from .deletes import _member
+            from .scoring import _member_sorted
 
-            keep = ~_member(np.asarray(docs, dtype=np.int64), searcher.deleted)
+            keep = ~_member_sorted(np.asarray(docs, dtype=np.int64), searcher.deleted)
             docs = [x for x, kp in zip(docs, keep) if kp]
             tfs = [x for x, kp in zip(tfs, keep) if kp]
             dls = [x for x, kp in zip(dls, keep) if kp]
@@ -801,9 +801,9 @@ def _span_topk(searcher, ids: list[int], matcher, k: int, tie_round: int,
             tfs.extend(tf)
             dls.extend(dl)
         if searcher.deleted.size and docs:
-            from .deletes import _member
+            from .scoring import _member_sorted
 
-            keep = ~_member(np.asarray(docs, dtype=np.int64), searcher.deleted)
+            keep = ~_member_sorted(np.asarray(docs, dtype=np.int64), searcher.deleted)
             docs = [d for d, kp in zip(docs, keep) if kp]
             tfs = [t for t, kp in zip(tfs, keep) if kp]
             dls = [l for l, kp in zip(dls, keep) if kp]

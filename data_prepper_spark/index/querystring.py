@@ -44,7 +44,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..hashing import pmod, xxh64_signed
 from .deletes import mask_term_slice
-from .scoring import decode_slice, idf_value, score_brute
+from .scoring import _member_sorted, decode_slice, idf_value, score_brute
 
 # [+|-] then a quoted phrase [~slop] or a token [* | ~edits], then [^boost]
 _CLAUSE_RX = re.compile(
@@ -84,14 +84,6 @@ def parse_query_string(q: str) -> list[Clause]:
         else:
             out.append(Clause(occur, "term", term, b))
     return out
-
-
-def _member(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
-    if sorted_set.size == 0 or ids.size == 0:
-        return np.zeros(ids.shape, dtype=bool)
-    pos = np.searchsorted(sorted_set, ids)
-    pos = np.minimum(pos, sorted_set.size - 1)
-    return sorted_set[pos] == ids
 
 
 def _expansions(searcher, c: Clause, max_expansions: int) -> list[str]:
@@ -199,7 +191,7 @@ def _phrase_matches_driver(searcher, c: Clause):
     ta = np.asarray(tfs, dtype=np.float64)
     la = np.asarray(dls, dtype=np.float64)
     if searcher.deleted.size and da.size:
-        keep = ~_member(da, searcher.deleted)
+        keep = ~_member_sorted(da, searcher.deleted)
         da, ta, la = da[keep], ta[keep], la[keep]
     order = np.argsort(da)
     return da[order], ta[order], la[order]
@@ -247,7 +239,7 @@ def _clause_docs_driver(searcher, c: Clause, max_expansions: int):
         return np.empty(0, np.int64)
     out = _union_docids_rows(rows, searcher.legacy_codec)
     if searcher.deleted.size and out.size:
-        out = out[~_member(out, searcher.deleted)]
+        out = out[~_member_sorted(out, searcher.deleted)]
     return out
 
 
@@ -506,7 +498,7 @@ def search_query_string(
     for c in nots:
         nd = _clause_docs_driver(searcher, c, max_expansions)
         if nd.size:
-            cand = cand[~_member(cand, nd)]
+            cand = cand[~_member_sorted(cand, nd)]
     if cand.size == 0:
         return []
     if msm > 0 and any(c.occur == "should" for c in scoring) and (
@@ -515,7 +507,7 @@ def search_query_string(
         cnt = np.zeros(cand.size, dtype=np.int64)
         for c, da, _sc in per:
             if c.occur == "should" and da.size:
-                cnt += _member(cand, da)
+                cnt += _member_sorted(cand, da)
         cand = cand[cnt >= msm]
         if cand.size == 0:
             return []
@@ -640,7 +632,7 @@ def search_simple_query_string(
                 break
             nd = _clause_docs_driver(searcher, c, max_expansions)
             if nd.size:
-                common = common[~_member(common, np.sort(nd))]
+                common = common[~_member_sorted(common, np.sort(nd))]
         if common.size == 0:
             continue
         total = np.zeros(common.size, dtype=np.float64)

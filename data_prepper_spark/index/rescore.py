@@ -34,16 +34,8 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from .filtered import _UNION_COLS, _union_docids_rows
-from .scoring import decode_slice, idf_value, score_brute, _tf_norm
+from .scoring import _member_sorted, decode_slice, idf_value, score_brute, _tf_norm
 from .deletes import mask_term_slice
-
-
-def _member(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
-    if sorted_set.size == 0 or ids.size == 0:
-        return np.zeros(ids.shape, dtype=bool)
-    pos = np.searchsorted(sorted_set, ids)
-    pos = np.minimum(pos, sorted_set.size - 1)
-    return sorted_set[pos] == ids
 
 
 def _field_for_ids(searcher, doc_ids: np.ndarray, field: str) -> np.ndarray:
@@ -214,7 +206,7 @@ def search_boosting(
     da = np.asarray([d for d, _ in hits], dtype=np.int64)
     sc = np.asarray([s for _, s in hits], dtype=np.float64)
     neg = _negative_docids(searcher, negative_text)
-    sc = np.where(_member(da, neg), sc * negative_boost, sc)
+    sc = np.where(_member_sorted(da, neg), sc * negative_boost, sc)
     order = np.lexsort((da, -np.round(sc, tie_round)))[:k]
     return [(int(da[i]), float(sc[i])) for i in order]
 
@@ -278,7 +270,7 @@ def _boosting_distributed(
         da, sc = score_brute(slices, k1, b, avgdl)
         if neg_rows:
             neg = _union_docids_rows(neg_rows, legacy)
-            sc = np.where(_member(da, neg), sc * nb, sc)
+            sc = np.where(_member_sorted(da, neg), sc * nb, sc)
         return pd.DataFrame({"doc_id": da, "score": sc})
 
     scored = (
@@ -351,7 +343,7 @@ def explain_bm25(
                          label=ids[tid], legacy=searcher.legacy_codec)
         if searcher.deleted.size:
             s = mask_term_slice(s, searcher.deleted)
-        m = _member(s.doc_ids, want)
+        m = _member_sorted(s.doc_ids, want)
         if not m.any():
             continue
         contrib = s.idf * _tf_norm(s.tfs[m], s.dls[m], k1, b, avgdl)

@@ -123,7 +123,7 @@ def _sample_distributed(searcher, ids, buckets, sample_size: int) -> np.ndarray:
     each range emits its own lowest-*sample_size* partial (the global
     lowest-k is a subset of their union), one bounded sort-limit picks
     the final sample."""
-    from .deletes import _member
+    from .scoring import _member_sorted
     from .filtered import _UNION_COLS, _union_docids_rows
 
     legacy = searcher.legacy_codec
@@ -132,7 +132,7 @@ def _sample_distributed(searcher, ids, buckets, sample_size: int) -> np.ndarray:
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         matched = _union_docids_rows(pdf.to_dict("records"), legacy)
         if deleted.size:
-            matched = matched[~_member(matched, deleted)]
+            matched = matched[~_member_sorted(matched, deleted)]
         return pd.DataFrame({"doc_id": np.sort(matched)[:sample_size]})
 
     rows = (

@@ -109,10 +109,6 @@ def write_partitioned(
     writer.parquet(target)
 
 
-def read_table(spark: SparkSession, target: str, fmt: str = "parquet") -> DataFrame:
-    return spark.read.table(target) if fmt == "iceberg" else spark.read.parquet(target)
-
-
 def publish_index(
     spark: SparkSession,
     index_dir: str,

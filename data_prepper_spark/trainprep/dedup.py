@@ -183,31 +183,6 @@ def minhash_signatures(
     )
 
 
-def minhash_signatures_fast(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_perm: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Scale-path MinHash: per-permutation hash = xxhash64(j, shingle)
-    (seed-mixed in the JVM hash itself), aggregated as plain
-    map-side-combined mins.  Zero Python, zero UDF, one shuffle on doc.
-    (The md5-based ``minhash_signatures`` stays as the
-    SQL-oracle-checkable twin; ANSI mode rules out wrap-around affine
-    permutations, and num_perm xxhash64 calls are still ~ns each.)"""
-    sh = _doc_shingles(df, id_col, text_col, n)
-    mins = [
-        F.min(F.xxhash64(F.lit(seed + j), F.col("sh"))).alias(f"h{j}")
-        for j in range(num_perm)
-    ]
-    sig = sh.groupBy("doc").agg(*mins)
-    return sig.select(
-        "doc", F.array(*[F.col(f"h{j}") for j in range(num_perm)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str,

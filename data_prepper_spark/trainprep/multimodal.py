@@ -115,16 +115,3 @@ def frame_sample_plan(df: DataFrame, every_n: int = 10) -> DataFrame:
             F.sequence(F.lit(0), F.col("n_frames") - 1, F.lit(every_n)),
         ).otherwise(F.array().cast("array<int>")),
     )
-
-
-def repartition_for_blobs(df: DataFrame, target_bytes_per_task: int = 128 << 20) -> DataFrame:
-    """Size-aware repartition for large-blob tables: estimate rows/task
-    from the observed mean blob size so a task's Arrow batch stays within
-    executor memory.  (At 100 TB this is the difference between a smooth
-    scan and OOM — binary columns defeat Spark's row-count heuristics.)"""
-    stats = df.select(F.avg(F.octet_length("payload")).alias("avg")).collect()[0]
-    avg = max(int(stats["avg"] or 1), 1)
-    total = df.count()
-    rows_per_task = max(target_bytes_per_task // avg, 1)
-    n_parts = max(int(np.ceil(total / rows_per_task)), 1)
-    return df.repartition(n_parts)

@@ -4,8 +4,9 @@ Semantics pinned (Lucene's delete model — index/deletes.py):
   - a tombstoned doc leaves every result IMMEDIATELY, but n_docs / avgdl
     / df stay full-index until a purge (docFreq counts deleted docs
     until segments merge);
-  - purge_deletes rewrites the index; the result is rank-identical to a
-    fresh build over the surviving corpus (stats fully recomputed).
+  - purge_deletes (a one-source merge_indexes) rewrites the index; the
+    result is rank-identical to a fresh build over the surviving corpus
+    (stats fully recomputed).
 """
 
 import os
@@ -179,7 +180,7 @@ def test_purge_positional_phrase(spark, tiny_corpus_path, workdir):
         assert [d for d, _ in drv] == [d for d, _ in dst], ph
 
 
-# ---- purge kernel: group-at-once vs a per-row reference (no Spark) ----
+# ---- fold kernel (merge.fold_fn): group-at-once vs per-row references (no Spark) ----
 
 
 def _slice_batch(rng, codec, positions, block_size=4, n_tok=3000):
@@ -213,20 +214,45 @@ def _slice_batch(rng, codec, positions, block_size=4, n_tok=3000):
     return out, np.unique(pdf["doc_id"].to_numpy())
 
 
-def _purge_rows_ref(pdf, deleted, cfg, avgdl):
-    """One row at a time: decode, mask, re-encode with the index codec."""
+def _ubs(tf, dl, cfg, avgdl):
+    """Per-row block_ubs / max_ub of one posting list under *avgdl*."""
+    from data_prepper_spark.index.codec import pack_f32
+
+    k1, b = cfg.k1, cfg.b
+    tf, dl = tf.astype(np.float64), dl.astype(np.float64)
+    norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+    ub = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
+    block_ubs = np.maximum.reduceat(ub, np.arange(0, ub.size, cfg.block_size))
+    return {"block_ubs": pack_f32(block_ubs), "max_ub": np.float32(block_ubs.max())}
+
+
+def _bounds_rows_ref(rows, cfg, avgdl):
+    """One row at a time: the merge's bound recompute under *avgdl*,
+    every other column passed through."""
+    from data_prepper_spark.index.codec import decode_uints
+
+    return [
+        {**r, **_ubs(decode_uints(bytes(r["tfs"])), decode_uints(bytes(r["dls"])),
+                     cfg, avgdl)}
+        for r in rows
+    ]
+
+
+def _purge_rows_ref(pdf, deleted, cfg, avgdl, keep_intact=False):
+    """One row at a time: decode, mask, re-encode with the index codec.
+    ``keep_intact`` leaves the streams of rows that lose nothing as they
+    are (only their bounds are recomputed)."""
     from data_prepper_spark.index.codec import (
         VARINT_TAG,
         decode_docids,
         decode_uints,
         encode_docids,
         encode_uints,
-        pack_f32,
         pack_i64,
         varint_value_ends,
     )
 
-    k1, b, bs = cfg.k1, cfg.b, cfg.block_size
+    bs = cfg.block_size
     rows = []
     for row in pdf.to_dict("records"):
         d = decode_docids(bytes(row["doc_ids"]))
@@ -235,6 +261,9 @@ def _purge_rows_ref(pdf, deleted, cfg, avgdl):
             continue
         tf = decode_uints(bytes(row["tfs"])).astype(np.int64)
         dl = decode_uints(bytes(row["dls"])).astype(np.int64)
+        if keep_intact and keep.all():
+            rows.append({**row, **_ubs(tf, dl, cfg, avgdl)})
+            continue
         new = dict(row)
         if cfg.positions:
             stream = np.frombuffer(bytes(row["positions"]), dtype=np.uint8)[1:]
@@ -245,17 +274,14 @@ def _purge_rows_ref(pdf, deleted, cfg, avgdl):
                 sb[a:z] for a, z, kp in zip(start, end, keep) if kp
             )
         d, tf, dl = d[keep], tf[keep], dl[keep]
-        norm = tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        ub = np.nextafter(norm.astype(np.float32), np.float32(np.inf))
         starts = np.arange(0, d.size, bs)
-        block_ubs = np.maximum.reduceat(ub, starts)
         new.update(
             df_slice=d.size, cf_slice=tf.sum(),
             doc_ids=encode_docids(d, cfg.codec),
             tfs=encode_uints(tf.astype(np.uint64), cfg.codec),
             dls=encode_uints(dl.astype(np.uint64), cfg.codec),
-            block_firsts=pack_i64(d[starts]), block_ubs=pack_f32(block_ubs),
-            max_ub=np.float32(block_ubs.max()), n_blocks=starts.size,
+            block_firsts=pack_i64(d[starts]), n_blocks=starts.size,
+            **_ubs(tf, dl, cfg, avgdl),
         )
         rows.append(new)
     return rows
@@ -264,15 +290,17 @@ def _purge_rows_ref(pdf, deleted, cfg, avgdl):
 @pytest.mark.parametrize("codec", ["varint", "pfor"])
 @pytest.mark.parametrize("positions", [False, True])
 def test_purge_kernel_matches_per_row_reference(codec, positions):
-    """The group-at-once purge kernel emits, byte for byte, what
-    decoding, masking and re-encoding each row alone emits — including
-    rows that lose every posting (dropped), multi-block rows
-    (block_size=4), a batch whose source rows mix both codecs, and an
-    empty batch."""
+    """The merge's group-at-once fold kernel (merge.fold_fn) emits, byte
+    for byte, what purging each row alone and then recomputing its
+    bounds under the merged avgdl emits — over rows that lose every
+    posting (dropped), rows that lose some, rows that lose none,
+    multi-block rows (block_size=4), a batch whose source rows mix both
+    codecs, and an empty batch."""
     import pandas as pd
 
+    from data_prepper_spark.index.codec import decode_docids
     from data_prepper_spark.index.config import IndexConfig
-    from data_prepper_spark.index.deletes import _purge_fn
+    from data_prepper_spark.index.merge import fold_fn
 
     rng = np.random.default_rng(41)
     cfg = IndexConfig(block_size=4, codec=codec, positions=positions)
@@ -283,16 +311,21 @@ def test_purge_kernel_matches_per_row_reference(codec, positions):
     )
     sizes = pdf["df_slice"].to_numpy()
     assert sizes.min() == 1 and sizes.max() > 4 * cfg.block_size
-    from data_prepper_spark.index.codec import decode_docids
-
     # every doc of the first single-posting row goes, so that row drops
     lone = decode_docids(pdf.loc[np.argmin(sizes), "doc_ids"])
     deleted = np.unique(np.concatenate([lone, docs[rng.random(docs.size) < 0.2]]))
-    avgdl = 171.25
-    for batch in (pdf, mixed):
-        got = list(_purge_fn(deleted, cfg, avgdl)(iter([batch])))
+    lost = [np.isin(decode_docids(x), deleted).sum() for x in pdf["doc_ids"]]
+    assert 0 in lost and any(0 < n < s for n, s in zip(lost, sizes))
+    avgdl = 171.25  # merged avgdl, not the source's 150.0
+    cases = [
+        # single codec: purge (under the post-delete avgdl) then merge
+        (pdf, _bounds_rows_ref(_purge_rows_ref(pdf, deleted, cfg, 149.0), cfg, avgdl)),
+        # mixed codecs: rows that lose nothing keep their own codec
+        (mixed, _purge_rows_ref(mixed, deleted, cfg, avgdl, keep_intact=True)),
+    ]
+    for batch, want in cases:
+        got = list(fold_fn(deleted, avgdl, cfg)(iter([batch])))
         assert len(got) == 1
-        want = _purge_rows_ref(batch, deleted, cfg, avgdl)
         assert 0 < len(want) < len(batch)
         assert list(got[0].columns) == list(batch.columns)
         got_rows = got[0].to_dict("records")
@@ -301,8 +334,8 @@ def test_purge_kernel_matches_per_row_reference(codec, positions):
             assert g.keys() == w.keys()
             for c in w:
                 assert g[c] == w[c], c
-    empty = list(_purge_fn(deleted, cfg, avgdl)(iter([pdf.iloc[0:0]])))
+    empty = list(fold_fn(deleted, avgdl, cfg)(iter([pdf.iloc[0:0]])))
     assert len(empty) == 1 and len(empty[0]) == 0
-    # nothing deleted → every row re-encodes to itself
-    same = next(_purge_fn(np.empty(0, np.int64), cfg, 150.0)(iter([pdf])))
+    # nothing dropped, built avgdl → every row comes back unchanged
+    same = next(fold_fn(np.empty(0, np.int64), 150.0, cfg)(iter([pdf])))
     assert same.reset_index(drop=True).equals(pdf)

@@ -171,6 +171,30 @@ def test_fields_merge_identity(spark, fields_index):
         assert got == want, fq
 
 
+def test_fields_index_refuses_drops(spark):
+    """A fields index cannot lose docs in a purge or merge: docmeta
+    stores no per-field lengths, so fields_json could not be recomputed
+    exactly — the merge raises a ValueError naming fields_json instead of
+    silently writing stats without it.  A merge that drops nothing still
+    sums fields_json (test_fields_merge_identity)."""
+    from pyspark.sql import functions as F
+
+    from data_prepper_spark.index.deletes import delete_docs, purge_deletes
+    from data_prepper_spark.index.merge import merge_indexes
+
+    d = tempfile.mkdtemp(prefix="dps_test_fieldsdrop_")
+    build_oneshot_fields(
+        spark, spark.createDataFrame(DOCS, "doc_id long, text string"), d,
+        IndexConfig(range_bits=2, block_size=4, n_buckets=4),
+        fields={"body": "text", "head": F.substring("text", 1, HEAD_LEN)},
+    )
+    with pytest.raises(ValueError, match="fields_json"):
+        merge_indexes(spark, [d], tempfile.mkdtemp(), drop=[[3]])
+    delete_docs(d, [3])
+    with pytest.raises(ValueError, match="fields_json"):
+        purge_deletes(spark, d, tempfile.mkdtemp())
+
+
 def test_fields_phrase_scoped(spark):
     """Field-scoped phrase queries on a positional fields index: the
     phrase must match within ONE field (field-local positions), scored

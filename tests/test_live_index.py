@@ -209,6 +209,65 @@ def test_live_delete_then_compact(spark, workdir):
         )
 
 
+def test_compact_counts_only_present_tombstones_and_refuses_empty(
+    spark, workdir
+):
+    """Tombstones of doc_ids the index never held drop nothing: with as
+    many of them as live docs plus one real delete, compact keeps every
+    other doc.  Tombstoning every remaining doc and compacting would
+    publish an empty index: the fold raises and CURRENT (and its version
+    dir) stay as they were."""
+    from data_prepper_spark.index.build import build_oneshot_text
+    from data_prepper_spark.index.live import compact, live_delete_docs
+
+    out = os.path.join(workdir, "live_all_deleted")
+    docs = [(i, _doc_text(i)) for i in range(12)]
+    apply_batch(
+        spark, _mk_docs(spark, docs), 0, out, CFG, builder=build_oneshot_text
+    )
+    live_delete_docs(out, [0] + list(range(1000, 1000 + len(docs))))
+    s = BM25Searcher(spark, compact(spark, out))
+    assert s.n_docs == len(docs) - 1
+    hits = {d for d, _ in s.search("alpha beta", k=100, mode="brute")}
+    assert hits == set(range(1, len(docs)))
+
+    before = open(os.path.join(out, "CURRENT")).read()
+    live_delete_docs(out, range(1, len(docs)))
+    with pytest.raises(ValueError, match="refusing to publish an empty version"):
+        compact(spark, out)
+    assert open(os.path.join(out, "CURRENT")).read() == before
+    assert BM25Searcher(spark, resolve_current(out)).n_docs == len(docs) - 1
+
+
+def test_upsert_superseding_whole_base(spark, workdir):
+    """An upsert batch that re-ingests every base doc leaves the base
+    with nothing to contribute: the fold is rank-identical to a fresh
+    build over the batch alone."""
+    from data_prepper_spark.index.build import build_oneshot_text
+
+    out = os.path.join(workdir, "live_upsert_all")
+    b0 = [(i, _doc_text(i, "a")) for i in range(40)]
+    b1 = [(i, _doc_text(i, "b")) for i in range(40)] + [
+        (i, _doc_text(i, "a")) for i in range(40, 50)
+    ]
+    for bid, batch in enumerate((b0, b1)):
+        apply_batch(
+            spark, _mk_docs(spark, batch), bid, out, CFG,
+            builder=build_oneshot_text,
+        )
+    s = BM25Searcher(spark, resolve_current(out))
+    fresh = os.path.join(workdir, "live_upsert_all_fresh")
+    build_oneshot_text(spark, _mk_docs(spark, b1), fresh, CFG)
+    sf = BM25Searcher(spark, fresh)
+    assert (s.n_docs, s.avgdl) == (sf.n_docs, sf.avgdl)
+    for q in UPQ:
+        for mode in ("bmw", "brute"):
+            _assert_rank_identical(
+                s.search(q, k=10, mode=mode), sf.search(q, k=10, mode=mode),
+                f"{mode} {q!r}",
+            )
+
+
 def test_live_index_docvalues_filtered(spark, tiny_corpus_path, tiny_pages_pd,
                                        workdir):
     """Docvalues flow through the streaming path: a live index whose
@@ -251,7 +310,7 @@ def test_fold_never_collects_base_docmeta(spark, workdir, monkeypatch):
     the BASE index's docmeta to the driver (at 10^12 docs that is ~TBs of
     int64).  Only batch-bounded DELTA docsets may be collected; the
     base's superseded set is computed Spark-side (semi-join against the
-    broadcast delta-id set) in _superseded_in_base."""
+    broadcast drop set) inside merge_indexes."""
     from data_prepper_spark.index import live
     from data_prepper_spark.index.build import build_oneshot_text
 

@@ -2,7 +2,8 @@
 must be rank-identical to a from-scratch build over the full corpus in
 every scoring mode — BMW included, which exercises the merge's exact
 per-block upper-bound recompute (stored bounds are avgdl-dependent; the
-merged corpus's avgdl differs from each half's)."""
+merged corpus's avgdl differs from each half's).  Tombstoned source docs
+are left out of the merge."""
 
 import os
 
@@ -215,17 +216,17 @@ def test_merged_bool_and_filtered_not_clobbered(spark, merged_index, tiny_index,
 
 @pytest.mark.parametrize("codec", ["varint", "pfor"])
 def test_recompute_ubs_kernel_matches_per_row_reference(codec):
-    """The group-at-once bound kernel gives each row exactly the
-    block_ubs / max_ub of a per-row recompute under the new avgdl, over
-    multi-block rows (block_size=4) and across batches; every other
-    column, the docID stream included, passes through untouched.  No
-    Spark."""
+    """With nothing to drop, the merge's group-at-once fold kernel gives
+    each row exactly the block_ubs / max_ub of a per-row recompute under
+    the new avgdl, over multi-block rows (block_size=4) and across
+    batches; every other column, the docID stream included, passes
+    through untouched.  No Spark."""
     import numpy as np
     import pandas as pd
 
     from data_prepper_spark.index.build import encode_slice_fn
     from data_prepper_spark.index.codec import decode_uints, pack_f32
-    from data_prepper_spark.index.merge import recompute_ubs_fn
+    from data_prepper_spark.index.merge import fold_fn
 
     rng = np.random.default_rng(5)
     k1, b, bs, avgdl = 1.2, 0.75, 4, 97.5
@@ -242,7 +243,8 @@ def test_recompute_ubs_kernel_matches_per_row_reference(codec):
     pdf = encode_slice_fn(210.0, k1, b, bs, codec)(toks)
     assert pdf["n_blocks"].max() > 1
     batches = [pdf.iloc[:7], pdf.iloc[7:], pdf.iloc[0:0]]
-    got = list(recompute_ubs_fn(avgdl, k1, b, bs)(iter(batches)))
+    cfg = IndexConfig(k1=k1, b=b, block_size=bs, codec=codec)
+    got = list(fold_fn(np.empty(0, np.int64), avgdl, cfg)(iter(batches)))
     assert [len(g) for g in got] == [len(x) for x in batches]
     out = pd.concat(got)
     for (_, g), (_, r) in zip(out.iterrows(), pdf.iterrows()):
@@ -256,3 +258,49 @@ def test_recompute_ubs_kernel_matches_per_row_reference(codec):
         for c in pdf.columns:
             if c not in ("block_ubs", "max_ub"):
                 assert g[c] == r[c], c
+
+
+def test_merge_applies_source_tombstones(
+    spark, half_indexes, tiny_pages_pd, workdir
+):
+    """A merge leaves out every source's tombstoned docs: merging a
+    tombstoned copy of one half with the other half searches like, and
+    has the corpus stats of, a fresh build over the survivors — and the
+    merged index carries no tombstones of its own."""
+    import shutil
+
+    import numpy as np
+
+    from data_prepper_spark.hashing import xxh64_signed
+    from data_prepper_spark.index.deletes import delete_docs
+    from data_prepper_spark.oracle import OracleIndex
+
+    src = os.path.join(workdir, "index_half0_tomb")
+    shutil.rmtree(src, ignore_errors=True)
+    shutil.copytree(half_indexes[0], src)
+    ids = sorted(
+        r["doc_id"]
+        for r in spark.read.parquet(f"{src}/docmeta").select("doc_id").collect()
+    )
+    dead = ids[::9]
+    assert delete_docs(src, dead) == len(dead)
+    out = os.path.join(workdir, "index_merged_tomb")
+    stats = merge_indexes(spark, [src, half_indexes[1]], out)
+
+    dset = set(dead)
+    fresh = OracleIndex().build(
+        tiny_pages_pd[[xxh64_signed(u) not in dset for u in tiny_pages_pd["url"]]]
+    )
+    assert stats["n_docs"] == fresh.n_docs
+    assert stats["total_tokens"] == fresh.total_tokens
+    s = BM25Searcher(spark, out)
+    assert s.deleted.size == 0 and s.n_docs == fresh.n_docs
+    hits = {d for d, _ in s.search("the data", k=10**6, mode="brute")}
+    assert hits and not hits & dset
+    for q in reference_queries()[:8]:
+        want = fresh.topk(q["query_text"], q["k"])
+        got = s.search(q["query_text"], k=q["k"], mode="bmw")
+        _assert_rank_identical(got, want, q["query_text"])
+    assert np.intersect1d(
+        [r["doc_id"] for r in spark.read.parquet(f"{out}/docmeta").collect()], dead
+    ).size == 0

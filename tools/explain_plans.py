@@ -212,18 +212,21 @@ def main():
         cap(similarity.semdedup(emb, n_centroids=8, threshold=0.35)),
     ))
 
-    from data_prepper_spark.index.merge import recompute_ubs_fn
+    import numpy as np
+
+    from data_prepper_spark.index.merge import fold_fn
 
     posts = spark.read.parquet(f"{idx}/postings")
     fixed = posts.withColumn("bgroup", F.lit(0).cast("int")).mapInPandas(
-        recompute_ubs_fn(200.0, cfg.k1, cfg.b, cfg.block_size),
+        fold_fn(np.empty(0, dtype=np.int64), 200.0, cfg),
         schema=posts.withColumn("bgroup", F.lit(0).cast("int")).schema,
     )
     sections.append((
-        "Segment merge posting pass (union + bound recompute, NO Exchange)",
+        "Segment merge posting pass (union + drops + bound recompute, NO Exchange)",
         "The merge's posting rewrite is scan → MapInPandas → write: no "
         "Exchange anywhere — posting rows never shuffle during a merge; "
-        "only the tf/dl streams are decoded in the kernel.",
+        "with nothing to drop only the tf/dl streams are decoded in the "
+        "kernel.",
         cap(fixed),
     ))
 
