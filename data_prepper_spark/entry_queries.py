@@ -191,8 +191,8 @@ def q_ft_postings_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("term_id", "doc_ids", "tfs")
         .mapInPandas(decode, schema="term_id long, doc_id long, tf long")
     )
-    tdict = spark.read.parquet(f"{idx}/termdict").select("term", "term_id")
-    return decoded.join(F.broadcast(tdict), "term_id").select("term", "doc_id", "tf")
+    terms = spark.read.parquet(f"{idx}/termstats").select("term", "term_id")
+    return decoded.join(F.broadcast(terms), "term_id").select("term", "doc_id", "tf")
 
 
 def q_ft_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2435,7 +2435,7 @@ def q_ft_suggest_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     index/boolquery.py suggest_terms): per misspelled token, the top-5
     vocabulary corrections within 2 plain-Levenshtein edits, ranked
     (distance ASC, df DESC, term ASC); mode=missing skips tokens already
-    in the index.  Vocabulary-bounded (one termdict scan + the
+    in the index.  Vocabulary-bounded (one vocabulary scan + the
     vectorized DP), never corpus-bounded."""
     from .index.boolquery import suggest_terms
 
@@ -2739,7 +2739,7 @@ def q_ft_suggest_completion(spark: SparkSession, sf_dir: str) -> DataFrame:
     search-as-you-type, index/boolquery.py suggest_completion): per
     prefix, the top-5 vocabulary terms ranked (df DESC, term ASC) with
     their document frequencies — df is the corpus-derived analog of
-    OpenSearch's indexed completion weight.  One hive-pruned termdict
+    OpenSearch's indexed completion weight.  One hive-pruned termstats
     scan + one termstats lookup per prefix; vocabulary-bounded, never
     corpus-bounded."""
     from .index.boolquery import suggest_completion
@@ -10135,7 +10135,7 @@ def q_ft_span_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """span_multi query (Lucene SpanMultiTermQueryWrapper around a
     PrefixQuery, paired with a literal clause in an unordered span_near;
     index/phrase.py span_multi_near_topk): the prefix rewrites to its
-    concrete termdict terms (top_terms span rewrite) and a doc matches
+    concrete vocabulary terms (top_terms span rewrite) and a doc matches
     when ANY expanded term occurs within slop of the literal term.  BM25
     with tf = distinct qualifying expanded-term positions under ONE
     shared idf over the union df.  qid 2's expansion contains the

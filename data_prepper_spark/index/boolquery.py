@@ -26,7 +26,8 @@ docID range, so boolean constraints evaluate completely inside a range —
 the per-range kernel is exact, no cross-range state.
 
 Prefix, fuzzy, and wildcard queries rewrite through the term dictionary
-(Lucene MultiTermQuery): expand against termdict — a vocabulary scan,
+(Lucene MultiTermQuery): expand against the term strings of termstats
+(the term dictionary: one row per term with postings) — a vocabulary scan,
 bounded by |vocab| not corpus size — then score the expansion as a
 should-group where each concrete term keeps its own idf (Lucene's
 SCORING_BOOLEAN_REWRITE).  Expansion is capped like
@@ -601,13 +602,19 @@ def _search_bool_distributed(
 
 # ------------------------------------------------------------------ prefix
 
+def _vocab(searcher):
+    """The ``term`` column of termstats — one row per term with postings;
+    an old ``termdict/`` table is never read."""
+    ds = pads.dataset(f"{searcher.index_dir}/termstats", partitioning="hive")
+    return ds.to_table(columns=["term"])["term"]
+
+
 def expand_prefix(searcher, prefix: str, max_expansions: int = 1024) -> list[str]:
     """Concrete terms matching *prefix* from the term dictionary — a
-    vocabulary scan (pyarrow over the hive-partitioned termdict; cost is
-    bounded by |vocab|, never corpus size).  Raises when the expansion
-    exceeds *max_expansions*, like BooleanQuery.maxClauseCount."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    vocabulary scan (:func:`_vocab`; cost is bounded by |vocab|, never
+    corpus size).  Raises when the expansion exceeds *max_expansions*,
+    like BooleanQuery.maxClauseCount."""
+    col = _vocab(searcher)
     m = pc.starts_with(col, pattern=prefix)
     terms = sorted(set(col.filter(m).to_pylist()))
     if len(terms) > max_expansions:
@@ -785,7 +792,7 @@ def suggest_terms(
     ``"always"`` suggests for every token (the token itself never
     appears — distance 0 is excluded).  Returns (token, suggestion,
     distance, df) rows.  Vocabulary-bounded like every MultiTermQuery
-    rewrite: one termdict scan + the vectorized DP, never corpus-bounded.
+    rewrite: one vocabulary scan + the vectorized DP, never corpus-bounded.
 
     Reference anchor: the reference delegates search UX to OpenSearch
     (opensearch sink); the suggester is part of that serving surface."""
@@ -799,8 +806,7 @@ def suggest_terms(
             toks.append(t)
     if not toks:
         return []
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    vocab = sorted(set(ds.to_table(columns=["term"])["term"].to_pylist()))
+    vocab = sorted(set(_vocab(searcher).to_pylist()))
     vocab_set = set(vocab)
     out: list[tuple[str, str, int, int]] = []
     for tok in toks:
@@ -840,7 +846,7 @@ def suggest_completion(
     ranked by (df DESC, term ASC) and returned as (term, df) rows.
     OpenSearch ranks completions by an indexed per-suggestion weight;
     document frequency is the corpus-derived analog, deterministic and
-    oracle-pinnable.  One hive-pruned termdict scan + one termstats
+    oracle-pinnable.  One vocabulary scan + one termstats
     lookup — vocabulary-bounded, never corpus-bounded (no max_expansions
     cap: nothing downstream is per-expansion).  Stored df counts every
     indexed doc, like OpenSearch completion weights, so terms appearing
@@ -863,8 +869,7 @@ def phrase_token_candidates(
     after summing per-period dfs (UNCUT per period would be exact; the
     per-token cut is the deterministic generator cap OpenSearch's
     direct_generator applies per shard)."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    vocab = sorted(set(ds.to_table(columns=["term"])["term"].to_pylist()))
+    vocab = sorted(set(_vocab(searcher).to_pylist()))
     from ..hashing import pmod
 
     out: list[list[tuple[str, int, int]]] = []
@@ -904,7 +909,7 @@ def suggest_phrase(
     count the exact integer df-product orders identically to the
     unigram log-likelihood sum — deterministic and SQL-pinnable with no
     float in sight.  Returns (phrase, total_edits, df_product) rows.
-    Vocabulary-bounded: one termdict scan, ≤ per_token+1 candidates per
+    Vocabulary-bounded: one vocabulary scan, ≤ per_token+1 candidates per
     position, ≤ Π(per_token+1) composed phrases."""
     import itertools
 
@@ -965,8 +970,7 @@ def completion_candidates(searcher, prefix: str) -> list[tuple[str, int]]:
     cross-period suggester sums (a per-period top-k cut before the df
     fold would be unsound: a term just below k in every period can be
     the global winner)."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    col = _vocab(searcher)
     cands = sorted(set(col.filter(
         pc.starts_with(col, pattern=prefix)
     ).to_pylist()))
@@ -1000,9 +1004,8 @@ def expand_fuzzy(
     match exactly (Lucene's prefixLength), pruning the scan arrow-side
     before the DP.  Vocabulary-bounded, never corpus-bounded — at web
     scale |vocab| grows ~Heaps-law sublinearly and the hive-partitioned
-    termdict scan parallelizes per bucket."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    termstats scan parallelizes per bucket."""
+    col = _vocab(searcher)
     if prefix_len > 0:
         col = col.filter(pc.starts_with(col, pattern=term[:prefix_len]))
     vocab = sorted(set(col.to_pylist()))
@@ -1121,8 +1124,7 @@ def expand_term_range(
     inclusive/exclusive per flags; None = open end) from the term
     dictionary — Lucene TermRangeQuery.  Same vocabulary-bounded scan as
     prefix/fuzzy/wildcard."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    col = _vocab(searcher)
     m = None
     if lower is not None:
         c = pc.greater_equal(col, lower) if include_lower else pc.greater(col, lower)
@@ -1185,8 +1187,7 @@ def expand_wildcard(
 ) -> list[str]:
     """Concrete terms matching the glob *pattern* from the term dictionary
     (Lucene WildcardQuery).  Same vocabulary-bounded scan as prefix/fuzzy."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    col = _vocab(searcher)
     m = pc.match_substring_regex(col, pattern=glob_to_regex(pattern))
     terms = sorted(set(col.filter(m).to_pylist()))
     if len(terms) > max_expansions:
@@ -1203,8 +1204,7 @@ def expand_regexp(
     """Concrete terms fully matching the RE2 *pattern* (Lucene
     RegexpQuery — anchored, like Lucene's): vocabulary scan, then the
     scoring-boolean rewrite via :func:`search_regexp`."""
-    ds = pads.dataset(f"{searcher.index_dir}/termdict", partitioning="hive")
-    col = ds.to_table(columns=["term"])["term"]
+    col = _vocab(searcher)
     m = pc.match_substring_regex(col, pattern=f"^(?:{pattern})$")
     terms = sorted(set(col.filter(m).to_pylist()))
     if len(terms) > max_expansions:

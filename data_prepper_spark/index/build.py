@@ -1,5 +1,10 @@
 """Stages 2-4 — posting-slice build, segment write, docmeta/stats, ledger.
 
+Tables: ``postings``, ``termstats`` (one row per term with postings —
+df, cf, max_ub and the term string: the term dictionary, as Lucene's
+keeps docFreq with each term), ``docmeta`` and the one-row ``stats``,
+which the driver writes with pyarrow rather than a Spark job.
+
 Data Prepper analogs (SURVEY.md):
   - groupBy(term, range_id).applyInPandas ≈ `aggregate` processor with the
     `append` action (collect per-key lists,
@@ -35,9 +40,13 @@ from __future__ import annotations
 import json
 import math
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..hashing import xxh64_signed
@@ -208,10 +217,22 @@ def _paths(index_dir: str) -> dict:
         "staging": os.path.join(index_dir, "_staging", "tokens"),
         "postings": os.path.join(index_dir, "postings"),
         "termstats": os.path.join(index_dir, "termstats"),
-        "termdict": os.path.join(index_dir, "termdict"),
         "docmeta": os.path.join(index_dir, "docmeta"),
-        "stats": os.path.join(index_dir, "stats"),
     }
+
+
+def _write_stats(index_dir: str, stats: dict) -> None:
+    """Overwrite the one-row ``stats`` table with pyarrow, in the column
+    order and types ``spark.createDataFrame([stats])`` would write."""
+    d = os.path.join(index_dir, "stats")
+    shutil.rmtree(d, ignore_errors=True)
+    os.makedirs(d)
+    row = dict(sorted(stats.items()))
+    pq.write_table(pa.Table.from_pylist([row]), os.path.join(d, "part-00000.parquet"))
+
+
+def _read_stats(index_dir: str) -> dict:
+    return pads.dataset(os.path.join(index_dir, "stats")).to_table().to_pylist()[0]
 
 
 def _fingerprint(src_tag: str, cfg: IndexConfig) -> str:
@@ -232,19 +253,19 @@ def _term_bucket_from_id(cfg: IndexConfig):
     return F.pmod(F.col("term_id"), F.lit(cfg.n_buckets)).cast("int")
 
 
-def _termdict(tokens: DataFrame, cfg: IndexConfig) -> DataFrame:
-    """(term, term_id, term_bucket) — pure-JVM distinct, one shuffle."""
-    return (
-        tokens.select("term")
-        .distinct()
-        .withColumn("term_id", F.xxhash64("term"))
-        .withColumn("term_bucket", _term_bucket(cfg))
-    )
+def _termdict(tokens: DataFrame) -> DataFrame:
+    """(term, term_id) of the distinct staged terms — pure-JVM distinct,
+    one shuffle, never written: it only feeds :func:`_write_termstats`."""
+    return tokens.select("term").distinct().withColumn("term_id", F.xxhash64("term"))
 
 
-def _write_termstats(spark: SparkSession, p: dict, cfg: IndexConfig) -> None:
+def _write_termstats(
+    spark: SparkSession, p: dict, cfg: IndexConfig, terms: DataFrame
+) -> None:
+    """Write ``termstats`` from the written postings joined, in the same
+    job, with the term strings of *terms* (any (term, term_id) frame).
+    The inner join keeps only terms that still have postings."""
     posts = spark.read.parquet(p["postings"])
-    tdict = spark.read.parquet(p["termdict"]).select("term", "term_id")
     termstats = (
         posts.groupBy("term_id")
         .agg(
@@ -252,7 +273,7 @@ def _write_termstats(spark: SparkSession, p: dict, cfg: IndexConfig) -> None:
             F.sum("cf_slice").alias("cf"),
             F.max("max_ub").alias("max_ub"),
         )
-        .join(tdict, "term_id")
+        .join(terms.select("term", "term_id"), "term_id")
         .withColumn("term_bucket", _term_bucket_from_id(cfg))
         .repartition(cfg.n_buckets, F.col("term_bucket"))
     )
@@ -332,11 +353,9 @@ def build_index(
             "avgdl": (total_tokens / n_docs) if n_docs else 0.0,
             **cfg.to_dict(),
         }
-        spark.createDataFrame([stats]).coalesce(1).write.mode("overwrite").parquet(
-            p["stats"]
-        )
+        _write_stats(index_dir, stats)
         ledger.commit("docmeta", 0, token_count=total_tokens, input_fingerprint=fp)
-    stats = spark.read.parquet(p["stats"]).collect()[0].asDict()
+    stats = _read_stats(index_dir)
     avgdl = float(stats["avgdl"])
 
     # ---- stage: posting slices, per bucket-group ----
@@ -378,26 +397,13 @@ def build_index(
             .partitionBy("term_bucket")
             .parquet(gdir)
         )
-        back = spark.read.parquet(gdir)
-        cnt = back.agg(
-            F.sum("cf_slice").alias("cf"), F.sum("df_slice").alias("df")
-        ).collect()[0]
-        ledger.commit(
-            "postings",
-            g,
-            token_count=int(cnt["cf"] or 0),
-            posting_count=int(cnt["df"] or 0),
-            input_fingerprint=fp,
-        )
+        ledger.commit("postings", g, input_fingerprint=fp)
         if fault_injector is not None:
             fault_injector("postings", g)
 
-    # ---- stage: term dictionary + per-term global stats (slice "merge") ----
+    # ---- stage: per-term global stats + term strings (slice "merge") ----
     if 0 not in ledger.completed("termstats", fp):
-        _termdict(tokens, cfg).repartition(
-            cfg.n_buckets, F.col("term_bucket")
-        ).write.mode("overwrite").partitionBy("term_bucket").parquet(p["termdict"])
-        _write_termstats(spark, p, cfg)
+        _write_termstats(spark, p, cfg, _termdict(tokens))
         ledger.commit("termstats", 0, input_fingerprint=fp)
 
     ledger.commit("finalize", 0, input_fingerprint=fp)
@@ -563,9 +569,7 @@ def build_oneshot_tokens(
         **cfg.to_dict(),
         **(extra_stats or {}),
     }
-    spark.createDataFrame([stats]).coalesce(1).write.mode("overwrite").parquet(
-        p["stats"]
-    )
+    _write_stats(index_dir, stats)
     _mark("t_docmeta")
     encode = encode_slice_fn(
         avgdl, cfg.k1, cfg.b, cfg.block_size, cfg.codec, positions=cfg.positions
@@ -594,10 +598,7 @@ def build_oneshot_tokens(
         .parquet(p["postings"])
     )  # sorted + small row groups -> term_id row-group pruning at query time
     _mark("t_encode")
-    _termdict(tokens, cfg).repartition(
-        cfg.n_buckets, F.col("term_bucket")
-    ).write.mode("overwrite").partitionBy("term_bucket").parquet(p["termdict"])
-    _write_termstats(spark, p, cfg)
+    _write_termstats(spark, p, cfg, _termdict(tokens))
     _mark("t_termstats")
     stats["timings"] = json.dumps(timings)
     Ledger(index_dir).commit("finalize", 0, token_count=total_tokens)

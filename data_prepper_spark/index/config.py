@@ -88,8 +88,8 @@ TOKENS_SCHEMA = "doc_id long, term string, tf int, dl int"
 TOKENS_POS_SCHEMA = TOKENS_SCHEMA + ", pos_blob binary"
 # postings are keyed by term_id = xxhash64(term) (the classic term
 # dictionary split): the posting shuffle and encode kernel touch ONLY
-# fixed-width integers — term strings live in the termdict/termstats
-# tables and never cross the Python boundary in the hot path.
+# fixed-width integers — term strings live in the termstats table (the
+# term dictionary) and never cross the Python boundary in the hot path.
 SLICE_SCHEMA = (
     "term_id long, range_id int, df_slice long, cf_slice long, "
     "doc_ids binary, tfs binary, dls binary, "

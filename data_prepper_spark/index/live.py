@@ -37,6 +37,7 @@ import os
 import shutil
 
 import numpy as np
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame, SparkSession
 
 from .build import build_oneshot
@@ -151,17 +152,13 @@ def apply_batch(
         )
 
 
-def _doc_id_set(spark: SparkSession, index_dir: str) -> np.ndarray:
-    """Sorted doc_ids of one DELTA segment (from docmeta).  Collected to
-    the driver: delta docsets are bounded by a micro-batch's worth of
-    docs.  The BASE index's docmeta is never collected — merge_indexes
-    semi-joins it against the drop set Spark-side."""
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "docmeta"))
-        .select("doc_id")
-        .collect()
-    )
-    return np.array(sorted(r["doc_id"] for r in rows), dtype=np.int64)
+def _doc_id_set(index_dir: str) -> np.ndarray:
+    """Sorted doc_ids of one DELTA segment, read from its docmeta with
+    pyarrow on the driver (no Spark job): delta docsets are bounded by a
+    micro-batch's worth of docs.  The BASE index's docmeta is never read
+    here — merge_indexes semi-joins it against the drop set Spark-side."""
+    tbl = pads.dataset(os.path.join(index_dir, "docmeta")).to_table(columns=["doc_id"])
+    return np.sort(tbl["doc_id"].to_numpy())
 
 
 def _fold(
@@ -200,7 +197,7 @@ def _fold(
     shutil.rmtree(dest, ignore_errors=True)
 
     # only DELTA docsets are collected (micro-batch bounded)
-    delta_sets = [_doc_id_set(spark, s) for s in pending]
+    delta_sets = [_doc_id_set(s) for s in pending]
     first = len(sources) - len(pending)  # 1 when a base version exists
     empty = np.empty(0, dtype=np.int64)
     drops = [

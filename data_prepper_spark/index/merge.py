@@ -28,9 +28,14 @@ re-encodes only the rows that lost postings.
 
 Corpus stats come from data in hand: the sources' stored stats minus
 the dropped docs' doc_len, fetched by one semi-join collect bounded by
-the drop sets (the docmeta itself never reaches the driver).  Rank
-identity is pinned by tests/test_merge.py, tests/test_deletes.py and
-the ft_merged_bm25 / ft_purged_bm25 oracle entries.
+the drop sets (the docmeta itself never reaches the driver), and the
+driver writes the merged stats row (build._write_stats).  Term strings
+come from the union of the sources' termstats; the merged termstats
+inner-joins them with the merged postings, so a term whose postings
+all dropped leaves the vocabulary.  Every Spark job of a merge moves
+posting or doc data.  Rank identity is pinned by tests/test_merge.py,
+tests/test_deletes.py and the ft_merged_bm25 / ft_purged_bm25 oracle
+entries.
 
 Each merge stage commits to the checkpoint ledger, so a killed merge
 resumes without recomputation — the same lease/positive-ack recast as
@@ -56,11 +61,12 @@ import json
 import os
 
 import numpy as np
-import pyarrow.dataset as pads
+import pandas as pd
 from pyspark.sql import SparkSession, functions as F
 
 from ..hashing import xxh64_signed
-from .build import _cuts, _paths, _write_termstats, encode_runs, run_bounds
+from .build import _cuts, _paths, _read_stats, _write_stats, _write_termstats
+from .build import encode_runs, run_bounds
 from .codec import (
     VARINT_TAG,
     decode_docids_batch,
@@ -71,10 +77,6 @@ from .config import IndexConfig
 from .deletes import read_tombstones
 from .ledger import Ledger
 from .scoring import _member_sorted
-
-
-def _read_stats(index_dir: str) -> dict:
-    return pads.dataset(os.path.join(index_dir, "stats")).to_table().to_pylist()[0]
 
 
 def fold_fn(drop: np.ndarray, avgdl: float, cfg: IndexConfig):
@@ -167,8 +169,7 @@ def _dropped_docs(
     broadcast (source, doc_id) drop keys — the result is bounded by the
     drop sets; the docmeta itself never reaches the driver."""
     out = [(np.empty(0, dtype=np.int64), 0)] * len(src_dirs)
-    keyed = [(i, int(x)) for i, ids in enumerate(drops) for x in ids]
-    if not keyed:
+    if not any(x.size for x in drops):
         return out
     dm = None
     for i, d in enumerate(src_dirs):
@@ -177,7 +178,10 @@ def _dropped_docs(
                 F.lit(i).alias("src"), "doc_id", "doc_len"
             )
             dm = part if dm is None else dm.unionByName(part)
-    keys = spark.createDataFrame(keyed, "src int, doc_id long")
+    keys = spark.createDataFrame(pd.DataFrame({
+        "src": np.repeat(np.arange(len(drops), dtype=np.int32), [x.size for x in drops]),
+        "doc_id": np.concatenate(drops),
+    }))
     rows = dm.join(F.broadcast(keys), ["src", "doc_id"], "semi").collect()
     src = np.array([r["src"] for r in rows], dtype=np.int64)
     ids = np.array([r["doc_id"] for r in rows], dtype=np.int64)
@@ -289,9 +293,7 @@ def merge_indexes(
         for d, (ids, _) in zip(src_dirs, gone):
             part = spark.read.parquet(os.path.join(d, "docmeta"))
             if ids.size:
-                ids_df = spark.createDataFrame(
-                    [(int(x),) for x in ids], "doc_id long"
-                )
+                ids_df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
                 part = part.join(F.broadcast(ids_df), "doc_id", "left_anti")
             dm = part if dm is None else dm.unionByName(part)
         dup = dm.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
@@ -306,9 +308,7 @@ def merge_indexes(
             .write.mode("overwrite")
             .parquet(p["docmeta"])
         )
-        spark.createDataFrame([merged_stats]).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p["stats"])
+        _write_stats(out_dir, merged_stats)
         ledger.commit("merge_docmeta", 0, token_count=total_tokens, input_fingerprint=fp)
 
     # ---- stage: posting union, drops applied, exact bounds (no shuffle) ----
@@ -334,34 +334,18 @@ def merge_indexes(
             .partitionBy("bgroup", "term_bucket")
             .parquet(p["postings"])
         )
-        back = spark.read.parquet(p["postings"])
-        cnt = back.agg(
-            F.sum("cf_slice").alias("cf"), F.sum("df_slice").alias("df")
-        ).collect()[0]
-        ledger.commit(
-            "merge_postings",
-            0,
-            token_count=int(cnt["cf"] or 0),
-            posting_count=int(cnt["df"] or 0),
-            input_fingerprint=fp,
-        )
+        ledger.commit("merge_postings", 0, input_fingerprint=fp)
 
-    # ---- stage: term dictionary union + global termstats (terms whose
-    # postings all dropped keep a harmless termdict entry: termstats
-    # inner-joins postings, so df=0 terms vanish) ----
+    # ---- stage: global termstats; term strings from the sources'
+    # termstats (terms whose postings all dropped vanish in its join) ----
     if 0 not in ledger.completed("termstats", fp):
-        tds = [spark.read.parquet(os.path.join(d, "termdict")) for d in src_dirs]
-        td = tds[0]
-        for other in tds[1:]:
-            td = td.unionByName(other)
-        (
-            td.dropDuplicates(["term_id"])
-            .repartition(base.n_buckets, F.col("term_bucket"))
-            .write.mode("overwrite")
-            .partitionBy("term_bucket")
-            .parquet(p["termdict"])
-        )
-        _write_termstats(spark, p, base)
+        terms = None
+        for d in src_dirs:
+            part = spark.read.parquet(os.path.join(d, "termstats")).select(
+                "term", "term_id"
+            )
+            terms = part if terms is None else terms.unionByName(part)
+        _write_termstats(spark, p, base, terms.dropDuplicates(["term_id"]))
         ledger.commit("termstats", 0, input_fingerprint=fp)
 
     ledger.commit("finalize", 0, input_fingerprint=fp)

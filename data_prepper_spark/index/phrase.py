@@ -1343,9 +1343,9 @@ def span_multi_near_topk(
         raise ValueError("span_multi_near's literal clause must be one term")
     if not terms_a:
         return []
-    # dedupe: a merged index's termdict can carry a term once per source
-    # segment, and a duplicate tid would double-count its position keys
-    tids_a = [xxh64_signed(t) for t in sorted(set(terms_a))]
+    # expand_prefix returns sorted unique terms: a duplicate tid would
+    # double-count its position keys
+    tids_a = [xxh64_signed(t) for t in terms_a]
     tid_b = xxh64_signed(tb[0])
     return _span_topk(
         searcher, tids_a + [tid_b],

@@ -28,7 +28,7 @@ phrase_matches' per-range positional kernel — unioned and folded by ONE
 groupBy(doc_id) (sum of clause scores + count of matched musts), must_not
 sets applied as left-anti joins, global TakeOrdered.  Shuffle traffic is
 bounded by the match-set sizes, never the corpus.  Expansion sets are
-vocabulary-bounded (termdict scans), never corpus-bounded.
+vocabulary-bounded (termstats scans), never corpus-bounded.
 """
 
 from __future__ import annotations

@@ -1,7 +1,7 @@
 """Iceberg table-format layer with a layout-identical parquet fallback.
 
 The north-star deployment stores both the input pages table and the
-index segment tables (postings / termstats / termdict / docmeta / stats)
+index segment tables (postings / termstats / docmeta / stats)
 in an Iceberg catalog, partitioned by ``term_bucket`` — routing/sink
 semantics map to partition-aware Iceberg appends, and the build ledger's
 commit-after-write matches Iceberg's atomic snapshot commit.
@@ -36,7 +36,6 @@ from pyspark.sql import DataFrame, SparkSession
 INDEX_TABLES: dict[str, list[str]] = {
     "postings": ["term_bucket"],
     "termstats": ["term_bucket"],
-    "termdict": ["term_bucket"],
     "docmeta": [],
     "stats": [],
 }

@@ -852,7 +852,7 @@ def cmd_stats(args) -> None:
 
     comp = {
         name: du(os.path.join(d, name))
-        for name in ("postings", "termstats", "termdict", "docmeta")
+        for name in ("postings", "termstats", "docmeta")
         if os.path.isdir(os.path.join(d, name))
     }
     # postings may nest as bgroup=G/term_bucket=B (resumable build) or

@@ -339,3 +339,43 @@ def test_purge_kernel_matches_per_row_reference(codec, positions):
     # nothing dropped, built avgdl → every row comes back unchanged
     same = next(fold_fn(np.empty(0, np.int64), 150.0, cfg)(iter([pdf])))
     assert same.reset_index(drop=True).equals(pdf)
+
+
+def test_purge_vocabulary_matches_fresh_build(spark, workdir):
+    """Vocabulary scans of a purged index see only the terms that still
+    have postings, exactly like a fresh build over the survivors: the
+    purged doc's only-occurrence terms leave prefix expansion, and the
+    term suggester stops treating them as present."""
+    from data_prepper_spark.index.boolquery import expand_prefix, suggest_terms
+    from data_prepper_spark.index.build import build_oneshot_text
+    from data_prepper_spark.index.config import IndexConfig
+
+    docs = {
+        1: "the quick brown fox",
+        2: "the lazy dog sleeps",
+        3: "zebra zebras graze quietly",
+        4: "brown dogs run",
+    }
+    cfg = IndexConfig(range_bits=1, block_size=4, n_buckets=4)
+
+    def build(rows, name):
+        d = os.path.join(workdir, name)
+        shutil.rmtree(d, ignore_errors=True)
+        build_oneshot_text(
+            spark, spark.createDataFrame(rows, "doc_id long, text string"), d, cfg
+        )
+        return d
+
+    full = build(sorted(docs.items()), "vocab_full")
+    delete_docs(full, [2])
+    purged = os.path.join(workdir, "vocab_purged")
+    shutil.rmtree(purged, ignore_errors=True)
+    purge_deletes(spark, full, purged)
+    fresh = build([(i, t) for i, t in sorted(docs.items()) if i != 2], "vocab_fresh")
+
+    s_p, s_f = BM25Searcher(spark, purged), BM25Searcher(spark, fresh)
+    assert expand_prefix(s_p, "sle") == expand_prefix(s_f, "sle") == []
+    assert expand_prefix(s_p, "b") == expand_prefix(s_f, "b") == ["brown"]
+    want = [("dog", "dogs", 1, 1)]
+    assert suggest_terms(s_p, "dog", max_edits=1) == want
+    assert suggest_terms(s_f, "dog", max_edits=1) == want

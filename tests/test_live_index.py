@@ -317,14 +317,14 @@ def test_fold_never_collects_base_docmeta(spark, workdir, monkeypatch):
     out = os.path.join(workdir, "live_no_base_collect")
     real = live._doc_id_set
 
-    def guarded(sp, index_dir):
+    def guarded(index_dir):
         assert "v=" not in os.path.basename(
             index_dir.rstrip("/")
         ), f"_doc_id_set collected a BASE version dir: {index_dir}"
         assert "_delta" in index_dir, (
             f"_doc_id_set called on a non-delta dir: {index_dir}"
         )
-        return real(sp, index_dir)
+        return real(index_dir)
 
     monkeypatch.setattr(live, "_doc_id_set", guarded)
     b0 = [(i, _doc_text(i, "a")) for i in range(60)]
