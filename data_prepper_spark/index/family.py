@@ -21,8 +21,9 @@ matching names.  The analog here:
                  dfs_query_then_fetch: identical ranks to one big index
                  over the covered docs.  k-bounded queries keep BMW
                  pruning per segment: the stored block_ubs are baked
-                 with each segment's OWN avgdl (index/merge.py
-                 recompute_ubs_fn), and inflating them by
+                 with each segment's OWN avgdl (index/build.py
+                 run_bounds; index/merge.py fold_fn recomputes them on
+                 merge), and inflating them by
                  max(1, avgdl_global/avgdl_segment) restores a sound
                  upper bound under the global avgdl (the BM25 tf-norm is
                  monotone increasing in avgdl with ratio < A_g/A_s), so

@@ -47,7 +47,7 @@ from .scoring import (
     TermSlice,
     _member_sorted,
     idf_value,
-    score_bmw_lazy,
+    score_bmw,
     score_brute,
     topk_select,
 )
@@ -410,7 +410,7 @@ def _filtered_core(
     cfg = searcher.cfg
     no_tombs = np.empty(0, dtype=np.int64)  # deletions already off `allowed`
     out_ids, out_sc = [], []
-    theta = theta0  # WAND across ranges (see query._score_pruned)
+    theta = theta0  # WAND across ranges: the running k-th score
     n_collected = 0
     for rid, rr in rows_by_range.items():
         cand = _slice_span(allowed, rid, cfg.range_bits)
@@ -436,7 +436,7 @@ def _filtered_core(
                             s.block_ubs = (
                                 s.block_ubs.astype(np.float64) * ub_scale
                             )
-                    i_r, s_r = score_bmw_lazy(
+                    i_r, s_r = score_bmw(
                         sl, cfg.k1, cfg.b, avgdl, k,
                         allowed=cand, theta0=theta,
                     )

@@ -36,7 +36,6 @@ from .scoring import (
     decode_slice_lazy,
     idf_value,
     score_bmw,
-    score_bmw_lazy,
     score_brute,
     topk_select,
 )
@@ -303,8 +302,15 @@ class BM25Searcher:
         (index/family.py) passes family-global stats (dfs/N/avgdl summed
         across period segments — Lucene's dfs_query_then_fetch).
 
-        The stored block_ubs are avgdl-baked (index/merge.py
-        recompute_ubs_fn), so a non-native avgdl invalidates them as-is;
+        ONE scoring call per query: the slices of every docID range go to
+        one kernel, which groups each term's slices into chains of
+        disjoint, ordered docID spans (scoring._chain_groups — by docID,
+        never by range_id: merged sources may differ in range_bits) and
+        prunes the whole docID space under one running threshold.
+
+        The stored block_ubs are avgdl-baked (index/build.py run_bounds,
+        recomputed on merge by index/merge.py fold_fn), so a non-native
+        avgdl invalidates them as-is;
         a caller overriding avgdl must either use mode="brute" or pass
         ``ub_scale = max(1, avgdl_override / self.avgdl)``: the BM25
         tf-normalization tf·(k1+1)/(tf + k1·(1−b+b·dl/A)) is monotone
@@ -312,91 +318,52 @@ class BM25Searcher:
         by A_g/A_s, so the inflated bound stays a true upper bound and
         BMW pruning stays exact (per-period family serving keeps WAND
         this way — the reference searches `my-index-*` with per-shard
-        WAND intact, OpenSearchSink.java:144-150).  k=None returns every
+        WAND intact, OpenSearchSink.java:144-150).  ``theta0`` seeds the
+        threshold (a family's running k-th score).  k=None returns every
         match (exact cross-segment rounding-tie merges)."""
         if k is None:
             mode = "brute"
         rows = self._pruned_slice_rows(list(ids), buckets)
         # block-lazy scoring (tagged varint OR pfor, non-legacy): decode
-        # cost per query ∝ blocks of scored segments, not df — the
-        # df-independent path a 10^12-doc index needs.  Falls back to
-        # eager decode per row on unknown tags (decode_slice_lazy → None).
-        # tombstones force the eager path: masking needs materialized
-        # docID arrays (block metadata stays valid — masking only removes
-        # postings, see deletes.mask_term_slice)
-        # brute mode ALSO decodes via the lazy-stream objects: their
-        # decode memos live on the cached posting rows, so a hot term
-        # decodes once per searcher lifetime in either mode (the
-        # to_term_slice conversion below is memo-backed slicing)
+        # cost per query ∝ blocks of scored segments, not df, and the
+        # stream memos on cached posting rows make a hot term decode once
+        # per searcher lifetime (brute mode converts via the same memos).
+        # Unknown tags (decode_slice_lazy → None) and tombstones take the
+        # eager path: masking needs materialized docID arrays (block
+        # metadata stays valid — masking only removes postings, see
+        # deletes.mask_term_slice)
         lazy_ok = not self.legacy_codec and self.deleted.size == 0
-        by_range: dict[int, list] = {}
-        lazy_by_range: dict[int, bool] = {}
+        slices = []
         for r in rows:
-            rid = int(r["range_id"])
+            tid = r["term_id"]
             s = (
-                decode_slice_lazy(
-                    r, idf[r["term_id"]], self.cfg.block_size, ids[r["term_id"]]
-                )
+                decode_slice_lazy(r, idf[tid], self.cfg.block_size, ids[tid])
                 if lazy_ok
                 else None
             )
             if s is None:
                 s = decode_slice(
-                    r, idf[r["term_id"]], label=ids[r["term_id"]],
-                    legacy=self.legacy_codec,
+                    r, idf[tid], label=ids[tid], legacy=self.legacy_codec
                 )
                 if self.deleted.size:
                     s = mask_term_slice(s, self.deleted)
-                lazy_by_range[rid] = False
-            else:
-                lazy_by_range.setdefault(rid, True)
             if ub_scale != 1.0 and mode == "bmw":
                 # rebind, never mutate: lazy streams cache the stored ub
                 # array across queries (scoring.py decode_slice_lazy).
                 # float64 so the inflation never rounds below the true
                 # bound (callers also add a relative epsilon).
                 s.block_ubs = s.block_ubs.astype(np.float64) * ub_scale
-            by_range.setdefault(rid, []).append(s)
-        ids_all, sc_all = [], []
-        # WAND across ranges: carry the running k-th-score threshold
-        # between docID ranges (and, via theta0, between the segments of
-        # an index family) — later ranges skip whole block segments the
-        # earlier ranges already beat.  Exact: pruning is strict <.
-        theta = theta0
-        n_collected = 0
-        for rid, slices in by_range.items():
-            if mode == "bmw" and lazy_by_range.get(rid, False):
-                ids, sc = score_bmw_lazy(slices, self.cfg.k1, self.cfg.b,
-                                         avgdl, k, theta0=theta)
-            elif mode == "bmw":
-                slices = [
-                    s.to_term_slice() if not isinstance(s, TermSlice) else s
-                    for s in slices
-                ]
-                ids, sc = score_bmw(slices, self.cfg.k1, self.cfg.b, avgdl,
-                                    k, theta0=theta)
-            else:
-                slices = [
-                    s.to_term_slice() if not isinstance(s, TermSlice) else s
-                    for s in slices
-                ]
-                ids, sc = score_brute(slices, self.cfg.k1, self.cfg.b, avgdl)
-            ids_all.append(ids)
-            sc_all.append(sc)
-            if mode == "bmw" and k is not None:
-                n_collected += sc.size
-                if n_collected >= k:
-                    allsc = np.concatenate(sc_all)
-                    theta = max(
-                        theta, -np.partition(-allsc, k - 1)[k - 1]
-                    )
-        if not ids_all:
-            return []
-        ids = np.concatenate(ids_all)
-        sc = np.concatenate(sc_all)
-        if k is not None:
-            ids, sc = topk_select(ids, sc, k)
-        return list(zip(ids.tolist(), sc.tolist()))
+            slices.append(s)
+        k1, b = self.cfg.k1, self.cfg.b
+        if mode == "bmw":
+            hits, sc = score_bmw(slices, k1, b, avgdl, k, theta0=theta0)
+        else:
+            hits, sc = score_brute(
+                [s.to_term_slice() for s in slices], k1, b, avgdl
+            )
+            if k is not None:
+                hits, sc = topk_select(hits, sc, k)
+        return list(zip(hits.tolist(), sc.tolist()))
 
     def _search_distributed(
         self, labels, buckets, idf, k, mode, tie_round: int | None = None

@@ -1,14 +1,23 @@
 """BM25 scoring kernels (numpy, shared by driver-side and distributed paths).
 
-Two strategies over decoded posting slices of one docID range:
+Two strategies over decoded posting slices:
 
 - ``score_brute``: exact term-at-a-time accumulation over the union of
   docIDs (the correctness anchor).
-- ``score_bmw``: block-max pruning — segments the range at every term's
-  block boundary, upper-bounds each segment by Σ idf·block_ub, processes
-  segments in descending bound order and stops when the bound falls below
-  the running top-k threshold. Exact top-k (prune is strict ``<`` so
-  score ties, broken by doc_id ASC, are never lost).
+- ``score_bmw``: block-max pruning — segments the docID space at every
+  term's block boundary, upper-bounds each segment by Σ idf·block_ub,
+  processes segments in descending bound order and stops when the bound
+  falls below the running top-k threshold. Exact top-k (prune is strict
+  ``<`` so score ties, broken by doc_id ASC, are never lost).
+
+A query is ONE pass: ``score_bmw`` takes the slices of every docID range
+at once, lazy or decoded, and groups each term's slices into chains of
+disjoint, ordered docID spans — found by interval partitioning on docIDs,
+never by range_id (:func:`_chain_groups`) — so one threshold prunes the
+whole docID space.  Lazy slices read blocks through stream objects that
+promote themselves to a memoized full decode once their cumulative reads
+reach the stream length (:class:`_Stream`), so a warm searcher stops
+re-decoding hot terms.
 
 Accumulation order is fixed (terms processed in sorted order, float64),
 so scores are bit-reproducible and rank-identical to the pure-Python
@@ -40,39 +49,78 @@ from .codec import (
 )
 
 
-class _VarintStream:
-    """Random-access view of one tagged-varint value stream: a one-pass
-    terminator scan (lazy) yields per-value byte offsets, then any value
-    range decodes independently (LEB128 is self-delimiting)."""
+class _Stream:
+    """Random-access view of one tagged value stream of ``n`` values, with
+    the hot-promotion rule every read shares (``decode_range`` for BMW
+    segment reads, ``gather`` for conjunctive block reads).
 
-    __slots__ = ("b", "_ends", "_all", "_gathered", "_abs")
+    Promotion (amortized 2×): each read adds its value count to a
+    per-stream counter.  Once the cumulative count reaches ``n``, or one
+    read covers at least half the stream, the stream decodes fully into
+    its memo (``decode_all``) and serves that read and every later one by
+    slicing.  Work wasted before promotion is below one full decode, and a
+    hot term's stream then decodes once per searcher lifetime instead of
+    once per query (cached posting rows keep the stream objects alive).
+    The memo's memory is the decoded worst case the posting-cache budget
+    already charges (query.py, 32 B/posting)."""
 
-    def __init__(self, payload: np.ndarray):
+    __slots__ = ("b", "n", "_all", "_read", "_abs")
+
+    def __init__(self, payload: np.ndarray, n: int):
         self.b = payload
-        self._ends = None
+        self.n = n
         self._all = None
-        self._gathered = 0  # cumulative sub-dense gather work (hot promotion)
-        self._abs = None    # doc streams only: memoized absolute docIDs
+        self._read = 0    # cumulative values read before promotion
+        self._abs = None  # doc streams only: memoized absolute docIDs
+
+    def _hot(self, count: int) -> bool:
+        """Count a read of *count* values; True once the memo serves it."""
+        if self._all is None:
+            self._read += count
+            if 2 * count >= self.n or self._read >= self.n:
+                self.decode_all()
+        return self._all is not None
+
+    def decode_range(self, a: int, z: int) -> np.ndarray:
+        if self._hot(z - a):
+            return self._all[a:z]
+        return self._range(a, z)
+
+    def gather(self, runs: np.ndarray) -> np.ndarray:
+        """Values of many (va, vz) value-range runs, concatenated."""
+        if self._hot(int((runs[:, 1] - runs[:, 0]).sum())):
+            return _take_runs(self._all, runs)
+        return self._gather(runs)
+
+    def decode_all(self) -> np.ndarray:
+        """Full decode, memoized."""
+        if self._all is None:
+            self._all = self._full()
+        return self._all
+
+
+class _VarintStream(_Stream):
+    """Tagged-varint stream: a one-pass terminator scan (lazy) yields
+    per-value byte offsets, then any value range decodes independently
+    (LEB128 is self-delimiting)."""
+
+    __slots__ = ("_ends",)
+
+    def __init__(self, payload: np.ndarray, n: int):
+        super().__init__(payload, n)
+        self._ends = None
 
     def _e(self):
         if self._ends is None:
             self._ends = varint_value_ends(self.b)
         return self._ends
 
-    def decode_range(self, a: int, z: int) -> np.ndarray:
-        if self._all is not None:
-            return self._all[a:z]
+    def _range(self, a: int, z: int) -> np.ndarray:
         return varint_decode_range(self.b, self._e(), a, z)
 
-    def gather(self, runs: np.ndarray) -> np.ndarray:
-        """Decode many value ranges with ONE varint pass: slice each
-        run's byte range and decode the concatenation (per-call
-        vectorized-decoder setup paid once, not once per skip-list
-        run)."""
-        if self._all is not None:
-            return np.concatenate(
-                [self._all[int(va) : int(vz)] for va, vz in runs]
-            )
+    def _gather(self, runs: np.ndarray) -> np.ndarray:
+        # ONE varint pass: slice each run's byte range and decode the
+        # concatenation (decoder setup paid once, not once per run)
         ends = self._e()
         parts = []
         for va, vz in runs:
@@ -80,53 +128,45 @@ class _VarintStream:
             parts.append(self.b[b0 : int(ends[vz - 1]) + 1])
         return varint_decode(np.concatenate(parts).tobytes())
 
-    def decode_all(self) -> np.ndarray:
-        """Full decode, memoized: posting-row caching (BM25Searcher)
-        keeps stream objects alive across queries, so a hot term's stream
-        decodes at most once per searcher."""
-        if self._all is None:
-            self._all = varint_decode(self.b.tobytes())
-        return self._all
+    def _full(self) -> np.ndarray:
+        return varint_decode(self.b.tobytes())
 
 
-class _PForStream:
-    """Random-access view of one tagged-PFor value stream: a one-pass
-    header walk (lazy, no value decode) indexes the 128-value blocks,
-    then any value range decodes by touching only its covering blocks —
-    PFor values are positional (no intra-stream delta chain)."""
+class _PForStream(_Stream):
+    """Tagged-PFor stream: a one-pass header walk (lazy, no value decode)
+    indexes the 128-value blocks, then any value range decodes by touching
+    only its covering blocks — PFor values are positional (no intra-stream
+    delta chain)."""
 
-    __slots__ = ("b", "_offs", "_cum", "_all", "_gathered", "_abs")
+    __slots__ = ("_offs", "_cum")
 
-    def __init__(self, payload: np.ndarray):
-        self.b = payload
+    def __init__(self, payload: np.ndarray, n: int):
+        super().__init__(payload, n)
         self._offs = None
         self._cum = None
-        self._all = None
-        self._gathered = 0  # cumulative sub-dense gather work (hot promotion)
-        self._abs = None    # doc streams only: memoized absolute docIDs
 
     def _idx(self):
         if self._offs is None:
             self._offs, self._cum = pfor_block_index(self.b)
         return self._offs, self._cum
 
-    def decode_range(self, a: int, z: int) -> np.ndarray:
-        if self._all is not None:
-            return self._all[a:z]
+    def _range(self, a: int, z: int) -> np.ndarray:
         offs, cum = self._idx()
         return pfor_decode_range(self.b, offs, cum, a, z)
 
-    def gather(self, runs: np.ndarray) -> np.ndarray:
-        return np.concatenate(
-            [self.decode_range(int(va), int(vz)) for va, vz in runs]
-        )
+    def _gather(self, runs: np.ndarray) -> np.ndarray:
+        return np.concatenate([self._range(int(va), int(vz)) for va, vz in runs])
 
-    def decode_all(self) -> np.ndarray:
-        """Full decode, memoized (see _VarintStream.decode_all)."""
-        if self._all is None:
-            offs, cum = self._idx()
-            self._all = pfor_decode_indexed(self.b, offs, cum)
-        return self._all
+    def _full(self) -> np.ndarray:
+        offs, cum = self._idx()
+        return pfor_decode_indexed(self.b, offs, cum)
+
+
+def _take_runs(arr: np.ndarray, runs: np.ndarray) -> np.ndarray:
+    """*arr*'s (va, vz) value-range runs, concatenated (a view for one run)."""
+    if runs.shape[0] == 1:
+        return arr[int(runs[0, 0]) : int(runs[0, 1])]
+    return np.concatenate([arr[int(va) : int(vz)] for va, vz in runs])
 
 
 def stream_abs_docids(doc_s) -> np.ndarray:
@@ -143,14 +183,13 @@ def stream_abs_docids(doc_s) -> np.ndarray:
     return doc_s._abs
 
 
-def _stream_for(raw: np.ndarray):
-    """Tagged payload → stream object, or None for legacy/unknown tags."""
-    if raw.size == 0:
-        return _VarintStream(raw[1:])
-    if raw[0] == _TAG_VARINT:
-        return _VarintStream(raw[1:])
+def _stream_for(raw: np.ndarray, n: int):
+    """Tagged payload of *n* values → stream object, or None for
+    legacy/unknown tags."""
+    if raw.size == 0 or raw[0] == _TAG_VARINT:
+        return _VarintStream(raw[1:], n)
     if raw[0] == _TAG_PFOR:
-        return _PForStream(raw[1:])
+        return _PForStream(raw[1:], n)
     return None
 
 
@@ -167,6 +206,21 @@ class TermSlice:
     block_ubs: np.ndarray     # float32, per-block max of the tf-normalization
     avgdl: float | None = None  # per-slice override (multi-field: the term's
     #                             FIELD avgdl — Lucene's avgFieldLength)
+
+    # the LazySlice read interface, so score_bmw takes either kind
+    @property
+    def n(self) -> int:
+        return self.doc_ids.size
+
+    def last_doc(self) -> int:
+        return int(self.doc_ids[-1])
+
+    def segment_values(self, lo: int, hi: int):
+        a, z = np.searchsorted(self.doc_ids, [lo, hi], side="left")
+        return self.doc_ids[a:z], self.tfs[a:z], self.dls[a:z]
+
+    def to_term_slice(self) -> TermSlice:
+        return self
 
 
 def decode_slice(
@@ -246,22 +300,16 @@ class LazySlice:
         self.block_ubs = block_ubs
         self._last_doc = None
 
-    def _abs_full(self) -> np.ndarray:
-        """Full absolute-docID array, memoized on the doc stream once it
-        is promoted to a full decode — hot slices then serve every later
-        block read by pure slicing (no per-query segmented cumsum).
-        Values are bit-identical to the per-run reconstruction: the build
-        stores block_firsts = doc_ids[::block_size], so anchoring each
-        run at its block's stored absolute equals the cumsum from the
-        stream start."""
-        return stream_abs_docids(self.doc_s)
-
     def _ids_range(self, va: int, vz: int) -> np.ndarray:
         """Absolute docIDs for value range [va, vz); va MUST be a block
-        start (its stored delta is replaced by block_firsts' absolute)."""
-        if self.doc_s._abs is not None:
-            return self.doc_s._abs[va:vz]
+        start (its stored delta is replaced by block_firsts' absolute).
+        A promoted doc stream serves the slice of its memoized absolute
+        docIDs instead — bit-identical: the build stores block_firsts =
+        doc_ids[::block_size], so anchoring a run at its block's stored
+        absolute equals the cumsum from the stream start."""
         vals = self.doc_s.decode_range(va, vz)
+        if self.doc_s._all is not None:
+            return stream_abs_docids(self.doc_s)[va:vz]
         # biased docID of the block's first posting (exact modular wrap)
         first_u = np.uint64(
             (int(self.block_firsts[va // self.block_size]) + (1 << 63)) & ((1 << 64) - 1)
@@ -317,48 +365,13 @@ class LazySlice:
         vz = np.minimum((blocks[ends - 1] + 1) * bs, self.n)
         return np.stack([va, vz], axis=1)
 
-    def _gather_decode(self, stream, runs):
-        """Decode many value ranges via the stream's batched gather —
-        ONE vectorized pass for varint (byte-slice concatenation: LEB128
-        is self-delimiting), covering-blocks-only for PFor.  Returns
-        (values, per-run counts, per-run value starts).
-
-        DENSE gathers (≥ half the stream — e.g. a stopword slice whose
-        covering blocks are effectively all of them) go through the
-        stream's memoized decode_all instead: same values, and with
-        posting-row caching a hot term's stream decodes once per searcher
-        lifetime rather than once per query.
-
-        HOT promotion (amortized-2×): sub-dense gathers accumulate a
-        per-stream work counter; once cumulative gathered values reach
-        the stream length, later gathers also switch to the memoized
-        full decode — a head term repeatedly probed by conjunctive
-        queries decodes once per searcher lifetime instead of ~40% of
-        itself per query.  Wasted work before promotion is < one full
-        decode; memory is exactly the decoded-memo worst case the
-        posting-cache budget already charges (24 B/posting)."""
-        counts = (runs[:, 1] - runs[:, 0]).astype(np.int64)
-        total = int(counts.sum())
-        if 2 * total >= self.n or stream._gathered + total >= self.n:
-            full = stream.decode_all()
-            vals = (
-                full
-                if runs.shape[0] == 1 and total == self.n
-                else np.concatenate(
-                    [full[int(va) : int(vz)] for va, vz in runs]
-                )
-            )
-        else:
-            stream._gathered += total
-            vals = stream.gather(runs)
-        starts = np.concatenate(([0], np.cumsum(counts[:-1])))
-        return vals, counts, starts
-
-    def _anchored_ids(self, vals, counts, starts, runs):
+    def _anchored_ids(self, vals, runs):
         """Delta stream of many block-aligned runs → absolute docIDs via
         a segmented cumsum: each run's first delta is discarded in favor
         of its block's stored absolute first docID (uint64 modular
         arithmetic — bit-identical to the one-run `_ids_range`)."""
+        counts = (runs[:, 1] - runs[:, 0]).astype(np.int64)
+        starts = np.concatenate(([0], np.cumsum(counts[:-1])))
         anchors = (
             self.block_firsts[runs[:, 0] // self.block_size].astype(np.uint64)
             + np.uint64(1 << 63)
@@ -382,28 +395,25 @@ class LazySlice:
 
     def _run_ids(self, runs: np.ndarray) -> np.ndarray:
         """Absolute docIDs of the given value-range runs — sliced from
-        the memoized absolute array when the doc stream is hot, else the
-        gather + segmented-cumsum reconstruction (identical values)."""
-        if self.doc_s._all is not None:
-            a = self._abs_full()
-            if runs.shape[0] == 1:
-                return a[int(runs[0, 0]) : int(runs[0, 1])]
-            return np.concatenate(
-                [a[int(va) : int(vz)] for va, vz in runs]
-            )
-        vals, counts, starts = self._gather_decode(self.doc_s, runs)
-        return self._anchored_ids(vals, counts, starts, runs)
+        the memoized absolute array once the doc stream is promoted, else
+        the gather + segmented-cumsum reconstruction (identical values)."""
+        if self.doc_s._all is None:
+            vals = self.doc_s.gather(runs)
+            if self.doc_s._all is None:
+                return self._anchored_ids(vals, runs)
+        return _take_runs(stream_abs_docids(self.doc_s), runs)
 
     def block_values(self, blocks: np.ndarray):
         """(doc_ids, tfs, dls) of the given sorted block indices —
-        one gathered decode per stream."""
+        one gathered decode per stream (varint: ONE vectorized pass over
+        the concatenated byte ranges; PFor: covering blocks only)."""
         if blocks.size == 0:
             return (np.empty(0, np.int64),) * 3
         runs = self._block_runs(blocks)
         ids = self._run_ids(runs)
-        tfs, _, _ = self._gather_decode(self.tf_s, runs)
-        dls, _, _ = self._gather_decode(self.dl_s, runs)
-        return ids, tfs.astype(np.int64), dls.astype(np.int64)
+        tfs = self.tf_s.gather(runs).astype(np.int64)
+        dls = self.dl_s.gather(runs).astype(np.int64)
+        return ids, tfs, dls
 
     def to_term_slice(self) -> TermSlice:
         """Full eager decode (brute-fallback path) — memo-backed: the
@@ -443,13 +453,13 @@ def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice
                 block_firsts=bf, block_ubs=ub,
             )
     get = row.__getitem__ if hasattr(row, "__getitem__") else getattr
+    n = int(get("df_slice"))
     streams = []
     for c in ("doc_ids", "tfs", "dls"):
-        s = _stream_for(np.frombuffer(bytes(get(c)), dtype=np.uint8))
+        s = _stream_for(np.frombuffer(bytes(get(c)), dtype=np.uint8), n)
         if s is None:
             return None
         streams.append(s)
-    n = int(get("df_slice"))
     bf = unpack_i64(bytes(get("block_firsts")))
     ub = unpack_f32(bytes(get("block_ubs")))
     if isinstance(row, dict):
@@ -475,42 +485,117 @@ def _member_sorted(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:
     return sorted_set[loc] == ids
 
 
-# Pruning-convergence guard for both BMW kernels: after this many scored
+def _chain_groups(slices: list) -> list[list]:
+    """Group one query's slices into CHAINS: per term, slices whose docID
+    spans are disjoint and in order, so each chain reads as one slice and
+    a whole query scores in one BMW pass.  Interval partitioning: sort by
+    first docID and append each slice to the first chain of its term whose
+    span ends below it, else open a new chain.  A span ends at the last
+    docID or the last block start, whichever is later (a tombstone-masked
+    slice keeps its stored blocks), so a chain's blocks stay in order too.
+
+    Never chain by ``range_id``: a merged index keeps one slice per source
+    side by side in a range (interleaved docIDs), and its sources may use
+    different ``range_bits``, so range_id order is not docID order across
+    sources.  Chains come back in term order (the fixed accumulation
+    order); slices with the same term but a different idf or avgdl never
+    share a chain."""
+    by_key: dict[tuple, list[list]] = {}
+    for s in sorted(slices, key=lambda s: int(s.block_firsts[0])):
+        chains = by_key.setdefault((s.term, s.idf, getattr(s, "avgdl", None)), [])
+        for c in chains:
+            p = c[-1]
+            if max(p.last_doc(), int(p.block_firsts[-1])) < s.block_firsts[0]:
+                c.append(s)
+                break
+        else:
+            chains.append([s])
+    return [c for key in sorted(by_key, key=lambda k: k[0]) for c in by_key[key]]
+
+
+class _Chain:
+    """A chain of slices read as one slice by :func:`score_bmw`:
+    concatenated block metadata for the segment upper bounds, and each
+    segment read from the one member that can hold it (every member's
+    first docID is a segment bound, so no segment straddles two)."""
+
+    __slots__ = ("parts", "term", "idf", "avgdl", "block_firsts",
+                 "block_ubs", "block_lasts", "_firsts")
+
+    def __init__(self, parts: list):
+        self.parts = parts
+        p = parts[0]
+        self.term, self.idf, self.avgdl = p.term, p.idf, getattr(p, "avgdl", None)
+        self.block_firsts = np.concatenate([p.block_firsts for p in parts])
+        self.block_ubs = np.concatenate([p.block_ubs for p in parts])
+        # a block bounds segments only up to its member's last docID
+        self.block_lasts = np.repeat(
+            [p.last_doc() for p in parts], [p.block_firsts.size for p in parts]
+        )
+        self._firsts = np.array([int(p.block_firsts[0]) for p in parts])
+
+    def segment_values(self, lo: int, hi: int):
+        j = int(np.searchsorted(self._firsts, lo, side="right")) - 1
+        return self.parts[max(j, 0)].segment_values(lo, hi)
+
+
+# Pruning-convergence guard of score_bmw: after this many scored
 # segments without the threshold beating the remaining upper bounds, the
 # kernel concedes and finishes with one exact brute pass (decode memos make
 # the concession cheap for hot slices).  Tunable for measurement.
 BMW_MAX_SEG = 16
 
 
-def score_bmw_lazy(
-    slices: list[LazySlice], k1: float, b: float, avgdl: float, k: int,
+def score_bmw(
+    slices: list, k1: float, b: float, avgdl: float, k: int,
     allowed: np.ndarray | None = None,
     theta0: float = -np.inf,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Block-max top-k over one docID range, block-lazy decode.  Identical
-    output to :func:`score_bmw` on the same slices (same segment grid,
-    same upper bounds, same exact scoring — only the decode strategy
-    differs); pinned by tests/test_index_build.py::test_lazy_bmw_identity.
+    """Block-max top-k in ONE pass over the slices of any docID ranges.
+    Exact (score DESC, doc_id ASC).  Slices are LazySlices (block-lazy
+    decode: only the blocks of scored segments are read) or decoded
+    TermSlices (tombstone-masked, legacy, distributed); either way they
+    are grouped into chains (:func:`_chain_groups`), so a query scores its
+    whole docID space on one segment grid under one running threshold.
+    Lazy and eager decodes of the same slices give identical output;
+    pinned by tests/test_index_build.py::test_lazy_bmw_identity and
+    ::test_one_pass_bmw_identity.
+
+    ``theta0``: an externally-known lower bound on the global k-th score
+    (WAND across index segments — a family searcher carries the running
+    top-k threshold between its period segments).  Segments whose upper
+    bound is strictly below it are skipped even before k local docs are
+    collected: a doc scoring < theta0 can never enter the global top-k,
+    and docs scoring exactly theta0 still survive (prune is strict <), so
+    doc_id tie-breaks are never lost.
 
     ``allowed`` (sorted docIDs) is Lucene's filter-during-WAND: only
     allowed docs are scored/collected, segments still prune on the
     UNFILTERED upper bounds (still valid upper bounds for any allowed
     doc, so the top-k stays exact) — the right strategy for a BROAD
     filter, where candidate-driven decode degenerates to a full decode
-    but score pruning still skips most segments."""
+    but score pruning still skips most segments.
+
+    Pruning-convergence guard: a rare term co-occurring with a stopword
+    makes EVERY segment's upper bound exceed theta (the rare term's few
+    wide blocks overlap the whole grid), so the segment loop degenerates
+    to per-segment Python overhead × ~1k segments (measured 2-5 s per
+    query at 1M docs).  After BMW_MAX_SEG segments without a break, exact
+    brute scoring in ONE vectorized pass is strictly cheaper (~ms) —
+    output is identical either way (both paths score exactly; only the
+    pruning strategy differs)."""
     slices = [s for s in slices if s.n]
     if not slices:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    slices = sorted(slices, key=lambda s: s.term)
-    bounds = np.unique(np.concatenate([s.block_firsts for s in slices]))
+    chains = [_Chain(c) for c in _chain_groups(slices)]
+    bounds = np.unique(np.concatenate([c.block_firsts for c in chains]))
     n_seg = bounds.size
     seg_ub = np.zeros(n_seg, dtype=np.float64)
-    for s in slices:
-        blk = np.searchsorted(s.block_firsts, bounds, side="right") - 1
-        valid = blk >= 0
-        valid &= bounds <= s.last_doc()
+    for c in chains:
+        blk = np.searchsorted(c.block_firsts, bounds, side="right") - 1
+        valid = (blk >= 0) & (bounds <= c.block_lasts[np.maximum(blk, 0)])
         contrib = np.zeros(n_seg, dtype=np.float64)
-        contrib[valid] = s.idf * s.block_ubs[blk[valid]].astype(np.float64)
+        contrib[valid] = c.idf * c.block_ubs[blk[valid]].astype(np.float64)
         seg_ub += contrib
     seg_order = np.argsort(-seg_ub, kind="stable")
 
@@ -519,12 +604,11 @@ def score_bmw_lazy(
     n_got = 0
     theta = theta0
     seg_end = np.append(bounds[1:], np.iinfo(np.int64).max)
-    MAX_SEG = BMW_MAX_SEG  # pruning-convergence guard (see score_bmw)
     for n_seen, si in enumerate(seg_order):
         if seg_ub[si] < theta:
             break
-        if n_seen >= MAX_SEG:
-            full = [s.to_term_slice() for s in slices]
+        if n_seen >= BMW_MAX_SEG:
+            full = [p.to_term_slice() for c in chains for p in c.parts]
             if allowed is not None:
                 masked = []
                 for s in full:
@@ -534,6 +618,7 @@ def score_bmw_lazy(
                             TermSlice(
                                 s.term, s.idf, s.doc_ids[keep], s.tfs[keep],
                                 s.dls[keep], s.block_firsts, s.block_ubs,
+                                avgdl=s.avgdl,
                             )
                         )
                 full = masked
@@ -543,14 +628,15 @@ def score_bmw_lazy(
             return topk_select(ids, sc, k)
         lo, hi = bounds[si], seg_end[si]
         sub = []
-        for s in slices:
-            ids, tfs, dls = s.segment_values(int(lo), int(hi))
+        for c in chains:
+            ids, tfs, dls = c.segment_values(int(lo), int(hi))
             if allowed is not None and ids.size:
                 keep = _member_sorted(ids, allowed)
                 ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
             if ids.size:
                 sub.append(
-                    TermSlice(s.term, s.idf, ids, tfs, dls, s.block_firsts, s.block_ubs)
+                    TermSlice(c.term, c.idf, ids, tfs, dls, c.block_firsts,
+                              c.block_ubs, avgdl=c.avgdl)
                 )
         if not sub:
             continue
@@ -609,83 +695,3 @@ def topk_select(
     order = np.lexsort((doc_ids[cand], -scores[cand]))
     sel = cand[order][:k]
     return doc_ids[sel], scores[sel]
-
-
-def score_bmw(
-    slices: list[TermSlice], k1: float, b: float, avgdl: float, k: int,
-    theta0: float = -np.inf,
-) -> tuple[np.ndarray, np.ndarray]:
-    """Block-max top-k over one docID range. Exact (score DESC, doc_id ASC).
-
-    ``theta0``: an externally-known lower bound on the global k-th score
-    (WAND across ranges/shards — the caller carries the running top-k
-    threshold between docID ranges and index segments).  Segments whose
-    upper bound is strictly below it are skipped even before k local
-    docs are collected: a doc scoring < theta0 can never enter the
-    global top-k, and docs scoring exactly theta0 still survive (prune
-    is strict <), so doc_id tie-breaks are never lost."""
-    slices = [s for s in slices if s.doc_ids.size]
-    if not slices:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    slices = sorted(slices, key=lambda s: s.term)
-    # Segment bounds: every block start of every term.
-    bounds = np.unique(np.concatenate([s.block_firsts for s in slices]))
-    n_seg = bounds.size  # segment s covers [bounds[s], bounds[s+1])
-    seg_ub = np.zeros(n_seg, dtype=np.float64)
-    for s in slices:
-        # block covering each segment start (−1 → before term's first block)
-        blk = np.searchsorted(s.block_firsts, bounds, side="right") - 1
-        valid = blk >= 0
-        # segments past the term's last posting contribute nothing
-        valid &= bounds <= s.doc_ids[-1]
-        contrib = np.zeros(n_seg, dtype=np.float64)
-        contrib[valid] = s.idf * s.block_ubs[blk[valid]].astype(np.float64)
-        seg_ub += contrib
-    seg_order = np.argsort(-seg_ub, kind="stable")
-
-    got_ids: list[np.ndarray] = []
-    got_scores: list[np.ndarray] = []
-    n_got = 0
-    theta = theta0
-    seg_end = np.append(bounds[1:], np.iinfo(np.int64).max)
-    # Pruning-convergence guard: a rare term co-occurring with a stopword
-    # makes EVERY segment's upper bound exceed theta (the rare term's few
-    # wide blocks overlap the whole grid), so the segment loop degenerates
-    # to per-segment Python overhead × ~1k segments (measured 2-5 s per
-    # query at 1M docs).  After MAX_SEG segments without a break, exact
-    # whole-range brute scoring in ONE vectorized pass is strictly
-    # cheaper (~ms) — output is identical either way (both paths score
-    # exactly; only the pruning strategy differs).
-    MAX_SEG = BMW_MAX_SEG
-    for n_seen, si in enumerate(seg_order):
-        if seg_ub[si] < theta:
-            break  # all remaining segments have strictly smaller bounds
-        if n_seen >= MAX_SEG:
-            ids, sc = score_brute(slices, k1, b, avgdl)
-            return topk_select(ids, sc, k)
-        lo, hi = bounds[si], seg_end[si]
-        sub = []
-        for s in slices:
-            a = np.searchsorted(s.doc_ids, lo, side="left")
-            z = np.searchsorted(s.doc_ids, hi, side="left")
-            if z > a:
-                sub.append(
-                    TermSlice(
-                        s.term, s.idf, s.doc_ids[a:z], s.tfs[a:z], s.dls[a:z],
-                        s.block_firsts, s.block_ubs,
-                    )
-                )
-        if not sub:
-            continue
-        ids, sc = score_brute(sub, k1, b, avgdl)
-        got_ids.append(ids)
-        got_scores.append(sc)
-        n_got += ids.size
-        if n_got >= k:
-            allsc = np.concatenate(got_scores)
-            theta = max(theta, np.partition(-allsc, k - 1)[k - 1] * -1.0)
-    if not got_ids:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-    ids = np.concatenate(got_ids)
-    sc = np.concatenate(got_scores)
-    return topk_select(ids, sc, k)
