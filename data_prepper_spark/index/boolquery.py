@@ -61,6 +61,7 @@ from .scoring import (
     decode_slice,
     decode_slice_lazy,
     idf_value,
+    memo_term_slice,
     score_brute,
     topk_select,
 )
@@ -254,7 +255,9 @@ def _decode_range(rows, labels, idf, legacy, deleted, block_size):
     known tag (varint or pfor), no tombstones exist (must-conjunctions
     then skip decoding the stopword streams), and no term has duplicate
     slice rows (merged indexes keep source slices side by side — those
-    fold eagerly into one sorted slice per term), else eager TermSlices.
+    fold eagerly into one sorted slice per term), else eager TermSlices
+    built through the rows' stream memos (scoring.memo_term_slice), so a
+    cached row decodes once per searcher on this path too.
     Returns (slices_by_id, is_lazy)."""
     tids = [int(r["term_id"]) for r in rows]
     dup = len(set(tids)) < len(tids)
@@ -274,9 +277,9 @@ def _decode_range(rows, labels, idf, legacy, deleted, block_size):
             return lz, True
     groups: dict[int, list] = {}
     for row in rows:
-        s = decode_slice(
-            row, idf.get(row["term_id"], 0.0), label=labels[row["term_id"]],
-            legacy=legacy,
+        s = memo_term_slice(
+            row, idf.get(row["term_id"], 0.0), block_size,
+            labels[row["term_id"]], legacy=legacy,
         )
         if deleted.size:
             s = mask_term_slice(s, deleted)

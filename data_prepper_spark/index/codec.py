@@ -618,14 +618,28 @@ def decode_uints_batch(bufs) -> tuple[np.ndarray, np.ndarray]:
 
 def decode_docids_batch(bufs) -> tuple[np.ndarray, np.ndarray]:
     """:func:`decode_docids` over many rows at once → ``(doc_ids,
-    counts)``.  Each row's deltas restart at its first value, so ONE
+    counts)``."""
+    stream, counts = decode_uints_batch(bufs)
+    return docids_from_deltas(stream, counts), counts
+
+
+def docids_from_deltas(stream: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Absolute docIDs of many rows' concatenated delta streams (*counts*
+    values each).  Each row's deltas restart at its first value, so ONE
     wrapping uint64 cumsum over all rows, minus the running total at each
     row start, undoes every row's deltas."""
-    stream, counts = decode_uints_batch(bufs)
     total = np.cumsum(stream, dtype=np.uint64)
     before = np.concatenate(([np.uint64(0)], total))[np.cumsum(counts) - counts]
     u = total - np.repeat(before, counts)
-    return (u - _BIAS).astype(np.int64), counts
+    return (u - _BIAS).astype(np.int64)
+
+
+def split_rows(values: np.ndarray, counts: np.ndarray) -> list[np.ndarray]:
+    """A batch decode's concatenated *values* cut back into one array per
+    row (*counts* values each).  Each piece is a copy, so a row kept
+    alone (a cached posting row) does not keep the whole batch alive."""
+    ends = np.cumsum(counts).tolist()
+    return [values[a:z].copy() for a, z in zip([0] + ends[:-1], ends)]
 
 
 def pack_i64(values: np.ndarray) -> bytes:

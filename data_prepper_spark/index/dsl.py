@@ -156,6 +156,18 @@ def _bool_query(searcher, body, k, distributed, tie_round):
                 "filter context supports a pure-should scoring part "
                 "(route must/must_not through search_bool without "
                 "filters, or filters with should-only scoring)")
+        # search_filtered scores the should text as one unboosted OR
+        # match: a clause boost or an AND operator would be dropped
+        for c in should_raw:
+            _, op, boost = _match_tokens(searcher, next(iter(c.values())))
+            if boost != 1.0:
+                raise ValueError(
+                    "filter context does not support 'boost' on a should "
+                    "clause")
+            if str(op).lower() == "and":
+                raise ValueError(
+                    "filter context does not support 'operator': 'and' on "
+                    "a should clause")
         return search_filtered(
             searcher, " ".join(should), filters, k=k,
             distributed=distributed, tie_round=tie_round)

@@ -345,8 +345,6 @@ def phrase_match_triples(
     set WITHOUT scoring, so callers can fold it under different corpus
     stats (the family cross-period phrase search scores per-period
     triples under family-global n/avgdl)."""
-    import pyarrow.dataset as pads
-
     if not searcher.stats.get("positions"):
         raise ValueError(
             "phrase queries need a positional index (IndexConfig.positions=True)"
@@ -357,10 +355,7 @@ def phrase_match_triples(
     ids = sorted({xxh64_signed(t) for t in terms})
     buckets = sorted({pmod(i, searcher.cfg.n_buckets) for i in ids})
     term_seq = [xxh64_signed(t) for t in terms]
-    flt = pads.field("term_bucket").isin(buckets) & pads.field("term_id").isin(ids)
-    rows = searcher._postings.to_table(
-        columns=["range_id"] + _POS_COLS, filter=flt
-    ).to_pylist()
+    rows = searcher._read_slice_rows(ids, buckets, ["range_id"] + _POS_COLS)
     by_range: dict[int, list] = {}
     for r in rows:
         by_range.setdefault(int(r["range_id"]), []).append(r)
@@ -391,8 +386,6 @@ def intervals_match_triples(
     unscored match set, so the family cross-period fold can score the
     triples under family-global n/avgdl (same contract as
     phrase_match_triples; tf = minimal-interval count)."""
-    import pyarrow.dataset as pads
-
     if not searcher.stats.get("positions"):
         raise ValueError(
             "intervals queries need a positional index "
@@ -404,11 +397,7 @@ def intervals_match_triples(
     leaf_list = sorted(leaves)
     req_list = sorted(required)
     buckets = sorted({pmod(i, searcher.cfg.n_buckets) for i in leaf_list})
-    flt = (pads.field("term_bucket").isin(buckets)
-           & pads.field("term_id").isin(leaf_list))
-    rows = searcher._postings.to_table(
-        columns=["range_id"] + _POS_COLS, filter=flt
-    ).to_pylist()
+    rows = searcher._read_slice_rows(leaf_list, buckets, ["range_id"] + _POS_COLS)
     by_range: dict[int, list] = {}
     for r in rows:
         by_range.setdefault(int(r["range_id"]), []).append(r)
@@ -596,15 +585,7 @@ def phrase_prefix_topk(
     k1, b = searcher.cfg.k1, searcher.cfg.b
     n, avgdl = searcher.n_docs, searcher.avgdl
     if not distributed:
-        import pyarrow.dataset as pads
-
-        flt = (
-            pads.field("term_bucket").isin(buckets)
-            & pads.field("term_id").isin(flat)
-        )
-        rows = searcher._postings.to_table(
-            columns=["range_id"] + _POS_COLS, filter=flt
-        ).to_pylist()
+        rows = searcher._read_slice_rows(flat, buckets, ["range_id"] + _POS_COLS)
         by_range: dict[int, list] = {}
         for r in rows:
             by_range.setdefault(int(r["range_id"]), []).append(r)
@@ -782,15 +763,7 @@ def _span_topk(searcher, ids: list[int], matcher, k: int, tie_round: int,
     n, avgdl = _phrase_corpus_stats(searcher, field)
     k1, b = searcher.cfg.k1, searcher.cfg.b
     if not distributed:
-        import pyarrow.dataset as pads
-
-        flt = (
-            pads.field("term_bucket").isin(buckets)
-            & pads.field("term_id").isin(ids)
-        )
-        rows = searcher._postings.to_table(
-            columns=["range_id"] + _POS_COLS, filter=flt
-        ).to_pylist()
+        rows = searcher._read_slice_rows(ids, buckets, ["range_id"] + _POS_COLS)
         by_range: dict[int, list] = {}
         for r in rows:
             by_range.setdefault(int(r["range_id"]), []).append(r)

@@ -23,18 +23,23 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..hashing import pmod, xxh64_signed
 from ..textproc import tokenize
+from .codec import decode_docids_batch, delta_decode_docids, split_rows
 from .config import IndexConfig
 from .deletes import mask_term_slice, read_tombstones
 from .scoring import (
-    TermSlice,
     decode_slice,
     decode_slice_lazy,
     idf_value,
+    memo_term_slice,
+    prime_single_block,
     score_bmw,
     score_brute,
     topk_select,
@@ -47,6 +52,88 @@ _SLICE_COLS = [
 # the match-union projection (filtered._UNION_COLS) — the only narrow
 # read shape the decoded-union cache admits
 _UNION_COL_SET = {"term_id", "range_id", "df_slice", "doc_ids"}
+
+
+class BucketFiles:
+    """Driver-mode reader of one term_bucket-partitioned segment table
+    (postings or termstats) that parses each file's footer once.
+
+    Opening lists the table's Parquet files and maps each term_bucket to
+    its files, from the dataset fragments' hive partition keys — so the
+    merged ``bgroup=*/term_bucket=*`` layout and the single-build
+    ``term_bucket=*`` one read alike.  A file's footer is parsed on its
+    first read and kept: its FileMetaData plus each row group's term_id
+    min/max.  A read re-opens the file with that metadata (no parse),
+    decodes only the row groups whose term_id range can hold a wanted id
+    — the build writes ~1 MB term_id-sorted row groups for exactly this
+    skip (build.py) — and keeps the wanted rows.  Rows come back in the
+    order a dataset scan with the same filter returns them.  Files are
+    never held open: a family searcher may span thousands of them.
+
+    ``footers_parsed``, ``row_groups_read`` and ``row_groups_skipped``
+    count the reader's work over its life."""
+
+    def __init__(self, root: str):
+        ds = pads.dataset(root, partitioning="hive")
+        # term_bucket → [(fragment order, path)]
+        self._files: dict[int, list[tuple[int, str]]] = {}
+        for j, frag in enumerate(ds.get_fragments()):
+            keys = pads.get_partition_keys(frag.partition_expression)
+            self._files.setdefault(int(keys["term_bucket"]), []).append(
+                (j, frag.path)
+            )
+        # path → (FileMetaData, row-group term_id mins, maxes)
+        self._footers: dict[str, tuple] = {}
+        self.footers_parsed = 0
+        self.row_groups_read = 0
+        self.row_groups_skipped = 0
+
+    def _footer(self, path: str) -> tuple:
+        ft = self._footers.get(path)
+        if ft is None:
+            md = pq.read_metadata(path)
+            self.footers_parsed += 1
+            col = next(
+                c for c in range(md.num_columns)
+                if md.schema.column(c).path == "term_id"
+            )
+            lo = np.full(md.num_row_groups, np.iinfo(np.int64).min)
+            hi = np.full(md.num_row_groups, np.iinfo(np.int64).max)
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(col).statistics
+                if st is not None and st.has_min_max:
+                    lo[g], hi[g] = st.min, st.max
+            ft = self._footers[path] = (md, lo, hi)
+        return ft
+
+    def read(self, ids, buckets, columns: list[str]) -> list[dict]:
+        """Rows of *columns* (which must include term_id) whose term_id
+        is in *ids*, from the files of *buckets*."""
+        want = np.unique(np.asarray(list(ids), dtype=np.int64))
+        if want.size == 0:
+            return []
+        keep = pa.array(want)
+        rows: list[dict] = []
+        for _, path in sorted(
+            f for b in set(buckets) for f in self._files.get(b, ())
+        ):
+            md, lo, hi = self._footer(path)
+            # a row group can hold a wanted id iff the least wanted id
+            # >= its min is <= its max
+            j = np.searchsorted(want, lo)
+            hit = np.flatnonzero(
+                (j < want.size) & (want[np.minimum(j, want.size - 1)] <= hi)
+            )
+            self.row_groups_read += hit.size
+            self.row_groups_skipped += lo.size - hit.size
+            if hit.size == 0:
+                continue
+            tbl = pq.ParquetFile(path, metadata=md).read_row_groups(
+                hit.tolist(), columns=columns, use_threads=False
+            )
+            tbl = tbl.filter(pc.is_in(tbl["term_id"], value_set=keep))
+            rows.extend(tbl.to_pylist())
+        return rows
 
 
 class BM25Searcher:
@@ -78,10 +165,11 @@ class BM25Searcher:
         # from every result; corpus stats stay full-index until a purge —
         # Lucene's delete semantics.  Sorted int64, usually empty.
         self.deleted = read_tombstones(index_dir)
-        # hive-partitioned segment datasets (term_bucket dirs); opening the
-        # dataset only lists files — reads stay pruned per query
-        self._postings = pads.dataset(f"{index_dir}/postings", partitioning="hive")
-        self._termstats = pads.dataset(f"{index_dir}/termstats", partitioning="hive")
+        # term_bucket-partitioned segment tables; opening only lists files
+        # — reads stay bucket- and row-group-pruned per query, and each
+        # file's footer is parsed once per searcher
+        self._posting_files = BucketFiles(f"{index_dir}/postings")
+        self._termstat_files = BucketFiles(f"{index_dir}/termstats")
         # hot-posting cache (driver serving mode): term_id → its full
         # posting rows, LRU-evicted on a byte budget.  Queries share
         # terms heavily (head terms especially), and a searcher is a
@@ -139,23 +227,25 @@ class BM25Searcher:
             return {}
         missing = [i for i in ids if i not in self._df_cache]
         if missing:
-            from ..hashing import pmod as _pmod
-
-            mb = sorted({_pmod(i, self.cfg.n_buckets) for i in missing})
-            flt = pads.field("term_bucket").isin(mb) & pads.field(
-                "term_id"
-            ).isin(missing)
-            tbl = self._termstats.to_table(columns=["term_id", "df"], filter=flt)
-            got = dict(zip(tbl["term_id"].to_pylist(), tbl["df"].to_pylist()))
+            mb = sorted({pmod(i, self.cfg.n_buckets) for i in missing})
+            got = {
+                r["term_id"]: r["df"]
+                for r in self._termstat_files.read(missing, mb, ["term_id", "df"])
+            }
             for i in missing:
                 self._df_cache[i] = got.get(i, 0)
         return {i: self._df_cache[i] for i in ids if self._df_cache[i] > 0}
 
     def _read_slice_rows(self, ids, buckets, columns) -> list[dict]:
-        flt = pads.field("term_bucket").isin(buckets) & pads.field("term_id").isin(ids)
-        return self._postings.to_table(
-            columns=columns or _SLICE_COLS, filter=flt
-        ).to_pylist()
+        """Posting rows of *ids* from the files of *buckets*, uncached —
+        the one driver read path (scoring rows, docID-union rows and the
+        positional reads of phrase/querystring).  Full rows come back
+        with their one-block streams already decoded into their memos
+        (scoring.prime_single_block)."""
+        rows = self._posting_files.read(ids, buckets, columns or _SLICE_COLS)
+        if columns is None and not self.legacy_codec:
+            prime_single_block(rows, self.cfg.block_size)
+        return rows
 
     def _pruned_slice_rows(
         self, ids: list[int], buckets: list[int], columns: list[str] | None = None
@@ -191,9 +281,11 @@ class BM25Searcher:
         for r in rows:
             by_term.setdefault(int(r["term_id"]), []).append(r)
         for i, rr in by_term.items():
-            # budget = raw payload + decoded-memo worst case (3 int64
-            # streams + the hot absolute-docID memo = 32 B/posting,
-            # materialized only on dense/promoted access)
+            # budget = raw payload + decoded-memo worst case: 32 B/posting
+            # (3 int64 streams + the absolute-docID memo).  One-block rows
+            # carry those memos from the read on (prime_single_block, one
+            # private copy per row, so the charge covers them exactly);
+            # longer rows materialize them only on dense/promoted access
             nb = 512 + sum(
                 len(r["doc_ids"]) + len(r["tfs"]) + len(r["dls"])
                 + len(r["block_firsts"]) + len(r["block_ubs"])
@@ -227,16 +319,18 @@ class BM25Searcher:
                 still.append(i)
         if not still:
             return out
-        from .codec import decode_docids, delta_decode_docids
-
         sb = sorted({pmod(i, self.cfg.n_buckets) for i in still})
+        rows = self._read_slice_rows(still, sb, columns)
+        bufs = [r.pop("doc_ids") for r in rows]
+        if self.legacy_codec:
+            docs = [delta_decode_docids(bytes(b)) for b in bufs]
+        else:
+            # one batch decode for the whole read; per-row copies, so an
+            # evicted entry frees its arrays (8 B/posting charged below)
+            docs = split_rows(*decode_docids_batch(bufs))
         by_term: dict[int, list[dict]] = {i: [] for i in still}
-        for r in self._read_slice_rows(still, sb, columns):
-            buf = bytes(r.pop("doc_ids"))
-            r["_doc_abs"] = (
-                delta_decode_docids(buf) if self.legacy_codec
-                else decode_docids(buf)
-            )
+        for r, d in zip(rows, docs):
+            r["_doc_abs"] = d
             by_term.setdefault(int(r["term_id"]), []).append(r)
         for i, rr in by_term.items():
             nb = 256 + sum(8 * int(x["_doc_abs"].size) + 128 for x in rr)
@@ -419,10 +513,10 @@ class BM25Searcher:
             return []
         idf = {i: idf_value(self.n_docs, dfs[i]) for i in ids}
         rows = self._pruned_slice_rows(list(ids), buckets)
-        by_range: dict[int, list[TermSlice]] = {}
+        by_range: dict[int, list] = {}
         for r in rows:
-            s = decode_slice(
-                r, idf[r["term_id"]], label=ids[r["term_id"]],
+            s = memo_term_slice(
+                r, idf[r["term_id"]], self.cfg.block_size, ids[r["term_id"]],
                 legacy=self.legacy_codec,
             )
             if self.deleted.size:

@@ -44,7 +44,13 @@ from pyspark.sql import DataFrame, functions as F
 
 from ..hashing import pmod, xxh64_signed
 from .deletes import mask_term_slice
-from .scoring import _member_sorted, decode_slice, idf_value, score_brute
+from .scoring import (
+    _member_sorted,
+    decode_slice,
+    idf_value,
+    memo_term_slice,
+    score_brute,
+)
 
 # [+|-] then a quoted phrase [~slop] or a token [* | ~edits], then [^boost]
 _CLAUSE_RX = re.compile(
@@ -111,23 +117,6 @@ def _live_ids(searcher, terms: list[str]):
 
 # --------------------------------------------------------- driver path
 
-def _memo_slice(searcher, r, idf, label):
-    """Memo-backed eager decode: tagged codecs route through
-    decode_slice_lazy → to_term_slice so the docID cumsum and value
-    decodes cache ON the posting row (BM25Searcher._pruned_slice_rows
-    keeps rows across queries) — a hot clause converts by reference
-    instead of paying the ~10 vectorized full-stream passes of a raw
-    decode_slice per query (the same memo path the boolean core's brute
-    fallback uses; measured 4× on the 1M-doc head-prefix probes)."""
-    if not searcher.legacy_codec:
-        from .scoring import decode_slice_lazy
-
-        ls = decode_slice_lazy(r, idf, searcher.cfg.block_size, label)
-        if ls is not None:
-            return ls.to_term_slice()
-    return decode_slice(r, idf, label=label, legacy=searcher.legacy_codec)
-
-
 def _terms_scores_driver(searcher, terms, boost):
     """All (doc, Σ expansion-BM25 × boost) of a term-family clause —
     absolute docIDs, sorted."""
@@ -138,7 +127,11 @@ def _terms_scores_driver(searcher, terms, boost):
     slices = []
     for r in searcher._pruned_slice_rows(list(ids), buckets):
         tid = int(r["term_id"])
-        s = _memo_slice(searcher, r, idf[tid], ids[tid])
+        # memo-backed: a hot clause converts by reference instead of
+        # paying a raw decode_slice per query (measured 4× on the 1M-doc
+        # head-prefix probes)
+        s = memo_term_slice(r, idf[tid], searcher.cfg.block_size, ids[tid],
+                            legacy=searcher.legacy_codec)
         if searcher.deleted.size:
             s = mask_term_slice(s, searcher.deleted)
         slices.append(s)
@@ -151,8 +144,6 @@ def _terms_scores_driver(searcher, terms, boost):
 def _phrase_matches_driver(searcher, c: Clause):
     """(doc_ids, tf_phrase, dls) of a phrase clause across all ranges —
     the driver twin of phrase_matches (no Spark job)."""
-    import pyarrow.dataset as pads
-
     from .phrase import _POS_COLS, _match_rows, _prox_match_rows
     from ..textproc import tokenize
 
@@ -167,13 +158,7 @@ def _phrase_matches_driver(searcher, c: Clause):
     ids = sorted({xxh64_signed(t) for t in terms})
     buckets = sorted({pmod(i, searcher.cfg.n_buckets) for i in ids})
     term_seq = [xxh64_signed(t) for t in terms]
-    flt = (
-        pads.field("term_bucket").isin(buckets)
-        & pads.field("term_id").isin(ids)
-    )
-    rows = searcher._postings.to_table(
-        columns=["range_id"] + _POS_COLS, filter=flt
-    ).to_pylist()
+    rows = searcher._read_slice_rows(ids, buckets, ["range_id"] + _POS_COLS)
     by_range: dict[int, list] = {}
     for r in rows:
         by_range.setdefault(int(r["range_id"]), []).append(r)

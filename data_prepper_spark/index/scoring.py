@@ -37,10 +37,13 @@ from .codec import (
     _TAG_VARINT,
     decode_docids,
     decode_uints,
+    decode_uints_batch,
     delta_decode_docids,
+    docids_from_deltas,
     pfor_block_index,
     pfor_decode_indexed,
     pfor_decode_range,
+    split_rows,
     unpack_f32,
     unpack_i64,
     varint_decode,
@@ -433,25 +436,16 @@ class LazySlice:
         )
 
 
-def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice | None:
-    """LazySlice from a postings row, or None if any stream carries an
-    unknown tag (legacy untagged indexes take the eager path).  Both
-    tagged codecs are range-addressable — varint via the terminator-scan
-    value index, PFor via the block header index — and may mix per stream
-    (merged mixed-codec indexes)."""
-    # stream objects (and their decode memos) attach to the row dict, so
-    # a cached posting row (BM25Searcher._pruned_slice_rows) re-serves
-    # later queries without re-indexing or re-decoding; the LazySlice
-    # itself is rebuilt per query because idf may carry a query boost
+def _row_streams(row):
+    """(doc_s, tf_s, dl_s, n, block_firsts, block_ubs) of a postings row,
+    or None if any stream carries an unknown tag.  Cached on a dict row
+    as ``_lazy_streams``, so a cached posting row
+    (BM25Searcher._pruned_slice_rows) re-serves later queries without
+    re-indexing or re-decoding."""
     if isinstance(row, dict):
         hit = row.get("_lazy_streams")
         if hit is not None:
-            doc_s, tf_s, dl_s, n, bf, ub = hit
-            return LazySlice(
-                term=label, idf=idf, n=n, block_size=block_size,
-                doc_s=doc_s, tf_s=tf_s, dl_s=dl_s,
-                block_firsts=bf, block_ubs=ub,
-            )
+            return hit
     get = row.__getitem__ if hasattr(row, "__getitem__") else getattr
     n = int(get("df_slice"))
     streams = []
@@ -460,21 +454,75 @@ def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice
         if s is None:
             return None
         streams.append(s)
-    bf = unpack_i64(bytes(get("block_firsts")))
-    ub = unpack_f32(bytes(get("block_ubs")))
-    if isinstance(row, dict):
-        row["_lazy_streams"] = (streams[0], streams[1], streams[2], n, bf, ub)
-    return LazySlice(
-        term=label,
-        idf=idf,
-        n=n,
-        block_size=block_size,
-        doc_s=streams[0],
-        tf_s=streams[1],
-        dl_s=streams[2],
-        block_firsts=bf,
-        block_ubs=ub,
+    hit = (
+        streams[0], streams[1], streams[2], n,
+        unpack_i64(bytes(get("block_firsts"))),
+        unpack_f32(bytes(get("block_ubs"))),
     )
+    if isinstance(row, dict):
+        row["_lazy_streams"] = hit
+    return hit
+
+
+def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice | None:
+    """LazySlice from a postings row, or None if any stream carries an
+    unknown tag (legacy untagged indexes take the eager path).  Both
+    tagged codecs are range-addressable — varint via the terminator-scan
+    value index, PFor via the block header index — and may mix per stream
+    (merged mixed-codec indexes).  The stream objects (and their decode
+    memos) live on the row (:func:`_row_streams`); the LazySlice itself
+    is rebuilt per query because idf may carry a query boost."""
+    hit = _row_streams(row)
+    if hit is None:
+        return None
+    doc_s, tf_s, dl_s, n, bf, ub = hit
+    return LazySlice(
+        term=label, idf=idf, n=n, block_size=block_size,
+        doc_s=doc_s, tf_s=tf_s, dl_s=dl_s, block_firsts=bf, block_ubs=ub,
+    )
+
+
+def memo_term_slice(
+    row, idf: float, block_size: int, label: str, legacy: bool = False
+) -> TermSlice:
+    """Eager TermSlice through the row's stream memos: tagged codecs go
+    decode_slice_lazy → to_term_slice, so a cached posting row decodes
+    once per searcher and later queries convert by reference; legacy or
+    unknown-tag rows fall back to a raw :func:`decode_slice`."""
+    if not legacy:
+        ls = decode_slice_lazy(row, idf, block_size, label)
+        if ls is not None:
+            return ls.to_term_slice()
+    return decode_slice(row, idf, label=label, legacy=legacy)
+
+
+def prime_single_block(rows: list[dict], block_size: int) -> None:
+    """Decode every one-block row of one read at once and install the
+    values as the rows' stream memos (``_all`` on each stream, ``_abs`` on
+    the doc stream), under the row's ``_lazy_streams`` entry.
+
+    Any read of a one-block slice (df_slice <= block_size) decodes its
+    whole stream anyway, so decoding it early wastes nothing, and one
+    :func:`codec.decode_uints_batch` per stream column plus one segmented
+    cumsum replaces ~3 small decodes per row.  Multi-block rows stay lazy.
+    Values equal the per-row decode bit for bit (the batch decode's
+    contract); each row gets its own copies, so an evicted cached row
+    frees its memos instead of pinning the read's batch arrays."""
+    one = [
+        r for r in rows
+        if int(r["df_slice"]) <= block_size and _row_streams(r) is not None
+    ]
+    if not one:
+        return
+    streams = [r["_lazy_streams"] for r in one]
+    for k, c in enumerate(("doc_ids", "tfs", "dls")):
+        vals, counts = decode_uints_batch([r[c] for r in one])
+        for st, v in zip(streams, split_rows(vals, counts)):
+            st[k]._all = v
+        if k == 0:  # the doc stream also memoizes its absolute docIDs
+            abs_ids = docids_from_deltas(vals, counts)
+            for st, a in zip(streams, split_rows(abs_ids, counts)):
+                st[0]._abs = a
 
 
 def _member_sorted(ids: np.ndarray, sorted_set: np.ndarray) -> np.ndarray:

@@ -184,6 +184,55 @@ def test_dsl_rank_feature_leaves_body_intact(spark, pos_dir):
     assert search_dsl(s, rf) == first
 
 
+def _filtered_should(clause):
+    return {"query": {"bool": {
+        "should": [clause, {"match": {"body": "search"}}],
+        "filter": [{"term": {"lang": "en"}}],
+    }}}
+
+
+def test_dsl_filter_context_rejects_should_boost_and_operator(spark, pos_dir):
+    """In filter context the should part is scored as one unboosted OR
+    match, so a should clause's boost or AND operator would be dropped:
+    the dispatcher raises an error naming the key instead."""
+    s = BM25Searcher(spark, pos_dir)
+    boosted = _filtered_should(
+        {"match": {"body": {"query": "data", "boost": 2.0}}})
+    with pytest.raises(ValueError, match="'boost'"):
+        search_dsl(s, boosted)
+    anded = _filtered_should(
+        {"match": {"body": {"query": "the data", "operator": "and"}}})
+    with pytest.raises(ValueError, match="'operator'"):
+        search_dsl(s, anded)
+    # the neutral values are not approximations
+    plain = _filtered_should(
+        {"match": {"body": {"query": "data", "boost": 1.0,
+                            "operator": "or"}}})
+    assert search_dsl(s, plain) == search_dsl(
+        s, _filtered_should({"match": {"body": "data"}}))
+
+
+def test_dsl_filter_context_leaves_body_intact(spark, pos_dir):
+    """Dispatching a filter-context body, accepted or rejected, hands the
+    caller's body back unmutated."""
+    import copy
+
+    s = BM25Searcher(spark, pos_dir)
+    bodies = [
+        _filtered_should({"match": {"body": "data"}}),
+        _filtered_should({"match": {"body": {"query": "data", "boost": 2.0}}}),
+        _filtered_should(
+            {"match": {"body": {"query": "the data", "operator": "and"}}}),
+    ]
+    for body in bodies:
+        before = copy.deepcopy(body)
+        try:
+            search_dsl(s, body)
+        except ValueError:
+            pass
+        assert body == before
+
+
 def test_dsl_rejections(spark, pos_dir):
     s = BM25Searcher(spark, pos_dir)
     for bad in [

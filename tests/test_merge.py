@@ -347,3 +347,103 @@ def test_merge_job_budget(spark, workdir):
     print(f"merge_indexes spark jobs: {jobs}")
     assert BM25Searcher(spark, out).n_docs == 3
     assert jobs <= MERGE_JOB_BUDGET
+
+
+def _count_decodes(monkeypatch) -> list:
+    """Record every codec decode call made through any serving module."""
+    from data_prepper_spark.index import (
+        boolquery, codec, filtered, query, querystring, scoring,
+    )
+
+    calls: list = []
+    for name, fn in list(vars(codec).items()):
+        if "decode" not in name or not callable(fn):
+            continue
+        wrapped = (lambda *a, _fn=fn, _n=name, **kw:
+                   calls.append(_n) or _fn(*a, **kw))
+        for mod in (codec, scoring, query, boolquery, filtered, querystring):
+            if vars(mod).get(name) is fn:
+                monkeypatch.setattr(mod, name, wrapped)
+    return calls
+
+
+def test_merged_bool_repeat_decodes_nothing(merged_index, monkeypatch):
+    """A merged index has duplicate slice rows per term, which sends the
+    boolean core down its eager fold; that fold builds its slices through
+    the rows' stream memos, so repeating a query decodes nothing."""
+    from data_prepper_spark.index.boolquery import search_bool
+
+    calls = _count_decodes(monkeypatch)
+    cases = [
+        (["the"], ["data", "search"], ["engine"]),
+        (["the", "data"], [], []),
+        ([], ["the", "of"], []),
+    ]
+    for must, should, must_not in cases:
+        s = BM25Searcher(None, merged_index[0])  # cold: nothing memoized
+        calls.clear()
+        want = search_bool(s, must=must, should=should, must_not=must_not, k=10)
+        assert want and calls  # the first run decodes
+        calls.clear()
+        assert search_bool(s, must=must, should=should, must_not=must_not,
+                           k=10) == want
+        assert calls == [], (must, should, must_not)
+
+
+def _search_all_eager(s, q):
+    """search_all by raw per-row decode_slice, range by range — the
+    reference the memo-backed search_all must equal bit for bit."""
+    from data_prepper_spark.index.deletes import mask_term_slice
+    from data_prepper_spark.index.scoring import (
+        decode_slice,
+        idf_value,
+        score_brute,
+    )
+
+    _, ids, buckets = s._terms_buckets(q)
+    dfs = s.term_stats(ids, buckets)
+    ids = {i: t for i, t in ids.items() if dfs.get(i, 0) > 0}
+    idf = {i: idf_value(s.n_docs, dfs[i]) for i in ids}
+    by_range: dict = {}
+    for r in s._read_slice_rows(list(ids), buckets, None):
+        sl = decode_slice(r, idf[r["term_id"]], label=ids[r["term_id"]])
+        if s.deleted.size:
+            sl = mask_term_slice(sl, s.deleted)
+        by_range.setdefault(int(r["range_id"]), []).append(sl)
+    out = []
+    for sl in by_range.values():
+        d, sc = score_brute(sl, s.cfg.k1, s.cfg.b, s.avgdl)
+        out.extend(zip(d.tolist(), sc.tolist()))
+    return sorted(out)
+
+
+def test_search_all_memo_identity(spark, merged_index, half_indexes, workdir,
+                                  monkeypatch):
+    """search_all equals the raw per-row decode bit for bit on a merged
+    index (duplicate slices per term) and a tombstoned one, and a repeat
+    call serves every slice from the stream memos."""
+    import shutil
+
+    from data_prepper_spark.index.deletes import delete_docs
+
+    tomb = os.path.join(workdir, "index_half0_searchall_tomb")
+    shutil.rmtree(tomb, ignore_errors=True)
+    shutil.copytree(half_indexes[0], tomb)
+    ids = sorted(r["doc_id"] for r in
+                 spark.read.parquet(f"{tomb}/docmeta").select("doc_id").collect())
+    delete_docs(tomb, ids[::5])
+    for d in (merged_index[0], tomb):
+        s = BM25Searcher(None, d)
+        queries = [q["query_text"] for q in reference_queries()[:20]]
+        for q in queries:
+            assert sorted(s.search_all(q)) == _search_all_eager(s, q), (d, q)
+        calls = _count_decodes(monkeypatch)
+        for q in queries:
+            assert sorted(s.search_all(q)) == _search_all_eager(s, q), (d, q)
+        # the reference decodes; search_all itself must not
+        n_ref = len(calls)
+        calls.clear()
+        for q in queries:
+            s.search_all(q)
+        assert calls == [] and n_ref > 0, d
+        monkeypatch.undo()

@@ -209,8 +209,6 @@ def test_proximity_slop0_equals_exact(spark, pos_index):
     """The greedy proximity kernel at slop=0 reproduces the exact
     adjacency kernel's matches bit-for-bit (count of valid starts ==
     adjacency occurrence count)."""
-    import pyarrow.dataset as pads
-
     from data_prepper_spark.hashing import pmod, xxh64_signed
     from data_prepper_spark.index.phrase import (
         _match_rows,
@@ -224,14 +222,11 @@ def test_proximity_slop0_equals_exact(spark, pos_index):
         ids = sorted({xxh64_signed(t) for t in terms})
         buckets = sorted({pmod(i, s.cfg.n_buckets) for i in ids})
         term_seq = [xxh64_signed(t) for t in terms]
-        flt = pads.field("term_bucket").isin(buckets) & pads.field(
-            "term_id"
-        ).isin(ids)
-        rows = s._postings.to_table(
-            columns=["range_id", "term_id", "df_slice", "doc_ids", "tfs",
-                     "dls", "positions"],
-            filter=flt,
-        ).to_pylist()
+        rows = s._read_slice_rows(
+            ids, buckets,
+            ["range_id", "term_id", "df_slice", "doc_ids", "tfs", "dls",
+             "positions"],
+        )
         by_range = {}
         for r in rows:
             by_range.setdefault(int(r["range_id"]), []).append(r)
