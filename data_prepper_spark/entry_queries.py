@@ -598,8 +598,8 @@ SELECT query_id, doc_id, score_r FROM wranked WHERE rn <= {FT_K}
 def q_ft_merged_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean queries answered from the MERGED index (duplicate
     (term_id, range_id) slice rows — the hardest decode shape: every
-    source's slice must fold into the conjunction, see
-    boolquery._merge_dup_slices).  Oracle: the same full-corpus boolean
+    source's slice must join the conjunction, see scoring.TermView,
+    which chains them by docID).  Oracle: the same full-corpus boolean
     SQL as ft_bool_topk — the merge must be invisible to BooleanQuery."""
     from .index.boolquery import search_bool
 

@@ -8,22 +8,23 @@ Boolean (must / should / must_not — Lucene's +term term -term):
     (must clauses score too, exactly as Lucene's BooleanWeight sums
     scoring clauses; must_not never contributes).
 
-Execution is conjunctive-first, the classic inverted-index plan:
-  - candidates = m-way sorted intersection of the must terms' docID
-    arrays, SMALLEST FIRST — per-range cost is bounded by the rarest
-    must term's slice df, not the stopword's (the reason search engines
-    love AND queries);
+Execution is conjunctive-first, the classic inverted-index plan
+(:func:`_bool_eval`, over one block-lazy view per term):
+  - candidates = the rarest must term's docs, intersected with the
+    other must terms by skip-pointer block reads — cost is bounded by
+    the rarest must term's df, not the stopword's (the reason search
+    engines love AND queries);
   - must_not is a sorted-membership anti-filter on the candidate set;
-  - only then are the scoring slices filtered to candidates and scored
-    (one vectorized brute pass over candidates — no BMW needed because
-    the candidate set is already small; a pure-should query falls back
-    to the union, same as plain BM25 brute).
+  - only then are the scoring terms' candidate blocks decoded and
+    scored (one vectorized brute pass over candidates — no BMW needed
+    because the candidate set is already small; a pure-should query
+    starts from the union, same as plain BM25 brute).
 
 Both serving modes mirror BM25Searcher: driver (bucket-pruned pyarrow
-read, no Spark job) and distributed (per-docID-range applyInPandas +
-global TakeOrdered).  A doc's postings for every term live in the same
-docID range, so boolean constraints evaluate completely inside a range —
-the per-range kernel is exact, no cross-range state.
+read, no Spark job, one evaluation over the whole docID space) and
+distributed (per-docID-range applyInPandas + global TakeOrdered).  A
+doc's postings for every term live in the same docID range, so the
+same evaluator is exact inside a range — no cross-range state.
 
 Prefix, fuzzy, and wildcard queries rewrite through the term dictionary
 (Lucene MultiTermQuery): expand against the term strings of termstats
@@ -40,8 +41,7 @@ Reference anchor: the reference's expression DSL routes (`and`/`or`/
 `not` predicates over fields, data-prepper-expression/.../
 DataPrepperExpression.g4:302-304) are the pipeline-side boolean
 analog; full-text booleans are what its opensearch sink delegates to
-Lucene.  Tombstones (index/deletes.py) are respected via the searcher's
-liveDocs mask.
+Lucene.  Tombstones (index/deletes.py) are the views' deny set.
 """
 
 from __future__ import annotations
@@ -54,15 +54,11 @@ from pyspark.sql import functions as F
 
 from ..hashing import xxh64_signed
 from ..textproc import tokenize
-from .deletes import mask_term_slice
 from .scoring import (
     TermSlice,
-    _member_sorted,
-    decode_slice,
-    decode_slice_lazy,
     idf_value,
-    memo_term_slice,
     score_brute,
+    term_views,
     topk_select,
 )
 
@@ -85,210 +81,61 @@ def _norm_terms(terms) -> list[str]:
     return uniq
 
 
-def _range_eval(slices_by_id, must_ids, not_ids, scoring, k1, b, avgdl,
-                should_ids=(), msm=0):
-    """Evaluate one docID range.  *slices_by_id*: term_id → TermSlice
-    (already tombstone-masked).  Returns (doc_ids, scores) of matching
-    docs in this range (exact scores, unranked).  ``msm`` > 0 requires
-    each doc to match at least that many of the *should_ids* clauses
-    (OpenSearch ``minimum_should_match``; counts close range-locally
-    because a doc lives in exactly one range)."""
-    empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-    # conjunction: every must term needs postings in this range
-    if must_ids:
-        must_slices = []
-        for i in must_ids:
-            s = slices_by_id.get(i)
-            if s is None or s.doc_ids.size == 0:
-                return empty
-            must_slices.append(s)
-        must_slices.sort(key=lambda s: s.doc_ids.size)  # smallest first
-        cand = must_slices[0].doc_ids
-        for s in must_slices[1:]:
-            cand = np.intersect1d(cand, s.doc_ids, assume_unique=True)
-            if cand.size == 0:
-                return empty
-    else:
-        arrs = [
-            slices_by_id[i].doc_ids for i in scoring if i in slices_by_id
-        ]
-        if not arrs:
-            return empty
-        cand = np.unique(np.concatenate(arrs))
-    if msm > 0 and should_ids and (must_ids or msm > 1):
-        # pure-should msm==1 is the default union — no filter needed
-        arrs = [
-            slices_by_id[i].doc_ids for i in should_ids if i in slices_by_id
-        ]
-        if len(arrs) < msm:
-            return empty  # too few live should clauses in this range
-        u, cnt = np.unique(np.concatenate(arrs), return_counts=True)
-        ok = u[cnt >= msm]
-        cand = cand[_member_sorted(cand, ok)]
-        if cand.size == 0:
-            return empty
-    if not_ids:
-        excl = [
-            slices_by_id[i].doc_ids for i in not_ids if i in slices_by_id
-        ]
-        if excl:
-            ex = np.unique(np.concatenate(excl))
-            cand = cand[~_member_sorted(cand, ex)]
-            if cand.size == 0:
-                return empty
-    # score candidates only: filter each scoring slice to the candidates
-    subs = []
-    for i in scoring:
-        s = slices_by_id.get(i)
-        if s is None or s.doc_ids.size == 0:
-            continue
-        keep = _member_sorted(s.doc_ids, cand)
-        if not keep.any():
-            continue
-        from .scoring import TermSlice
-
-        subs.append(
-            TermSlice(
-                s.term, s.idf, s.doc_ids[keep], s.tfs[keep], s.dls[keep],
-                s.block_firsts, s.block_ubs,
-            )
-        )
+def _score_candidates(views: dict, cand, scoring, k1, b, avgdl):
+    """Exact scores of the sorted docs *cand* over the *scoring* terms'
+    views; each view decodes only the blocks the candidates can live in."""
+    subs = [
+        s for i in scoring if i in views
+        for s in views[i].candidate_slices(cand)
+    ]
     if not subs:
-        return empty
+        return np.empty(0, np.int64), np.empty(0, np.float64)
     return score_brute(subs, k1, b, avgdl)
 
 
-def _range_eval_lazy(lz: dict, must_ids, not_ids, scoring, k1, b, avgdl,
-                     should_ids=(), msm=0):
-    """Block-lazy conjunctive evaluation of one docID range — the
+def _bool_eval(views: dict, must_ids, not_ids, scoring, k1, b, avgdl,
+               should_ids=(), msm=0):
+    """Boolean evaluation over term views (scoring.TermView) — the
     skip-pointer plan:
 
-      1. fully decode only the RAREST must term's docID stream (the
-         smallest slice by construction);
-      2. every other must / must_not slice decodes ONLY the blocks its
-         candidates can live in (LazySlice.covering_blocks → one
-         searchsorted against the stored per-block first docIDs — the
+      1. candidates = every live doc of the RAREST must term (one memoized
+         full decode of its docID stream), or, with no must clause, the
+         union of the scoring terms' docs;
+      2. every other must / should-count / must_not view decodes ONLY the
+         blocks its candidates can live in (TermView.contains — the
          on-disk block_firsts array IS the skip list);
       3. tf/dl streams decode only for the final candidates' blocks.
 
     Decode cost is ∝ rarest-term df × blocks touched, never the stopword
-    df — the df-independent property a 10^12-doc index needs (same
-    argument as BMW's lazy segment decode, applied to AND queries).
-    Output is bit-identical to the eager `_range_eval` (pinned by
-    tests/test_boolquery.py::test_bool_lazy_equals_eager)."""
+    df.  ``msm`` > 0 requires each doc to match at least that many of the
+    *should_ids* clauses (OpenSearch ``minimum_should_match``).  Returns
+    (doc_ids, scores) of every match (exact scores, unranked)."""
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-    must = []
-    for i in must_ids:
-        s = lz.get(i)
-        if s is None or s.n == 0:
+    if must_ids:
+        if any(i not in views for i in must_ids):
             return empty
-        must.append(s)
-    must.sort(key=lambda s: s.n)
-    first = must[0]
-    cand = first.block_docids(np.arange(first.block_firsts.size))
-    for s in must[1:]:
-        ids = s.block_docids(s.covering_blocks(cand))
-        cand = cand[_member_sorted(cand, ids)]
-        if cand.size == 0:
+        must = sorted((views[i] for i in must_ids), key=lambda v: v.n)
+        cand = must[0].docids()
+        for v in must[1:]:
+            cand = cand[v.contains(cand)]
+    else:
+        arrs = [views[i].docids() for i in scoring if i in views]
+        if not arrs:
             return empty
-    if msm > 0 and should_ids:
-        # skip-pointer-bounded msm: each should slice decodes only the
-        # blocks the must-derived candidates can live in
+        cand = np.unique(np.concatenate(arrs))
+    if msm > 0 and should_ids and (must_ids or msm > 1):
+        # pure-should msm==1 is the union itself — no count needed
         cnt = np.zeros(cand.size, dtype=np.int64)
         for i in should_ids:
-            s = lz.get(i)
-            if s is None or s.n == 0:
-                continue
-            ids = s.block_docids(s.covering_blocks(cand))
-            cnt += _member_sorted(cand, ids)
+            if i in views:
+                cnt += views[i].contains(cand)
         cand = cand[cnt >= msm]
-        if cand.size == 0:
-            return empty
     for i in not_ids:
-        s = lz.get(i)
-        if s is None or s.n == 0:
-            continue
-        ids = s.block_docids(s.covering_blocks(cand))
-        cand = cand[~_member_sorted(cand, ids)]
-        if cand.size == 0:
-            return empty
-    subs = []
-    for i in scoring:
-        s = lz.get(i)
-        if s is None or s.n == 0:
-            continue
-        ids, tfs, dls = s.block_values(s.covering_blocks(cand))
-        keep = _member_sorted(ids, cand)
-        if not keep.any():
-            continue
-        subs.append(
-            TermSlice(
-                s.term, s.idf, ids[keep], tfs[keep], dls[keep],
-                s.block_firsts, s.block_ubs,
-            )
-        )
-    if not subs:
+        if i in views and cand.size:
+            cand = cand[~views[i].contains(cand)]
+    if cand.size == 0:
         return empty
-    return score_brute(subs, k1, b, avgdl)
-
-
-def _merge_dup_slices(parts: list) -> "TermSlice":
-    """Fold duplicate (term_id, range_id) slices — a MERGED index keeps
-    its sources' slice rows side by side (disjoint doc spaces, interleaved
-    docIDs) — into one docID-sorted TermSlice.  Block metadata is dropped:
-    the merged arrays' consumers (conjunctive/filtered/fields brute
-    scoring) never read it, and the lazy paths never see duplicates (they
-    force this eager fold)."""
-    s0 = parts[0]
-    ids = np.concatenate([s.doc_ids for s in parts])
-    tfs = np.concatenate([s.tfs for s in parts])
-    dls = np.concatenate([s.dls for s in parts])
-    order = np.argsort(ids, kind="stable")
-    return TermSlice(
-        s0.term, s0.idf, ids[order], tfs[order], dls[order],
-        np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float32),
-    )
-
-
-def _decode_range(rows, labels, idf, legacy, deleted, block_size):
-    """Decode one range's rows: block-lazy when every stream carries a
-    known tag (varint or pfor), no tombstones exist (must-conjunctions
-    then skip decoding the stopword streams), and no term has duplicate
-    slice rows (merged indexes keep source slices side by side — those
-    fold eagerly into one sorted slice per term), else eager TermSlices
-    built through the rows' stream memos (scoring.memo_term_slice), so a
-    cached row decodes once per searcher on this path too.
-    Returns (slices_by_id, is_lazy)."""
-    tids = [int(r["term_id"]) for r in rows]
-    dup = len(set(tids)) < len(tids)
-    lazy_ok = not legacy and deleted.size == 0 and not dup
-    if lazy_ok:
-        lz = {}
-        for row in rows:
-            s = decode_slice_lazy(
-                row, idf.get(row["term_id"], 0.0), block_size,
-                labels[row["term_id"]],
-            )
-            if s is None:
-                lz = None
-                break
-            lz[int(row["term_id"])] = s
-        if lz is not None:
-            return lz, True
-    groups: dict[int, list] = {}
-    for row in rows:
-        s = memo_term_slice(
-            row, idf.get(row["term_id"], 0.0), block_size,
-            labels[row["term_id"]], legacy=legacy,
-        )
-        if deleted.size:
-            s = mask_term_slice(s, deleted)
-        groups.setdefault(int(row["term_id"]), []).append(s)
-    out = {
-        i: (ss[0] if len(ss) == 1 else _merge_dup_slices(ss))
-        for i, ss in groups.items()
-    }
-    return out, False
+    return _score_candidates(views, cand, scoring, k1, b, avgdl)
 
 
 def search_bool(
@@ -309,8 +156,8 @@ def search_bool(
 
     ``boosts``: term → multiplier (Lucene's ``term^boost`` BoostQuery).
     A boost scales that clause's score contribution; it folds into the
-    per-term idf BEFORE accumulation, so every decode/scoring path
-    (lazy, eager, distributed) inherits it with zero extra work and the
+    per-term idf BEFORE accumulation, so every scoring path (driver,
+    distributed) inherits it with zero extra work and the
     accumulation order stays the oracle's sorted-term order.
 
     ``after``: deep-paging cursor (Lucene searchAfter / OpenSearch
@@ -323,9 +170,9 @@ def search_bool(
 
     ``minimum_should_match``: docs must match at least this many SHOULD
     clauses (OpenSearch bool parameter) — ignored when there are no
-    should clauses, like the reference.  Counts close per docID range,
-    and the lazy conjunctive plan bounds the count's decode cost by the
-    must candidates' blocks (skip pointers), not the should dfs."""
+    should clauses, like the reference.  The conjunctive plan bounds the
+    count's decode cost by the must candidates' blocks (skip pointers),
+    not the should dfs."""
     if after is not None and tie_round is None:
         raise ValueError("after= requires tie_round (cursor on rounded scores)")
     must = _norm_terms(must)
@@ -375,7 +222,7 @@ def search_bool(
     ):
         # pure-should scoring boolean ≡ BM25 disjunction with per-term
         # (possibly boosted) idf — route through the BM25 scoring core
-        # instead of the eager brute union (tests/test_boolquery.py pins
+        # instead of the brute union (tests/test_boolquery.py pins
         # rank identity vs the brute path).  Mode pick: BMW prunes when
         # the top-k threshold can beat segment upper bounds; a
         # disjunction whose clauses' postings outnumber the corpus (a
@@ -394,37 +241,15 @@ def search_bool(
             searcher, ids, live_ids, buckets, must_ids, not_ids, scoring,
             idf, k, tie_round, after, should_ids, msm,
         )
-    rows = searcher._pruned_slice_rows(live_ids, buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
     cfg = searcher.cfg
-    out_ids, out_sc = [], []
-    for rr in rows_by_range.values():
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, searcher.deleted,
-            cfg.block_size,
-        )
-        if is_lazy and must_ids:
-            i_r, s_r = _range_eval_lazy(
-                slices_by_id, must_ids, not_ids, scoring, cfg.k1, cfg.b,
-                searcher.avgdl, should_ids, msm,
-            )
-        else:
-            if is_lazy:  # pure-should needs the union — full decode
-                slices_by_id = {
-                    i: s.to_term_slice() for i, s in slices_by_id.items()
-                }
-            i_r, s_r = _range_eval(
-                slices_by_id, must_ids, not_ids, scoring, cfg.k1, cfg.b,
-                searcher.avgdl, should_ids, msm,
-            )
-        out_ids.append(i_r)
-        out_sc.append(s_r)
-    if not out_ids:
-        return []
-    da = np.concatenate(out_ids)
-    sc = np.concatenate(out_sc)
+    views = term_views(
+        searcher._pruned_slice_rows(live_ids, buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    da, sc = _bool_eval(
+        views, must_ids, not_ids, scoring, cfg.k1, cfg.b, searcher.avgdl,
+        should_ids, msm,
+    )
     if da.size == 0:
         return []
     if tie_round is not None:
@@ -501,20 +326,15 @@ def search_synonyms(
     live_ids = {i: ids[i] for _, _, ms in live_groups for i in ms}
     group_of = {i: gi for gi, (_, _, ms) in enumerate(live_groups)
                 for i in ms}
-    cfg, legacy, deleted = searcher.cfg, searcher.legacy_codec, searcher.deleted
+    cfg, deleted = searcher.cfg, searcher.deleted
     avgdl = searcher.avgdl  # hoisted: the worker closure must not
     #                         capture the searcher (it holds the session)
 
     def merge_and_score(rows) -> tuple[np.ndarray, np.ndarray]:
-        from .deletes import mask_term_slice
-
         by_group: dict[int, list] = {}
-        for row in rows:
-            tid = int(row["term_id"])
-            s = decode_slice(row, 0.0, label=live_ids[tid], legacy=legacy)
-            if deleted.size:
-                s = mask_term_slice(s, deleted)
-            by_group.setdefault(group_of[tid], []).append(s)
+        views = term_views(rows, live_ids, {}, cfg.block_size, deleted)
+        for tid, v in views.items():
+            by_group.setdefault(group_of[tid], []).extend(v.term_slices())
         pseudo = [
             _merge_synonym_slices(ss, live_groups[gi][1], live_groups[gi][0])
             for gi, ss in sorted(by_group.items())
@@ -559,28 +379,16 @@ def _search_bool_distributed(
     """Per-docID-range applyInPandas boolean evaluation + global
     TakeOrdered — the scale path (a range holds every term's postings for
     its docs, so the boolean constraints close locally)."""
-    cfg, avgdl, legacy = searcher.cfg, searcher.avgdl, searcher.legacy_codec
-    deleted = searcher.deleted
+    cfg, avgdl, deleted = searcher.cfg, searcher.avgdl, searcher.deleted
 
     def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        slices_by_id, is_lazy = _decode_range(
-            pdf.to_dict("records"), labels, idf, legacy, deleted,
-            cfg.block_size,
+        views = term_views(
+            pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
         )
-        if is_lazy and must_ids:
-            i_r, s_r = _range_eval_lazy(
-                slices_by_id, must_ids, not_ids, scoring, cfg.k1, cfg.b,
-                avgdl, should_ids, msm,
-            )
-        else:
-            if is_lazy:
-                slices_by_id = {
-                    i: s.to_term_slice() for i, s in slices_by_id.items()
-                }
-            i_r, s_r = _range_eval(
-                slices_by_id, must_ids, not_ids, scoring, cfg.k1, cfg.b,
-                avgdl, should_ids, msm,
-            )
+        i_r, s_r = _bool_eval(
+            views, must_ids, not_ids, scoring, cfg.k1, cfg.b, avgdl,
+            should_ids, msm,
+        )
         return pd.DataFrame({"doc_id": i_r, "score": s_r})
 
     scored = (

@@ -6,8 +6,8 @@ Lucene's delete model, recast on the engine's immutable parquet segments:
   under ``<index>/tombstones/``) — a metadata write, no Spark job, ms
   latency, idempotent (file name = content hash).  This is Iceberg's
   delete-file idea applied to index segments.
-- The searcher masks tombstoned docs out of every result IMMEDIATELY,
-  but corpus statistics (n_docs, avgdl, per-term df) remain those of the
+- Every query kernel skips tombstoned docs IMMEDIATELY (the searcher's
+  deny set: scoring.TermView and score_bmw's ``deny``), but corpus statistics (n_docs, avgdl, per-term df) remain those of the
   full index until a purge — exactly Lucene's liveDocs bitmap, where
   docFreq still counts deleted docs until segments merge.
 - :func:`purge_deletes` rewrites the index without the deleted docs.  It
@@ -45,7 +45,7 @@ import pyarrow.parquet as pq
 from pyspark.sql import SparkSession
 
 from ..hashing import xxh64_signed
-from .scoring import TermSlice, _member_sorted
+from .scoring import _member_sorted
 
 _TOMB = "tombstones"
 
@@ -86,27 +86,6 @@ def read_tombstones(index_dir: str) -> np.ndarray:
 
 def clear_tombstones(index_dir: str) -> None:
     shutil.rmtree(os.path.join(index_dir, _TOMB), ignore_errors=True)
-
-
-def mask_term_slice(s, deleted: np.ndarray):
-    """TermSlice minus tombstoned docs.  Block metadata is kept as-is:
-    masking only removes postings, so every surviving posting still lies
-    inside its original block and the stored per-block upper bounds
-    remain valid upper bounds — BMW pruning stays exact."""
-    keep = ~_member_sorted(s.doc_ids, deleted)
-    if keep.all():
-        return s
-    return TermSlice(
-        term=s.term,
-        idf=s.idf,
-        doc_ids=s.doc_ids[keep],
-        tfs=s.tfs[keep],
-        dls=s.dls[keep],
-        block_firsts=s.block_firsts,
-        block_ubs=s.block_ubs,
-    )
-
-
 
 
 def purge_deletes(

@@ -109,6 +109,28 @@ def _clause_tokens(searcher, clauses, boosts: dict):
     return toks
 
 
+def _check_operators(body, msm: int) -> None:
+    """search_bool takes single terms, so each multi-token match clause
+    is flattened into its tokens.  Raise where that changes the clause's
+    meaning: must with ``or``, should with ``and`` (or any multi-token
+    should under minimum_should_match > 1, which counts clauses, not
+    tokens), must_not with ``and``."""
+    # the operator under which a clause equals its tokens one by one
+    for occur, exact in (("must", "and"), ("should", "or"), ("must_not", "or")):
+        clauses = body.get(occur, [])
+        for c in clauses if isinstance(clauses, list) else [clauses]:
+            toks, op, _ = _match_tokens(None, next(iter(c.values())))
+            op = str(op).lower()
+            if len(toks) > 1 and (op != exact or (occur == "should" and msm > 1)):
+                raise ValueError(
+                    f"bool {occur} clause {' '.join(toks)!r} with 'operator': "
+                    f"{op!r} is not supported"
+                    + (" under minimum_should_match > 1" if op == exact else "")
+                    + f" (a multi-token {occur} clause needs 'operator': "
+                    f"{exact!r}, or one clause per token)"
+                )
+
+
 def _bool_query(searcher, body, k, distributed, tie_round):
     from .boolquery import search_bool
     from .filtered import (
@@ -171,6 +193,7 @@ def _bool_query(searcher, body, k, distributed, tie_round):
         return search_filtered(
             searcher, " ".join(should), filters, k=k,
             distributed=distributed, tie_round=tie_round)
+    _check_operators(body, msm)
     return search_bool(
         searcher, must=must, should=should, must_not=must_not, k=k,
         distributed=distributed, tie_round=tie_round,

@@ -1096,8 +1096,10 @@ class FamilySearcher:
         already IS that layout, so the migration is mechanical."""
         import pandas as pd
 
-        from .deletes import mask_term_slice
-        from .scoring import decode_slice
+        from .scoring import (
+            bmw_slices, score_bmw, score_brute, term_views, topk_select,
+            view_slices,
+        )
 
         sel = periods if periods is not None else self.covered(start, end)
         opened = [self._searcher(p) for p in sel]
@@ -1127,7 +1129,6 @@ class FamilySearcher:
             seg_meta[si] = {
                 "scale": max(1.0, (avgdl / s.avgdl) * (1.0 + 1e-9))
                 if s.avgdl else 1.0,
-                "legacy": s.legacy_codec,
                 "deleted": s.deleted,
             }
             scans.append(
@@ -1143,31 +1144,20 @@ class FamilySearcher:
         k1, b = cfg.k1, cfg.b
         use_bmw = mode == "bmw" and tie_round is None
 
-        from .scoring import score_bmw, score_brute, topk_select  # noqa
-
-        import numpy as np  # ships with the closure
-
         def score_group(pdf: pd.DataFrame) -> pd.DataFrame:
             si = int(pdf["_seg"].iloc[0])
             meta = seg_meta[si]
-            slices = [
-                decode_slice(
-                    row, idf[row["term_id"]], label=labels[row["term_id"]],
-                    legacy=meta["legacy"],
-                )
-                for row in pdf.to_dict("records")
-            ]
-            if meta["deleted"].size:
-                slices = [mask_term_slice(s, meta["deleted"]) for s in slices]
+            views = term_views(
+                pdf.to_dict("records"), labels, idf, cfg.block_size,
+                meta["deleted"],
+            )
             if use_bmw:
-                if meta["scale"] != 1.0:
-                    for s in slices:
-                        s.block_ubs = (
-                            s.block_ubs.astype(np.float64) * meta["scale"]
-                        )
-                ids_, sc_ = score_bmw(slices, k1, b, avgdl, k)
+                ids_, sc_ = score_bmw(
+                    bmw_slices(views, meta["scale"]), k1, b, avgdl, k,
+                    deny=meta["deleted"],
+                )
             else:
-                ids_, sc_ = score_brute(slices, k1, b, avgdl)
+                ids_, sc_ = score_brute(view_slices(views), k1, b, avgdl)
                 if tie_round is None:
                     ids_, sc_ = topk_select(ids_, sc_, k)
             return pd.DataFrame({"doc_id": ids_, "score": sc_})

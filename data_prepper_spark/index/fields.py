@@ -31,29 +31,23 @@ from pyspark.sql import functions as F
 
 from ..hashing import pmod, xxh64_signed
 from ..textproc import tokenize
-from .boolquery import _decode_range
-from .scoring import TermSlice, idf_value, score_brute, topk_select
+from .scoring import TermSlice, idf_value, score_brute, term_views, topk_select
 
 
-def _field_slices(slices_by_id, is_lazy, term_field, field_stats, boosts):
-    """TermSlices with per-field idf/avgdl attached (full decode — the
-    OR-union needs every posting)."""
+def _field_slices(views, term_field, field_stats, boosts):
+    """Live TermSlices with per-field idf/avgdl attached (full decode —
+    the OR-union needs every posting)."""
     subs = []
-    for i, s in slices_by_id.items():
-        if is_lazy:
-            if s.n == 0:
-                continue
-            s = s.to_term_slice()
-        elif s.doc_ids.size == 0:
-            continue
+    for i, v in views.items():
         f = term_field[i]
-        subs.append(
-            TermSlice(
-                s.term, s.idf * boosts.get(f, 1.0), s.doc_ids, s.tfs, s.dls,
-                s.block_firsts, s.block_ubs,
-                avgdl=field_stats[f]["avgdl"],
+        for s in v.term_slices():
+            subs.append(
+                TermSlice(
+                    s.term, s.idf * boosts.get(f, 1.0), s.doc_ids, s.tfs,
+                    s.dls, s.block_firsts, s.block_ubs,
+                    avgdl=field_stats[f]["avgdl"],
+                )
             )
-        )
     return subs
 
 
@@ -99,27 +93,15 @@ def search_fields(
         return _search_fields_distributed(
             searcher, ids, buckets, term_field, idf, boosts, k, tie_round
         )
-    rows = searcher._pruned_slice_rows(list(ids), buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
     cfg = searcher.cfg
-    out_ids, out_sc = [], []
-    for rr in rows_by_range.values():
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, searcher.deleted,
-            cfg.block_size,
-        )
-        subs = _field_slices(slices_by_id, is_lazy, term_field, fs, boosts)
-        if not subs:
-            continue
-        i_r, s_r = score_brute(subs, cfg.k1, cfg.b, searcher.avgdl)
-        out_ids.append(i_r)
-        out_sc.append(s_r)
-    if not out_ids:
-        return []
-    da = np.concatenate(out_ids)
-    sc = np.concatenate(out_sc)
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    da, sc = score_brute(
+        _field_slices(views, term_field, fs, boosts), cfg.k1, cfg.b,
+        searcher.avgdl,
+    )
     if da.size == 0:
         return []
     if tie_round is not None:
@@ -144,16 +126,15 @@ def _dismax_combine(per_field: dict, tie_breaker: float):
     return union, mx + tie_breaker * (sm - mx)
 
 
-def _range_dismax(slices_by_id, is_lazy, term_field, fs, boosts, tie_breaker,
-                  k1, b, avgdl):
-    """One range's dis-max evaluation: per-field brute scores, combined."""
+def _dismax_eval(views, term_field, fs, boosts, tie_breaker, k1, b, avgdl):
+    """Dis-max evaluation: per-field brute scores, combined."""
     by_field: dict[str, list] = {}
-    for i, s in slices_by_id.items():
+    for i in views:
         by_field.setdefault(term_field[i], []).append(i)
     per_field = {}
     for f, keys in by_field.items():
         subs = _field_slices(
-            {i: slices_by_id[i] for i in keys}, is_lazy, term_field, fs, boosts
+            {i: views[i] for i in keys}, term_field, fs, boosts
         )
         if subs:
             per_field[f] = score_brute(subs, k1, b, avgdl)
@@ -204,17 +185,15 @@ def search_dismax(
     idf = {i: idf_value(fs[term_field[i]]["n_docs"], dfs[i]) for i in ids}
     cfg = searcher.cfg
     if distributed:
-        avgdl, legacy = searcher.avgdl, searcher.legacy_codec
-        deleted = searcher.deleted
+        avgdl, deleted = searcher.avgdl, searcher.deleted
 
         def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            slices_by_id, is_lazy = _decode_range(
-                pdf.to_dict("records"), ids, idf, legacy, deleted,
-                cfg.block_size,
+            views = term_views(
+                pdf.to_dict("records"), ids, idf, cfg.block_size, deleted
             )
-            i_r, s_r = _range_dismax(
-                slices_by_id, is_lazy, term_field, fs, boosts, tie_breaker,
-                cfg.k1, cfg.b, avgdl,
+            i_r, s_r = _dismax_eval(
+                views, term_field, fs, boosts, tie_breaker, cfg.k1, cfg.b,
+                avgdl,
             )
             return pd.DataFrame({"doc_id": i_r, "score": s_r})
 
@@ -233,26 +212,14 @@ def search_dismax(
             (int(r["doc_id"]), float(r["score"]))
             for r in ordered.limit(k).collect()
         ]
-    rows = searcher._pruned_slice_rows(list(ids), buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    out_ids, out_sc = [], []
-    for rr in rows_by_range.values():
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, searcher.deleted,
-            cfg.block_size,
-        )
-        i_r, s_r = _range_dismax(
-            slices_by_id, is_lazy, term_field, fs, boosts, tie_breaker,
-            cfg.k1, cfg.b, searcher.avgdl,
-        )
-        out_ids.append(i_r)
-        out_sc.append(s_r)
-    if not out_ids:
-        return []
-    da = np.concatenate(out_ids)
-    sc = np.concatenate(out_sc)
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    da, sc = _dismax_eval(
+        views, term_field, fs, boosts, tie_breaker, cfg.k1, cfg.b,
+        searcher.avgdl,
+    )
     if da.size == 0:
         return []
     if tie_round is not None:
@@ -265,16 +232,15 @@ def search_dismax(
 def _search_fields_distributed(
     searcher, labels, buckets, term_field, idf, boosts, k, tie_round
 ):
-    cfg, avgdl, legacy = searcher.cfg, searcher.avgdl, searcher.legacy_codec
+    cfg, avgdl = searcher.cfg, searcher.avgdl
     deleted = searcher.deleted
     fs = searcher.field_stats
 
     def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        slices_by_id, is_lazy = _decode_range(
-            pdf.to_dict("records"), labels, idf, legacy, deleted,
-            cfg.block_size,
+        views = term_views(
+            pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
         )
-        subs = _field_slices(slices_by_id, is_lazy, term_field, fs, boosts)
+        subs = _field_slices(views, term_field, fs, boosts)
         if not subs:
             return pd.DataFrame({"doc_id": [], "score": []})
         i_r, s_r = score_brute(subs, cfg.k1, cfg.b, avgdl)

@@ -21,11 +21,12 @@ Execution treats the allowlist as a virtual must-clause seeded from
 docvalues instead of a posting list:
 
 - driver mode: docmeta is read with the pushed-down filter (bounded by
-  the FILTER's selectivity, not corpus size), the allowed docIDs are
-  sliced per docID range, and each scoring term block-lazily decodes
-  only the blocks those candidates can live in (the same skip-pointer
-  kernel as boolquery's conjunctions — decode cost ∝ filter selectivity
-  × blocks touched, never the stopword's df);
+  the FILTER's selectivity, not corpus size), and each scoring term's
+  view (scoring.TermView) decodes only the blocks the allowed docs can
+  live in (the same skip-pointer kernel as boolquery's conjunctions —
+  decode cost ∝ filter selectivity × blocks touched, never the
+  stopword's df); a broad filter switches the whole query to
+  filter-during-WAND (see _filtered_core);
 - distributed mode: the docmeta scan (Catalyst filter, predicate
   pushdown) is cogrouped with the pruned posting slices per docID range
   (``groupBy(range_id).cogroup(...)``) — the allowlist never leaves its
@@ -42,21 +43,23 @@ import pandas as pd
 import pyarrow.dataset as pads
 from pyspark.sql import functions as F
 
-from .boolquery import _decode_range
+from .boolquery import _score_candidates
 from .scoring import (
-    TermSlice,
     _member_sorted,
+    bmw_slices,
     idf_value,
     score_bmw,
     score_brute,
+    term_views,
     topk_select,
+    view_slices,
 )
 
 _OPS = ("==", "!=", "<", "<=", ">", ">=", "in", "exists", "missing")
 
-# candidate-block coverage above which the driver path switches from
-# candidate-driven decode to filter-during-WAND (see search_filtered);
-# >1.0 disables the WAND route, <0 forces it.  Round-3 measured the WAND
+# candidate-block coverage (of the query's largest term) above which the
+# driver path switches from candidate-driven decode to filter-during-WAND
+# (see _filtered_core); >1.0 disables the WAND route, <0 forces it.  Round-3 measured the WAND
 # route slower at every selectivity (p50 423 vs 357 ms) and disabled it;
 # round 5's cross-range theta carrying (scoring.py theta0) flipped the
 # trade for BROAD filters: at the same 1M-doc serving index (mid+head
@@ -292,57 +295,6 @@ def spark_filter_col(filters):
     return expr
 
 
-def _range_span(range_id: int, range_bits: int) -> tuple[int, int]:
-    """[lo, hi) signed docID span of one range (hi is INCLUSIVE-safe:
-    callers bound with hi_incl = hi - 1 to stay inside int64)."""
-    if range_bits == 0:
-        return -(1 << 63), (1 << 63)
-    shift = 64 - range_bits
-    lo = (range_id - (1 << (range_bits - 1))) << shift
-    return lo, lo + (1 << shift)
-
-
-def _slice_span(allowed: np.ndarray, range_id: int, range_bits: int) -> np.ndarray:
-    lo, hi = _range_span(range_id, range_bits)
-    a = int(np.searchsorted(allowed, lo, side="left"))
-    z = int(np.searchsorted(allowed, hi - 1, side="right"))
-    return allowed[a:z]
-
-
-def _eval_filtered(slices_by_id, is_lazy, cand, scoring, k1, b, avgdl):
-    """Score the allowed candidates of one range over the scoring slices
-    (term-string accumulation order preserved by the caller's *scoring*
-    ordering).  Lazy slices decode only candidate-covering blocks."""
-    empty = (np.empty(0, np.int64), np.empty(0, np.float64))
-    if cand.size == 0:
-        return empty
-    subs = []
-    for i in scoring:
-        s = slices_by_id.get(i)
-        if s is None:
-            continue
-        if is_lazy:
-            if s.n == 0:
-                continue
-            ids_, tfs, dls = s.block_values(s.covering_blocks(cand))
-        else:
-            ids_, tfs, dls = s.doc_ids, s.tfs, s.dls
-            if ids_.size == 0:
-                continue
-        keep = _member_sorted(ids_, cand)
-        if not keep.any():
-            continue
-        subs.append(
-            TermSlice(
-                s.term, s.idf, ids_[keep], tfs[keep], dls[keep],
-                s.block_firsts, s.block_ubs,
-            )
-        )
-    if not subs:
-        return empty
-    return score_brute(subs, k1, b, avgdl)
-
-
 def search_filtered(
     searcher,
     query_text: str,
@@ -394,73 +346,36 @@ def _filtered_core(
     stats; FamilySearcher.search_filtered passes family-global stats
     plus the avgdl-rescale factor that keeps the WAND route's block
     bounds sound (see BM25Searcher._score_pruned).  Returns the
-    UNRANKED (doc_ids, scores) arrays: exact per-range top-k collections
-    under (theta0-seeded) WAND when tie_round is None, ALL matches when
-    a tie rule must rank globally."""
+    UNRANKED (doc_ids, scores) arrays: the exact (theta0-seeded) top-k
+    on the WAND route, else every match.
+
+    One strategy for the whole query: a BROAD filter makes
+    candidate-driven decode degenerate (the allowed docs cover most
+    not-yet-decoded blocks of the largest term → a full decode), so
+    above BMW_COVERAGE_THRESHOLD the query runs filter-during-WAND
+    instead — segments prune on score, only allowed docs are collected,
+    the result stays the exact top-k.  Blocks already in their memos
+    (one-block rows from the read on, promoted streams) cost a candidate
+    read nothing to decode, so they do not count."""
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
     allowed, _ = _meta_ids_vals(searcher, filters)
     if searcher.deleted.size:
         allowed = allowed[~_member_sorted(allowed, searcher.deleted)]
     if allowed.size == 0:
         return empty
-    rows = searcher._pruned_slice_rows(list(ids), buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
     cfg = searcher.cfg
-    no_tombs = np.empty(0, dtype=np.int64)  # deletions already off `allowed`
-    out_ids, out_sc = [], []
-    theta = theta0  # WAND across ranges: the running k-th score
-    n_collected = 0
-    for rid, rr in rows_by_range.items():
-        cand = _slice_span(allowed, rid, cfg.range_bits)
-        if cand.size == 0:
-            continue
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, no_tombs, cfg.block_size
-        )
-        if is_lazy and tie_round is None:
-            # strategy pick per range: a BROAD filter makes candidate-driven
-            # decode degenerate (candidates cover most blocks → full decode);
-            # filter-during-WAND then wins — segments prune on score, only
-            # allowed docs are collected, result stays exact top-k
-            sl = [s for s in slices_by_id.values() if s.n]
-            if sl:
-                big = max(sl, key=lambda s: s.n)
-                cov = big.covering_blocks(cand).size / max(
-                    1, big.block_firsts.size
-                )
-                if cov > BMW_COVERAGE_THRESHOLD:
-                    if ub_scale != 1.0:
-                        for s in sl:  # rebind, never mutate (cached arrays)
-                            s.block_ubs = (
-                                s.block_ubs.astype(np.float64) * ub_scale
-                            )
-                    i_r, s_r = score_bmw(
-                        sl, cfg.k1, cfg.b, avgdl, k,
-                        allowed=cand, theta0=theta,
-                    )
-                    out_ids.append(i_r)
-                    out_sc.append(s_r)
-                    n_collected += s_r.size
-                    if n_collected >= k:
-                        allsc = np.concatenate(out_sc)
-                        theta = max(
-                            theta, -np.partition(-allsc, k - 1)[k - 1]
-                        )
-                    continue
-        i_r, s_r = _eval_filtered(
-            slices_by_id, is_lazy, cand, scoring, cfg.k1, cfg.b, avgdl,
-        )
-        out_ids.append(i_r)
-        out_sc.append(s_r)
-        n_collected += s_r.size
-        if k is not None and n_collected >= k:
-            allsc = np.concatenate(out_sc)
-            theta = max(theta, -np.partition(-allsc, k - 1)[k - 1])
-    if not out_ids:
-        return empty
-    return np.concatenate(out_ids), np.concatenate(out_sc)
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    if views and tie_round is None and k is not None:
+        big = max(views.values(), key=lambda v: v.n)
+        if big.coverage(allowed) > BMW_COVERAGE_THRESHOLD:
+            return score_bmw(
+                bmw_slices(views, ub_scale), cfg.k1, cfg.b, avgdl, k,
+                allowed=allowed, theta0=theta0,
+            )
+    return _score_candidates(views, allowed, scoring, cfg.k1, cfg.b, avgdl)
 
 
 # match-union consumers never score — tf/dl byte columns are dead weight,
@@ -468,7 +383,7 @@ def _filtered_core(
 _UNION_COLS = ["term_id", "range_id", "df_slice", "doc_ids"]
 
 
-def _union_docids_rows(rows, legacy) -> np.ndarray:
+def _union_docids_rows(rows) -> np.ndarray:
     """Sorted union of the docIDs of slice rows read with _UNION_COLS
     (docID stream decoded directly — no TermSlice, no tf/dl).
 
@@ -477,7 +392,7 @@ def _union_docids_rows(rows, legacy) -> np.ndarray:
     (scoring.stream_abs_docids — same array BMW block reads slice), and
     cached full rows lacking streams memoize the decoded array on the
     row dict (budget-covered: the cache charges 32 B/posting for memos)."""
-    from .codec import decode_docids, delta_decode_docids
+    from .codec import decode_docids
     from .scoring import stream_abs_docids
 
     parts = []
@@ -491,8 +406,7 @@ def _union_docids_rows(rows, legacy) -> np.ndarray:
             else:
                 d = r.get("_doc_abs")
         if d is None:
-            buf = bytes(r["doc_ids"])
-            d = delta_decode_docids(buf) if legacy else decode_docids(buf)
+            d = decode_docids(bytes(r["doc_ids"]))
             if is_dict and "tfs" in r:  # full cached row — memo persists
                 r["_doc_abs"] = d
         if d.size:
@@ -586,7 +500,7 @@ def search_sorted(
         rows_by_range.setdefault(int(r["range_id"]), []).append(r)
     out_ids, out_vals = [], []
     for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr, searcher.legacy_codec)
+        matched = _union_docids_rows(rr)
         if searcher.deleted.size:
             matched = matched[~_member_sorted(matched, searcher.deleted)]
         keep = _member_sorted(matched, meta_ids)  # filter membership
@@ -766,37 +680,17 @@ def search_function_score(
             tie_round, combine,
         )
     meta_ids, meta_vals = _meta_ids_vals(searcher, filters, field)
-    rows = searcher._pruned_slice_rows(list(ids), buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    out_ids, out_sc = [], []
-    for rr in rows_by_range.values():
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, searcher.deleted,
-            cfg.block_size,
-        )
-        if is_lazy:
-            slices_by_id = {
-                i: s.to_term_slice() for i, s in slices_by_id.items() if s.n
-            }
-        subs = [s for s in slices_by_id.values() if s.doc_ids.size]
-        if not subs:
-            continue
-        i_r, s_r = score_brute(subs, cfg.k1, cfg.b, searcher.avgdl)
-        keep = _member_sorted(i_r, meta_ids)  # filters drop non-members
-        i_r, s_r = i_r[keep], s_r[keep]
-        if i_r.size == 0:
-            continue
-        fv = fn(meta_vals[np.searchsorted(meta_ids, i_r)])
-        s_r = (combine if callable(combine)
-               else _COMBINE_MODES[combine])(s_r, fv)
-        out_ids.append(i_r)
-        out_sc.append(s_r)
-    if not out_ids:
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    da, sc = score_brute(view_slices(views), cfg.k1, cfg.b, searcher.avgdl)
+    keep = _member_sorted(da, meta_ids)  # filters drop non-members
+    da, sc = da[keep], sc[keep]
+    if da.size == 0:
         return []
-    da = np.concatenate(out_ids)
-    sc = np.concatenate(out_sc)
+    fv = fn(meta_vals[np.searchsorted(meta_ids, da)])
+    sc = (combine if callable(combine) else _COMBINE_MODES[combine])(sc, fv)
     if tie_round is not None:
         order = np.lexsort((da, -np.round(sc, tie_round)))[:k]
         return [(int(da[i]), float(sc[i])) for i in order]
@@ -810,21 +704,16 @@ def _function_score_distributed(
 ):
     from .tokenize import range_id_col
 
-    cfg, avgdl, legacy = searcher.cfg, searcher.avgdl, searcher.legacy_codec
+    cfg, avgdl = searcher.cfg, searcher.avgdl
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        slices_by_id, is_lazy = _decode_range(
-            post_pdf.to_dict("records"), labels, idf, legacy, deleted,
-            cfg.block_size,
+        views = term_views(
+            post_pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
         )
-        if is_lazy:
-            slices_by_id = {
-                i: s.to_term_slice() for i, s in slices_by_id.items() if s.n
-            }
-        subs = [s for s in slices_by_id.values() if s.doc_ids.size]
+        subs = view_slices(views)
         if not subs:
             return pd.DataFrame({"doc_id": [], "score": []})
         i_r, s_r = score_brute(subs, cfg.k1, cfg.b, avgdl)
@@ -997,13 +886,13 @@ def _matched_docids_df(searcher, labels, buckets, filters):
     gather)."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
@@ -1140,14 +1029,10 @@ def search_terms_set(
     idf = {i: idf_value(searcher.n_docs, dfs[i]) for i in ids}
     cfg, avgdl = searcher.cfg, searcher.avgdl
 
-    def eval_slices(slices_by_id, is_lazy, meta_ids, meta_vals):
+    def eval_slices(views, meta_ids, meta_vals):
         # closure captures scalars only (cfg/avgdl/required_fn) — the
         # distributed cogroup pickles this into the workers
-        if is_lazy:
-            slices_by_id = {
-                i: s.to_term_slice() for i, s in slices_by_id.items() if s.n
-            }
-        subs = [s for s in slices_by_id.values() if s.doc_ids.size]
+        subs = view_slices(views)
         if not subs:
             return None
         i_r, s_r = score_brute(subs, cfg.k1, cfg.b, avgdl)
@@ -1171,24 +1056,14 @@ def search_terms_set(
             k, tie_round,
         )
     meta_ids, meta_vals = _meta_ids_vals(searcher, filters, msm_field)
-    rows = searcher._pruned_slice_rows(list(ids), buckets)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    out_ids, out_sc = [], []
-    for rr in rows_by_range.values():
-        slices_by_id, is_lazy = _decode_range(
-            rr, ids, idf, searcher.legacy_codec, searcher.deleted,
-            cfg.block_size,
-        )
-        got = eval_slices(slices_by_id, is_lazy, meta_ids, meta_vals)
-        if got is not None:
-            out_ids.append(got[0])
-            out_sc.append(got[1])
-    if not out_ids:
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        cfg.block_size, searcher.deleted,
+    )
+    got = eval_slices(views, meta_ids, meta_vals)
+    if got is None:
         return []
-    da = np.concatenate(out_ids)
-    sc = np.concatenate(out_sc)
+    da, sc = got
     if tie_round is not None:
         order = np.lexsort((da, -np.round(sc, tie_round)))[:k]
         return [(int(da[i]), float(sc[i])) for i in order]
@@ -1202,21 +1077,18 @@ def _terms_set_distributed(
 ):
     from .tokenize import range_id_col
 
-    cfg, legacy, deleted = searcher.cfg, searcher.legacy_codec, searcher.deleted
+    cfg, deleted = searcher.cfg, searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"doc_id": [], "score": []})
-        slices_by_id, is_lazy = _decode_range(
-            post_pdf.to_dict("records"), labels, idf, legacy, deleted,
-            cfg.block_size,
+        views = term_views(
+            post_pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
         )
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
         meta_vals = meta_pdf["v"].to_numpy()
         order = np.argsort(meta_ids)
-        got = eval_slices(
-            slices_by_id, is_lazy, meta_ids[order], meta_vals[order]
-        )
+        got = eval_slices(views, meta_ids[order], meta_vals[order])
         if got is None:
             return pd.DataFrame({"doc_id": [], "score": []})
         return pd.DataFrame({"doc_id": got[0], "score": got[1]})
@@ -1257,7 +1129,7 @@ def _matched_with_values(searcher, ids, buckets, filters, value_field):
         rows_by_range.setdefault(int(r["range_id"]), []).append(r)
     out = []
     for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr, searcher.legacy_codec)
+        matched = _union_docids_rows(rr)
         if searcher.deleted.size:
             matched = matched[~_member_sorted(matched, searcher.deleted)]
         matched = matched[_member_sorted(matched, meta_ids)]
@@ -1298,7 +1170,7 @@ def _matched_with_cols(searcher, ids, buckets, filters, fields):
     id_parts: list[np.ndarray] = []
     parts: list[list[np.ndarray]] = [[] for _ in fields]
     for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr, searcher.legacy_codec)
+        matched = _union_docids_rows(rr)
         if searcher.deleted.size:
             matched = matched[~_member_sorted(matched, searcher.deleted)]
         matched = matched[_member_sorted(matched, meta_ids)]
@@ -1441,14 +1313,13 @@ def _agg_distributed(
     lose exactness above 2^53 while driver mode returns exact ints."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
-    no_tombs = np.empty(0, dtype=np.int64)
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"bucket": [], "n": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -1514,13 +1385,13 @@ def _matched_values_distributed(searcher, labels, buckets, field, filters):
     bounded-cardinality docvalues)."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"v": [], "n": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -1897,14 +1768,14 @@ def _terms_stats_distributed(
     bucket column's Spark type when a bucketer changes it."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"bucket": [], "n": [], "s": [], "mn": [], "mx": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -2097,14 +1968,14 @@ def _top_hits_distributed(
 
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"bucket": [], "doc_id": [], "v": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -2161,14 +2032,13 @@ def _search_sorted_distributed(
     top-k by field, global orderBy/limit."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
-    no_tombs = np.empty(0, dtype=np.int64)
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"doc_id": [], "sort_v": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -2209,9 +2079,8 @@ def _search_filtered_distributed(
     partition; no global allowed set ever materializes on one node."""
     from .tokenize import range_id_col
 
-    cfg, avgdl, legacy = searcher.cfg, searcher.avgdl, searcher.legacy_codec
+    cfg, avgdl = searcher.cfg, searcher.avgdl
     deleted = searcher.deleted
-    no_tombs = np.empty(0, dtype=np.int64)
 
     def eval_cog(post_pdf: pd.DataFrame, allow_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or allow_pdf.empty:
@@ -2219,12 +2088,11 @@ def _search_filtered_distributed(
         cand = np.sort(allow_pdf["doc_id"].to_numpy(np.int64))
         if deleted.size:
             cand = cand[~_member_sorted(cand, deleted)]
-        slices_by_id, is_lazy = _decode_range(
-            post_pdf.to_dict("records"), labels, idf, legacy, no_tombs,
-            cfg.block_size,
+        views = term_views(
+            post_pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
         )
-        i_r, s_r = _eval_filtered(
-            slices_by_id, is_lazy, cand, scoring, cfg.k1, cfg.b, avgdl
+        i_r, s_r = _score_candidates(
+            views, cand, scoring, cfg.k1, cfg.b, avgdl
         )
         return pd.DataFrame({"doc_id": i_r, "score": s_r})
 
@@ -2349,7 +2217,7 @@ def _composite_distributed(
     tuple order, limit size."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
     srcs = list(sources)
 
@@ -2357,7 +2225,7 @@ def _composite_distributed(
         empty = pd.DataFrame({**{f: [] for f in srcs}, "n": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -2642,14 +2510,14 @@ def _distinct_pairs_distributed(
     ``distinct()`` removes cross-range duplicates."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"bucket": [], "v": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -2816,13 +2684,13 @@ def _lowest_matched_distributed(searcher, labels, buckets, filters, k: int):
     global sort-limit."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         if post_pdf.empty or meta_pdf.empty:
             return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
@@ -2950,14 +2818,14 @@ def _weighted_avg_distributed(
 ):
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame({"n": [], "s_vw": [], "s_w": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -3097,7 +2965,7 @@ def _matrix_stats_distributed(
 ):
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -3106,7 +2974,7 @@ def _matrix_stats_distributed(
         )
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -3555,7 +3423,7 @@ def _top_metrics_distributed(
     bucket-free sibling of _top_hits_distributed)."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
     ncols = len(fields)
 
@@ -3563,7 +3431,7 @@ def _top_metrics_distributed(
         empty = pd.DataFrame({"doc_id": [], **{f"c{j}": [] for j in range(ncols)}})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -3739,7 +3607,7 @@ def _sampler_candidates_distributed(
     ranges × shard_size (plain) / ranges × values × cap (diversified)."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
     diversified = len(fields) == 2
 
@@ -3748,7 +3616,7 @@ def _sampler_candidates_distributed(
         empty = pd.DataFrame(cols)
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -3870,18 +3738,13 @@ def search_has_child_scored(
         return []
     dfs = searcher.term_stats(labels, buckets)
     idf = {i: idf_value(searcher.n_docs, dfs[i]) for i in labels}
-    cfg, avgdl, legacy = searcher.cfg, searcher.avgdl, searcher.legacy_codec
+    cfg, avgdl = searcher.cfg, searcher.avgdl
     deleted = searcher.deleted
 
     def _score_range(rows):
         """(child_ids, scores) for one docID range's slice rows."""
-        slices_by_id, is_lazy = _decode_range(
-            rows, labels, idf, legacy, deleted, cfg.block_size)
-        if is_lazy:
-            slices_by_id = {
-                i: s.to_term_slice() for i, s in slices_by_id.items() if s.n
-            }
-        subs = [s for s in slices_by_id.values() if s.doc_ids.size]
+        subs = view_slices(
+            term_views(rows, labels, idf, cfg.block_size, deleted))
         if not subs:
             return None
         return score_brute(subs, cfg.k1, cfg.b, avgdl)
@@ -4083,7 +3946,7 @@ def _matched_union(searcher, ids, buckets) -> np.ndarray:
     """Sorted matched docIDs (any-term union), deletes honored."""
     rows = searcher._pruned_slice_rows(list(ids), buckets,
                                        columns=_UNION_COLS)
-    matched = _union_docids_rows(rows, searcher.legacy_codec)
+    matched = _union_docids_rows(rows)
     if searcher.deleted.size:
         matched = matched[~_member_sorted(matched, searcher.deleted)]
     return np.sort(matched)

@@ -168,7 +168,7 @@ def _geo_distance_distributed(
     (the computed-column sibling of filtered._top_metrics_distributed)."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -178,7 +178,7 @@ def _geo_distance_distributed(
         empty = pd.DataFrame({"doc_id": [], "dist": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -226,7 +226,7 @@ def _agg2_distributed(
     (bucket, count) pairs cross the shuffle."""
     from .tokenize import range_id_col
 
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
 
     def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -236,7 +236,7 @@ def _agg2_distributed(
         empty = pd.DataFrame({"bucket": [], "n": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)

@@ -45,10 +45,11 @@ merge itself is the reference's opensearch-sink handoff to Lucene's
 segment merging, pulled into the engine as a first-class Spark job).
 
 Requirements checked up front: same k1/b (bounds formula), same
-n_buckets (directory routing), same block_size (block boundaries), no
-legacy untagged-varint segments (streams must be tag-byte
-self-describing so mixed-codec sources decode per row).  range_bits MAY
-differ — range_id is only a grouping key carried in the rows.  Doc-id
+n_buckets (directory routing), same block_size (block boundaries), same
+range_bits (the merged stats carry one, and the distributed kernels
+group postings and docmeta by the range_id it defines), every source's
+stats carry a codec (streams must be tag-byte self-describing so
+mixed-codec sources decode per row).  Doc-id
 spaces must be disjoint once the drop sets are applied; overlap is
 detected from docmeta and rejected.  A fields index cannot drop docs:
 docmeta stores no per-field lengths, so its per-field stats could not
@@ -219,12 +220,11 @@ def merge_indexes(
                 f"{d}: legacy (untagged varint) index — streams are not "
                 "self-describing, rebuild before merging"
             )
-        if (c.k1, c.b, c.n_buckets, c.block_size, c.positions) != (
-            base.k1, base.b, base.n_buckets, base.block_size, base.positions,
-        ):
+        key = ("k1", "b", "n_buckets", "block_size", "range_bits", "positions")
+        if [getattr(c, f) for f in key] != [getattr(base, f) for f in key]:
             raise ValueError(
-                f"{d}: incompatible config (k1/b/n_buckets/block_size/"
-                "positions must match across merge sources)"
+                f"{d}: incompatible config ({'/'.join(key)} must match "
+                "across merge sources)"
             )
     drops = [
         np.union1d(read_tombstones(d), np.asarray([] if x is None else x, np.int64))

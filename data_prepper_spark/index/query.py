@@ -31,18 +31,18 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..hashing import pmod, xxh64_signed
 from ..textproc import tokenize
-from .codec import decode_docids_batch, delta_decode_docids, split_rows
+from .codec import decode_docids_batch, split_rows
 from .config import IndexConfig
-from .deletes import mask_term_slice, read_tombstones
+from .deletes import read_tombstones
 from .scoring import (
-    decode_slice,
-    decode_slice_lazy,
+    bmw_slices,
     idf_value,
-    memo_term_slice,
     prime_single_block,
     score_bmw,
     score_brute,
+    term_views,
     topk_select,
+    view_slices,
 )
 
 _SLICE_COLS = [
@@ -143,6 +143,11 @@ class BM25Searcher:
         self.stats = (
             pads.dataset(f"{index_dir}/stats").to_table().to_pylist()[0]
         )
+        if "codec" not in self.stats:
+            raise ValueError(
+                f"{index_dir}: legacy (untagged varint) index — its stats "
+                "carry no codec; rebuild it"
+            )
         self.cfg = IndexConfig.from_dict(self.stats)
         self.n_docs = int(self.stats["n_docs"])
         self.avgdl = float(self.stats["avgdl"])
@@ -158,9 +163,6 @@ class BM25Searcher:
             fs["avgdl"] = (
                 fs["total_tokens"] / fs["n_docs"] if fs["n_docs"] else 0.0
             )
-        # indexes written before IndexConfig.codec carry raw (untagged)
-        # varint streams — detect from stats so they decode correctly
-        self.legacy_codec = "codec" not in self.stats
         # liveDocs mask (index/deletes.py): tombstoned docs are filtered
         # from every result; corpus stats stay full-index until a purge —
         # Lucene's delete semantics.  Sorted int64, usually empty.
@@ -243,7 +245,7 @@ class BM25Searcher:
         with their one-block streams already decoded into their memos
         (scoring.prime_single_block)."""
         rows = self._posting_files.read(ids, buckets, columns or _SLICE_COLS)
-        if columns is None and not self.legacy_codec:
+        if columns is None:
             prime_single_block(rows, self.cfg.block_size)
         return rows
 
@@ -321,13 +323,9 @@ class BM25Searcher:
             return out
         sb = sorted({pmod(i, self.cfg.n_buckets) for i in still})
         rows = self._read_slice_rows(still, sb, columns)
-        bufs = [r.pop("doc_ids") for r in rows]
-        if self.legacy_codec:
-            docs = [delta_decode_docids(bytes(b)) for b in bufs]
-        else:
-            # one batch decode for the whole read; per-row copies, so an
-            # evicted entry frees its arrays (8 B/posting charged below)
-            docs = split_rows(*decode_docids_batch(bufs))
+        # one batch decode for the whole read; per-row copies, so an
+        # evicted entry frees its arrays (8 B/posting charged below)
+        docs = split_rows(*decode_docids_batch([r.pop("doc_ids") for r in rows]))
         by_term: dict[int, list[dict]] = {i: [] for i in still}
         for r, d in zip(rows, docs):
             r["_doc_abs"] = d
@@ -401,6 +399,10 @@ class BM25Searcher:
         disjoint, ordered docID spans (scoring._chain_groups — by docID,
         never by range_id: merged sources may differ in range_bits) and
         prunes the whole docID space under one running threshold.
+        Slices are block-lazy (scoring.term_views): decode cost per query
+        is the blocks of scored segments, the stream memos on cached
+        posting rows make a hot term decode once per searcher, and
+        tombstones are the kernel's deny set.
 
         The stored block_ubs are avgdl-baked (index/build.py run_bounds,
         recomputed on merge by index/merge.py fold_fn), so a non-native
@@ -417,44 +419,18 @@ class BM25Searcher:
         match (exact cross-segment rounding-tie merges)."""
         if k is None:
             mode = "brute"
-        rows = self._pruned_slice_rows(list(ids), buckets)
-        # block-lazy scoring (tagged varint OR pfor, non-legacy): decode
-        # cost per query ∝ blocks of scored segments, not df, and the
-        # stream memos on cached posting rows make a hot term decode once
-        # per searcher lifetime (brute mode converts via the same memos).
-        # Unknown tags (decode_slice_lazy → None) and tombstones take the
-        # eager path: masking needs materialized docID arrays (block
-        # metadata stays valid — masking only removes postings, see
-        # deletes.mask_term_slice)
-        lazy_ok = not self.legacy_codec and self.deleted.size == 0
-        slices = []
-        for r in rows:
-            tid = r["term_id"]
-            s = (
-                decode_slice_lazy(r, idf[tid], self.cfg.block_size, ids[tid])
-                if lazy_ok
-                else None
-            )
-            if s is None:
-                s = decode_slice(
-                    r, idf[tid], label=ids[tid], legacy=self.legacy_codec
-                )
-                if self.deleted.size:
-                    s = mask_term_slice(s, self.deleted)
-            if ub_scale != 1.0 and mode == "bmw":
-                # rebind, never mutate: lazy streams cache the stored ub
-                # array across queries (scoring.py decode_slice_lazy).
-                # float64 so the inflation never rounds below the true
-                # bound (callers also add a relative epsilon).
-                s.block_ubs = s.block_ubs.astype(np.float64) * ub_scale
-            slices.append(s)
+        views = term_views(
+            self._pruned_slice_rows(list(ids), buckets), ids, idf,
+            self.cfg.block_size, self.deleted,
+        )
         k1, b = self.cfg.k1, self.cfg.b
         if mode == "bmw":
-            hits, sc = score_bmw(slices, k1, b, avgdl, k, theta0=theta0)
-        else:
-            hits, sc = score_brute(
-                [s.to_term_slice() for s in slices], k1, b, avgdl
+            hits, sc = score_bmw(
+                bmw_slices(views, ub_scale), k1, b, avgdl, k,
+                theta0=theta0, deny=self.deleted,
             )
+        else:
+            hits, sc = score_brute(view_slices(views), k1, b, avgdl)
             if k is not None:
                 hits, sc = topk_select(hits, sc, k)
         return list(zip(hits.tolist(), sc.tolist()))
@@ -463,23 +439,18 @@ class BM25Searcher:
         self, labels, buckets, idf, k, mode, tie_round: int | None = None
     ) -> list[tuple[int, float]]:
         cfg, avgdl = self.cfg, self.avgdl
-        legacy = self.legacy_codec
         deleted = self.deleted  # sorted int64, ships with the task closure
 
         def score_range(pdf: pd.DataFrame) -> pd.DataFrame:
-            slices = [
-                decode_slice(
-                    row, idf[row["term_id"]], label=labels[row["term_id"]],
-                    legacy=legacy,
-                )
-                for row in pdf.to_dict("records")
-            ]
-            if deleted.size:
-                slices = [mask_term_slice(s, deleted) for s in slices]
+            views = term_views(
+                pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
+            )
             if mode == "bmw":
-                ids, sc = score_bmw(slices, cfg.k1, cfg.b, avgdl, k)
+                ids, sc = score_bmw(
+                    bmw_slices(views), cfg.k1, cfg.b, avgdl, k, deny=deleted
+                )
             else:
-                ids, sc = score_brute(slices, cfg.k1, cfg.b, avgdl)
+                ids, sc = score_brute(view_slices(views), cfg.k1, cfg.b, avgdl)
                 if tie_round is None:
                     ids, sc = topk_select(ids, sc, k)
                 # tie_round: keep EVERY match — the global rounded-tie
@@ -512,21 +483,14 @@ class BM25Searcher:
         if not ids:
             return []
         idf = {i: idf_value(self.n_docs, dfs[i]) for i in ids}
-        rows = self._pruned_slice_rows(list(ids), buckets)
-        by_range: dict[int, list] = {}
-        for r in rows:
-            s = memo_term_slice(
-                r, idf[r["term_id"]], self.cfg.block_size, ids[r["term_id"]],
-                legacy=self.legacy_codec,
-            )
-            if self.deleted.size:
-                s = mask_term_slice(s, self.deleted)
-            by_range.setdefault(int(r["range_id"]), []).append(s)
-        out: list[tuple[int, float]] = []
-        for slices in by_range.values():
-            ids, sc = score_brute(slices, self.cfg.k1, self.cfg.b, self.avgdl)
-            out.extend(zip(ids.tolist(), sc.tolist()))
-        return out
+        views = term_views(
+            self._pruned_slice_rows(list(ids), buckets), ids, idf,
+            self.cfg.block_size, self.deleted,
+        )
+        ids, sc = score_brute(
+            view_slices(views), self.cfg.k1, self.cfg.b, self.avgdl
+        )
+        return list(zip(ids.tolist(), sc.tolist()))
 
     def urls_for(self, doc_ids: list[int]) -> dict[int, str]:
         """doc_id → url via the docID-range-sorted docmeta (file skipping)."""

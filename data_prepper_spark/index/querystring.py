@@ -43,13 +43,12 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..hashing import pmod, xxh64_signed
-from .deletes import mask_term_slice
 from .scoring import (
     _member_sorted,
-    decode_slice,
     idf_value,
-    memo_term_slice,
     score_brute,
+    term_views,
+    view_slices,
 )
 
 # [+|-] then a quoted phrase [~slop] or a token [* | ~edits], then [^boost]
@@ -124,18 +123,13 @@ def _terms_scores_driver(searcher, terms, boost):
     if not ids:
         return np.empty(0, np.int64), np.empty(0, np.float64)
     idf = {i: boost * idf_value(searcher.n_docs, dfs[i]) for i in ids}
-    slices = []
-    for r in searcher._pruned_slice_rows(list(ids), buckets):
-        tid = int(r["term_id"])
-        # memo-backed: a hot clause converts by reference instead of
-        # paying a raw decode_slice per query (measured 4× on the 1M-doc
-        # head-prefix probes)
-        s = memo_term_slice(r, idf[tid], searcher.cfg.block_size, ids[tid],
-                            legacy=searcher.legacy_codec)
-        if searcher.deleted.size:
-            s = mask_term_slice(s, searcher.deleted)
-        slices.append(s)
-    da, sc = score_brute(slices, searcher.cfg.k1, searcher.cfg.b,
+    # memo-backed: a hot clause converts by reference instead of paying a
+    # raw decode per query (measured 4× on the 1M-doc head-prefix probes)
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        searcher.cfg.block_size, searcher.deleted,
+    )
+    da, sc = score_brute(view_slices(views), searcher.cfg.k1, searcher.cfg.b,
                          searcher.avgdl)
     order = np.argsort(da)
     return da[order], sc[order]
@@ -222,7 +216,7 @@ def _clause_docs_driver(searcher, c: Clause, max_expansions: int):
     )
     if not rows:
         return np.empty(0, np.int64)
-    out = _union_docids_rows(rows, searcher.legacy_codec)
+    out = _union_docids_rows(rows)
     if searcher.deleted.size and out.size:
         out = out[~_member_sorted(out, searcher.deleted)]
     return out
@@ -240,17 +234,13 @@ def _terms_scored_df(searcher, terms, boost) -> DataFrame | None:
     idf = {i: boost * idf_value(searcher.n_docs, dfs[i]) for i in ids}
     labels = dict(ids)
     k1, b, avgdl = searcher.cfg.k1, searcher.cfg.b, searcher.avgdl
-    legacy, deleted = searcher.legacy_codec, searcher.deleted
+    block_size, deleted = searcher.cfg.block_size, searcher.deleted
 
     def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        slices = []
-        for r in pdf.to_dict("records"):
-            tid = int(r["term_id"])
-            s = decode_slice(r, idf[tid], label=labels[tid], legacy=legacy)
-            if deleted.size:
-                s = mask_term_slice(s, deleted)
-            slices.append(s)
-        da, sc = score_brute(slices, k1, b, avgdl)
+        views = term_views(
+            pdf.to_dict("records"), labels, idf, block_size, deleted
+        )
+        da, sc = score_brute(view_slices(views), k1, b, avgdl)
         return pd.DataFrame({"doc_id": da, "score": sc})
 
     return (
@@ -268,11 +258,10 @@ def _terms_match_df(searcher, terms) -> DataFrame | None:
     ids, buckets, _dfs = _live_ids(searcher, terms)
     if not ids:
         return None
-    legacy = searcher.legacy_codec
 
     def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
         rows = pdf.to_dict("records")
-        da = _union_docids_rows(rows, legacy) if rows else np.empty(0, np.int64)
+        da = _union_docids_rows(rows) if rows else np.empty(0, np.int64)
         return pd.DataFrame({"doc_id": da})
 
     sl = (

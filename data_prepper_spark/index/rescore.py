@@ -34,8 +34,9 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from .filtered import _UNION_COLS, _union_docids_rows
-from .scoring import _member_sorted, decode_slice, idf_value, score_brute, _tf_norm
-from .deletes import mask_term_slice
+from .scoring import (
+    _member_sorted, _tf_norm, idf_value, score_brute, term_views, view_slices,
+)
 
 
 def _field_for_ids(searcher, doc_ids: np.ndarray, field: str) -> np.ndarray:
@@ -121,7 +122,7 @@ def _collapsed_distributed(searcher, query_text, field, k, tie_round):
     if not ids:
         return []
     idf = {i: idf_value(searcher.n_docs, dfs[i]) for i in ids}
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
     k1, b, avgdl = cfg.k1, cfg.b, searcher.avgdl
     labels = dict(ids)
@@ -130,14 +131,10 @@ def _collapsed_distributed(searcher, query_text, field, k, tie_round):
         empty = pd.DataFrame({"key": [], "doc_id": [], "score": [], "n": []})
         if post_pdf.empty or meta_pdf.empty:
             return empty
-        slices = []
-        for r in post_pdf.to_dict("records"):
-            s = decode_slice(r, idf[r["term_id"]], label=labels[r["term_id"]],
-                             legacy=legacy)
-            if deleted.size:
-                s = mask_term_slice(s, deleted)
-            slices.append(s)
-        da, sc = score_brute(slices, k1, b, avgdl)
+        views = term_views(
+            post_pdf.to_dict("records"), labels, idf, cfg.block_size, deleted
+        )
+        da, sc = score_brute(view_slices(views), k1, b, avgdl)
         if da.size == 0:
             return empty
         meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
@@ -222,7 +219,7 @@ def _negative_docids(searcher, negative_text: str) -> np.ndarray:
     rows = searcher._pruned_slice_rows(list(nids), nbuckets, columns=_UNION_COLS)
     if not rows:
         return np.empty(0, dtype=np.int64)
-    return _union_docids_rows(rows, searcher.legacy_codec)
+    return _union_docids_rows(rows)
 
 
 def _boosting_distributed(
@@ -248,28 +245,23 @@ def _boosting_distributed(
     all_ids = {**pids, **nids}
     buckets = sorted({pmod(i, searcher.cfg.n_buckets) for i in all_ids})
     idf = {i: idf_value(searcher.n_docs, pdfs[i]) for i in pids}
-    cfg, legacy = searcher.cfg, searcher.legacy_codec
+    cfg = searcher.cfg
     deleted = searcher.deleted
     k1, b, avgdl, nb = cfg.k1, cfg.b, searcher.avgdl, float(negative_boost)
     pos_set, labels = set(pids), dict(all_ids)
 
     def eval_range(pdf: pd.DataFrame) -> pd.DataFrame:
-        recs = pdf.to_dict("records")
-        slices, neg_rows = [], []
-        for r in recs:
-            if int(r["term_id"]) in pos_set:
-                s = decode_slice(r, idf[r["term_id"]],
-                                 label=labels[r["term_id"]], legacy=legacy)
-                if deleted.size:
-                    s = mask_term_slice(s, deleted)
-                slices.append(s)
-            else:
-                neg_rows.append(r)
+        pos_rows, neg_rows = [], []
+        for r in pdf.to_dict("records"):
+            (pos_rows if int(r["term_id"]) in pos_set else neg_rows).append(r)
+        slices = view_slices(
+            term_views(pos_rows, labels, idf, cfg.block_size, deleted)
+        )
         if not slices:
             return pd.DataFrame({"doc_id": [], "score": []})
         da, sc = score_brute(slices, k1, b, avgdl)
         if neg_rows:
-            neg = _union_docids_rows(neg_rows, legacy)
+            neg = _union_docids_rows(neg_rows)
             sc = np.where(_member_sorted(da, neg), sc * nb, sc)
         return pd.DataFrame({"doc_id": da, "score": sc})
 
@@ -336,19 +328,20 @@ def explain_bm25(
         return []
     want = np.unique(np.asarray(doc_ids, dtype=np.int64))
     k1, b, avgdl = searcher.cfg.k1, searcher.cfg.b, searcher.avgdl
+    idf = {i: idf_value(searcher.n_docs, dfs[i]) for i in ids}
+    views = term_views(
+        searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
+        searcher.cfg.block_size, searcher.deleted,
+    )
     out = []
-    for r in searcher._pruned_slice_rows(list(ids), buckets):
-        tid = int(r["term_id"])
-        s = decode_slice(r, idf_value(searcher.n_docs, dfs[tid]),
-                         label=ids[tid], legacy=searcher.legacy_codec)
-        if searcher.deleted.size:
-            s = mask_term_slice(s, searcher.deleted)
-        m = _member_sorted(s.doc_ids, want)
-        if not m.any():
-            continue
-        contrib = s.idf * _tf_norm(s.tfs[m], s.dls[m], k1, b, avgdl)
-        for d, tf, c in zip(s.doc_ids[m].tolist(), s.tfs[m].tolist(),
-                            contrib.tolist()):
-            out.append((int(d), s.term, int(tf), int(dfs[tid]), float(c)))
+    for tid, v in views.items():
+        for s in v.term_slices():
+            m = _member_sorted(s.doc_ids, want)
+            if not m.any():
+                continue
+            contrib = s.idf * _tf_norm(s.tfs[m], s.dls[m], k1, b, avgdl)
+            for d, tf, c in zip(s.doc_ids[m].tolist(), s.tfs[m].tolist(),
+                                contrib.tolist()):
+                out.append((int(d), s.term, int(tf), int(dfs[tid]), float(c)))
     out.sort(key=lambda t: (t[0], t[1]))
     return out

@@ -19,6 +19,13 @@ promote themselves to a memoized full decode once their cumulative reads
 reach the stream length (:class:`_Stream`), so a warm searcher stops
 re-decoding hot terms.
 
+Every query family reads postings the same way: one block-lazy
+:class:`TermView` per term (:func:`term_views`) holds that term's slices
+of every range and every duplicate row of a merged index, and the
+searcher's tombstones are a deny set the kernels check — ``score_bmw``
+beside ``allowed``, the conjunctive and filtered evaluators through the
+views' candidates.
+
 Accumulation order is fixed (terms processed in sorted order, float64),
 so scores are bit-reproducible and rank-identical to the pure-Python
 oracle.
@@ -38,7 +45,6 @@ from .codec import (
     decode_docids,
     decode_uints,
     decode_uints_batch,
-    delta_decode_docids,
     docids_from_deltas,
     pfor_block_index,
     pfor_decode_indexed,
@@ -67,7 +73,7 @@ class _Stream:
     The memo's memory is the decoded worst case the posting-cache budget
     already charges (query.py, 32 B/posting)."""
 
-    __slots__ = ("b", "n", "_all", "_read", "_abs")
+    __slots__ = ("b", "n", "_all", "_read", "_abs", "_last")
 
     def __init__(self, payload: np.ndarray, n: int):
         self.b = payload
@@ -75,6 +81,7 @@ class _Stream:
         self._all = None
         self._read = 0    # cumulative values read before promotion
         self._abs = None  # doc streams only: memoized absolute docIDs
+        self._last = None  # doc streams only: memoized last docID
 
     def _hot(self, count: int) -> bool:
         """Count a read of *count* values; True once the memo serves it."""
@@ -187,8 +194,8 @@ def stream_abs_docids(doc_s) -> np.ndarray:
 
 
 def _stream_for(raw: np.ndarray, n: int):
-    """Tagged payload of *n* values → stream object, or None for
-    legacy/unknown tags."""
+    """Tagged payload of *n* values → stream object, or None for an
+    unknown tag."""
     if raw.size == 0 or raw[0] == _TAG_VARINT:
         return _VarintStream(raw[1:], n)
     if raw[0] == _TAG_PFOR:
@@ -226,34 +233,20 @@ class TermSlice:
         return self
 
 
-def decode_slice(
-    row, idf: float, label: str | None = None, legacy: bool = False
-) -> TermSlice:
-    """Decode a postings-slice row (Row / dict / namedtuple-like).
+def decode_slice(row, idf: float, label: str | None = None) -> TermSlice:
+    """Decode a postings-slice row (Row / dict / namedtuple-like) in full
+    — the reference decoder the block-lazy reads are tested against.
 
     ``label`` is the term STRING for this row's term_id — slices are
     processed in sorted-label order so float accumulation order matches
-    the pure-Python oracle exactly (rank/bit identity).
-
-    ``legacy=True`` reads the pre-tag-byte on-disk format (raw varint
-    streams, indexes built before IndexConfig.codec existed) — the
-    searcher detects the format from the stats table, so old segments
-    never get mis-dispatched on their first payload byte."""
+    the pure-Python oracle exactly (rank/bit identity)."""
     get = row.__getitem__ if hasattr(row, "__getitem__") else getattr
-    if legacy:
-        doc_ids = delta_decode_docids(bytes(get("doc_ids")))
-        tfs = varint_decode(bytes(get("tfs"))).astype(np.int64)
-        dls = varint_decode(bytes(get("dls"))).astype(np.int64)
-    else:
-        doc_ids = decode_docids(bytes(get("doc_ids")))
-        tfs = decode_uints(bytes(get("tfs"))).astype(np.int64)
-        dls = decode_uints(bytes(get("dls"))).astype(np.int64)
     return TermSlice(
         term=label if label is not None else str(get("term_id")),
         idf=idf,
-        doc_ids=doc_ids,
-        tfs=tfs,
-        dls=dls,
+        doc_ids=decode_docids(bytes(get("doc_ids"))),
+        tfs=decode_uints(bytes(get("tfs"))).astype(np.int64),
+        dls=decode_uints(bytes(get("dls"))).astype(np.int64),
         block_firsts=unpack_i64(bytes(get("block_firsts"))),
         block_ubs=unpack_f32(bytes(get("block_ubs"))),
     )
@@ -287,7 +280,7 @@ class LazySlice:
 
     __slots__ = (
         "term", "idf", "n", "block_size", "doc_s", "tf_s", "dl_s",
-        "block_firsts", "block_ubs", "_last_doc",
+        "block_firsts", "block_ubs",
     )
 
     def __init__(self, term, idf, n, block_size, doc_s, tf_s, dl_s,
@@ -301,7 +294,6 @@ class LazySlice:
         self.dl_s = dl_s
         self.block_firsts = block_firsts
         self.block_ubs = block_ubs
-        self._last_doc = None
 
     def _ids_range(self, va: int, vz: int) -> np.ndarray:
         """Absolute docIDs for value range [va, vz); va MUST be a block
@@ -324,10 +316,13 @@ class LazySlice:
         return (u - _BIAS).astype(np.int64)
 
     def last_doc(self) -> int:
-        if self._last_doc is None:
+        """Memoized on the doc stream, so a cached row decodes its last
+        block once per searcher, not once per query."""
+        d = self.doc_s
+        if d._last is None:
             va = (self.block_firsts.size - 1) * self.block_size
-            self._last_doc = int(self._ids_range(va, self.n)[-1])
-        return self._last_doc
+            d._last = int(self._ids_range(va, self.n)[-1])
+        return d._last
 
     def segment_values(self, lo: int, hi: int):
         """(doc_ids, tfs, dls) for postings with lo <= docID < hi —
@@ -466,7 +461,7 @@ def _row_streams(row):
 
 def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice | None:
     """LazySlice from a postings row, or None if any stream carries an
-    unknown tag (legacy untagged indexes take the eager path).  Both
+    unknown tag.  Both
     tagged codecs are range-addressable — varint via the terminator-scan
     value index, PFor via the block header index — and may mix per stream
     (merged mixed-codec indexes).  The stream objects (and their decode
@@ -480,20 +475,6 @@ def decode_slice_lazy(row, idf: float, block_size: int, label: str) -> LazySlice
         term=label, idf=idf, n=n, block_size=block_size,
         doc_s=doc_s, tf_s=tf_s, dl_s=dl_s, block_firsts=bf, block_ubs=ub,
     )
-
-
-def memo_term_slice(
-    row, idf: float, block_size: int, label: str, legacy: bool = False
-) -> TermSlice:
-    """Eager TermSlice through the row's stream memos: tagged codecs go
-    decode_slice_lazy → to_term_slice, so a cached posting row decodes
-    once per searcher and later queries convert by reference; legacy or
-    unknown-tag rows fall back to a raw :func:`decode_slice`."""
-    if not legacy:
-        ls = decode_slice_lazy(row, idf, block_size, label)
-        if ls is not None:
-            return ls.to_term_slice()
-    return decode_slice(row, idf, label=label, legacy=legacy)
 
 
 def prime_single_block(rows: list[dict], block_size: int) -> None:
@@ -587,6 +568,169 @@ class _Chain:
         return self.parts[max(j, 0)].segment_values(lo, hi)
 
 
+class TermView:
+    """One query term's postings read as one posting list: its
+    LazySlices across every docID range and every duplicate row (a merged
+    index keeps one row per source in a range), chained by docID
+    (:func:`_chain_groups`), minus the searcher's tombstones (*deny*,
+    sorted docIDs).  Every driver query family and every distributed
+    per-range kernel reads postings through views.
+
+    Candidate reads (:meth:`contains`, :meth:`candidate_slices`,
+    :meth:`coverage`) take sorted candidate docIDs that already exclude
+    denied docs and decode only the blocks a candidate can live in — the
+    stored ``block_firsts`` are the skip list.  Full reads
+    (:meth:`docids`, :meth:`term_slices`) go through the stream memos, so
+    a cached row decodes once per searcher, and drop denied docs.  A
+    doc's postings of one term sit in one member, so scoring a term as
+    one slice per member gives the same float sums as one merged slice."""
+
+    __slots__ = ("term", "idf", "parts", "n", "deny", "_chains")
+
+    def __init__(self, parts: list, deny: np.ndarray):
+        self.parts = parts
+        self.term, self.idf = parts[0].term, parts[0].idf
+        self.n = sum(p.n for p in parts)
+        self.deny = deny
+        self._chains = None
+
+    def _chain_list(self) -> list[tuple[list, np.ndarray]]:
+        """(members, their first docIDs) per chain, built on first use."""
+        if self._chains is None:
+            self._chains = [
+                (c, np.array([int(p.block_firsts[0]) for p in c]))
+                for c in _chain_groups(self.parts)
+            ]
+        return self._chains
+
+    def _pieces(self, cand: np.ndarray):
+        """(member, a, z) for each member whose span can hold any of
+        cand[a:z]: within a chain the members are disjoint and in order,
+        so member j owns the candidates from its first docID up to the
+        next member's."""
+        for chain, firsts in self._chain_list():
+            cuts = np.searchsorted(cand, firsts, side="left").tolist()
+            for p, a, z in zip(chain, cuts, cuts[1:] + [cand.size]):
+                if z > a:
+                    yield p, a, z
+
+    def contains(self, cand: np.ndarray) -> np.ndarray:
+        """Mask over *cand*: the docs that hold this term."""
+        hit = np.zeros(cand.size, dtype=bool)
+        for p, a, z in self._pieces(cand):
+            sub = cand[a:z]
+            ids = (stream_abs_docids(p.doc_s) if p.doc_s._all is not None
+                   else p.block_docids(p.covering_blocks(sub)))
+            hit[a:z] |= _member_sorted(sub, ids)
+        return hit
+
+    def candidate_slices(self, cand: np.ndarray) -> list[TermSlice]:
+        """This term's postings on the docs *cand*, one TermSlice per
+        member that holds any.  A member whose streams are all in their
+        memos (one-block rows from the read on, promoted ones) is read
+        whole: no block lookup is cheaper than slicing the memos."""
+        out = []
+        for p, a, z in self._pieces(cand):
+            sub = cand[a:z]
+            if all(st._all is not None for st in (p.doc_s, p.tf_s, p.dl_s)):
+                t = p.to_term_slice()
+                ids, tfs, dls = t.doc_ids, t.tfs, t.dls
+            else:
+                ids, tfs, dls = p.block_values(p.covering_blocks(sub))
+            keep = _member_sorted(ids, sub)
+            if keep.any():
+                out.append(TermSlice(self.term, self.idf, ids[keep], tfs[keep],
+                                     dls[keep], p.block_firsts, p.block_ubs))
+        return out
+
+    def coverage(self, cand: np.ndarray) -> float:
+        """Share of this term's blocks that a read of the candidates
+        would decode: blocks that can hold a candidate, in members whose
+        doc stream is not yet in its memo."""
+        hit = sum(p.covering_blocks(cand[a:z]).size
+                  for p, a, z in self._pieces(cand) if p.doc_s._all is None)
+        return hit / sum(p.block_firsts.size for p in self.parts)
+
+    def docids(self) -> np.ndarray:
+        """Every live docID of the term, sorted."""
+        runs = [np.concatenate([stream_abs_docids(p.doc_s) for p in c])
+                for c, _ in self._chain_list()]
+        ids = runs[0] if len(runs) == 1 else np.sort(np.concatenate(runs))
+        if self.deny.size:
+            ids = ids[~_member_sorted(ids, self.deny)]
+        return ids
+
+    def term_slices(self) -> list[TermSlice]:
+        """Every live posting, one decoded TermSlice per member."""
+        out = []
+        for p in self.parts:
+            s = p.to_term_slice()
+            if self.deny.size:
+                s = mask_term_slice(s, self.deny)
+            if s.doc_ids.size:
+                out.append(s)
+        return out
+
+
+def term_views(rows, labels: dict, idf: dict, block_size: int,
+               deny: np.ndarray) -> dict[int, TermView]:
+    """term_id → :class:`TermView` over posting *rows* (any ranges, any
+    duplicate rows).  *labels* maps term_id → term string; a term missing
+    from *idf* scores with idf 0."""
+    parts: dict[int, list] = {}
+    for r in rows:
+        tid = int(r["term_id"])
+        s = decode_slice_lazy(r, idf.get(tid, 0.0), block_size, labels[tid])
+        if s is None:
+            raise ValueError(
+                f"postings of term {labels[tid]!r} carry an unknown stream "
+                "tag; rebuild the index"
+            )
+        if s.n:
+            parts.setdefault(tid, []).append(s)
+    return {i: TermView(p, deny) for i, p in parts.items()}
+
+
+def view_slices(views: dict) -> list[TermSlice]:
+    """The decoded live postings of every view (brute-scoring input)."""
+    return [s for v in views.values() for s in v.term_slices()]
+
+
+def bmw_slices(views: dict, ub_scale: float = 1.0) -> list:
+    """Every member slice of *views*, the :func:`score_bmw` input.  A
+    ``ub_scale`` != 1 (an avgdl override, see BM25Searcher._score_pruned)
+    rebinds each member's block bounds inflated by it — never mutates:
+    the stored array is shared with the row's cached streams.  float64,
+    so the inflation never rounds below the true bound."""
+    parts = [p for v in views.values() for p in v.parts]
+    if ub_scale != 1.0:
+        for p in parts:
+            p.block_ubs = p.block_ubs.astype(np.float64) * ub_scale
+    return parts
+
+
+def mask_term_slice(s: TermSlice, deleted: np.ndarray) -> TermSlice:
+    """TermSlice minus tombstoned docs.  Block metadata is kept as-is:
+    masking only removes postings, so every surviving posting still lies
+    inside its original block and the stored per-block upper bounds
+    remain valid upper bounds — BMW pruning stays exact."""
+    ids = s.doc_ids
+    if ids.size == 0:
+        return s
+    # look up only the deleted docs inside the slice's span: a few
+    # tombstones cost a few binary searches, not a pass over the slice
+    d = deleted[np.searchsorted(deleted, ids[0]):
+                np.searchsorted(deleted, ids[-1], side="right")]
+    at = np.searchsorted(ids, d)  # every d <= ids[-1], so in bounds
+    at = at[ids[at] == d]
+    if at.size == 0:
+        return s
+    keep = np.ones(ids.size, dtype=bool)
+    keep[at] = False
+    return TermSlice(s.term, s.idf, s.doc_ids[keep], s.tfs[keep], s.dls[keep],
+                     s.block_firsts, s.block_ubs, avgdl=s.avgdl)
+
+
 # Pruning-convergence guard of score_bmw: after this many scored
 # segments without the threshold beating the remaining upper bounds, the
 # kernel concedes and finishes with one exact brute pass (decode memos make
@@ -594,15 +738,27 @@ class _Chain:
 BMW_MAX_SEG = 16
 
 
+def _live(ids: np.ndarray, sc: np.ndarray, deny) -> tuple:
+    """(ids, sc) without the denied docs; *ids* sorted."""
+    if deny is None or ids.size == 0:
+        return ids, sc
+    a = int(np.searchsorted(deny, ids[0]))
+    if a == deny.size or deny[a] > ids[-1]:  # no denied doc in the span
+        return ids, sc
+    keep = ~_member_sorted(ids, deny[a:])
+    return ids[keep], sc[keep]
+
+
 def score_bmw(
     slices: list, k1: float, b: float, avgdl: float, k: int,
     allowed: np.ndarray | None = None,
     theta0: float = -np.inf,
+    deny: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
     """Block-max top-k in ONE pass over the slices of any docID ranges.
     Exact (score DESC, doc_id ASC).  Slices are LazySlices (block-lazy
     decode: only the blocks of scored segments are read) or decoded
-    TermSlices (tombstone-masked, legacy, distributed); either way they
+    TermSlices; either way they
     are grouped into chains (:func:`_chain_groups`), so a query scores its
     whole docID space on one segment grid under one running threshold.
     Lazy and eager decodes of the same slices give identical output;
@@ -623,6 +779,12 @@ def score_bmw(
     doc, so the top-k stays exact) — the right strategy for a BROAD
     filter, where candidate-driven decode degenerates to a full decode
     but score pruning still skips most segments.
+
+    ``deny`` (sorted docIDs) is the tombstone set, Lucene's liveDocs:
+    denied docs are dropped from each segment's scores before they are
+    collected (one membership test per segment, not per slice; a doc's
+    score never depends on another's).  The bounds stay valid, since
+    deleting only removes postings.
 
     Pruning-convergence guard: a rare term co-occurring with a stopword
     makes EVERY segment's upper bound exceed theta (the rare term's few
@@ -672,7 +834,7 @@ def score_bmw(
                 full = masked
             if not full:
                 return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-            ids, sc = score_brute(full, k1, b, avgdl)
+            ids, sc = _live(*score_brute(full, k1, b, avgdl), deny)
             return topk_select(ids, sc, k)
         lo, hi = bounds[si], seg_end[si]
         sub = []
@@ -688,7 +850,7 @@ def score_bmw(
                 )
         if not sub:
             continue
-        ids, sc = score_brute(sub, k1, b, avgdl)
+        ids, sc = _live(*score_brute(sub, k1, b, avgdl), deny)
         got_ids.append(ids)
         got_scores.append(sc)
         n_got += ids.size

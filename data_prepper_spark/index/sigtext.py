@@ -126,11 +126,10 @@ def _sample_distributed(searcher, ids, buckets, sample_size: int) -> np.ndarray:
     from .scoring import _member_sorted
     from .filtered import _UNION_COLS, _union_docids_rows
 
-    legacy = searcher.legacy_codec
     deleted = searcher.deleted
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        matched = _union_docids_rows(pdf.to_dict("records"), legacy)
+        matched = _union_docids_rows(pdf.to_dict("records"))
         if deleted.size:
             matched = matched[~_member_sorted(matched, deleted)]
         return pd.DataFrame({"doc_id": np.sort(matched)[:sample_size]})

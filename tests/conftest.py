@@ -74,3 +74,30 @@ def tiny_index(spark, tiny_corpus_path, workdir):
     cfg = IndexConfig(range_bits=2, block_size=16, n_buckets=8)
     stats = build_oneshot(spark, pages, index_dir, cfg)
     return index_dir, cfg, stats
+
+
+@pytest.fixture
+def full_decode(monkeypatch):
+    """Context manager factory: inside it, every posting slice a query
+    reads has all its streams decoded in full before any block read —
+    the reference the block-lazy reads must equal."""
+    from contextlib import contextmanager
+
+    from data_prepper_spark.index import scoring
+
+    real = scoring.decode_slice_lazy
+
+    def eager(*a, **kw):
+        s = real(*a, **kw)
+        s.to_term_slice()  # every stream into its memo
+        return s
+
+    @contextmanager
+    def cm():
+        monkeypatch.setattr(scoring, "decode_slice_lazy", eager)
+        try:
+            yield
+        finally:
+            monkeypatch.setattr(scoring, "decode_slice_lazy", real)
+
+    return cm

@@ -197,29 +197,20 @@ def test_prefix_cap_raises(spark, tiny_index):
         expand_prefix(s, "t", max_expansions=2)
 
 
-def test_bool_lazy_equals_eager(spark, tiny_index):
-    """The skip-pointer (block-lazy) conjunctive path returns exactly the
-    eager path's results on every must-clause case."""
-    import data_prepper_spark.index.boolquery as bq
-
+def test_bool_lazy_equals_eager(spark, tiny_index, full_decode):
+    """The skip-pointer (block-lazy) path returns bit for bit what the
+    same query returns when every slice is decoded in full first, on
+    every case (must, pure-should, must_not)."""
     index_dir, _, _ = tiny_index
-    s = BM25Searcher(spark, index_dir)
     for must, should, must_not in CASES:
-        if not must:
-            continue
-        lazy = search_bool(s, must=must, should=should, must_not=must_not, k=10)
-        orig = bq.decode_slice_lazy
-        bq.decode_slice_lazy = lambda *a, **k: None  # force eager fallback
-        try:
-            eager = search_bool(
-                s, must=must, should=should, must_not=must_not, k=10
-            )
-        finally:
-            bq.decode_slice_lazy = orig
-        assert [d for d, _ in lazy] == [d for d, _ in eager], must
-        assert all(
-            abs(x - y) < 1e-12 for (_, x), (_, y) in zip(lazy, eager)
-        ), must
+        s = BM25Searcher(spark, index_dir)  # fresh: nothing memoized
+        lazy = search_bool(s, must=must, should=should, must_not=must_not,
+                           k=10, tie_round=4)
+        with full_decode():
+            eager = search_bool(BM25Searcher(spark, index_dir), must=must,
+                                should=should, must_not=must_not, k=10,
+                                tie_round=4)
+        assert lazy == eager, (must, should, must_not)
 
 
 # --------------------------------------------------------- fuzzy / wildcard
@@ -295,11 +286,11 @@ def test_fuzzy_and_wildcard_expansion(spark, tiny_index, oracle_tiny):
         expand_wildcard(s, "*", max_expansions=1)
 
 
-def test_bool_pfor_index_identity(spark, tiny_corpus_path, workdir, tiny_index):
+def test_bool_pfor_index_identity(spark, tiny_corpus_path, workdir, tiny_index,
+                                  full_decode):
     """Boolean/fuzzy serving on a PFor-coded index returns byte-for-byte
-    the varint index's results, through the lazy path AND the forced
-    eager path (the codec is a pure storage concern)."""
-    import data_prepper_spark.index.boolquery as bq
+    the varint index's results, through block-lazy reads AND with every
+    slice decoded in full first (the codec is a pure storage concern)."""
     from data_prepper_spark.index.build import build_oneshot
     from data_prepper_spark.index.config import IndexConfig
 
@@ -314,14 +305,11 @@ def test_bool_pfor_index_identity(spark, tiny_corpus_path, workdir, tiny_index):
         want = search_bool(s_var, must=must, should=should, must_not=must_not, k=10)
         got = search_bool(s_pfor, must=must, should=should, must_not=must_not, k=10)
         assert got == want, (must, should, must_not)
-        orig = bq.decode_slice_lazy
-        bq.decode_slice_lazy = lambda *a, **k: None
-        try:
+        with full_decode():
             eager = search_bool(
-                s_pfor, must=must, should=should, must_not=must_not, k=10
+                BM25Searcher(spark, idx_pfor), must=must, should=should,
+                must_not=must_not, k=10,
             )
-        finally:
-            bq.decode_slice_lazy = orig
         assert got == eager, (must, should, must_not)
 
 

@@ -119,23 +119,20 @@ def test_pfor_beats_varint_on_dense_lists():
     assert len(pfor_encode(deltas)) < 0.8 * len(varint_encode(deltas))
 
 
-def test_legacy_untagged_slice_decode():
-    """Indexes written before the tag byte (raw varint streams) decode
-    through decode_slice(legacy=True) — the searcher's stats-based
-    format detection keeps old segments readable."""
-    from data_prepper_spark.index.scoring import decode_slice
+def test_codecless_index_raises_rebuild(tmp_path):
+    """An index whose stats carry no codec holds untagged varint streams,
+    which the searcher no longer reads: opening it raises an error that
+    says to rebuild."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    import pytest
 
-    docids = np.array([-5, 3, 900], dtype=np.int64)
-    tfs = np.array([1, 2, 3], dtype=np.uint64)
-    row = {
-        "doc_ids": delta_encode_docids(docids),       # OLD untagged format
-        "tfs": varint_encode(tfs),
-        "dls": varint_encode(tfs),
-        "block_firsts": pack_i64(docids[:1]),
-        "block_ubs": pack_f32(np.array([1.0], dtype=np.float32)),
-    }
-    ts = decode_slice(row, idf=1.0, label="t", legacy=True)
-    assert ts.doc_ids.tolist() == [-5, 3, 900]
-    assert ts.tfs.tolist() == [1, 2, 3]
-    # first tf == 1 makes the first byte 0x01 == the pfor tag: the
-    # non-legacy decoder would mis-dispatch this very blob
+    from data_prepper_spark.index.query import BM25Searcher
+
+    (tmp_path / "stats").mkdir()
+    pq.write_table(
+        pa.table({"n_docs": [3], "avgdl": [2.0], "block_size": [128]}),
+        tmp_path / "stats" / "part-0.parquet",
+    )
+    with pytest.raises(ValueError, match="rebuild"):
+        BM25Searcher(None, str(tmp_path))

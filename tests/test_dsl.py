@@ -233,6 +233,58 @@ def test_dsl_filter_context_leaves_body_intact(spark, pos_dir):
         assert body == before
 
 
+def test_dsl_bool_operator_flattening(spark, pos_dir):
+    """search_bool takes single terms: a multi-token bool clause whose
+    operator would change meaning once flattened raises an error naming
+    'operator', and leaves the body unmutated; the exact shapes route."""
+    import copy
+
+    from data_prepper_spark.index.boolquery import search_bool
+
+    s = BM25Searcher(spark, pos_dir)
+
+    def m(text, op=None):
+        body = {"query": text} if op is None else {"query": text,
+                                                   "operator": op}
+        return {"match": {"body": body}}
+
+    bad = [
+        {"must": [m("the data")]},                       # default or
+        {"must": [m("the data", "or")]},
+        {"should": [m("the data", "and")]},
+        {"should": [m("the data"), m("search")], "minimum_should_match": 2},
+        {"must": [m("the")], "must_not": [m("spark engine", "and")]},
+    ]
+    for b in bad:
+        body = {"query": {"bool": b}}
+        before = copy.deepcopy(body)
+        with pytest.raises(ValueError, match="'operator'"):
+            search_dsl(s, body)
+        assert body == before, b
+    exact = [
+        ({"must": [m("the data", "and")], "should": [m("search web")],
+          "must_not": [m("spark engine", "or")]},
+         dict(must=["the", "data"], should=["search", "web"],
+              must_not=["spark", "engine"])),
+        ({"must": [m("the")], "should": [m("data"), m("search")],
+          "minimum_should_match": 2},
+         dict(must=["the"], should=["data", "search"],
+              minimum_should_match=2)),
+    ]
+    for b, kw in exact:
+        body = {"query": {"bool": b}}
+        before = copy.deepcopy(body)
+        assert search_dsl(s, body) == search_bool(s, k=10, tie_round=4, **kw)
+        assert body == before, b
+    # the rank_feature route already ORs the must text
+    rf = {"query": {"bool": {
+        "must": [m("the data")],
+        "should": [{"rank_feature": {"field": "n_chars",
+                                     "saturation": {"pivot": 50}}}],
+    }}}
+    assert search_dsl(s, rf)
+
+
 def test_dsl_rejections(spark, pos_dir):
     s = BM25Searcher(spark, pos_dir)
     for bad in [

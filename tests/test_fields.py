@@ -169,6 +169,37 @@ def test_fields_merge_identity(spark, fields_index):
         got = search_fields(s_m, fq, k=10, field_boosts=boosts)
         want = search_fields(s_f, fq, k=10, field_boosts=boosts)
         assert got == want, fq
+    # a tombstoned copy of the merged index: driver == distributed == the
+    # oracle without the deleted docs (full-index stats kept); dis-max too
+    import shutil
+
+    from data_prepper_spark.index.deletes import delete_docs
+    from data_prepper_spark.index.fields import search_dismax
+
+    tomb = tempfile.mkdtemp(prefix="dps_test_fieldstomb_")
+    shutil.rmtree(tomb)
+    shutil.copytree(merged, tomb)
+    gone = {2, 5}
+    delete_docs(tomb, sorted(gone))
+    s_t = BM25Searcher(spark, tomb)
+    oracle = _Oracle()
+    for fq, boosts in CASES:
+        want = [kv for kv in oracle.topk(fq, boosts, k=10**9)
+                if kv[0] not in gone][:10]
+        for dist in (False, True):
+            got = search_fields(s_t, fq, k=10, field_boosts=boosts,
+                                distributed=dist)
+            assert [d for d, _ in got] == [d for d, _ in want], (fq, dist)
+            for (_, gs), (_, ws) in zip(got, want):
+                assert abs(gs - ws) < 1e-9, (fq, dist)
+        if len(fq) > 1:
+            drv = search_dismax(s_t, fq, k=10, tie_breaker=0.3)
+            assert not gone & {d for d, _ in drv}, fq
+            dst = search_dismax(s_t, fq, k=10, tie_breaker=0.3,
+                                distributed=True)
+            assert [d for d, _ in dst] == [d for d, _ in drv], fq
+            assert all(abs(x - y) < 1e-12
+                       for (_, x), (_, y) in zip(dst, drv)), fq
 
 
 def test_fields_index_refuses_drops(spark):

@@ -116,19 +116,16 @@ def test_filtered_distributed_matches_driver(spark, filtered_index):
         _assert_rank_identical(dst, drv, (qtext, flt))
 
 
-def test_filtered_lazy_equals_eager(spark, filtered_index):
-    import data_prepper_spark.index.boolquery as bq
-
-    s = BM25Searcher(spark, filtered_index)
+def test_filtered_lazy_equals_eager(spark, filtered_index, full_decode):
+    """Block-lazy candidate reads equal the same query with every slice
+    decoded in full first."""
     for qtext, filters, cuts in FILTER_CASES:
         flt = _materialize(filters, cuts)
-        lazy = search_filtered(s, qtext, flt, k=10)
-        orig = bq.decode_slice_lazy
-        bq.decode_slice_lazy = lambda *a, **k: None  # force eager fallback
-        try:
-            eager = search_filtered(s, qtext, flt, k=10)
-        finally:
-            bq.decode_slice_lazy = orig
+        lazy = search_filtered(BM25Searcher(spark, filtered_index), qtext,
+                               flt, k=10)
+        with full_decode():
+            eager = search_filtered(BM25Searcher(spark, filtered_index),
+                                    qtext, flt, k=10)
         _assert_rank_identical(lazy, eager, (qtext, flt))
 
 

@@ -461,9 +461,8 @@ def test_one_scoring_call_per_query(spark, tiny_index, monkeypatch):
     assert len(calls) == 1 and want
 
     decodes = []
-    for name in ("decode_docids", "decode_uints", "delta_decode_docids",
-                 "pfor_decode_indexed", "pfor_decode_range", "varint_decode",
-                 "varint_decode_range"):
+    for name in ("decode_docids", "decode_uints", "pfor_decode_indexed",
+                 "pfor_decode_range", "varint_decode", "varint_decode_range"):
         fn = getattr(scoring, name)
         monkeypatch.setattr(
             scoring, name,

@@ -71,24 +71,6 @@ def test_merged_rank_identical_all_modes(spark, merged_index, oracle_tiny):
         _assert_rank_identical(got, want, f"merged distributed: {qt}")
 
 
-def test_merge_mixed_range_bits(spark, tiny_corpus_path, half_indexes, workdir, oracle_tiny):
-    """range_bits may differ across sources — range_id is only a grouping
-    key; the merged index must still be rank-identical."""
-    pages = spark.read.parquet(tiny_corpus_path)
-    alt = os.path.join(workdir, "index_half1_rb3")
-    build_oneshot(
-        spark, _half(pages, 1), alt,
-        IndexConfig(range_bits=3, block_size=16, n_buckets=8),
-    )
-    out = os.path.join(workdir, "index_merged_mixed")
-    merge_indexes(spark, [half_indexes[0], alt], out)
-    s = BM25Searcher(spark, out)
-    for qt, k in [("the", 5), ("zanzibar", 10)]:
-        _assert_rank_identical(
-            s.search(qt, k=k, mode="bmw"), oracle_tiny.topk(qt, k), qt
-        )
-
-
 def test_merge_rejects_overlap_and_config_mismatch(
     spark, tiny_corpus_path, half_indexes, workdir
 ):
@@ -107,6 +89,18 @@ def test_merge_rejects_overlap_and_config_mismatch(
         merge_indexes(
             spark, [half_indexes[0], other],
             os.path.join(workdir, "index_merged_bad2"),
+        )
+    # mixed range_bits: the merged stats could carry only one, and the
+    # distributed kernels pair postings with docmeta by range_id
+    rb3 = os.path.join(workdir, "index_half1_rb3")
+    build_oneshot(
+        spark, _half(pages, 1), rb3,
+        IndexConfig(range_bits=3, block_size=16, n_buckets=8),
+    )
+    with pytest.raises(ValueError, match="incompatible"):
+        merge_indexes(
+            spark, [half_indexes[0], rb3],
+            os.path.join(workdir, "index_merged_bad3"),
         )
 
 
@@ -352,51 +346,167 @@ def test_merge_job_budget(spark, workdir):
 def _count_decodes(monkeypatch) -> list:
     """Record every codec decode call made through any serving module."""
     from data_prepper_spark.index import (
-        boolquery, codec, filtered, query, querystring, scoring,
+        boolquery, codec, fields, filtered, query, querystring, scoring,
     )
 
+    mods = (codec, scoring, query, boolquery, filtered, fields, querystring)
     calls: list = []
     for name, fn in list(vars(codec).items()):
         if "decode" not in name or not callable(fn):
             continue
         wrapped = (lambda *a, _fn=fn, _n=name, **kw:
                    calls.append(_n) or _fn(*a, **kw))
-        for mod in (codec, scoring, query, boolquery, filtered, querystring):
+        for mod in mods:
             if vars(mod).get(name) is fn:
                 monkeypatch.setattr(mod, name, wrapped)
     return calls
 
 
-def test_merged_bool_repeat_decodes_nothing(merged_index, monkeypatch):
-    """A merged index has duplicate slice rows per term, which sends the
-    boolean core down its eager fold; that fold builds its slices through
-    the rows' stream memos, so repeating a query decodes nothing."""
-    from data_prepper_spark.index.boolquery import search_bool
+@pytest.fixture(scope="module")
+def tomb_merged(spark, merged_index, workdir):
+    """A tombstoned copy of the merged index (every 7th doc deleted):
+    duplicate slice rows per term AND a deny set."""
+    import shutil
 
-    calls = _count_decodes(monkeypatch)
-    cases = [
-        (["the"], ["data", "search"], ["engine"]),
-        (["the", "data"], [], []),
-        ([], ["the", "of"], []),
+    from data_prepper_spark.index.deletes import delete_docs
+
+    d = os.path.join(workdir, "index_merged_tomb")
+    shutil.rmtree(d, ignore_errors=True)
+    shutil.copytree(merged_index[0], d)
+    ids = sorted(r["doc_id"] for r in
+                 spark.read.parquet(f"{d}/docmeta").select("doc_id").collect())
+    delete_docs(d, ids[::7])
+    return d, set(ids[::7])
+
+
+def _driver_runs():
+    """(name, query) pairs of every driver family that reads postings
+    through term views: bool (must, pure-should, must_not, msm), match
+    and filtered (a broad and a selective doc_len filter)."""
+    from data_prepper_spark.index.boolquery import search_bool
+    from data_prepper_spark.index.filtered import search_filtered
+
+    return [
+        ("bool must", lambda s: search_bool(
+            s, must=["the"], should=["data", "search"], must_not=["engine"],
+            k=10)),
+        ("bool and", lambda s: search_bool(s, must=["the", "data"], k=10)),
+        ("bool should", lambda s: search_bool(s, should=["the", "of"], k=10)),
+        ("bool should not", lambda s: search_bool(
+            s, should=["spark", "index", "web"], must_not=["the"], k=10)),
+        ("bool msm", lambda s: search_bool(
+            s, must=["the"], should=["data", "search", "engine"],
+            minimum_should_match=2, k=10)),
+        ("match", lambda s: s.search("the data", k=10)),
+        ("match rare", lambda s: s.search("spark index web", k=10)),
+        ("filtered broad", lambda s: search_filtered(
+            s, "the data", [("doc_len", ">=", 5)], k=10)),
+        ("filtered narrow", lambda s: search_filtered(
+            s, "spark index", [("doc_len", ">=", 60)], k=10)),
     ]
-    for must, should, must_not in cases:
-        s = BM25Searcher(None, merged_index[0])  # cold: nothing memoized
-        calls.clear()
-        want = search_bool(s, must=must, should=should, must_not=must_not, k=10)
-        assert want and calls  # the first run decodes
-        calls.clear()
-        assert search_bool(s, must=must, should=should, must_not=must_not,
-                           k=10) == want
-        assert calls == [], (must, should, must_not)
+
+
+def test_merged_bool_repeat_decodes_nothing(merged_index, tomb_merged,
+                                            monkeypatch):
+    """A merged index has duplicate slice rows per term and a tombstoned
+    one a deny set; both read postings through the same block-lazy term
+    views as a single build, so repeats of a bool, match or filtered query
+    stop decoding: the blocks a run reads count toward its streams'
+    promotion to full-decode memos (scoring._Stream), and promoted
+    streams serve every later run.  On these indexes every run decodes
+    nothing from the second run on, except a stopword must_not under a
+    pure-should union: it reads a sparse set of the stopword's blocks,
+    whose streams promote within a few repeats (the manner of
+    tests/test_index_build.py::test_one_scoring_call_per_query)."""
+    calls = _count_decodes(monkeypatch)
+    sparse = {"bool should not"}
+    for d in (merged_index[0], tomb_merged[0]):
+        for name, run in _driver_runs():
+            s = BM25Searcher(None, d)  # cold: nothing memoized
+            calls.clear()
+            want = run(s)
+            assert want and calls, (d, name)  # the first run decodes
+            for n_rep in range(1, 65):
+                calls.clear()
+                assert run(s) == want, (d, name)
+                if not calls:
+                    break
+            assert calls == [], (d, name, calls)
+            assert name in sparse or n_rep == 1, (d, name, n_rep)
+            for _ in range(2):
+                assert run(s) == want and calls == [], (d, name, calls)
+
+
+BOOL_IDENTITY_CASES = [
+    # (must, should, must_not, msm)
+    (["the"], ["data", "search"], ["engine"], 0),
+    ([], ["spark", "index", "web"], ["the"], 0),   # pure-should, must_not
+    (["the"], ["data", "search", "engine"], [], 2),
+    ([], ["the", "data", "search", "web"], [], 2),
+]
+
+
+def test_one_path_identity_merged_and_tombstoned(
+    spark, merged_index, tomb_merged, tiny_index, oracle_tiny
+):
+    """On a merged index and a tombstoned copy of it, driver results equal
+    the distributed results and the brute oracle (tombstoned docs left
+    out, full-index stats kept), for bool, filtered and match; on the
+    merged index they also equal a fresh build over the same docs."""
+    from test_boolquery import _bool_oracle
+    from test_filtered import _filtered_oracle
+
+    from data_prepper_spark.index.boolquery import search_bool
+    from data_prepper_spark.index.filtered import search_filtered
+
+    fresh = BM25Searcher(spark, tiny_index[0])
+    lens = sorted(oracle_tiny.doc_len.values())
+    cuts = (lens[len(lens) // 10], lens[9 * len(lens) // 10])
+    for d, gone in ((merged_index[0], set()), tomb_merged):
+        s = BM25Searcher(spark, d)
+        live = set(oracle_tiny.doc_len) - gone
+        for must, should, must_not, msm in BOOL_IDENTITY_CASES:
+            ctx = (d, must, should, must_not, msm)
+            kw = dict(must=must, should=should, must_not=must_not, k=10,
+                      minimum_should_match=msm)
+            drv = search_bool(s, **kw)
+            assert drv, ctx
+            _assert_rank_identical(
+                drv, _bool_oracle(oracle_tiny, must, should, must_not,
+                                  exclude=gone, msm=msm), ctx)
+            _assert_rank_identical(
+                search_bool(s, distributed=True, **kw), drv, ctx)
+            if not gone:
+                _assert_rank_identical(search_bool(fresh, **kw), drv, ctx)
+        for q in ("the data", "spark index web"):
+            drv = s.search(q, k=10)
+            _assert_rank_identical(drv, _filtered_oracle(oracle_tiny, q, live),
+                                   (d, q))
+            _assert_rank_identical(s.search(q, k=10, distributed=True), drv,
+                                   (d, q))
+            for cut in cuts:  # broad → WAND route, selective → candidates
+                flt = [("doc_len", ">=", cut)]
+                ctx = (d, q, cut)
+                allowed = {x for x in live if oracle_tiny.doc_len[x] >= cut}
+                drv = search_filtered(s, q, flt, k=10)
+                assert drv, ctx
+                _assert_rank_identical(
+                    drv, _filtered_oracle(oracle_tiny, q, allowed), ctx)
+                _assert_rank_identical(
+                    search_filtered(s, q, flt, k=10, distributed=True), drv,
+                    ctx)
+                if not gone:
+                    _assert_rank_identical(
+                        search_filtered(fresh, q, flt, k=10), drv, ctx)
 
 
 def _search_all_eager(s, q):
     """search_all by raw per-row decode_slice, range by range — the
     reference the memo-backed search_all must equal bit for bit."""
-    from data_prepper_spark.index.deletes import mask_term_slice
     from data_prepper_spark.index.scoring import (
         decode_slice,
         idf_value,
+        mask_term_slice,
         score_brute,
     )
 
