@@ -114,12 +114,16 @@ def _check_operators(body, msm: int) -> None:
     is flattened into its tokens.  Raise where that changes the clause's
     meaning: must with ``or``, should with ``and`` (or any multi-token
     should under minimum_should_match > 1, which counts clauses, not
-    tokens), must_not with ``and``."""
+    tokens), must_not with ``and``.  Term clauses have no operator and
+    keep their flattening."""
     # the operator under which a clause equals its tokens one by one
     for occur, exact in (("must", "and"), ("should", "or"), ("must_not", "or")):
         clauses = body.get(occur, [])
         for c in clauses if isinstance(clauses, list) else [clauses]:
-            toks, op, _ = _match_tokens(None, next(iter(c.values())))
+            kind, node = next(iter(c.items()))
+            if kind != "match":
+                continue
+            toks, op, _ = _match_tokens(None, node)
             op = str(op).lower()
             if len(toks) > 1 and (op != exact or (occur == "should" and msm > 1)):
                 raise ValueError(

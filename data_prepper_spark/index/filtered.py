@@ -354,9 +354,10 @@ def _filtered_core(
     not-yet-decoded blocks of the largest term → a full decode), so
     above BMW_COVERAGE_THRESHOLD the query runs filter-during-WAND
     instead — segments prune on score, only allowed docs are collected,
-    the result stays the exact top-k.  Blocks already in their memos
-    (one-block rows from the read on, promoted streams) cost a candidate
-    read nothing to decode, so they do not count."""
+    the result stays the exact top-k.  The coverage counts the largest
+    term's multi-block rows only (TermView.coverage): scoring cost decides
+    the route, and a one-block row is decoded whole at read time on
+    either route."""
     empty = (np.empty(0, np.int64), np.empty(0, np.float64))
     allowed, _ = _meta_ids_vals(searcher, filters)
     if searcher.deleted.size:

@@ -98,7 +98,7 @@ class _Stream:
 
     def gather(self, runs: np.ndarray) -> np.ndarray:
         """Values of many (va, vz) value-range runs, concatenated."""
-        if self._hot(int((runs[:, 1] - runs[:, 0]).sum())):
+        if self._all is not None or self._hot(int((runs[:, 1] - runs[:, 0]).sum())):
             return _take_runs(self._all, runs)
         return self._gather(runs)
 
@@ -349,13 +349,24 @@ class LazySlice:
         the sorted candidate docIDs *cand* — the skip-pointer lookup: a
         candidate can only live in the block whose first docID is the
         greatest ≤ it."""
+        if self.block_firsts.size == 1:  # covered iff a candidate reaches it
+            return np.zeros(
+                int(cand.size > 0 and cand[-1] >= self.block_firsts[0]), np.int64
+            )
         blk = np.searchsorted(self.block_firsts, cand, side="right") - 1
-        return np.unique(blk[blk >= 0])
+        blk = blk[int(np.searchsorted(blk, 0)):]  # sorted: drop the -1s
+        if blk.size > 1:  # sorted, so unique = drop repeats of the left
+            blk = blk[np.concatenate(([True], blk[1:] != blk[:-1]))]
+        return blk
 
     def _block_runs(self, blocks: np.ndarray):
         """Sorted block indices → (va, vz) value-range array of their
         maximal contiguous runs, shape (n_runs, 2)."""
         bs = self.block_size
+        if blocks[-1] - blocks[0] + 1 == blocks.size:  # one run
+            return np.array(
+                [[blocks[0] * bs, min((int(blocks[-1]) + 1) * bs, self.n)]]
+            )
         splits = np.flatnonzero(np.diff(blocks) > 1) + 1
         starts = np.concatenate(([0], splits))
         ends = np.concatenate((splits, [blocks.size]))
@@ -579,7 +590,8 @@ class TermView:
     Candidate reads (:meth:`contains`, :meth:`candidate_slices`,
     :meth:`coverage`) take sorted candidate docIDs that already exclude
     denied docs and decode only the blocks a candidate can live in — the
-    stored ``block_firsts`` are the skip list.  Full reads
+    stored ``block_firsts`` are the skip list (a promoted stream serves
+    those blocks from its memo, see :class:`_Stream`).  Full reads
     (:meth:`docids`, :meth:`term_slices`) go through the stream memos, so
     a cached row decodes once per searcher, and drop denied docs.  A
     doc's postings of one term sit in one member, so scoring a term as
@@ -619,24 +631,16 @@ class TermView:
         hit = np.zeros(cand.size, dtype=bool)
         for p, a, z in self._pieces(cand):
             sub = cand[a:z]
-            ids = (stream_abs_docids(p.doc_s) if p.doc_s._all is not None
-                   else p.block_docids(p.covering_blocks(sub)))
-            hit[a:z] |= _member_sorted(sub, ids)
+            hit[a:z] |= _member_sorted(sub, p.block_docids(p.covering_blocks(sub)))
         return hit
 
     def candidate_slices(self, cand: np.ndarray) -> list[TermSlice]:
         """This term's postings on the docs *cand*, one TermSlice per
-        member that holds any.  A member whose streams are all in their
-        memos (one-block rows from the read on, promoted ones) is read
-        whole: no block lookup is cheaper than slicing the memos."""
+        member that holds any."""
         out = []
         for p, a, z in self._pieces(cand):
             sub = cand[a:z]
-            if all(st._all is not None for st in (p.doc_s, p.tf_s, p.dl_s)):
-                t = p.to_term_slice()
-                ids, tfs, dls = t.doc_ids, t.tfs, t.dls
-            else:
-                ids, tfs, dls = p.block_values(p.covering_blocks(sub))
+            ids, tfs, dls = p.block_values(p.covering_blocks(sub))
             keep = _member_sorted(ids, sub)
             if keep.any():
                 out.append(TermSlice(self.term, self.idf, ids[keep], tfs[keep],
@@ -644,12 +648,17 @@ class TermView:
         return out
 
     def coverage(self, cand: np.ndarray) -> float:
-        """Share of this term's blocks that a read of the candidates
-        would decode: blocks that can hold a candidate, in members whose
-        doc stream is not yet in its memo."""
+        """Share of this term's multi-block members' blocks that can hold
+        a candidate.  One-block members are left out: the read already
+        decoded them whole (:func:`prime_single_block`), and a term with
+        no multi-block member holds at most one block per row, so it
+        reads 0."""
+        multi = [p for p in self.parts if p.block_firsts.size > 1]
+        if not multi:
+            return 0.0
         hit = sum(p.covering_blocks(cand[a:z]).size
-                  for p, a, z in self._pieces(cand) if p.doc_s._all is None)
-        return hit / sum(p.block_firsts.size for p in self.parts)
+                  for p, a, z in self._pieces(cand) if p.block_firsts.size > 1)
+        return hit / sum(p.block_firsts.size for p in multi)
 
     def docids(self) -> np.ndarray:
         """Every live docID of the term, sorted."""

@@ -270,6 +270,9 @@ def test_dsl_bool_operator_flattening(spark, pos_dir):
           "minimum_should_match": 2},
          dict(must=["the"], should=["data", "search"],
               minimum_should_match=2)),
+        # a term clause has no operator: its tokens stay ANDed in must
+        ({"must": [{"term": {"body": "the-data"}}]},
+         dict(must=["the", "data"])),
     ]
     for b, kw in exact:
         body = {"query": {"bool": b}}

@@ -184,6 +184,58 @@ def test_prime_single_block_memos(codecs):
         assert np.array_equal(dls, eager.dls)
 
 
+@pytest.mark.parametrize("codecs", [["varint"], ["pfor"], ["varint", "pfor"]])
+def test_candidate_block_reads_equal_eager(codecs):
+    """Candidate reads through the block path (covering_blocks →
+    block_values / block_docids, and the TermView reads built on them)
+    equal the eager decode restricted to the candidates, on one-block and
+    multi-block rows, cold and after the streams are promoted."""
+    from data_prepper_spark.index.scoring import (
+        TermView,
+        decode_slice,
+        decode_slice_lazy,
+    )
+
+    bs = 16
+    rng = np.random.default_rng(3)
+    for r in _slice_rows(codecs, bs):
+        eager = decode_slice(dict(r), 1.0)
+        d = eager.doc_ids
+        others = rng.integers(-(2**63), 2**63 - 1, size=20, dtype=np.int64)
+        cands = [
+            np.empty(0, np.int64),
+            np.array([d[0] - 1]) if d[0] > -(2**63) else d[:0],
+            d,
+            d[:: 2 * bs],  # every other block: runs with gaps
+            np.unique(np.concatenate([rng.choice(d, size=1 + d.size // 3), others])),
+        ]
+        for warm in (False, True):
+            lz = decode_slice_lazy(dict(r), 1.0, bs, "t")
+            if warm:
+                lz.to_term_slice()  # every stream into its memo
+            for cand in cands:
+                blk = np.searchsorted(lz.block_firsts, cand, side="right") - 1
+                want_blk = np.unique(blk[blk >= 0])
+                got_blk = lz.covering_blocks(cand)
+                assert np.array_equal(got_blk, want_blk)
+                ids, tfs, dls = lz.block_values(got_blk)
+                assert np.array_equal(ids, lz.block_docids(got_blk))
+                at = (got_blk[:, None] * bs + np.arange(bs)).ravel()
+                assert np.array_equal(ids, d[at[at < d.size]])  # those blocks only
+                keep = np.isin(ids, cand)
+                ref = np.isin(d, cand)
+                assert np.array_equal(ids[keep], d[ref])
+                assert np.array_equal(tfs[keep], eager.tfs[ref])
+                assert np.array_equal(dls[keep], eager.dls[ref])
+                v = TermView([lz], np.empty(0, np.int64))
+                assert np.array_equal(v.contains(cand), np.isin(cand, d))
+                got = v.candidate_slices(cand)
+                assert sum(t.doc_ids.size for t in got) == int(ref.sum())
+                for t in got:
+                    assert np.array_equal(t.doc_ids, d[ref])
+                    assert np.array_equal(t.tfs, eager.tfs[ref])
+
+
 def test_prime_skips_unknown_tags():
     """A row with an untagged stream has no stream objects to prime."""
     from data_prepper_spark.index.scoring import prime_single_block
