@@ -242,9 +242,9 @@ def search_dsl(
             searcher, " ".join(toks), field, k=k, ascending=asc,
             filters=filters, distributed=distributed)
     if kind == "match_all":
-        from .filtered import _docvalues_ids
+        from .filtered import _meta_ids_vals
 
-        ids = _docvalues_ids(searcher)[:k]
+        ids = _meta_ids_vals(searcher, ())[0][:k]
         return [(int(d), 1.0) for d in ids.tolist()]
     if kind in ("match", "term"):
         from .boolquery import search_bool

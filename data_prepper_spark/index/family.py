@@ -518,7 +518,7 @@ class FamilySearcher:
         """weighted_avg over `my-index-*`: per-period (n, Σvw, Σw)
         partials are the minimal additive sufficient statistic — they
         fold by summation with no global-stats coupling."""
-        from .filtered import match_agg_weighted_avg
+        from .filtered import match_agg_weighted_avg, weighted_avg_from_sums
 
         sel = cover.pop("periods", None)
         if sel is None:
@@ -532,11 +532,7 @@ class FamilySearcher:
             n += wa["n"]
             s_vw += wa["sum_vw"]
             s_w += wa["sum_w"]
-        if n == 0 or s_w == 0:
-            return {"n": 0, "sum_vw": 0, "sum_w": 0, "wavg_e4": None}
-        wavg_e4 = (s_vw * 10**4 // s_w if s_vw >= 0
-                   else -((-s_vw * 10**4) // s_w))
-        return {"n": n, "sum_vw": s_vw, "sum_w": s_w, "wavg_e4": wavg_e4}
+        return weighted_avg_from_sums(n, s_vw, s_w)
 
     def agg_matrix_stats(
         self, query_text: str, field_x: str, field_y: str, **cover

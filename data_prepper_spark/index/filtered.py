@@ -32,6 +32,21 @@ docvalues instead of a posting list:
   (``groupBy(range_id).cogroup(...)``) — the allowlist never leaves its
   range partition, so no node ever holds the global allowed set; global
   top-k via orderBy/limit under the oracle tie rule.
+
+Every unscored match-set reader (the ``match_agg_*`` aggregations,
+search_sorted, constant_score, random_score, the geo aggregations,
+significant_text's sample) goes through ONE kernel, :func:`_match_set`:
+the matched docIDs (any-term union, tombstones denied, intersected with
+the filtered docmeta rows) joined to the requested docvalue columns,
+handed to a caller-supplied ``partial``.  The driver backend applies the
+partial once to the whole match set; the distributed backend applies
+the same partial per docID range inside one docmeta cogroup and hands
+back the uncollected DataFrame for the caller's global combine.  The
+value aggregations (terms, stats, percentiles, range, cardinality, …)
+are a fold (``*_from_hist``) over the (value, count) histogram that
+:func:`match_value_hist` computes; the bucketing ones (histogram,
+date_histogram, the geo cells) count buckets inside the partial
+(:func:`_bucket_counts`).
 """
 
 from __future__ import annotations
@@ -222,37 +237,38 @@ def _docvalues(searcher) -> _DocValues:
     return dv
 
 
-def _meta_ids_vals(searcher, filters, value_field: str | None = None):
-    """Driver-mode docvalues accessor shared by filtered/sorted/agg/
-    function_score: (sorted doc_ids passing *filters*, aligned values of
-    *value_field* or None).  Cache-backed within budget; falls back to
-    the original per-query parquet pushdown scan (bit-identical) when
-    the cached columns would exceed DPS_DOCVALUES_CACHE_MB."""
+def _meta_ids_vals(searcher, filters, fields=()):
+    """Driver-mode docvalues accessor shared by every driver path:
+    (sorted doc_ids passing *filters*, [aligned values of each of
+    *fields*]).  Cache-backed within budget; falls back to the original
+    per-query parquet pushdown scan (bit-identical) when the cached
+    columns would exceed DPS_DOCVALUES_CACHE_MB."""
     try:
         dv = _docvalues(searcher)
         if filters:
             m = dv.mask(filters)
-            ids = dv.ids()[m]
-            vals = dv.np_col(value_field)[m] if value_field else None
-        else:
-            ids = dv.ids()
-            vals = dv.np_col(value_field) if value_field else None
-        return ids, vals
+            return dv.ids()[m], [dv.np_col(f)[m] for f in fields]
+        return dv.ids(), [dv.np_col(f) for f in fields]
     except _DVOverBudget:
         searcher._dv_cache = _DV_DISABLED  # drop partial loads; stay on scans
         ds = pads.dataset(f"{searcher.index_dir}/docmeta")
         flt = pa_filter_expr(filters) if filters else None
-        cols = ["doc_id"] + ([value_field] if value_field else [])
-        tbl = ds.to_table(columns=cols, filter=flt)
+        tbl = ds.to_table(columns=["doc_id", *dict.fromkeys(fields)],
+                          filter=flt)
         ids = tbl["doc_id"].to_numpy(zero_copy_only=False).astype(np.int64)
         order = np.argsort(ids, kind="stable")
-        ids = ids[order]
-        vals = (
-            tbl[value_field].to_numpy(zero_copy_only=False)[order]
-            if value_field
-            else None
-        )
-        return ids, vals
+        return ids[order], [
+            tbl[f].to_numpy(zero_copy_only=False)[order] for f in fields
+        ]
+
+
+def _py(v):
+    """numpy scalar → python value.  datetime64 of any unit becomes a
+    python datetime (the distributed path's type): ``.item()`` on a
+    datetime64[ns] returns an int of nanoseconds."""
+    if isinstance(v, np.datetime64):
+        return pd.Timestamp(v).to_pydatetime()
+    return v.item() if hasattr(v, "item") else v
 
 
 def pa_filter_expr(filters):
@@ -417,6 +433,98 @@ def _union_docids_rows(rows) -> np.ndarray:
     return np.unique(np.concatenate(parts))
 
 
+def _live_members(matched, deleted, meta_ids):
+    """The deny mask of every match-set read: drop tombstoned docIDs,
+    keep only docs with a (filtered) docmeta row."""
+    if deleted.size:
+        matched = matched[~_member_sorted(matched, deleted)]
+    return matched[_member_sorted(matched, meta_ids)]
+
+
+def _match_set(searcher, query_text, fields, filters, partial, distributed,
+               schema=None):
+    """THE match-set × docvalues kernel behind every unscored reader.
+
+    ``partial(doc_ids, [one aligned array per field])`` receives sorted
+    matched docIDs (any query term, tombstones denied, filtered-docmeta
+    members only) and returns a tuple of equal-length columns, in the
+    order of *schema*'s fields.
+
+    - No live query term: returns None.
+    - Driver: applies *partial* once to the whole match set and returns
+      its result (None when nothing matches).
+    - Distributed: *schema* is the partial's Spark DDL, or a callable of
+      the fields' docmeta Spark types returning it.  Reads docmeta once,
+      cogroups it with the pruned docID streams per ``range_id`` and
+      applies *partial* per range — only partial rows cross the shuffle.
+      Returns the uncollected DataFrame for the caller's global combine.
+      A column-free, unfiltered read has no docmeta side at all.
+    """
+    _check_filters(filters)
+    ids, buckets = _match_query_ids(searcher, query_text)
+    if not ids:
+        return None
+    deleted = searcher.deleted
+    if not distributed:
+        meta_ids, cols = _meta_ids_vals(searcher, filters, fields)
+        rows = searcher._pruned_slice_rows(list(ids), buckets,
+                                           columns=_UNION_COLS)
+        matched = _live_members(_union_docids_rows(rows), deleted, meta_ids)
+        if matched.size == 0:
+            return None
+        pos = np.searchsorted(meta_ids, matched)
+        return partial(matched, [c[pos] for c in cols])
+    from pyspark.sql.types import StructType
+
+    from .tokenize import range_id_col
+
+    cnames = [f"c{j}" for j in range(len(fields))]
+    # every doc with postings has a docmeta row: a column-free,
+    # unfiltered match set skips the docmeta read and the cogroup
+    meta = None
+    if fields or filters:
+        meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
+        if filters:
+            meta = meta.filter(spark_filter_col(filters))
+        meta = meta.select(
+            range_id_col(searcher.cfg).alias("range_id"), "doc_id",
+            *[F.col(f).alias(c) for f, c in zip(fields, cnames)],
+        )
+    if callable(schema):
+        types = dict(meta.dtypes) if meta is not None else {}
+        schema = schema([types[c] for c in cnames])
+    names = StructType.fromDDL(schema).fieldNames()
+
+    def eval_cog(post_pdf: pd.DataFrame, meta_pdf) -> pd.DataFrame:
+        empty = pd.DataFrame({n: [] for n in names})
+        if post_pdf.empty or (meta_pdf is not None and meta_pdf.empty):
+            return empty
+        matched = _union_docids_rows(post_pdf.to_dict("records"))
+        if meta_pdf is None:  # no docmeta side: the postings' own docs
+            meta_pdf = pd.DataFrame({"doc_id": matched})
+        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
+        order = np.argsort(meta_ids)
+        meta_ids = meta_ids[order]
+        matched = _live_members(matched, deleted, meta_ids)
+        if matched.size == 0:
+            return empty
+        pos = order[np.searchsorted(meta_ids, matched)]
+        got = partial(matched, [meta_pdf[c].to_numpy()[pos] for c in cnames])
+        return pd.DataFrame(dict(zip(names, got)))
+
+    posts = (
+        searcher._pruned_slices(list(ids), buckets, columns=_UNION_COLS)
+        .groupBy("range_id")
+    )
+    if meta is None:
+        return posts.applyInPandas(
+            lambda pdf: eval_cog(pdf, None), schema=schema
+        )
+    return posts.cogroup(meta.groupBy("range_id")).applyInPandas(
+        eval_cog, schema=schema
+    )
+
+
 def _topk_by_field(doc_ids, values, k, ascending):
     """Per-range top-k by (field value, doc_id ASC).  *values* must be a
     numpy array with a total order (ints/floats/bytes).
@@ -484,48 +592,18 @@ def search_sorted(
     the ms-latency path for sandbox-scale indexes.  Distributed mode
     cogroups per docID range (field values never leave their range
     partition) and is the web-scale path."""
-    _check_filters(filters)
-    _, ids, buckets = searcher._terms_buckets(query_text)
-    dfs = searcher.term_stats(ids, buckets)
-    ids = {i: t for i, t in ids.items() if dfs.get(i, 0) > 0}
-    if not ids:
+    got = _match_set(
+        searcher, query_text, [sort_field], filters,
+        lambda d, cols: _topk_by_field(d, cols[0], k, ascending),
+        distributed, schema=lambda t: f"doc_id long, sort_v {t[0]}",
+    )
+    if got is None:
         return []
     if distributed:
-        return _search_sorted_distributed(
-            searcher, ids, buckets, sort_field, k, ascending, filters
-        )
-    meta_ids, meta_vals = _meta_ids_vals(searcher, filters, sort_field)
-    rows = searcher._pruned_slice_rows(list(ids), buckets, columns=_UNION_COLS)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    out_ids, out_vals = [], []
-    for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr)
-        if searcher.deleted.size:
-            matched = matched[~_member_sorted(matched, searcher.deleted)]
-        keep = _member_sorted(matched, meta_ids)  # filter membership
-        matched = matched[keep]
-        if matched.size == 0:
-            continue
-        vals = meta_vals[np.searchsorted(meta_ids, matched)]
-        i_r, v_r = _topk_by_field(matched, vals, k, ascending)
-        out_ids.append(i_r)
-        out_vals.append(v_r)
-    if not out_ids:
-        return []
-    da = np.concatenate(out_ids)
-    va = np.concatenate(out_vals)
-    i_k, v_k = _topk_by_field(da, va, k, ascending)
-
-    def _py(v):
-        # np.datetime64[ns].item() is an int of nanoseconds — normalize all
-        # datetime64 units to python datetime (the distributed path's type)
-        if isinstance(v, np.datetime64):
-            return pd.Timestamp(v).to_pydatetime()
-        return v.item() if hasattr(v, "item") else v
-
-    return [(int(d), _py(v)) for d, v in zip(i_k, v_k)]
+        direction = F.asc("sort_v") if ascending else F.desc("sort_v")
+        out = got.orderBy(direction, F.asc("doc_id")).limit(k).collect()
+        return [(int(r["doc_id"]), r["sort_v"]) for r in out]
+    return [(int(d), _py(v)) for d, v in zip(*got)]
 
 
 def _factor_fn(spec: dict):
@@ -680,7 +758,7 @@ def search_function_score(
             searcher, ids, buckets, scoring, idf, fn, field, filters, k,
             tie_round, combine,
         )
-    meta_ids, meta_vals = _meta_ids_vals(searcher, filters, field)
+    meta_ids, (meta_vals,) = _meta_ids_vals(searcher, filters, [field])
     views = term_views(
         searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
         cfg.block_size, searcher.deleted,
@@ -879,39 +957,6 @@ def _random_score_values(seed: str, doc_ids: np.ndarray) -> np.ndarray:
     ) / float(1 << 60)
 
 
-def _matched_docids_df(searcher, labels, buckets, filters):
-    """ALL matched docIDs under *filters* as a DataFrame (docID streams
-    only — no tf/dl decode): per-range match ∩ filtered-docmeta.  The
-    downstream top-k runs JVM-side (TakeOrderedAndProject keeps per-
-    partition partial top-k, so only k rows per task cross the final
-    gather)."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        if post_pdf.empty or meta_pdf.empty:
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
-        matched = matched[_member_sorted(matched, meta_ids)]
-        return pd.DataFrame({"doc_id": matched})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(range_id_col(cfg).alias("range_id"), "doc_id")
-    return (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema="doc_id long")
-    )
-
-
 def search_random_score(
     searcher,
     query_text: str,
@@ -934,12 +979,11 @@ def search_random_score(
     over the per-range match sets; orderBy().limit(k) compiles to
     TakeOrderedAndProject, so each partition contributes at most k rows
     to the final gather — the 10^12-doc shape."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
+    got = _match_set(searcher, query_text, [], filters,
+                     lambda d, cols: (d,), distributed, schema="doc_id long")
+    if got is None:
         return []
     if distributed:
-        df = _matched_docids_df(searcher, list(ids), buckets, filters)
         sc = (
             F.conv(
                 F.substring(
@@ -952,16 +996,14 @@ def search_random_score(
             / F.lit(float(1 << 60))
         )
         rows = (
-            df.withColumn("score", sc)
+            got.withColumn("score", sc)
             .orderBy(F.round(F.col("score"), tie_round).desc(),
                      F.asc("doc_id"))
             .limit(k)
             .collect()
         )
         return [(int(r["doc_id"]), float(r["score"])) for r in rows]
-    m_ids, _ = _matched_with_cols(searcher, ids, buckets, filters, [])
-    if m_ids.size == 0:
-        return []
+    (m_ids,) = got
     scores = _random_score_values(seed, m_ids)
     order = np.lexsort((m_ids, -np.round(scores, tie_round)))[:k]
     return [(int(m_ids[i]), float(scores[i])) for i in order]
@@ -1056,7 +1098,7 @@ def search_terms_set(
             searcher, ids, buckets, idf, eval_slices, msm_field, filters,
             k, tie_round,
         )
-    meta_ids, meta_vals = _meta_ids_vals(searcher, filters, msm_field)
+    meta_ids, (meta_vals,) = _meta_ids_vals(searcher, filters, [msm_field])
     views = term_views(
         searcher._pruned_slice_rows(list(ids), buckets), ids, idf,
         cfg.block_size, searcher.deleted,
@@ -1119,99 +1161,17 @@ def _terms_set_distributed(
     ]
 
 
-def _matched_with_values(searcher, ids, buckets, filters, value_field):
-    """Driver-mode shared core for match-set aggregations: sorted matched
-    docIDs of the OR query (docID streams only) joined to one docvalues
-    column, filters applied.  Returns the matched docs' values array."""
-    meta_ids, meta_vals = _meta_ids_vals(searcher, filters, value_field)
-    rows = searcher._pruned_slice_rows(list(ids), buckets, columns=_UNION_COLS)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    out = []
-    for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr)
-        if searcher.deleted.size:
-            matched = matched[~_member_sorted(matched, searcher.deleted)]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size:
-            out.append(meta_vals[np.searchsorted(meta_ids, matched)])
-    if not out:
-        return np.empty(0, dtype=meta_vals.dtype)
-    return np.concatenate(out)
-
-
-def _matched_with_cols(searcher, ids, buckets, filters, fields):
-    """Multi-column variant of :func:`_matched_with_values` (nested
-    aggregations read a bucket key AND a metric field): returns
-    (matched docIDs, [one aligned array per requested docvalues
-    column]) over the match set."""
-    try:
-        dv = _docvalues(searcher)
-        if filters:
-            m = dv.mask(filters)
-            meta_ids = dv.ids()[m]
-            cols = [dv.np_col(f)[m] for f in fields]
-        else:
-            meta_ids = dv.ids()
-            cols = [dv.np_col(f) for f in fields]
-    except _DVOverBudget:
-        searcher._dv_cache = _DV_DISABLED
-        ds = pads.dataset(f"{searcher.index_dir}/docmeta")
-        flt = pa_filter_expr(filters) if filters else None
-        tbl = ds.to_table(columns=["doc_id", *fields], filter=flt)
-        meta_ids = tbl["doc_id"].to_numpy(zero_copy_only=False).astype(np.int64)
-        order = np.argsort(meta_ids, kind="stable")
-        meta_ids = meta_ids[order]
-        cols = [tbl[f].to_numpy(zero_copy_only=False)[order] for f in fields]
-    rows = searcher._pruned_slice_rows(list(ids), buckets, columns=_UNION_COLS)
-    rows_by_range: dict[int, list] = {}
-    for r in rows:
-        rows_by_range.setdefault(int(r["range_id"]), []).append(r)
-    id_parts: list[np.ndarray] = []
-    parts: list[list[np.ndarray]] = [[] for _ in fields]
-    for rr in rows_by_range.values():
-        matched = _union_docids_rows(rr)
-        if searcher.deleted.size:
-            matched = matched[~_member_sorted(matched, searcher.deleted)]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size:
-            id_parts.append(matched)
-            pos = np.searchsorted(meta_ids, matched)
-            for j in range(len(fields)):
-                parts[j].append(cols[j][pos])
-    m_ids = (
-        np.concatenate(id_parts) if id_parts else np.empty(0, dtype=np.int64)
-    )
-    return m_ids, [
-        np.concatenate(p) if p else np.empty(0, dtype=cols[j].dtype)
-        for j, p in enumerate(parts)
-    ]
-
-
 def match_agg_terms(
     searcher, query_text: str, field: str, filters=(), distributed: bool = False
 ) -> list[tuple[object, int]]:
     """Terms aggregation over the match set (OpenSearch `aggs: {terms}`):
     distinct values of a docvalues field among docs matching ANY query
-    term, with counts, sorted by value.  Distributed mode cogroups per
-    docID range and partial-counts before the global combine (map-side
-    combine shape — only (value, count) pairs cross the shuffle)."""
-    _check_filters(filters)
-    _, ids, buckets = searcher._terms_buckets(query_text)
-    dfs = searcher.term_stats(ids, buckets)
-    ids = {i: t for i, t in ids.items() if dfs.get(i, 0) > 0}
-    if not ids:
-        return []
-    if distributed:
-        return _agg_distributed(
-            searcher, ids, buckets, field, filters,
-            lambda v: v,  # identity bucketing
-        )
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    uniq, counts = np.unique(vals, return_counts=True)
-    return [(u.item() if hasattr(u, "item") else u, int(c))
-            for u, c in zip(uniq, counts)]
+    term, with counts, sorted by value — the value histogram itself
+    (only (value, count) pairs cross the shuffle)."""
+    vals, counts = match_value_hist(
+        searcher, query_text, field, filters, distributed
+    )
+    return [(_py(u), int(c)) for u, c in zip(vals, counts)]
 
 
 def match_agg_histogram(
@@ -1221,27 +1181,10 @@ def match_agg_histogram(
     """Histogram aggregation over the match set (OpenSearch `aggs:
     {histogram}`): counts per fixed-width bucket of a numeric docvalues
     field; bucket label = floor(value / width) · width."""
-    _check_filters(filters)
-    _, ids, buckets = searcher._terms_buckets(query_text)
-    dfs = searcher.term_stats(ids, buckets)
-    ids = {i: t for i, t in ids.items() if dfs.get(i, 0) > 0}
-    if not ids:
-        return []
-
-    def bucketer(v):
-        return np.floor(v.astype(np.float64) / width) * width
-
-    if distributed:
-        return _agg_distributed(
-            searcher, ids, buckets, field, filters, bucketer,
-            bucket_type="double",  # floor(v/width)*width is always float
-        )
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    if vals.size == 0:
-        return []
-    b = bucketer(vals)
-    uniq, counts = np.unique(b, return_counts=True)
-    return [(float(u), int(c)) for u, c in zip(uniq, counts)]
+    return _bucket_counts(
+        searcher, query_text, [field], filters, distributed,
+        lambda v: np.floor(v.astype(np.float64) / width) * width, "double",
+    )
 
 
 _DATE_UNITS = {
@@ -1258,41 +1201,41 @@ def match_agg_date_histogram(
     calendar bucket of a timestamp docvalues field.  Bucket labels are
     ISO strings at the interval's resolution ("2025-06-01",
     "2025-06-01T13", "2025-06", "2025") — numpy datetime64 truncation,
-    never .item() on ns values (returns int ns).  Distributed mode
-    reuses the per-range cogroup partial-count shape (only (bucket,
-    count) pairs cross the shuffle)."""
-    unit = _DATE_UNITS[interval]
-    _check_filters(filters)
-    _, ids, buckets = searcher._terms_buckets(query_text)
-    dfs = searcher.term_stats(ids, buckets)
-    ids = {i: t for i, t in ids.items() if dfs.get(i, 0) > 0}
-    if not ids:
-        return []
-
-    if distributed:
-        return _agg_distributed(
-            searcher, ids, buckets, field, filters, _date_bucketer(unit),
-            bucket_type="string",
-        )
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    if vals.size == 0:
-        return []
-    # unique on the truncated datetime64 INTS, then format only the
-    # unique buckets — datetime_as_string is a per-element python-level
-    # formatter, so stringifying every matched doc (then uniquing
-    # strings) cost ~20× the whole fold at 300k matches
-    uniq, counts = np.unique(
-        np.asarray(vals).astype(f"datetime64[{unit}]"), return_counts=True
+    never .item() on ns values (returns int ns)."""
+    return _bucket_counts(
+        searcher, query_text, [field], filters, distributed,
+        _date_bucketer(_DATE_UNITS[interval]), "string",
     )
-    labels = np.datetime_as_string(uniq)
-    return [(str(u), int(c)) for u, c in zip(labels, counts)]
+
+
+def _bucket_counts(searcher, query_text, fields, filters, distributed,
+                   bucketer, bucket_type):
+    """(bucket, count) rows, ascending bucket, of the match set mapped
+    by ``bucketer(*field columns)`` to one label per (doc, bucket).  The
+    bucketing runs INSIDE the per-range partial, so only (bucket, count)
+    pairs cross the shuffle — bounded by the bucket count, where a
+    value histogram of a timestamp field is as long as the match set."""
+    got = _match_set(
+        searcher, query_text, fields, filters,
+        lambda d, cols: np.unique(bucketer(*cols), return_counts=True),
+        distributed, schema=f"bucket {bucket_type}, n long",
+    )
+    if got is None:
+        return []
+    if distributed:
+        rows = (
+            got.groupBy("bucket").agg(F.sum("n").alias("n"))
+            .orderBy("bucket").collect()
+        )
+        return [(r["bucket"], int(r["n"])) for r in rows]
+    return [(_py(u), int(c)) for u, c in zip(*got)]
 
 
 def _date_bucketer(unit):
-    """Calendar-truncating bucketer for the distributed agg kernels:
+    """Calendar-truncating key bucketer for the per-bucket partials:
     truncate (cheap int ops), unique the datetime64 codes, format ONLY
     the unique buckets, expand by inverse — never per-element string
-    formatting (see match_agg_date_histogram)."""
+    formatting."""
 
     def bucketer(v):
         dt = np.asarray(v).astype(f"datetime64[{unit}]")
@@ -1302,68 +1245,13 @@ def _date_bucketer(unit):
     return bucketer
 
 
-def _agg_distributed(
-    searcher, labels, buckets, field, filters, bucketer, bucket_type=None
-):
-    """Scale path for aggregations: per-range match ∩ docvalues →
-    per-range partial counts → global groupBy(bucket).sum.
-
-    *bucket_type* overrides the output bucket column type (histogram
-    passes "double"); when None, string and integral field types are
-    preserved exactly — forcing int64 terms buckets through double would
-    lose exactness above 2^53 while driver mode returns exact ints."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        if post_pdf.empty or meta_pdf.empty:
-            return pd.DataFrame({"bucket": [], "n": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        meta_vals = meta_pdf["v"].to_numpy()
-        order = np.argsort(meta_ids)
-        meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return pd.DataFrame({"bucket": [], "n": []})
-        b = bucketer(meta_vals[np.searchsorted(meta_ids, matched)])
-        uniq, counts = np.unique(b, return_counts=True)
-        return pd.DataFrame({"bucket": uniq, "n": counts.astype(np.int64)})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id", F.col(field).alias("v")
-    )
-    v_t = dict(meta.dtypes)["v"]
-    if bucket_type is not None:
-        bucket_t = bucket_type
-    elif v_t == "string":
-        bucket_t = "string"
-    elif v_t in ("bigint", "int", "smallint", "tinyint"):
-        bucket_t = "bigint"
-    else:
-        bucket_t = "double"
-    agg = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=f"bucket {bucket_t}, n long")
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n"))
-        .orderBy("bucket")
-        .collect()
-    )
-    out = []
-    for r in agg:
-        v = r["bucket"]
-        out.append((float(v) if isinstance(v, float) else v, int(r["n"])))
-    return out
+def _fold_counts(keys, counts):
+    """Sum *counts* per distinct key: (sorted keys, int64 sums) — a
+    (value, count) histogram re-bucketed."""
+    uniq, inv = np.unique(keys, return_inverse=True)
+    n = np.zeros(uniq.size, dtype=np.int64)
+    np.add.at(n, inv, counts)
+    return uniq, n
 
 
 def _match_query_ids(searcher, query_text):
@@ -1375,81 +1263,38 @@ def _match_query_ids(searcher, query_text):
     return ids, buckets
 
 
-def _matched_values_distributed(searcher, labels, buckets, field, filters):
-    """Scale path shared by stats/percentiles/cardinality: per-range
-    match ∩ docvalues → per-range (value, count) partials → global
-    groupBy(value).sum — the exact value histogram of the match set.
-    Only (value, count) pairs cross the shuffle and reach the driver, so
-    cost is bounded by the FIELD CARDINALITY, not the match count (the
-    OpenSearch analog computes stats/t-digest sketches per shard; an
-    exact value histogram is the strictly-stronger partial for
-    bounded-cardinality docvalues)."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        if post_pdf.empty or meta_pdf.empty:
-            return pd.DataFrame({"v": [], "n": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        meta_vals = meta_pdf["v"].to_numpy()
-        order = np.argsort(meta_ids)
-        meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return pd.DataFrame({"v": [], "n": []})
-        uniq, counts = np.unique(
-            meta_vals[np.searchsorted(meta_ids, matched)], return_counts=True
-        )
-        return pd.DataFrame({"v": uniq, "n": counts.astype(np.int64)})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id", F.col(field).alias("v")
-    )
-    v_t = dict(meta.dtypes)["v"]
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=f"v {v_t}, n long")
-        .groupBy("v")
-        .agg(F.sum("n").alias("n"))
-        .orderBy("v")
-        .collect()
-    )
-    vals = np.array([r["v"] for r in rows])
-    counts = np.array([int(r["n"]) for r in rows], dtype=np.int64)
-    return vals, counts
-
-
 def match_value_hist(
     searcher, query_text: str, field: str, filters=(),
     distributed: bool = False,
 ) -> tuple[np.ndarray, np.ndarray]:
     """The exact (value, count) histogram of one docvalues field over the
-    match set — THE foldable partial for every metric aggregation
-    (stats / percentiles / cardinality / range all derive from it) and
-    for their cross-period family forms: period doc spaces are disjoint,
-    so per-segment histograms fold by summing counts per value, with no
-    global-stats coupling.  Sorted by value."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
+    match set — THE foldable partial for every value aggregation (terms /
+    stats / percentiles / cardinality / range … all fold it through a
+    ``*_from_hist``) and for their cross-period family forms: period doc
+    spaces are disjoint, so per-segment histograms fold by summing counts
+    per value, with no global-stats coupling.  Sorted by value.
+    Distributed mode ships per-range (value, count) partials and sums
+    them per value — cost bounded by the FIELD CARDINALITY, not the
+    match count (the OpenSearch analog computes stats/t-digest sketches
+    per shard; an exact value histogram is the strictly-stronger partial
+    for bounded-cardinality docvalues)."""
+    got = _match_set(
+        searcher, query_text, [field], filters,
+        lambda d, cols: np.unique(cols[0], return_counts=True), distributed,
+        schema=lambda t: f"v {t[0]}, n long",
+    )
+    if got is None:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
     if distributed:
-        return _matched_values_distributed(
-            searcher, ids, buckets, field, filters
+        rows = (
+            got.groupBy("v").agg(F.sum("n").alias("n")).orderBy("v").collect()
         )
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    uniq, counts = np.unique(vals, return_counts=True)
-    return uniq, counts.astype(np.int64)
+        return (
+            np.array([r["v"] for r in rows]),
+            np.array([int(r["n"]) for r in rows], dtype=np.int64),
+        )
+    vals, counts = got
+    return vals, counts.astype(np.int64)
 
 
 def stats_from_hist(vals: np.ndarray, counts: np.ndarray) -> dict:
@@ -1475,14 +1320,10 @@ def percentiles_from_hist(
     histogram — percentile p = value at 1-based rank ceil(p/100·n)."""
     if vals.size == 0:
         return []
-    cum = np.cumsum(counts)
-    n = int(cum[-1])
-    out = []
-    for p in percents:
-        rank = max(1, int(math.ceil(p / 100.0 * n)))
-        v = vals[int(np.searchsorted(cum, rank, side="left"))]
-        out.append((float(p), v.item() if hasattr(v, "item") else v))
-    return out
+    return [
+        (float(p), _py(_nearest_rank_from_hist(vals, counts, p)))
+        for p in percents
+    ]
 
 
 def range_from_hist(vals: np.ndarray, counts: np.ndarray, ranges):
@@ -1508,42 +1349,12 @@ def match_agg_stats(
 ) -> dict:
     """Stats aggregation over the match set (OpenSearch ``aggs:stats``):
     count / min / max / sum / avg of a numeric docvalues field among
-    docs matching ANY query term.  Integral fields keep EXACT integer
-    sums (float accumulation order can't break rank identity with the
-    SQL oracle); avg is derived.  Distributed mode folds per-range
-    (value, count) partials — only the value histogram crosses the
-    shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    empty = {"count": 0, "min": None, "max": None, "sum": 0, "avg": None}
-    if not ids:
-        return empty
-    if distributed:
-        vals, counts = _matched_values_distributed(
-            searcher, ids, buckets, field, filters
-        )
-        if vals.size == 0:
-            return empty
-        n = int(counts.sum())
-        total = (vals * counts).sum()
-        return {
-            "count": n,
-            "min": vals[0].item(),
-            "max": vals[-1].item(),
-            "sum": total.item(),
-            "avg": float(total) / n,
-        }
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    if vals.size == 0:
-        return empty
-    total = vals.sum()
-    return {
-        "count": int(vals.size),
-        "min": vals.min().item(),
-        "max": vals.max().item(),
-        "sum": total.item(),
-        "avg": float(total) / vals.size,
-    }
+    docs matching ANY query term, folded from the value histogram.
+    Integral fields keep EXACT integer sums (float accumulation order
+    can't break rank identity with the SQL oracle); avg is derived."""
+    return stats_from_hist(
+        *match_value_hist(searcher, query_text, field, filters, distributed)
+    )
 
 
 def match_agg_percentiles(
@@ -1556,37 +1367,12 @@ def match_agg_percentiles(
     ceil(p/100 · n))`` of the sorted match values, a deterministic
     SQL-expressible definition (the reference's OpenSearch uses an
     approximate t-digest; exact nearest-rank is strictly stronger and
-    oracle-pinnable).  Distributed mode folds per-range (value, count)
-    partials and walks the cumulative histogram — driver traffic is
-    bounded by field cardinality, not match count."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        vals, counts = _matched_values_distributed(
-            searcher, ids, buckets, field, filters
-        )
-        if vals.size == 0:
-            return []
-        cum = np.cumsum(counts)
-        n = int(cum[-1])
-        out = []
-        for p in percents:
-            rank = max(1, int(math.ceil(p / 100.0 * n)))
-            v = vals[int(np.searchsorted(cum, rank, side="left"))]
-            out.append((float(p), v.item() if hasattr(v, "item") else v))
-        return out
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    if vals.size == 0:
-        return []
-    vals = np.sort(vals)
-    out = []
-    for p in percents:
-        rank = max(1, int(math.ceil(p / 100.0 * vals.size)))
-        v = vals[rank - 1]
-        out.append((float(p), v.item() if hasattr(v, "item") else v))
-    return out
+    oracle-pinnable).  Walks the cumulative value histogram — driver
+    traffic is bounded by field cardinality, not match count."""
+    return percentiles_from_hist(
+        *match_value_hist(searcher, query_text, field, filters, distributed),
+        percents,
+    )
 
 
 def _nearest_rank_from_hist(vals: np.ndarray, counts: np.ndarray, p: float):
@@ -1607,13 +1393,10 @@ def mad_from_hist(vals: np.ndarray, counts: np.ndarray) -> dict:
         return {"n": 0, "median": None, "mad": None}
     n = int(counts.sum())
     med = _nearest_rank_from_hist(vals, counts, 50.0)
-    dev = np.abs(vals - med)
-    o = np.argsort(dev, kind="stable")
-    dev_u, inv = np.unique(dev[o], return_inverse=True)
-    dev_c = np.bincount(inv, weights=counts[o]).astype(np.int64)
-    mad = _nearest_rank_from_hist(dev_u, dev_c, 50.0)
-    as_py = lambda v: v.item() if hasattr(v, "item") else v  # noqa: E731
-    return {"n": n, "median": as_py(med), "mad": as_py(mad)}
+    mad = _nearest_rank_from_hist(
+        *_fold_counts(np.abs(vals - med), counts), 50.0
+    )
+    return {"n": n, "median": _py(med), "mad": _py(mad)}
 
 
 def match_agg_median_absolute_deviation(
@@ -1627,25 +1410,12 @@ def match_agg_median_absolute_deviation(
     (value at 1-based rank ``max(1, ceil(n/2))``), so integral fields
     are exact end-to-end; the reference's OpenSearch computes both
     medians on a t-digest sketch — nearest-rank-exact is strictly
-    stronger and SQL-pinnable.  Distributed mode folds the per-range
-    (value, count) histogram once and derives BOTH medians from it
-    driver-side (deviation histogram = |vals − med| re-fold, cost ∝
+    stronger and SQL-pinnable.  Both medians derive from the one folded
+    value histogram (deviation histogram = |vals − med| re-fold, cost ∝
     field cardinality, no second scan)."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    empty = {"n": 0, "median": None, "mad": None}
-    if not ids:
-        return empty
-    if distributed:
-        vals, counts = _matched_values_distributed(
-            searcher, ids, buckets, field, filters
-        )
-    else:
-        raw = _matched_with_values(searcher, ids, buckets, filters, field)
-        if raw.size == 0:
-            return empty
-        vals, counts = np.unique(raw, return_counts=True)
-    return mad_from_hist(vals, counts)
+    return mad_from_hist(
+        *match_value_hist(searcher, query_text, field, filters, distributed)
+    )
 
 
 def match_agg_cardinality(
@@ -1653,23 +1423,16 @@ def match_agg_cardinality(
     distributed: bool = False,
 ) -> int:
     """Cardinality aggregation over the match set (OpenSearch
-    ``aggs:cardinality``): EXACT distinct count of a docvalues field.
-    The reference's OpenSearch answers with HyperLogLog++; the exact
-    two-level distinct (per-range unique values → global unique) is
-    strictly stronger and stays scale-safe because only per-range
-    DISTINCT values cross the shuffle.  Swap the partial for an HLL
-    register set if the field is genuinely unbounded."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return 0
-    if distributed:
-        vals, _ = _matched_values_distributed(
-            searcher, ids, buckets, field, filters
-        )
-        return int(vals.size)
-    vals = _matched_with_values(searcher, ids, buckets, filters, field)
-    return int(np.unique(vals).size)
+    ``aggs:cardinality``): EXACT distinct count of a docvalues field —
+    the value histogram's key count.  The reference's OpenSearch answers
+    with HyperLogLog++; the exact histogram is strictly stronger and
+    stays scale-safe because only per-range DISTINCT values cross the
+    shuffle.  Swap the partial for an HLL register set if the field is
+    genuinely unbounded."""
+    vals, _ = match_value_hist(
+        searcher, query_text, field, filters, distributed
+    )
+    return int(vals.size)
 
 
 def match_agg_range(
@@ -1681,33 +1444,12 @@ def match_agg_range(
     docvalues field.  *ranges* is a list of (label, lo, hi) with None
     for an open end; intervals MAY overlap (each bucket counts
     independently, OpenSearch semantics) and every bucket is emitted
-    even when empty.  Distributed mode folds the same (value, count)
-    histogram partial as stats — bucket membership is evaluated on the
-    driver over the folded histogram."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return [(label, 0) for label, _lo, _hi in ranges]
-    if distributed:
-        vals, counts = _matched_values_distributed(
-            searcher, ids, buckets, field, filters
-        )
-    else:
-        vals = _matched_with_values(searcher, ids, buckets, filters, field)
-        counts = None
-    out = []
-    for label, lo, hi in ranges:
-        if vals.size == 0:
-            out.append((label, 0))
-            continue
-        m = np.ones(vals.shape, dtype=bool)
-        if lo is not None:
-            m &= vals >= lo
-        if hi is not None:
-            m &= vals < hi
-        n = int(counts[m].sum()) if counts is not None else int(m.sum())
-        out.append((label, n))
-    return out
+    even when empty.  Bucket membership is evaluated over the folded
+    value histogram."""
+    return range_from_hist(
+        *match_value_hist(searcher, query_text, field, filters, distributed),
+        ranges,
+    )
 
 
 def match_agg_terms_stats(
@@ -1721,24 +1463,14 @@ def match_agg_terms_stats(
     integer sums.  Distributed mode emits per-range per-bucket partials
     — additive (n, sum) and extremal (min, max) fold exactly across
     ranges, the map-side-combine shape."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        return _terms_stats_distributed(
-            searcher, ids, buckets, key_field, value_field, filters
-        )
-    _, (keys, vals) = _matched_with_cols(
-        searcher, ids, buckets, filters, [key_field, value_field]
+    return _bucket_stats(
+        searcher, query_text, key_field, value_field, filters, distributed
     )
-    if keys.size == 0:
-        return []
+
+
+def _fold_terms_stats(keys, vals):
+    """Per distinct key: (keys, n, Σv, min v, max v) columns."""
     uniq, inv = np.unique(keys, return_inverse=True)
-    return _fold_terms_stats(uniq, inv, vals)
-
-
-def _fold_terms_stats(uniq, inv, vals):
     n = np.zeros(uniq.size, dtype=np.int64)
     np.add.at(n, inv, 1)
     if np.issubdtype(vals.dtype, np.integer):
@@ -1750,91 +1482,48 @@ def _fold_terms_stats(uniq, inv, vals):
     np.minimum.at(mn, inv, vals)
     mx = np.full(uniq.size, vals.min())
     np.maximum.at(mx, inv, vals)
-    return [
-        (
-            u.item() if hasattr(u, "item") else u,
-            int(n[j]), s[j].item(), mn[j].item(), mx[j].item(),
-        )
-        for j, u in enumerate(uniq)
-    ]
+    return uniq, n, s, mn, mx
 
 
-def _terms_stats_distributed(
-    searcher, labels, buckets, key_field, value_field, filters,
+def _bucket_stats(
+    searcher, query_text, key_field, value_field, filters, distributed,
     key_bucketer=None, key_type=None,
 ):
-    """*key_bucketer* (optional) maps the raw key array to bucket labels
-    INSIDE the per-range kernel (date-histogram truncation etc.) so only
-    (bucket, partial) rows cross the shuffle; *key_type* overrides the
-    bucket column's Spark type when a bucketer changes it."""
-    from .tokenize import range_id_col
+    """(bucket, n, sum, min, max) rows per distinct key — the shared
+    body of terms_stats and date_histogram_stats.  *key_bucketer*
+    (optional) maps the raw keys to bucket labels INSIDE the partial
+    (date truncation), so only (bucket, partial) rows cross the shuffle;
+    *key_type* is then the bucket's Spark type."""
 
-    cfg = searcher.cfg
-    deleted = searcher.deleted
+    def partial(d, cols):
+        keys = cols[0] if key_bucketer is None else key_bucketer(cols[0])
+        return _fold_terms_stats(keys, cols[1])
 
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"bucket": [], "n": [], "s": [], "mn": [], "mx": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        keys = meta_pdf["k"].to_numpy()[order]
-        vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        k_matched = keys[pos]
-        if key_bucketer is not None:
-            k_matched = key_bucketer(k_matched)
-        uniq, inv = np.unique(k_matched, return_inverse=True)
-        folded = _fold_terms_stats(uniq, inv, vals[pos])
-        return pd.DataFrame(
-            {
-                "bucket": [f[0] for f in folded],
-                "n": [f[1] for f in folded],
-                "s": [f[2] for f in folded],
-                "mn": [f[3] for f in folded],
-                "mx": [f[4] for f in folded],
-            }
-        )
+    def schema(t):
+        s_t = ("bigint" if t[1] in ("bigint", "int", "smallint", "tinyint")
+               else "double")
+        return (f"bucket {key_type or t[0]}, n long, s {s_t}, "
+                f"mn {t[1]}, mx {t[1]}")
 
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(key_field).alias("k"), F.col(value_field).alias("v"),
-    )
-    ts = dict(meta.dtypes)
-    k_t = key_type if key_type is not None else (
-        "string" if ts["k"] == "string" else "bigint" if ts["k"] in (
-            "bigint", "int", "smallint", "tinyint") else "double")
-    num_t = "bigint" if ts["v"] in ("bigint", "int", "smallint", "tinyint") \
-        else "double"
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(
-            eval_cog,
-            schema=f"bucket {k_t}, n long, s {num_t}, mn {num_t}, mx {num_t}",
+    got = _match_set(searcher, query_text, [key_field, value_field],
+                     filters, partial, distributed, schema=schema)
+    if got is None:
+        return []
+    if distributed:
+        rows = (
+            got.groupBy("bucket")
+            .agg(
+                F.sum("n").alias("n"), F.sum("s").alias("s"),
+                F.min("mn").alias("mn"), F.max("mx").alias("mx"),
+            )
+            .orderBy("bucket")
+            .collect()
         )
-        .groupBy("bucket")
-        .agg(
-            F.sum("n").alias("n"), F.sum("s").alias("s"),
-            F.min("mn").alias("mn"), F.max("mx").alias("mx"),
-        )
-        .orderBy("bucket")
-        .collect()
-    )
-    return [
-        (r["bucket"], int(r["n"]), r["s"], r["mn"], r["mx"]) for r in rows
-    ]
+        return [
+            (r["bucket"], int(r["n"]), r["s"], r["mn"], r["mx"]) for r in rows
+        ]
+    return [(_py(u), int(n), _py(s), _py(mn), _py(mx))
+            for u, n, s, mn, mx in zip(*got)]
 
 
 def match_agg_significant_terms(
@@ -1854,17 +1543,14 @@ def match_agg_significant_terms(
     with F = foreground size, B = background size.  Only buckets with
     fg > 0 are candidates (OpenSearch emits no zero-fg buckets); ties
     rank by (score DESC, bucket ASC).  Returns (bucket, score_e6, fg_n,
-    bg_n).  Distributed mode reuses the terms-agg partial shape for the
-    foreground and one docmeta groupBy for the background — only
-    (value, count) pairs cross the shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
+    bg_n).  The foreground is the terms aggregation; distributed mode
+    takes the background from one docmeta groupBy — only (value, count)
+    pairs cross the shuffle."""
+    fg = dict(match_agg_terms(searcher, query_text, field, filters,
+                              distributed))
+    if not fg:
         return []
     if distributed:
-        fg_pairs = _agg_distributed(
-            searcher, ids, buckets, field, filters, lambda v: v
-        )
         meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
         if filters:
             meta = meta.filter(spark_filter_col(filters))
@@ -1878,26 +1564,14 @@ def match_agg_significant_terms(
             .collect()
         )
         bg = {r["v"]: int(r["n"]) for r in bg_rows}
-        fg = {v: n for v, n in fg_pairs}
     else:
-        m_ids, (keys,) = _matched_with_cols(
-            searcher, ids, buckets, filters, [field]
-        )
-        if keys.size == 0:
-            return []
-        uniq, counts = np.unique(keys, return_counts=True)
-        fg = {
-            (u.item() if hasattr(u, "item") else u): int(c)
-            for u, c in zip(uniq, counts)
-        }
-        meta_ids, meta_vals = _meta_ids_vals(searcher, filters, field)
+        meta_ids, (meta_vals,) = _meta_ids_vals(searcher, filters, [field])
         if searcher.deleted.size:
             live = ~_member_sorted(meta_ids, searcher.deleted)
             meta_vals = meta_vals[live]
-        bu, bc = np.unique(meta_vals, return_counts=True)
         bg = {
-            (u.item() if hasattr(u, "item") else u): int(c)
-            for u, c in zip(bu, bc)
+            _py(u): int(c)
+            for u, c in zip(*np.unique(meta_vals, return_counts=True))
         }
     f_tot = sum(fg.values())
     b_tot = sum(bg.values())
@@ -1908,11 +1582,7 @@ def match_agg_significant_terms(
         bg_n = bg.get(v, fg_n)  # fg docs are in the background too
         num = (fg_n * b_tot - bg_n * f_tot) * fg_n * b_tot * 10**6
         den = f_tot * f_tot * bg_n * b_tot
-        # truncate toward zero, NOT floor: DuckDB's // truncates on
-        # negatives (-7//2 = -3) while python floors (-4) — negative
-        # scores (fg% < bg%) must agree with the SQL oracle
-        score_e6 = num // den if num >= 0 else -((-num) // den)
-        scored.append((v, score_e6, fg_n, bg_n))
+        scored.append((v, _tdiv(num, den), fg_n, bg_n))
     scored.sort(key=lambda t: (-t[1], t[0]))
     return scored[:k]
 
@@ -1930,146 +1600,36 @@ def match_agg_top_hits(
     is a subset of the union of its per-range top-ks) and re-ranks with
     one row_number window — only k rows per (range, bucket) cross the
     shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        return _top_hits_distributed(
-            searcher, ids, buckets, key_field, sort_field, k, ascending,
-            filters,
-        )
-    m_ids, (keys, vals) = _matched_with_cols(
-        searcher, ids, buckets, filters, [key_field, sort_field]
-    )
-    if keys.size == 0:
-        return []
-    uniq, inv = np.unique(keys, return_inverse=True)
-
-    def _py(v):
-        # datetime64[ns].item() is an int of nanoseconds — normalize to
-        # python datetime (the distributed path's type)
-        if isinstance(v, np.datetime64):
-            return pd.Timestamp(v).to_pydatetime()
-        return v.item() if hasattr(v, "item") else v
-
-    out = []
-    for j, u in enumerate(uniq):
-        sel = np.flatnonzero(inv == j)
-        i_b, v_b = _topk_by_field(m_ids[sel], vals[sel], k, ascending)
-        bucket = u.item() if hasattr(u, "item") else u
-        out.extend((bucket, int(d), _py(v)) for d, v in zip(i_b, v_b))
-    return out
-
-
-def _top_hits_distributed(
-    searcher, labels, buckets, key_field, sort_field, k, ascending, filters
-):
     from pyspark.sql.window import Window
 
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"bucket": [], "doc_id": [], "v": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        keys = meta_pdf["k"].to_numpy()[order]
-        vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        keys, vals = keys[pos], vals[pos]
-        uniq, inv = np.unique(keys, return_inverse=True)
+    def partial(d, cols):
+        uniq, inv = np.unique(cols[0], return_inverse=True)
         bs, ds_, vs = [], [], []
         for j, u in enumerate(uniq):
             sel = np.flatnonzero(inv == j)
-            i_b, v_b = _topk_by_field(matched[sel], vals[sel], k, ascending)
-            bs.extend([u] * i_b.size)
+            i_b, v_b = _topk_by_field(d[sel], cols[1][sel], k, ascending)
+            bs.extend([_py(u)] * i_b.size)
             ds_.extend(i_b.tolist())
-            vs.extend(v_b.tolist())
-        return pd.DataFrame({"bucket": bs, "doc_id": ds_, "v": vs})
+            vs.extend(_py(v) for v in v_b)
+        return bs, ds_, vs
 
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(key_field).alias("k"), F.col(sort_field).alias("v"),
+    got = _match_set(
+        searcher, query_text, [key_field, sort_field], filters, partial,
+        distributed, schema=lambda t: f"bucket {t[0]}, doc_id long, v {t[1]}",
     )
-    ts = dict(meta.dtypes)
-    k_t = "string" if ts["k"] == "string" else "bigint" if ts["k"] in (
-        "bigint", "int", "smallint", "tinyint") else "double"
+    if got is None:
+        return []
+    if not distributed:
+        return list(zip(*got))
     v_spark = F.asc("v") if ascending else F.desc("v")
     w = Window.partitionBy("bucket").orderBy(v_spark, F.asc("doc_id"))
     rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(
-            eval_cog, schema=f"bucket {k_t}, doc_id long, v {ts['v']}"
-        )
-        .withColumn("rn", F.row_number().over(w))
+        got.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= k)
         .orderBy("bucket", "rn")
         .collect()
     )
     return [(r["bucket"], int(r["doc_id"]), r["v"]) for r in rows]
-
-
-def _search_sorted_distributed(
-    searcher, labels, buckets, sort_field, k, ascending, filters
-):
-    """Scale path: per-range match-union ⟂cogroup⟂ docvalues, per-range
-    top-k by field, global orderBy/limit."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        if post_pdf.empty or meta_pdf.empty:
-            return pd.DataFrame({"doc_id": [], "sort_v": []})
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        meta_vals = meta_pdf["sort_v"].to_numpy()
-        order = np.argsort(meta_ids)
-        meta_ids, meta_vals = meta_ids[order], meta_vals[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return pd.DataFrame({"doc_id": [], "sort_v": []})
-        vals = meta_vals[np.searchsorted(meta_ids, matched)]
-        i_r, v_r = _topk_by_field(matched, vals, k, ascending)
-        return pd.DataFrame({"doc_id": i_r, "sort_v": v_r})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(sort_field).alias("sort_v"),
-    )
-    sort_t = dict(meta.dtypes)["sort_v"]
-    ranked = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=f"doc_id long, sort_v {sort_t}")
-    )
-    direction = F.asc("sort_v") if ascending else F.desc("sort_v")
-    out = ranked.orderBy(direction, F.asc("doc_id")).limit(k).collect()
-    return [(int(r["doc_id"]), r["sort_v"]) for r in out]
 
 
 def _search_filtered_distributed(
@@ -2174,99 +1734,50 @@ def match_agg_composite(
     the next ``after_key``.  THE scale shape for unbounded-cardinality
     aggregations: every page is a bounded, resumable unit (deep bucket
     sets never materialize at once), and the cursor pushes into the
-    per-range kernels so partials for skipped buckets are never emitted.
+    per-range partials so skipped buckets are never emitted.
     Returns (rows, after_key) with rows = [(v₁, …, vₙ, count)]."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return [], None
-    if distributed:
-        rows = _composite_distributed(
-            searcher, ids, buckets, sources, size, after, filters
-        )
-    else:
-        m_ids, cols = _matched_with_cols(
-            searcher, ids, buckets, filters, list(sources)
-        )
-        if m_ids.size == 0:
-            return [], None
-        pdf = pd.DataFrame({f: c for f, c in zip(sources, cols)})
-        grouped = (
-            pdf.groupby(list(sources), sort=True).size().reset_index(name="n")
-        )
-        rows = []
-        for rec in grouped.itertuples(index=False):
-            key = tuple(
-                v.item() if hasattr(v, "item") else v for v in rec[:-1]
-            )
-            if after is not None and not _tuple_gt(key, after):
-                continue
-            rows.append((*key, int(rec[-1])))
-            if len(rows) == size:
-                break
+    rows = _tuple_counts(searcher, query_text, sources, filters,
+                         distributed, size, after)
     if not rows:
         return [], None
     return rows, tuple(rows[-1][:-1])
 
 
-def _composite_distributed(
-    searcher, labels, buckets, sources, size, after, filters
-):
-    """Per-range partials: match ∩ docvalues → per-range (tuple, count)
-    rows with the after-cursor applied INSIDE the kernel (skipped pages'
-    buckets never cross the shuffle); global groupBy-sum, ascending
-    tuple order, limit size."""
-    from .tokenize import range_id_col
+def _tuple_counts(searcher, query_text, sources, filters, distributed,
+                  size, after=None):
+    """The first *size* (v₁, …, vₙ, count) rows, ascending, of the match
+    set's distinct docvalue tuples strictly after *after* — per-range
+    (tuple, count) partials with the cursor applied inside the partial,
+    global groupBy-sum, ascending tuple order, limit size."""
+    cs = [f"c{j}" for j in range(len(sources))]
 
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-    srcs = list(sources)
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({**{f: [] for f in srcs}, "n": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        pdf = pd.DataFrame(
-            {f: meta_pdf[f].to_numpy()[order][pos] for f in srcs}
+    def partial(d, cols):
+        g = (
+            pd.DataFrame(dict(enumerate(cols)))
+            .groupby(list(range(len(cols))), sort=True)
+            .size()
+            .reset_index(name="n")
         )
-        g = pdf.groupby(srcs, sort=True).size().reset_index(name="n")
         if after is not None:
-            keep = g[srcs].apply(
-                lambda row: _tuple_gt(tuple(row), after), axis=1
-            )
-            g = g[keep.to_numpy()] if len(g) else g
-        return g
+            keep = [_tuple_gt(tuple(map(_py, r)), after)
+                    for r in g.iloc[:, :-1].itertuples(index=False)]
+            g = g[np.array(keep, dtype=bool)]
+        return tuple(g[c].to_numpy() for c in g.columns)
 
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id", *srcs
+    got = _match_set(
+        searcher, query_text, list(sources), filters, partial, distributed,
+        schema=lambda t: ", ".join(f"{c} {x}" for c, x in zip(cs, t))
+        + ", n long",
     )
-    ts = dict(meta.dtypes)
-    schema = ", ".join(f"`{f}` {ts[f]}" for f in srcs) + ", n long"
-    out = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=schema)
-        .groupBy(*srcs)
-        .agg(F.sum("n").alias("n"))
-        .orderBy(*srcs)
-        .limit(size)
-        .collect()
-    )
-    return [(*(r[f] for f in srcs), int(r["n"])) for r in out]
+    if got is None:
+        return []
+    if distributed:
+        out = (
+            got.groupBy(*cs).agg(F.sum("n").alias("n")).orderBy(*cs)
+            .limit(size).collect()
+        )
+        return [(*(r[c] for c in cs), int(r["n"])) for r in out]
+    return [(*map(_py, r[:-1]), int(r[-1])) for r in zip(*got)][:size]
 
 
 def match_agg_date_histogram_stats(
@@ -2278,33 +1789,15 @@ def match_agg_date_histogram_stats(
     PIPELINE aggregation operates on): per calendar bucket of *ts_field*,
     the (count, sum, min, max) of *value_field* among matching docs,
     sorted by bucket.  Integral metrics keep exact integer sums (the
-    engine↔oracle hashing contract).  Distributed mode applies the
-    calendar truncation INSIDE the per-range kernel, so only (bucket,
-    n, sum, min, max) partials cross the shuffle — additive and
-    extremal components fold exactly."""
-    unit = _DATE_UNITS[interval]
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        return _terms_stats_distributed(
-            searcher, ids, buckets, ts_field, value_field, filters,
-            key_bucketer=_date_bucketer(unit), key_type="string",
-        )
-    _, (keys, vals) = _matched_with_cols(
-        searcher, ids, buckets, filters, [ts_field, value_field]
+    engine↔oracle hashing contract).  The calendar truncation runs
+    INSIDE the per-range partial, so only (bucket, n, sum, min, max)
+    partials cross the shuffle — additive and extremal components fold
+    exactly."""
+    return _bucket_stats(
+        searcher, query_text, ts_field, value_field, filters, distributed,
+        key_bucketer=_date_bucketer(_DATE_UNITS[interval]),
+        key_type="string",
     )
-    if keys.size == 0:
-        return []
-    # unique the truncated datetime64 codes, format only the uniques
-    # (per-element datetime_as_string dominated the fold at scale)
-    uniq_dt, inv = np.unique(
-        np.asarray(keys).astype(f"datetime64[{unit}]"), return_inverse=True
-    )
-    return [(str(b), n, s, mn, mx)
-            for b, n, s, mn, mx in _fold_terms_stats(
-                np.datetime_as_string(uniq_dt), inv, vals)]
 
 
 def pipeline_from_buckets(rows, mavg_window: int = 3):
@@ -2328,10 +1821,7 @@ def pipeline_from_buckets(rows, mavg_window: int = 3):
         cum += s
         deriv = None if i == 0 else s - sums[i - 1]
         w = sums[max(0, i - mavg_window + 1): i + 1]
-        total = sum(w)
-        mavg_e4 = (total * 10**4 // len(w) if total >= 0
-                   else -((-total * 10**4) // len(w)))
-        out.append((bucket, n, s, cum, deriv, mavg_e4))
+        out.append((bucket, n, s, cum, deriv, _tdiv(sum(w) * 10**4, len(w))))
     return out
 
 
@@ -2361,10 +1851,8 @@ def bucket_stats_from_buckets(rows) -> dict:
                 "avg_e4": None}
     sums = [int(r[2]) for r in rows]
     total = sum(sums)
-    avg_e4 = (total * 10**4 // len(sums) if total >= 0
-              else -((-total * 10**4) // len(sums)))
     return {"n_buckets": len(sums), "sum": total, "min": min(sums),
-            "max": max(sums), "avg_e4": avg_e4}
+            "max": max(sums), "avg_e4": _tdiv(total * 10**4, len(sums))}
 
 
 def bucket_sort_buckets(rows, min_n: int = 0, k: int = 5):
@@ -2432,10 +1920,6 @@ def normalize_from_buckets(rows, method: str = "percent_of_sum"):
     twin on negatives).  A degenerate rescale window (max == min) emits
     None per bucket, mirroring OpenSearch's skipped value.  Returns
     (bucket, n, sum, norm_e6) rows over the REDUCED bucket list."""
-    def _tdiv(a: int, b: int) -> int:
-        return a // b if (a >= 0) == (b > 0) else -((-a) // b) if a < 0 \
-            else -(a // -b)
-
     sums = [int(r[2]) for r in rows]
     if method == "percent_of_sum":
         total = sum(sums)
@@ -2499,69 +1983,6 @@ def cumulative_cardinality_from_pairs(pairs, buckets_all):
     return out
 
 
-def _distinct_pairs_distributed(
-    searcher, labels, buckets, key_field, value_field, filters,
-    key_bucketer=None, key_type=None,
-):
-    """DISTINCT (bucket, value) pairs of the match set, plus one
-    (bucket, NULL) presence marker per bucket with ≥1 matching doc: the
-    shuffle partial for exact distinct-per-bucket aggregations — only
-    per-range DISTINCT pairs cross the Exchange (bounded by bucket
-    count × field cardinality, never match count), a global
-    ``distinct()`` removes cross-range duplicates."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"bucket": [], "v": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        keys = meta_pdf["k"].to_numpy()[order]
-        vals = meta_pdf["v"].to_numpy()[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        k_matched = keys[pos]
-        if key_bucketer is not None:
-            k_matched = key_bucketer(k_matched)
-        pdf = pd.DataFrame({"bucket": k_matched, "v": vals[pos]})
-        markers = pd.DataFrame({"bucket": pdf["bucket"].unique()})
-        markers["v"] = None
-        pdf = pdf[~pd.isna(pdf["v"])].drop_duplicates()
-        return pd.concat([pdf, markers], ignore_index=True)
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(key_field).alias("k"), F.col(value_field).alias("v"),
-    )
-    ts = dict(meta.dtypes)
-    k_t = key_type if key_type is not None else (
-        "string" if ts["k"] == "string" else "bigint")
-    v_t = "string" if ts["v"] == "string" else "bigint" if ts["v"] in (
-        "bigint", "int", "smallint", "tinyint") else "double"
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=f"bucket {k_t}, v {v_t}")
-        .distinct()
-        .collect()
-    )
-    return [(r["bucket"], r["v"]) for r in rows]
-
-
 def match_bucket_value_pairs(
     searcher, query_text: str, ts_field: str, interval: str,
     value_field: str, filters=(), distributed: bool = False,
@@ -2570,33 +1991,32 @@ def match_bucket_value_pairs(
     set — the foldable partial behind exact distinct-per-bucket
     aggregations: per-period/per-range distinct pairs UNION exactly
     (per-period cumulative counts would double-count a value seen in
-    two periods), so family serving folds these before attribution."""
-    unit = _DATE_UNITS[interval]
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
+    two periods), so family serving folds these before attribution.
+    The per-range partial emits its DISTINCT non-null pairs plus one
+    (bucket, NULL) presence marker per bucket with ≥1 matching doc, so
+    only bounded rows cross the Exchange; a global ``distinct()``
+    removes cross-range duplicates."""
+    bucketer = _date_bucketer(_DATE_UNITS[interval])
+
+    def partial(d, cols):
+        pdf = pd.DataFrame({"bucket": bucketer(cols[0]), "v": cols[1]})
+        markers = pd.DataFrame({"bucket": pdf["bucket"].unique()})
+        markers["v"] = None
+        pdf = pdf[~pd.isna(pdf["v"])].drop_duplicates()
+        out = pd.concat([pdf, markers], ignore_index=True)
+        return out["bucket"].to_numpy(), out["v"].to_numpy()
+
+    got = _match_set(
+        searcher, query_text, [ts_field, value_field], filters, partial,
+        distributed, schema=lambda t: f"bucket string, v {t[1]}",
+    )
+    if got is None:
         return set(), set()
     if distributed:
-        rows = _distinct_pairs_distributed(
-            searcher, ids, buckets, ts_field, value_field, filters,
-            key_bucketer=_date_bucketer(unit), key_type="string",
-        )
-        return (
-            {(b, v) for b, v in rows if v is not None},
-            {b for b, _ in rows},
-        )
-    _, (keys, vals) = _matched_with_cols(
-        searcher, ids, buckets, filters, [ts_field, value_field]
-    )
-    if keys.size == 0:
-        return set(), set()
-    uniq_dt, inv = np.unique(
-        np.asarray(keys).astype(f"datetime64[{unit}]"), return_inverse=True
-    )
-    labels_s = np.datetime_as_string(uniq_dt)
-    mask = ~pd.isna(vals)
-    pairs = set(zip(labels_s[inv[mask]].tolist(), vals[mask].tolist()))
-    return pairs, set(labels_s.tolist())
+        rows = [(r["bucket"], r["v"]) for r in got.distinct().collect()]
+    else:
+        rows = [(_py(b), _py(v)) for b, v in zip(*got)]
+    return {(b, v) for b, v in rows if v is not None}, {b for b, _ in rows}
 
 
 def match_agg_cumulative_cardinality(
@@ -2633,7 +2053,6 @@ def match_agg_percentile_ranks(
     OpenSearch interpolates over a t-digest; the exact ≤-fraction is
     deterministic and SQL-expressible.  Distributed mode folds the same
     per-range (value, count) histogram as stats/percentiles."""
-    _check_filters(filters)
     return percentile_ranks_from_hist(
         *match_value_hist(searcher, query_text, field, filters, distributed),
         values,
@@ -2662,55 +2081,28 @@ def search_constant_score(
     """constant_score query (OpenSearch ``constant_score`` — filter
     context): every doc matching ANY query term and passing *filters*
     scores exactly *boost*; ranking is therefore (doc_id ASC), fully
-    deterministic.  Driver mode gathers the filtered match union;
-    distributed mode emits per-range lowest-k partials through one
-    docmeta cogroup (the global lowest-k is a subset of their union), so
-    only k rows per range cross the shuffle — no scoring work at all,
-    the point of filter context."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        docs = _lowest_matched_distributed(searcher, ids, buckets, filters, k)
-    else:
-        m_ids, _ = _matched_with_cols(searcher, ids, buckets, filters, [])
-        docs = np.sort(m_ids)[:k]
-    return [(int(d), float(boost)) for d in docs]
+    deterministic.  Distributed mode emits per-range lowest-k partials
+    through one docmeta cogroup (the global lowest-k is a subset of
+    their union), so only k rows per range cross the shuffle — no
+    scoring work at all, the point of filter context."""
+    return [
+        (int(d), float(boost))
+        for d in _lowest_matched(searcher, query_text, filters, k,
+                                 distributed)
+    ]
 
 
-def _lowest_matched_distributed(searcher, labels, buckets, filters, k: int):
-    """The *k* lowest matched docIDs under *filters*: per-range
-    match ∩ filtered-docmeta → per-range lowest-k partial → one bounded
-    global sort-limit."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        if post_pdf.empty or meta_pdf.empty:
-            return pd.DataFrame({"doc_id": []}).astype({"doc_id": "int64"})
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = np.sort(meta_pdf["doc_id"].to_numpy(np.int64))
-        matched = matched[_member_sorted(matched, meta_ids)]
-        return pd.DataFrame({"doc_id": np.sort(matched)[:k]})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(range_id_col(cfg).alias("range_id"), "doc_id")
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema="doc_id long")
-        .orderBy("doc_id")
-        .limit(k)
-        .collect()
-    )
+def _lowest_matched(searcher, query_text, filters, k: int, distributed):
+    """The *k* lowest matched docIDs under *filters*: per-range lowest-k
+    partial → one bounded global sort-limit."""
+    got = _match_set(searcher, query_text, [], filters,
+                     lambda d, cols: (d[:k],), distributed,
+                     schema="doc_id long")
+    if got is None:
+        return np.empty(0, dtype=np.int64)
+    if not distributed:
+        return got[0]
+    rows = got.orderBy("doc_id").limit(k).collect()
     return np.array([int(r["doc_id"]) for r in rows], dtype=np.int64)
 
 
@@ -2771,7 +2163,6 @@ def match_agg_value_count(
     matching docs — with single-valued, null-free docvalues this is the
     match-set size under the filters.  Distributed mode sums the folded
     histogram's counts (only (value, count) pairs cross the shuffle)."""
-    _check_filters(filters)
     _, counts = match_value_hist(
         searcher, query_text, field, filters, distributed
     )
@@ -2786,83 +2177,23 @@ def match_agg_weighted_avg(
     ``aggs:weighted_avg``): Σ(value·weight) / Σ(weight) over matching
     docs, returned as exact integer components (n, sum_vw, sum_w) plus
     the quotient scaled to 10⁴ — integral fields stay exact end-to-end
-    so the SQL oracle pins bit-for-bit.  Distributed mode emits ONE
-    (n, Σvw, Σw) partial per docID range — the minimal additive
-    sufficient statistic crosses the shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    empty = {"n": 0, "sum_vw": 0, "sum_w": 0, "wavg_e4": None}
-    if not ids:
-        return empty
-    if distributed:
-        n, s_vw, s_w = _weighted_avg_distributed(
-            searcher, ids, buckets, value_field, weight_field, filters
-        )
-    else:
-        _, (v, w) = _matched_with_cols(
-            searcher, ids, buckets, filters, [value_field, weight_field]
-        )
-        if v.size == 0:
-            return empty
-        n = int(v.size)
-        s_vw = int((v.astype(np.int64) * w.astype(np.int64)).sum())
-        s_w = int(w.astype(np.int64).sum())
+    so the SQL oracle pins bit-for-bit.  (n, Σvw, Σw) are three of the
+    six additive moments matrix_stats folds (x = value, y = weight), so
+    one moment row per docID range crosses the shuffle."""
+    n, _, s_w, _, _, s_vw = match_matrix_moments(
+        searcher, query_text, value_field, weight_field, filters,
+        distributed,
+    )
+    return weighted_avg_from_sums(n, s_vw, s_w)
+
+
+def weighted_avg_from_sums(n: int, s_vw: int, s_w: int) -> dict:
+    """The weighted_avg result from its additive sums (n, Σvw, Σw) —
+    shared by match_agg_weighted_avg and the family cross-period fold."""
     if n == 0 or s_w == 0:
-        return empty
-    wavg_e4 = (s_vw * 10**4 // s_w if s_vw >= 0
-               else -((-s_vw * 10**4) // s_w))
-    return {"n": n, "sum_vw": s_vw, "sum_w": s_w, "wavg_e4": wavg_e4}
-
-
-def _weighted_avg_distributed(
-    searcher, labels, buckets, value_field, weight_field, filters
-):
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"n": [], "s_vw": [], "s_w": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        v = meta_pdf["v"].to_numpy()[order]
-        w = meta_pdf["w"].to_numpy()[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        vv = v[pos].astype(np.int64)
-        ww = w[pos].astype(np.int64)
-        return pd.DataFrame({
-            "n": [int(vv.size)],
-            "s_vw": [int((vv * ww).sum())],
-            "s_w": [int(ww.sum())],
-        })
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(value_field).alias("v"), F.col(weight_field).alias("w"),
-    )
-    row = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema="n long, s_vw long, s_w long")
-        .agg(F.sum("n").alias("n"), F.sum("s_vw").alias("s_vw"),
-             F.sum("s_w").alias("s_w"))
-        .collect()[0]
-    )
-    return (int(row["n"] or 0), int(row["s_vw"] or 0), int(row["s_w"] or 0))
+        return {"n": 0, "sum_vw": 0, "sum_w": 0, "wavg_e4": None}
+    return {"n": n, "sum_vw": s_vw, "sum_w": s_w,
+            "wavg_e4": _tdiv(s_vw * 10**4, s_w)}
 
 
 def _tdiv(num: int, den: int) -> int:
@@ -2915,26 +2246,30 @@ def match_matrix_moments(
 ) -> tuple[int, int, int, int, int, int]:
     """The six additive moment sums (n, Σx, Σy, Σx², Σy², Σxy) of a
     docvalue pair over the match set — matrix_stats' foldable partial
-    (the family cross-period fold sums these per period)."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return (0, 0, 0, 0, 0, 0)
-    if distributed:
-        return _matrix_stats_distributed(
-            searcher, ids, buckets, field_x, field_y, filters
-        )
-    _, (x, y) = _matched_with_cols(
-        searcher, ids, buckets, filters, [field_x, field_y]
+    (the family cross-period fold sums these per period).  Distributed
+    mode emits ONE six-moment row per docID range and folds them with
+    decimal(38,0) sums (int64-safe per range by the bounded range size;
+    decimal at the global fold keeps exactness at 10¹²-doc scale)."""
+    names = ("n", "sx", "sy", "sxx", "syy", "sxy")
+
+    def partial(d, cols):
+        x, y = (c.astype(np.int64) for c in cols)
+        return ([x.size], [int(x.sum())], [int(y.sum())],
+                [int((x * x).sum())], [int((y * y).sum())],
+                [int((x * y).sum())])
+
+    got = _match_set(
+        searcher, query_text, [field_x, field_y], filters, partial,
+        distributed, schema=", ".join(f"{c} long" for c in names),
     )
-    if x.size == 0:
+    if got is None:
         return (0, 0, 0, 0, 0, 0)
-    xl = x.astype(np.int64)
-    yl = y.astype(np.int64)
-    return (
-        int(xl.size), int(xl.sum()), int(yl.sum()), int((xl * xl).sum()),
-        int((yl * yl).sum()), int((xl * yl).sum()),
-    )
+    if not distributed:
+        return tuple(int(c[0]) for c in got)
+    row = got.agg(*[
+        F.sum(F.col(c).cast("decimal(38,0)")).alias(c) for c in names
+    ]).collect()[0]
+    return tuple(int(row[c] or 0) for c in names)
 
 
 def matrix_stats_from_moments(
@@ -2959,68 +2294,6 @@ def matrix_stats_from_moments(
         else (1 if s >= 0 else -1) * ((s * s * 10**6) // (vx * vy))
     )
     return out
-
-
-def _matrix_stats_distributed(
-    searcher, labels, buckets, field_x, field_y, filters
-):
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"n": [], "sx": [], "sy": [], "sxx": [], "syy": [], "sxy": []}
-        )
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        x = meta_pdf["x"].to_numpy()[order]
-        y = meta_pdf["y"].to_numpy()[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        xl = x[pos].astype(np.int64)
-        yl = y[pos].astype(np.int64)
-        return pd.DataFrame({
-            "n": [int(xl.size)],
-            "sx": [int(xl.sum())], "sy": [int(yl.sum())],
-            "sxx": [int((xl * xl).sum())], "syy": [int((yl * yl).sum())],
-            "sxy": [int((xl * yl).sum())],
-        })
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(field_x).alias("x"), F.col(field_y).alias("y"),
-    )
-    dec = "decimal(38,0)"
-    row = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(
-            eval_cog,
-            schema="n long, sx long, sy long, sxx long, syy long, sxy long",
-        )
-        .agg(*[
-            F.sum(F.col(c).cast(dec)).alias(c)
-            for c in ("n", "sx", "sy", "sxx", "syy", "sxy")
-        ])
-        .collect()[0]
-    )
-    return tuple(
-        int(row[c] or 0) for c in ("n", "sx", "sy", "sxx", "syy", "sxy")
-    )
 
 
 def match_agg_filters(
@@ -3054,7 +2327,6 @@ def match_agg_date_range(
     allowed.  Distributed mode folds the (timestamp, count) histogram —
     bound evaluation happens once on the driver over the folded
     histogram."""
-    _check_filters(filters)
     return date_range_from_hist(
         *match_value_hist(searcher, query_text, ts_field, filters,
                           distributed),
@@ -3115,36 +2387,12 @@ def match_agg_multi_terms(
     """Multi-terms aggregation over the match set (OpenSearch
     ``aggs:multi_terms``): counts per composite (source₁, …, sourceₙ)
     docvalue tuple, ordered by (count DESC, tuple ASC), top-*k* — the
-    composite agg's tuple machinery with terms-agg ordering.
-    Distributed mode reuses the composite per-range partial (only
+    composite agg's tuple machinery with terms-agg ordering (only
     (tuple, count) rows cross the shuffle); ordering happens over the
     folded buckets."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        rows = _composite_distributed(
-            searcher, ids, buckets, sources, size=2**31 - 1, after=None,
-            filters=filters,
-        )
-    else:
-        m_ids, cols = _matched_with_cols(
-            searcher, ids, buckets, filters, list(sources)
-        )
-        if m_ids.size == 0:
-            return []
-        pdf = pd.DataFrame({f: c for f, c in zip(sources, cols)})
-        grouped = (
-            pdf.groupby(list(sources), sort=True).size().reset_index(name="n")
-        )
-        rows = [
-            (*(v.item() if hasattr(v, "item") else v for v in rec[:-1]),
-             int(rec[-1]))
-            for rec in grouped.itertuples(index=False)
-        ]
-    rows = sorted(rows, key=lambda r: (-r[-1], r[:-1]))
-    return rows[:k]
+    rows = _tuple_counts(searcher, query_text, sources, filters,
+                         distributed, size=2**31 - 1)
+    return sorted(rows, key=lambda r: (-r[-1], r[:-1]))[:k]
 
 
 _AUTO_DH_INTERVALS = ("minute", "hour", "day", "month", "year")
@@ -3164,7 +2412,6 @@ def match_agg_auto_date_histogram(
     one strftime.  Both the interval decision and the counts derive
     from the folded (timestamp, count) histogram, so the scale path is
     the same bounded fold as every other metric agg."""
-    _check_filters(filters)
     return auto_dh_from_hist(
         *match_value_hist(searcher, query_text, ts_field, filters,
                           distributed),
@@ -3191,12 +2438,10 @@ def auto_dh_from_hist(vals, counts, max_buckets):
     trunc = vals.astype(f"datetime64[{unit}]").astype("datetime64[s]")
     # unique the datetime64 codes before formatting (labels only for
     # the unique buckets — see match_agg_date_histogram)
-    uniq_dt, inv = np.unique(trunc, return_inverse=True)
+    uniq_dt, n = _fold_counts(trunc, counts)
     labels = np.char.replace(
         np.datetime_as_string(uniq_dt, unit="s"), "T", " "
     )
-    n = np.zeros(uniq_dt.size, dtype=np.int64)
-    np.add.at(n, inv, counts)
     return chosen, [(str(u), int(c)) for u, c in zip(labels, n)]
 
 
@@ -3228,7 +2473,6 @@ def match_agg_boxplot(
     nearest-rank derivation from the (value, count) histogram is
     strictly stronger and SQL-pinnable.  Distributed mode folds the same
     bounded per-range histogram partial as stats/percentiles."""
-    _check_filters(filters)
     return boxplot_from_hist(
         *match_value_hist(searcher, query_text, field, filters, distributed)
     )
@@ -3279,7 +2523,6 @@ def match_agg_t_test(
     *filter_b* (each ANDed with the shared *filters*).  Two bounded
     histogram folds — the scale shape of every other metric agg — and
     exact integer arithmetic end-to-end (see t_test_from_hists)."""
-    _check_filters(filters)
     va, ca = match_value_hist(
         searcher, query_text, field, tuple(filters) + tuple(filter_a),
         distributed)
@@ -3375,7 +2618,6 @@ def match_agg_string_stats(
     (value, count) histogram partial as every metric agg — character
     counting happens once per DISTINCT value on the driver, cost ∝
     field cardinality."""
-    _check_filters(filters)
     return string_stats_from_hist(
         *match_value_hist(searcher, query_text, field, filters, distributed)
     )
@@ -3391,94 +2633,29 @@ def match_agg_top_metrics(
     *metrics) rows in rank order.  Distributed mode emits per-range
     top-k partials (the global top-k is a subset of their union) — only
     k rows per range cross the shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
     fields = [sort_field, *metric_fields]
-    if distributed:
-        return _top_metrics_distributed(
-            searcher, ids, buckets, fields, k, ascending, filters)
-    m_ids, cols = _matched_with_cols(searcher, ids, buckets, filters, fields)
-    if m_ids.size == 0:
+
+    def partial(d, cols):
+        i_b, _ = _topk_by_field(d, cols[0], k, ascending)
+        pos = np.searchsorted(d, i_b)
+        return (i_b, *[c[pos] for c in cols])
+
+    got = _match_set(
+        searcher, query_text, fields, filters, partial, distributed,
+        schema=lambda t: "doc_id long, "
+        + ", ".join(f"c{j} {x}" for j, x in enumerate(t)),
+    )
+    if got is None:
         return []
-    i_b, _ = _topk_by_field(m_ids, cols[0], k, ascending)
-    pos_all = np.argsort(m_ids, kind="stable")
-    pos = pos_all[np.searchsorted(m_ids[pos_all], i_b)]
-
-    def _py(v):
-        if isinstance(v, np.datetime64):
-            return pd.Timestamp(v).to_pydatetime()
-        return v.item() if hasattr(v, "item") else v
-
-    return [
-        (int(d), *[_py(c[p]) for c in cols])
-        for d, p in zip(i_b.tolist(), pos.tolist())
-    ]
-
-
-def _top_metrics_distributed(
-    searcher, labels, buckets, fields, k, ascending, filters
-):
-    """Per-range top-k partial → one bounded global re-rank (the
-    bucket-free sibling of _top_hits_distributed)."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-    ncols = len(fields)
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], **{f"c{j}": [] for j in range(ncols)}})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        cols = [meta_pdf[f"c{j}"].to_numpy()[order][pos] for j in range(ncols)]
-        i_b, _ = _topk_by_field(matched, cols[0], k, ascending)
-        sel = np.argsort(matched, kind="stable")
-        sp = sel[np.searchsorted(matched[sel], i_b)]
-        return pd.DataFrame({
-            "doc_id": i_b,
-            **{f"c{j}": cols[j][sp] for j in range(ncols)},
-        })
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        *[F.col(f).alias(f"c{j}") for j, f in enumerate(fields)],
-    )
-    ts = dict(meta.dtypes)
-    schema = "doc_id long, " + ", ".join(
-        f"c{j} {ts[f'c{j}']}" for j in range(ncols))
-    sort0 = F.asc("c0") if ascending else F.desc("c0")
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=schema)
-        .orderBy(sort0, F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-
-    def _pyr(v):
-        return v.item() if hasattr(v, "item") else v
-
-    return [
-        (int(r["doc_id"]), *[_pyr(r[f"c{j}"]) for j in range(ncols)])
-        for r in rows
-    ]
+    if distributed:
+        sort0 = F.asc("c0") if ascending else F.desc("c0")
+        rows = [
+            (r["doc_id"], *(r[f"c{j}"] for j in range(len(fields))))
+            for r in got.orderBy(sort0, F.asc("doc_id")).limit(k).collect()
+        ]
+    else:
+        rows = zip(*got)
+    return [(int(d), *map(_py, rest)) for d, *rest in rows]
 
 
 def match_agg_sampler(
@@ -3498,32 +2675,29 @@ def match_agg_sampler(
     ascending, the selected set is exactly {rank ≤ max_per_value within
     its value group}, so the sample is the lowest shard_size of those
     candidates (SQL-pinnable via row_number).  Returns exact
-    count/min/max/sum of *metric_field* over the sample.  Distributed
-    mode: per-range candidates are pre-cut to the per-range lowest
-    shard_size (plain) or per-(range, value) lowest max_per_value
-    (diversified) — both provably superset the global sample — so only
-    bounded partials cross the shuffle."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return _sampler_stats(
-            np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64))
-    fields = [metric_field] + ([diversify_field] if diversify_field else [])
-    if distributed:
-        rows = _sampler_candidates_distributed(
-            searcher, ids, buckets, fields, shard_size, max_per_value,
-            filters)
-        m_ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mvals = np.array([r[1] for r in rows])
-        dvals = np.array([r[2] for r in rows]) if diversify_field else None
-    else:
-        m_ids, cols = _matched_with_cols(
-            searcher, ids, buckets, filters, fields)
-        mvals = cols[0]
-        dvals = cols[1] if diversify_field else None
-    m_ids, mvals = _sampler_select(
-        m_ids, mvals, dvals, shard_size, max_per_value)
+    count/min/max/sum of *metric_field* over the sample.  The partial is
+    the candidate rule of :func:`sampler_candidates`, applied per docID
+    range in distributed mode — its candidates provably superset the
+    global sample — so only bounded partials cross the shuffle."""
+    got = _sampler_candidates(
+        searcher, query_text, shard_size, metric_field, filters,
+        diversify_field, max_per_value, distributed,
+    )
+    m_ids, mvals = _sampler_select(*got, shard_size, max_per_value)
     return _sampler_stats(m_ids, mvals)
+
+
+def _cap_per_value(dvals, cap):
+    """Keep-mask over docID-ordered *dvals*: a doc is kept while fewer
+    than *cap* earlier docs share its value."""
+    uniq, inv = np.unique(dvals, return_inverse=True)
+    seen = np.zeros(uniq.size, dtype=np.int64)
+    keep = np.zeros(inv.size, dtype=bool)
+    for i, g in enumerate(inv.tolist()):
+        if seen[g] < cap:
+            seen[g] += 1
+            keep[i] = True
+    return keep
 
 
 def _sampler_select(m_ids, mvals, dvals, shard_size, max_per_value):
@@ -3537,15 +2711,7 @@ def _sampler_select(m_ids, mvals, dvals, shard_size, max_per_value):
     order = np.argsort(m_ids, kind="stable")
     m_ids, mvals = m_ids[order], mvals[order]
     if dvals is not None:
-        dvals = dvals[order]
-        # rank within value group, docID order: selected iff rank ≤ cap
-        uniq, inv = np.unique(dvals, return_inverse=True)
-        seen = np.zeros(uniq.size, dtype=np.int64)
-        keep = np.zeros(m_ids.size, dtype=bool)
-        for i, g in enumerate(inv.tolist()):
-            if seen[g] < max_per_value:
-                seen[g] += 1
-                keep[i] = True
+        keep = _cap_per_value(dvals[order], max_per_value)
         m_ids, mvals = m_ids[keep], mvals[keep]
     return m_ids[:shard_size], mvals[:shard_size]
 
@@ -3573,98 +2739,40 @@ def sampler_candidates(
     capped set supersets the global capped set, so extra low-docID
     locals could push a globally-selected doc past a local shard cut —
     the cut is only sound after the global re-cap."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    e = np.empty(0, dtype=np.int64)
-    if not ids:
-        return e, e, (e if diversify_field else None)
-    fields = [metric_field] + ([diversify_field] if diversify_field else [])
-    m_ids, cols = _matched_with_cols(searcher, ids, buckets, filters, fields)
-    mvals = cols[0]
-    dvals = cols[1] if diversify_field else None
-    order = np.argsort(m_ids, kind="stable")
-    m_ids, mvals = m_ids[order], mvals[order]
-    if dvals is None:
-        return m_ids[:shard_size], mvals[:shard_size], None
-    dvals = dvals[order]
-    uniq, inv = np.unique(dvals, return_inverse=True)
-    seen = np.zeros(uniq.size, dtype=np.int64)
-    keep = np.zeros(m_ids.size, dtype=bool)
-    for i, g in enumerate(inv.tolist()):
-        if seen[g] < max_per_value:
-            seen[g] += 1
-            keep[i] = True
-    return m_ids[keep], mvals[keep], dvals[keep]
-
-
-def _sampler_candidates_distributed(
-    searcher, labels, buckets, fields, shard_size, max_per_value, filters
-):
-    """Per-range bounded candidate partials for sampler: lowest
-    shard_size docs per range (plain) or lowest max_per_value per
-    (range, value) (diversified) — every globally selected doc is
-    guaranteed present (a global candidate is a per-range candidate of
-    the same rule), rows crossing the shuffle bounded by
-    ranges × shard_size (plain) / ranges × values × cap (diversified)."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-    diversified = len(fields) == 2
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        cols = {"doc_id": [], "mv": [], **({"dv": []} if diversified else {})}
-        empty = pd.DataFrame(cols)
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        matched = np.sort(matched)
-        pos = np.searchsorted(meta_ids, matched)
-        mv = meta_pdf["mv"].to_numpy()[order][pos]
-        if not diversified:
-            return pd.DataFrame({
-                "doc_id": matched[:shard_size], "mv": mv[:shard_size]})
-        dv = meta_pdf["dv"].to_numpy()[order][pos]
-        uniq, inv = np.unique(dv, return_inverse=True)
-        seen = np.zeros(uniq.size, dtype=np.int64)
-        keep = np.zeros(matched.size, dtype=bool)
-        for i, g in enumerate(inv.tolist()):
-            if seen[g] < max_per_value:
-                seen[g] += 1
-                keep[i] = True
-        return pd.DataFrame({
-            "doc_id": matched[keep], "mv": mv[keep], "dv": dv[keep]})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    sel = [F.col(fields[0]).alias("mv")]
-    if diversified:
-        sel.append(F.col(fields[1]).alias("dv"))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id", *sel)
-    ts = dict(meta.dtypes)
-    schema = f"doc_id long, mv {ts['mv']}" + (
-        f", dv {ts['dv']}" if diversified else "")
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=schema)
-        .collect()
+    return _sampler_candidates(
+        searcher, query_text, shard_size, metric_field, filters,
+        diversify_field, max_per_value, distributed=False,
     )
-    return [
-        (int(r["doc_id"]), r["mv"], r["dv"] if diversified else None)
-        for r in rows
-    ]
+
+
+def _sampler_candidates(searcher, query_text, shard_size, metric_field,
+                        filters, diversify_field, max_per_value,
+                        distributed):
+    diversified = diversify_field is not None
+    fields = [metric_field] + ([diversify_field] if diversified else [])
+
+    def partial(d, cols):
+        if not diversified:
+            return d[:shard_size], cols[0][:shard_size]
+        keep = _cap_per_value(cols[1], max_per_value)
+        return d[keep], cols[0][keep], cols[1][keep]
+
+    got = _match_set(
+        searcher, query_text, fields, filters, partial, distributed,
+        schema=lambda t: f"doc_id long, mv {t[0]}"
+        + (f", dv {t[1]}" if diversified else ""),
+    )
+    if got is None:
+        e = np.empty(0, dtype=np.int64)
+        return e, e, (e if diversified else None)
+    if distributed:
+        rows = got.collect()
+        got = (
+            np.array([r["doc_id"] for r in rows], dtype=np.int64),
+            np.array([r["mv"] for r in rows]),
+            *([np.array([r["dv"] for r in rows])] if diversified else []),
+        )
+    return got if diversified else (*got, None)
 
 
 # ------------------------------------------------------- join-field queries
@@ -3692,7 +2800,7 @@ def search_has_child(
     if pids.size == 0:
         return []
     # parenthood requires a LIVE parent doc
-    live = _docvalues_ids(searcher)
+    live, _ = _meta_ids_vals(searcher, ())
     m = _member_sorted(pids, live)
     if searcher.deleted.size:
         m &= ~_member_sorted(pids, searcher.deleted)
@@ -3830,7 +2938,7 @@ def search_has_child_scored(
         )
         return [(int(r["parent"]), float(r["score"])) for r in rows]
     # driver path: numpy fold over the docvalues cache
-    meta_ids, meta_p = _meta_ids_vals(searcher, filters, parent_field)
+    meta_ids, (meta_p,) = _meta_ids_vals(searcher, filters, [parent_field])
     rows = searcher._pruned_slice_rows(list(labels), buckets)
     by_range: dict[int, list] = {}
     for r in rows:
@@ -3865,7 +2973,7 @@ def search_has_child_scored(
     keep = n_f >= min_children
     pids, s_f, n_f, mx_f, mn_f = (
         pids[keep], s_f[keep], n_f[keep], mx_f[keep], mn_f[keep])
-    live = _docvalues_ids(searcher)
+    live, _ = _meta_ids_vals(searcher, ())
     m = _member_sorted(pids, live)
     if deleted.size:
         m &= ~_member_sorted(pids, deleted)
@@ -3873,18 +2981,6 @@ def search_has_child_scored(
     score = _CHILD_FOLDS[score_mode](s_f[m], n_f[m], mx_f[m], mn_f[m])
     order = np.lexsort((pids, -np.round(score, tie_round)))[:k]
     return [(int(pids[i]), float(score[i])) for i in order]
-
-
-def _docvalues_ids(searcher) -> np.ndarray:
-    """Sorted live docIDs from the docvalues cache (or one narrow
-    docmeta scan on cache-budget overflow)."""
-    try:
-        return _docvalues(searcher).ids()
-    except _DVOverBudget:
-        ds = pads.dataset(f"{searcher.index_dir}/docmeta")
-        ids = ds.to_table(columns=["doc_id"])["doc_id"].to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        return np.sort(ids)
 
 
 def search_has_parent(
@@ -3898,12 +2994,11 @@ def search_has_parent(
     set is bounded by the parent query's match set (broadcast-join scale
     shape: the 'in' filter ships the matched-parent list, the child scan
     stays distributed)."""
-    ids, buckets = _match_query_ids(searcher, parent_query)
-    if not ids:
+    got = _match_set(searcher, parent_query, [], (), lambda d, cols: (d,),
+                     distributed=False)
+    if got is None:
         return []
-    parents = _matched_union(searcher, ids, buckets)
-    if parents.size == 0:
-        return []
+    (parents,) = got
     flt = list(filters) + [(parent_field, "in", [int(p) for p in parents])]
     if distributed:
         meta = searcher.spark.read.parquet(
@@ -3922,35 +3017,13 @@ def search_has_parent(
             .collect()
         )
         return [(int(r["doc_id"]), int(r["pid"])) for r in rows]
-    try:
-        dv = _docvalues(searcher)
-        m = dv.mask(flt)
-        child_ids = dv.ids()[m]
-        pid = dv.np_col(parent_field)[m]
-    except _DVOverBudget:
-        searcher._dv_cache = _DV_DISABLED
-        ds = pads.dataset(f"{searcher.index_dir}/docmeta")
-        tbl = ds.to_table(columns=["doc_id", parent_field],
-                          filter=pa_filter_expr(flt))
-        child_ids = tbl["doc_id"].to_numpy(
-            zero_copy_only=False).astype(np.int64)
-        pid = tbl[parent_field].to_numpy(zero_copy_only=False)
+    child_ids, (pid,) = _meta_ids_vals(searcher, flt, [parent_field])
     if searcher.deleted.size:
         keep = ~_member_sorted(child_ids, searcher.deleted)
         child_ids, pid = child_ids[keep], pid[keep]
     order = np.argsort(child_ids)[:k]
     return [(int(c), int(p))
             for c, p in zip(child_ids[order], pid[order])]
-
-
-def _matched_union(searcher, ids, buckets) -> np.ndarray:
-    """Sorted matched docIDs (any-term union), deletes honored."""
-    rows = searcher._pruned_slice_rows(list(ids), buckets,
-                                       columns=_UNION_COLS)
-    matched = _union_docids_rows(rows)
-    if searcher.deleted.size:
-        matched = matched[~_member_sorted(matched, searcher.deleted)]
-    return np.sort(matched)
 
 
 # ------------------------------------------------------------- ip docvalues
@@ -4040,15 +3113,12 @@ def ip_prefix_from_hist(vals: np.ndarray, counts: np.ndarray,
     if vals.size == 0:
         return []
     shift = 32 - prefix_length
-    nets = (vals.astype(np.int64) >> shift) << shift
-    order = np.argsort(nets, kind="stable")
-    nets, c = nets[order], counts[order]
-    bounds = np.flatnonzero(np.concatenate(([True], nets[1:] != nets[:-1])))
-    sums = np.add.reduceat(c, bounds)
+    nets, sums = _fold_counts((vals.astype(np.int64) >> shift) << shift,
+                              counts)
     keep = sums >= min_doc_count
     return [
         (f"{ipv4_str(int(n))}/{prefix_length}", int(s))
-        for n, s in zip(nets[bounds][keep], sums[keep])
+        for n, s in zip(nets[keep], sums[keep])
     ]
 
 

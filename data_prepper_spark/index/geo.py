@@ -14,30 +14,25 @@ Reference behaviors matched (as specs, not code):
 - geotile_grid aggregation    — Web-Mercator z/x/y tile buckets
 
 Scale shape: every aggregation ships only bounded per-docID-range
-partials through ONE cogroup (the `_agg2_distributed` kernel — the
-two-field sibling of filtered._agg_distributed); the distance query ships
-k rows per range.  Distance and tile math uses the SAME formula text on
-the engine (numpy) and oracle (DuckDB) sides; ranks and buckets pin on
-rounded values per the repo-wide contract.
+partials through ONE cogroup (filtered._match_set, the match-set
+kernel; the cell aggregations are filtered._bucket_counts over the two
+coordinate columns); the distance query ships k rows per range.
+Distance and tile math uses the SAME formula text on the engine (numpy)
+and oracle (DuckDB) sides; ranks and buckets pin on rounded values per
+the repo-wide contract.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import functions as F
 
-from .scoring import _member_sorted
 from .filtered import (
-    _UNION_COLS,
-    _check_filters,
-    _match_query_ids,
-    _matched_with_cols,
+    _bucket_counts,
+    _match_set,
     _tdiv,
-    _union_docids_rows,
     match_matrix_moments,
     match_value_hist,
-    spark_filter_col,
 )
 
 EARTH_R_M = 6371000.0
@@ -112,28 +107,29 @@ def search_geo_distance(
     with pure integer range filters before any trig runs; the exact
     haversine decides membership and rank.  Distributed mode ships k
     rows per docID range through one cogroup."""
-    _check_filters(filters)
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
     pre = list(filters) + _bbox_prefilter(clat_e6, clon_e6, radius_m,
                                           lat_field, lon_field)
+
+    def partial(d, cols):
+        dist = np.round(haversine_m(*cols, clat_e6, clon_e6), round_dp)
+        keep = dist <= radius_m
+        d, dist = d[keep], dist[keep]
+        sel = np.lexsort((d, dist))[:k]
+        return d[sel], dist[sel]
+
+    got = _match_set(searcher, query_text, [lat_field, lon_field], pre,
+                     partial, distributed, schema="doc_id long, dist double")
+    if got is None:
+        return []
     if distributed:
-        rows = _geo_distance_distributed(
-            searcher, ids, buckets, lat_field, lon_field,
-            clat_e6, clon_e6, radius_m, k, pre, round_dp)
-        return rows
-    m_ids, (lat, lon) = _matched_with_cols(
-        searcher, ids, buckets, pre, [lat_field, lon_field])
-    if m_ids.size == 0:
-        return []
-    d = np.round(haversine_m(lat, lon, clat_e6, clon_e6), round_dp)
-    keep = d <= radius_m
-    m_ids, d = m_ids[keep], d[keep]
-    if m_ids.size == 0:
-        return []
-    order = np.lexsort((m_ids, d))[:k]
-    return [(int(i), float(v)) for i, v in zip(m_ids[order], d[order])]
+        rows = [
+            (r["doc_id"], r["dist"])
+            for r in got.orderBy(F.asc("dist"), F.asc("doc_id"))
+            .limit(k).collect()
+        ]
+    else:
+        rows = zip(*got)
+    return [(int(i), float(v)) for i, v in rows]
 
 
 def _bbox_prefilter(clat_e6, clon_e6, radius_m, lat_field, lon_field):
@@ -160,118 +156,6 @@ def _bbox_prefilter(clat_e6, clon_e6, radius_m, lat_field, lon_field):
     ]
 
 
-def _geo_distance_distributed(
-    searcher, labels, buckets, lat_field, lon_field,
-    clat_e6, clon_e6, radius_m, k, filters, round_dp=4,
-):
-    """Per-range top-k by rounded distance → one bounded global re-rank
-    (the computed-column sibling of filtered._top_metrics_distributed)."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"doc_id": [], "dist": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        lat = meta_pdf["lat"].to_numpy()[order][pos]
-        lon = meta_pdf["lon"].to_numpy()[order][pos]
-        d = np.round(haversine_m(lat, lon, clat_e6, clon_e6), round_dp)
-        keep = d <= radius_m
-        matched, d = matched[keep], d[keep]
-        if matched.size == 0:
-            return empty
-        sel = np.lexsort((matched, d))[:k]
-        return pd.DataFrame({"doc_id": matched[sel], "dist": d[sel]})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(lat_field).alias("lat"), F.col(lon_field).alias("lon"),
-    )
-    rows = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema="doc_id long, dist double")
-        .orderBy(F.asc("dist"), F.asc("doc_id"))
-        .limit(k)
-        .collect()
-    )
-    return [(int(r["doc_id"]), float(r["dist"])) for r in rows]
-
-
-def _agg2_distributed(
-    searcher, labels, buckets, field_x, field_y, filters, bucketer2,
-    bucket_type: str = "string",
-):
-    """Two-field computed-bucket scale path: per-range match ∩ docvalues
-    → bucketer2(x, y) → per-range partial counts → global sum.  Only
-    (bucket, count) pairs cross the shuffle."""
-    from .tokenize import range_id_col
-
-    cfg = searcher.cfg
-    deleted = searcher.deleted
-
-    def eval_cog(post_pdf: pd.DataFrame, meta_pdf: pd.DataFrame) -> pd.DataFrame:
-        import numpy as np
-        import pandas as pd
-
-        empty = pd.DataFrame({"bucket": [], "n": []})
-        if post_pdf.empty or meta_pdf.empty:
-            return empty
-        matched = _union_docids_rows(post_pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        meta_ids = meta_pdf["doc_id"].to_numpy(np.int64)
-        order = np.argsort(meta_ids)
-        meta_ids = meta_ids[order]
-        matched = matched[_member_sorted(matched, meta_ids)]
-        if matched.size == 0:
-            return empty
-        pos = np.searchsorted(meta_ids, matched)
-        x = meta_pdf["x"].to_numpy()[order][pos]
-        y = meta_pdf["y"].to_numpy()[order][pos]
-        b = bucketer2(x, y)
-        uniq, counts = np.unique(b, return_counts=True)
-        return pd.DataFrame({"bucket": uniq, "n": counts.astype(np.int64)})
-
-    meta = searcher.spark.read.parquet(f"{searcher.index_dir}/docmeta")
-    if filters:
-        meta = meta.filter(spark_filter_col(filters))
-    meta = meta.select(
-        range_id_col(cfg).alias("range_id"), "doc_id",
-        F.col(field_x).alias("x"), F.col(field_y).alias("y"),
-    )
-    agg = (
-        searcher._pruned_slices(list(labels), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .cogroup(meta.groupBy("range_id"))
-        .applyInPandas(eval_cog, schema=f"bucket {bucket_type}, n long")
-        .groupBy("bucket")
-        .agg(F.sum("n").alias("n"))
-        .orderBy("bucket")
-        .collect()
-    )
-    return [(r["bucket"], int(r["n"])) for r in agg]
-
-
 def match_agg_geo_bounds(
     searcher, query_text: str, lat_field: str, lon_field: str,
     filters=(), distributed: bool = False,
@@ -280,7 +164,6 @@ def match_agg_geo_bounds(
     tight integer bounding box of the match set — EXACT extremal folds
     of the two microdegree histograms (wrap_longitude=false
     semantics)."""
-    _check_filters(filters)
     lat_v, lat_c = match_value_hist(
         searcher, query_text, lat_field, filters, distributed)
     lon_v, _ = match_value_hist(
@@ -319,48 +202,24 @@ def match_agg_geo_distance(
     [from, to) meter rings around an origin — ring membership tests the
     ROUNDED (4 dp) haversine so engine and SQL bucket identically.
     Every ring emitted, zero counts kept, rings may overlap."""
-    _check_filters(filters)
     rngs = [(str(lbl), lo, hi) for lbl, lo, hi in ranges_m]
 
-    def ring_counts(d):
-        out = []
+    def rings(lat, lon):
+        d = np.round(haversine_m(lat, lon, clat_e6, clon_e6), 4)
+        # one label per (doc, matching ring) — overlap-safe
+        labels_out = []
         for lbl, lo, hi in rngs:
             m = np.ones(d.shape, dtype=bool)
             if lo is not None:
                 m &= d >= lo
             if hi is not None:
                 m &= d < hi
-            out.append((lbl, int(m.sum())))
-        return out
+            labels_out.extend([lbl] * int(m.sum()))
+        return np.array(labels_out, dtype=object)
 
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return [(lbl, 0) for lbl, _, _ in rngs]
-    if distributed:
-        def bucketer2(lat, lon):
-            d = np.round(haversine_m(lat, lon, clat_e6, clon_e6), 4)
-            # one row per (doc, matching ring) — overlap-safe: emit the
-            # ring LABELS, repeated per membership, via object array
-            labels_out = []
-            for lbl, lo, hi in rngs:
-                m = np.ones(d.shape, dtype=bool)
-                if lo is not None:
-                    m &= d >= lo
-                if hi is not None:
-                    m &= d < hi
-                labels_out.extend([lbl] * int(m.sum()))
-            return np.array(labels_out, dtype=object)
-
-        got = dict(_agg2_distributed(
-            searcher, ids, buckets, lat_field, lon_field, filters,
-            bucketer2))
-        return [(lbl, got.get(lbl, 0)) for lbl, _, _ in rngs]
-    m_ids, (lat, lon) = _matched_with_cols(
-        searcher, ids, buckets, filters, [lat_field, lon_field])
-    if m_ids.size == 0:
-        return [(lbl, 0) for lbl, _, _ in rngs]
-    d = np.round(haversine_m(lat, lon, clat_e6, clon_e6), 4)
-    return ring_counts(d)
+    got = dict(_bucket_counts(searcher, query_text, [lat_field, lon_field],
+                              filters, distributed, rings, "string"))
+    return [(lbl, got.get(lbl, 0)) for lbl, _, _ in rngs]
 
 
 def match_agg_geotile(
@@ -371,27 +230,14 @@ def match_agg_geotile(
     match counts per Web-Mercator "z/x/y" tile key, ascending key
     order.  The x tile is exact integer arithmetic on the microdegree
     grid; y shares the Mercator formula text with the SQL oracle."""
-    _check_filters(filters)
 
-    def bucketer2(lat, lon):
+    def tiles(lat, lon):
         x, y = geotile_xy(lat, lon, zoom)
         return np.array([f"{zoom}/{a}/{b}" for a, b in
                          zip(x.tolist(), y.tolist())], dtype=object)
 
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        return _agg2_distributed(
-            searcher, ids, buckets, lat_field, lon_field, filters,
-            bucketer2)
-    m_ids, (lat, lon) = _matched_with_cols(
-        searcher, ids, buckets, filters, [lat_field, lon_field])
-    if m_ids.size == 0:
-        return []
-    b = bucketer2(lat, lon)
-    uniq, counts = np.unique(b, return_counts=True)
-    return [(str(u), int(c)) for u, c in zip(uniq, counts)]
+    return _bucket_counts(searcher, query_text, [lat_field, lon_field],
+                          filters, distributed, tiles, "string")
 
 
 GEOHASH_B32 = "0123456789bcdefghjkmnpqrstuvwxyz"
@@ -445,22 +291,7 @@ def match_agg_geohash(
     lat/lon linearly; geotile divides Mercator y).  Same scale shape:
     per-range (cell, count) partials cross the shuffle, cost bounded by
     the cell cardinality, never the match count."""
-    _check_filters(filters)
-
-    def bucketer2(lat, lon):
-        return geohash_cells(lat, lon, precision)
-
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        return _agg2_distributed(
-            searcher, ids, buckets, lat_field, lon_field, filters,
-            bucketer2)
-    m_ids, (lat, lon) = _matched_with_cols(
-        searcher, ids, buckets, filters, [lat_field, lon_field])
-    if m_ids.size == 0:
-        return []
-    b = bucketer2(lat, lon)
-    uniq, counts = np.unique(b, return_counts=True)
-    return [(str(u), int(c)) for u, c in zip(uniq, counts)]
+    return _bucket_counts(
+        searcher, query_text, [lat_field, lon_field], filters, distributed,
+        lambda lat, lon: geohash_cells(lat, lon, precision), "string",
+    )

@@ -17,13 +17,14 @@ OpenSearch, chosen for determinism:
 - per-doc term presence is counted once (``fg`` = sample docs
   CONTAINING the term, like significant_terms' doc counts).
 
-Scale shape: the match-set sample is gathered per docID range (each
-range contributes at most *sample_size* of its lowest matched docIDs —
-the global lowest-k is a subset of the union of per-range lowest-k),
-the fetch join touches *sample_size* source rows, and tokenization is
-one Catalyst ``regexp_extract_all`` + ``explode`` over those rows —
-foreground cost is bounded by the sample, never the corpus.  Background
-dfs come from the already-aggregated termstats sidecar.
+Scale shape: the match-set sample is gathered per docID range through
+the match-set kernel (filtered._match_set; each range contributes at
+most *sample_size* of its lowest matched docIDs — the global lowest-k is
+a subset of the union of per-range lowest-k), the fetch join touches
+*sample_size* source rows, and tokenization is one Catalyst
+``regexp_extract_all`` + ``explode`` over those rows — foreground cost
+is bounded by the sample, never the corpus. Background dfs come from the
+already-aggregated termstats sidecar.
 
 Reference anchor: the reference delegates search UX to OpenSearch
 (opensearch sink); significant_text is part of that serving surface
@@ -32,8 +33,6 @@ Reference anchor: the reference delegates search UX to OpenSearch
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..hashing import pmod, xxh64_signed
@@ -56,24 +55,16 @@ def significant_text(
     sample (see module docstring for the exact rule).  *filters* are
     docvalue predicates restricting the match set (driver gather path);
     *distributed* gathers the sample per docID range instead (filters
-    unsupported there — the sample partial doesn't read docmeta)."""
-    from .filtered import _match_query_ids, _matched_with_cols, _tdiv
+    unsupported there)."""
+    from .filtered import _lowest_matched, _tdiv
 
-    ids, buckets = _match_query_ids(searcher, query_text)
-    if not ids:
-        return []
-    if distributed:
-        if filters:
-            raise ValueError(
-                "significant_text distributed sampling does not support "
-                "filters; use the driver gather path"
-            )
-        sample = _sample_distributed(searcher, ids, buckets, sample_size)
-    else:
-        m_ids, _ = _matched_with_cols(searcher, ids, buckets, filters, [])
-        if m_ids.size == 0:
-            return []
-        sample = np.sort(m_ids)[:sample_size]
+    if distributed and filters:
+        raise ValueError(
+            "significant_text distributed sampling does not support "
+            "filters; use the driver gather path"
+        )
+    sample = _lowest_matched(searcher, query_text, filters, sample_size,
+                             distributed)
     if sample.size == 0:
         return []
     f_tot = int(sample.size)
@@ -116,30 +107,3 @@ def significant_text(
         scored.append((term, _tdiv(num, den), fg_n, bg_n))
     scored.sort(key=lambda t: (-t[1], t[0]))
     return scored[:k]
-
-
-def _sample_distributed(searcher, ids, buckets, sample_size: int) -> np.ndarray:
-    """Lowest *sample_size* matched docIDs, gathered per docID range:
-    each range emits its own lowest-*sample_size* partial (the global
-    lowest-k is a subset of their union), one bounded sort-limit picks
-    the final sample."""
-    from .scoring import _member_sorted
-    from .filtered import _UNION_COLS, _union_docids_rows
-
-    deleted = searcher.deleted
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        matched = _union_docids_rows(pdf.to_dict("records"))
-        if deleted.size:
-            matched = matched[~_member_sorted(matched, deleted)]
-        return pd.DataFrame({"doc_id": np.sort(matched)[:sample_size]})
-
-    rows = (
-        searcher._pruned_slices(list(ids), buckets, columns=_UNION_COLS)
-        .groupBy("range_id")
-        .applyInPandas(kernel, schema="doc_id long")
-        .orderBy("doc_id")
-        .limit(sample_size)
-        .collect()
-    )
-    return np.array([int(r["doc_id"]) for r in rows], dtype=np.int64)

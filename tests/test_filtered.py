@@ -241,9 +241,10 @@ def test_sorted_respects_tombstones(spark, filtered_index, oracle_tiny,
 
 def test_filtered_wand_route_identity(spark, filtered_index, oracle_tiny,
                                       ts_by_doc):
-    """The filter-during-WAND driver strategy (disabled by default — see
-    BMW_COVERAGE_THRESHOLD) returns exactly the candidate-driven path's
-    results when forced, including through the MAX_SEG brute fallback."""
+    """The filter-during-WAND driver strategy (taken above
+    BMW_COVERAGE_THRESHOLD candidate-block coverage, 0.5 by default)
+    returns exactly the candidate-driven path's results when forced,
+    including through the MAX_SEG brute fallback."""
     import data_prepper_spark.index.filtered as fl
 
     s = BM25Searcher(spark, filtered_index)
@@ -1445,3 +1446,174 @@ def test_script_score(spark, agg_index, oracle_tiny, tiny_pages_pd):
     # scripts must read exactly one docvalue field
     with pytest.raises(ValueError):
         search_script_score(s, "the", "_score * 2")
+
+
+# ------------------------------------------- tombstones in match-set reads
+
+@pytest.fixture(scope="session")
+def agg_index_tomb(agg_index, oracle_tiny, workdir):
+    """A copy of agg_index with every fourth doc matching "the data"
+    tombstoned: every match-set reader must deny them."""
+    from data_prepper_spark.index.deletes import delete_docs
+
+    d = os.path.join(workdir, "index_agg_tomb")
+    shutil.rmtree(d, ignore_errors=True)
+    shutil.copytree(agg_index, d)
+    deleted = sorted(_agg_matched(oracle_tiny))[::4]
+    delete_docs(d, deleted)
+    return d, set(deleted)
+
+
+def _match_set_entries():
+    """(id, fn(searcher, source_df, distributed)) for every match-set
+    reader of index/filtered.py and sigtext.py on agg_index columns."""
+    from data_prepper_spark.index import filtered as fl
+    from data_prepper_spark.index.sigtext import significant_text
+
+    q = "the data"
+    flt = [("warc_ts", "<", _ts(700))]
+    named = [("early", [("warc_ts", "<", _ts(300))]),
+             ("short", [("n_chars", "<", 400)])]
+    return [
+        ("terms", lambda s, src, d: fl.match_agg_terms(s, q, "prio", flt, d)),
+        ("histogram", lambda s, src, d: fl.match_agg_histogram(
+            s, q, "n_chars", 100, flt, d)),
+        ("date_histogram", lambda s, src, d: fl.match_agg_date_histogram(
+            s, q, "warc_ts", "minute", flt, d)),
+        ("value_hist", lambda s, src, d: [
+            a.tolist() for a in fl.match_value_hist(s, q, "n_chars", flt, d)]),
+        ("stats", lambda s, src, d: fl.match_agg_stats(
+            s, q, "n_chars", flt, d)),
+        ("extended_stats", lambda s, src, d: fl.match_agg_extended_stats(
+            s, q, "n_chars", flt, d)),
+        ("percentiles", lambda s, src, d: fl.match_agg_percentiles(
+            s, q, "n_chars", filters=flt, distributed=d)),
+        ("percentile_ranks", lambda s, src, d: fl.match_agg_percentile_ranks(
+            s, q, "n_chars", [100, 500], flt, d)),
+        ("mad", lambda s, src, d: fl.match_agg_median_absolute_deviation(
+            s, q, "n_chars", flt, d)),
+        ("cardinality", lambda s, src, d: fl.match_agg_cardinality(
+            s, q, "n_chars", flt, d)),
+        ("range", lambda s, src, d: fl.match_agg_range(
+            s, q, "n_chars", [("lo", None, 500), ("hi", 500, None)], flt, d)),
+        ("boxplot", lambda s, src, d: fl.match_agg_boxplot(
+            s, q, "n_chars", flt, d)),
+        ("value_count", lambda s, src, d: fl.match_agg_value_count(
+            s, q, "n_chars", flt, d)),
+        ("rare_terms", lambda s, src, d: fl.match_agg_rare_terms(
+            s, q, "n_chars", 1, flt, d)),
+        ("string_stats", lambda s, src, d: fl.match_agg_string_stats(
+            s, q, "alt", [("alt", "exists", None)], d)),
+        ("date_range", lambda s, src, d: fl.match_agg_date_range(
+            s, q, "warc_ts", [("a", None, "2025-01-01T00:05:00"),
+                              ("b", "2025-01-01T00:05:00", None)], flt, d)),
+        ("auto_date_histogram",
+         lambda s, src, d: fl.match_agg_auto_date_histogram(
+             s, q, "warc_ts", 5, flt, d)),
+        ("terms_stats", lambda s, src, d: fl.match_agg_terms_stats(
+            s, q, "prio", "n_chars", flt, d)),
+        ("date_histogram_stats",
+         lambda s, src, d: fl.match_agg_date_histogram_stats(
+             s, q, "warc_ts", "minute", "n_chars", flt, d)),
+        ("significant_terms", lambda s, src, d: fl.match_agg_significant_terms(
+            s, q, "prio", 5, flt, d)),
+        ("top_hits", lambda s, src, d: fl.match_agg_top_hits(
+            s, q, "prio", "warc_ts", 2, filters=flt, distributed=d)),
+        ("top_metrics", lambda s, src, d: fl.match_agg_top_metrics(
+            s, q, "warc_ts", ["n_chars", "prio"], 4, filters=flt,
+            distributed=d)),
+        ("composite", lambda s, src, d: fl.match_agg_composite(
+            s, q, ["lang", "prio"], 3, ("en", 1), flt, d)),
+        ("multi_terms", lambda s, src, d: fl.match_agg_multi_terms(
+            s, q, ["lang", "prio"], 4, flt, d)),
+        ("bucket_value_pairs", lambda s, src, d: fl.match_bucket_value_pairs(
+            s, q, "warc_ts", "minute", "prio", flt, d)),
+        ("cumulative_cardinality",
+         lambda s, src, d: fl.match_agg_cumulative_cardinality(
+             s, q, "warc_ts", "minute", "alt", flt, d)),
+        ("adjacency_matrix", lambda s, src, d: fl.match_agg_adjacency_matrix(
+            s, q, named, "n_chars", flt, d)),
+        ("filters", lambda s, src, d: fl.match_agg_filters(
+            s, q, named, "n_chars", flt, d)),
+        ("weighted_avg", lambda s, src, d: fl.match_agg_weighted_avg(
+            s, q, "n_chars", "prio", flt, d)),
+        ("matrix_stats", lambda s, src, d: fl.match_agg_matrix_stats(
+            s, q, "n_chars", "prio", flt, d)),
+        ("t_test", lambda s, src, d: fl.match_agg_t_test(
+            s, q, "n_chars", [("prio", "<", 3)], [("prio", ">=", 3)], flt, d)),
+        ("t_test_paired", lambda s, src, d: fl.match_agg_t_test_paired(
+            s, q, "n_chars", "prio", flt, d)),
+        ("sampler", lambda s, src, d: fl.match_agg_sampler(
+            s, q, 9, "n_chars", flt, distributed=d)),
+        ("diversified_sampler", lambda s, src, d: fl.match_agg_sampler(
+            s, q, 9, "n_chars", flt, "prio", 2, d)),
+        ("sorted", lambda s, src, d: fl.search_sorted(
+            s, q, "warc_ts", 10, filters=flt, distributed=d)),
+        ("constant_score", lambda s, src, d: fl.search_constant_score(
+            s, q, flt, 2.0, 10, d)),
+        ("random_score", lambda s, src, d: fl.search_random_score(
+            s, q, "seed", 10, flt, d)),
+        ("significant_text", lambda s, src, d: significant_text(
+            s, src, q, k=5, sample_size=20, distributed=d)),
+    ]
+
+
+@pytest.mark.parametrize(
+    "name", [n for n, _ in _match_set_entries()])
+def test_match_set_entry_tombstoned(spark, agg_index_tomb, oracle_tiny,
+                                    name):
+    """Every match-set reader on a tombstoned index: driver ==
+    distributed, and no deleted doc reaches a doc-listing result."""
+    d, deleted = agg_index_tomb
+    fn = dict(_match_set_entries())[name]
+    s = BM25Searcher(spark, d)
+    source = spark.createDataFrame(
+        [(xxh64_signed(u), txt) for u, txt in oracle_tiny.extracted.items()],
+        "doc_id long, text string",
+    )
+    got = fn(s, source, False)
+    assert got == fn(s, source, True)
+    if name in ("sorted", "constant_score", "random_score"):
+        assert got and not {doc for doc, _ in got} & deleted
+
+
+def test_match_set_tombstone_oracle(spark, agg_index_tomb, oracle_tiny,
+                                    tiny_pages_pd, ts_by_doc):
+    """stats / terms / top_hits over the LIVE matched docs equal a
+    pure-python oracle, with and without a docvalue filter, in both
+    modes — the kernel's tombstone deny mask and its filtered-docmeta
+    intersection each decide these numbers."""
+    from data_prepper_spark.index.filtered import (
+        match_agg_stats,
+        match_agg_terms,
+        match_agg_top_hits,
+    )
+
+    d, deleted = agg_index_tomb
+    nchars = {xxh64_signed(r.url): len(r.text)
+              for r in tiny_pages_pd.itertuples(index=False)}
+    prio = {doc: n % 5 + 1 for doc, n in nchars.items()}
+    s = BM25Searcher(spark, d)
+    for flt in ([], [("warc_ts", "<", _ts(600))]):
+        live = (_agg_matched(oracle_tiny) - deleted) & _allowed_set(
+            ts_by_doc, flt)
+        vals = sorted(nchars[doc] for doc in live)
+        want_stats = {"count": len(vals), "min": vals[0], "max": vals[-1],
+                      "sum": sum(vals), "avg": sum(vals) / len(vals)}
+        want_terms = sorted(
+            (p, sum(1 for doc in live if prio[doc] == p))
+            for p in {prio[doc] for doc in live})
+        want_hits = []
+        for p in sorted({prio[doc] for doc in live}):
+            top = sorted((doc for doc in live if prio[doc] == p),
+                         key=lambda doc: (-nchars[doc], doc))[:2]
+            want_hits.extend((p, doc, nchars[doc]) for doc in top)
+        for dist in (False, True):
+            ctx = (flt, dist)
+            assert match_agg_stats(s, "the data", "n_chars", flt,
+                                   dist) == want_stats, ctx
+            assert match_agg_terms(s, "the data", "prio", flt,
+                                   dist) == want_terms, ctx
+            assert match_agg_top_hits(s, "the data", "prio", "n_chars", 2,
+                                      filters=flt,
+                                      distributed=dist) == want_hits, ctx

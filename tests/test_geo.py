@@ -653,3 +653,64 @@ def test_agg_ip_prefix(spark, geo_index, oracle_tiny, tiny_pages_pd,
 
     with _pt.raises(ValueError):
         match_agg_ip_prefix(s, "the", "ip_int", 40)
+
+
+@pytest.fixture(scope="module")
+def geo_index_tomb(geo_index, oracle_tiny, workdir):
+    """geo_index with every fourth doc matching "the data" tombstoned."""
+    import shutil
+
+    from data_prepper_spark.index.deletes import delete_docs
+
+    d = os.path.join(workdir, "index_geo_tomb")
+    shutil.rmtree(d, ignore_errors=True)
+    shutil.copytree(geo_index, d)
+    deleted = sorted(_matched(oracle_tiny, "the data"))[::4]
+    delete_docs(d, deleted)
+    return d, set(deleted)
+
+
+def _geo_entries():
+    from data_prepper_spark.index import filtered as fl
+    from data_prepper_spark.index import geo
+
+    q = "the data"
+    flt = [("n_chars", "<", 600)]
+    c = (10_000_000, 20_000_000)
+    return [
+        ("geo_distance", lambda s, d: geo.search_geo_distance(
+            s, q, "lat_e6", "lon_e6", *c, 9_000_000.0, 10, flt, d)),
+        ("geo_bounds", lambda s, d: geo.match_agg_geo_bounds(
+            s, q, "lat_e6", "lon_e6", flt, d)),
+        ("geo_centroid", lambda s, d: geo.match_agg_geo_centroid(
+            s, q, "lat_e6", "lon_e6", flt, d)),
+        ("geo_distance_agg", lambda s, d: geo.match_agg_geo_distance(
+            s, q, "lat_e6", "lon_e6", *c,
+            [("near", None, 5_000_000.0), ("far", 3_000_000.0, None)],
+            flt, d)),
+        ("geotile", lambda s, d: geo.match_agg_geotile(
+            s, q, "lat_e6", "lon_e6", 2, flt, d)),
+        ("geohash", lambda s, d: geo.match_agg_geohash(
+            s, q, "lat_e6", "lon_e6", 1, flt, d)),
+        ("ip_range", lambda s, d: fl.match_agg_ip_range(
+            s, q, "ip_int", ["0.0.0.0/1", "128.0.0.0/1"], flt, d)),
+        ("ip_prefix", lambda s, d: fl.match_agg_ip_prefix(
+            s, q, "ip_int", 2, flt, d)),
+        ("has_child", lambda s, d: fl.search_has_child(
+            s, q, "parent_id", 10, filters=flt, distributed=d)),
+        ("has_parent", lambda s, d: fl.search_has_parent(
+            s, q, "parent_id", 10, flt, d)),
+    ]
+
+
+@pytest.mark.parametrize("name", [n for n, _ in _geo_entries()])
+def test_geo_match_set_entry_tombstoned(spark, geo_index_tomb, name):
+    """Every geo / ip / join match-set reader on a tombstoned index:
+    driver == distributed, and no deleted doc is listed."""
+    d, deleted = geo_index_tomb
+    fn = dict(_geo_entries())[name]
+    s = BM25Searcher(spark, d)
+    got = fn(s, False)
+    assert got == fn(s, True)
+    if name in ("geo_distance", "has_parent"):
+        assert got and not {doc for doc, _ in got} & deleted

@@ -3,10 +3,14 @@ entry on Spark and its oracle_sql() twin on DuckDB at sf0.01, compare
 row count, column names, and order-insensitive values.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+Each query argument is an entry name or an fnmatch glob over the names
+(quote it for the shell), e.g. 'ft_agg_*' 'ft_geo_*' ft_sorted_topk.
 """
 
 from __future__ import annotations
 
+import fnmatch
 import math
 import os
 import sys
@@ -41,7 +45,7 @@ def norm_rows(cols, rows):
 
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    only = sys.argv[2:]
 
     import duckdb
     from pyspark.sql import SparkSession
@@ -73,7 +77,7 @@ def main():
     oracles = entry.oracle_sql()
     n_pass = n_fail = 0
     for name, fn in qs.items():
-        if only and name not in only:
+        if only and not any(fnmatch.fnmatchcase(name, p) for p in only):
             continue
         try:
             sdf = fn(spark, sf_dir)
