@@ -5,6 +5,16 @@ df, cf, max_ub and the term string: the term dictionary, as Lucene's
 keeps docFreq with each term), ``docmeta`` and the one-row ``stats``,
 which the driver writes with pyarrow rather than a Spark job.
 
+Two routes write the same one-shot index.  A batch of fewer than
+:data:`LOCAL_DOCS` docs — a live micro-batch, a test fixture — is
+collected once as Arrow and built on the driver (:func:`_build_local`)
+by the very kernels the Spark stages run per group (the token stage's
+body, :func:`encode_slice_fn`), with pyarrow writes; bigger builds run
+the Spark stages below.  A Spark job costs ~0.3 s of fixed overhead
+here, so a 250-page delta took 19 jobs and ~6 s on Spark and takes
+~0.3 s on the driver.  The resumable :func:`build_index` and the fields
+build always use Spark.
+
 Data Prepper analogs (SURVEY.md):
   - groupBy(term, range_id).applyInPandas ≈ `aggregate` processor with the
     `append` action (collect per-key lists,
@@ -45,11 +55,13 @@ import shutil
 import numpy as np
 import pandas as pd
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.dataset as pads
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..hashing import xxh64_signed
+from ..hashing import xxh64_signed, xxh64_signed_arrow
+from ..textproc import extract_text_series
 from .codec import (
     PFOR_TAG,
     VARINT_TAG,
@@ -58,14 +70,33 @@ from .codec import (
     pfor_encode_runs,
     varint_encode_arr,
 )
-from .config import SLICE_SCHEMA, SLICE_SCHEMA_POS, IndexConfig
+from .config import (
+    SLICE_SCHEMA,
+    SLICE_SCHEMA_POS,
+    SLICE_STATS_SCHEMA,
+    TERMSTATS_SCHEMA,
+    TOKENS_POS_SCHEMA,
+    TOKENS_SCHEMA,
+    IndexConfig,
+    arrow_schema,
+)
 from .ledger import Ledger
 from .tokenize import (
     doc_src_from_pages,
     range_id_col,
+    range_ids,
     tokenize_stage,
     tokenize_stage_text,
+    tokens_frame,
+    with_doc_id,
 )
+
+# A build of fewer docs than this — or a merge whose sources hold fewer
+# in total — runs on the driver: one Arrow collect (builds), then the
+# Spark stages' own kernels, written with pyarrow in the same layout.
+# Below it a Spark stage's fixed job cost outweighs its parallelism;
+# set from the measured crossover (ROADMAP direction 2).
+LOCAL_DOCS = 32_768
 
 
 class BuildKilled(RuntimeError):
@@ -158,8 +189,10 @@ def encode_runs(
 
 
 def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: str = "varint", positions: bool = False):
-    """applyInPandas kernel over a COARSE (term_bucket, range_id) group:
-    emits one encoded slice row per term present in the group.
+    """The posting encode kernel: token rows (term_id, range_id, doc_id,
+    tf, dl[, pos_blob]) → one encoded slice row per (term_id, range_id)
+    run.  Spark applies it per COARSE (term_bucket, range_id) group; the
+    driver build applies it once to a whole small batch.
 
     Grouping by (term, range) directly would create |vocab|×|ranges| tiny
     pandas groups — per-group Arrow/pandas overhead then dominates the
@@ -170,11 +203,12 @@ def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: s
     Skew stays bounded: a group holds ~|tokens|/(buckets×ranges) rows by
     construction, head terms included (range_id splits them).
 
-    The group encodes GROUP-AT-ONCE through :func:`encode_runs`, one run
-    per term, so per-term Python work is a few byte-slices (pinned
-    against per-term encodes by
+    The batch encodes GROUP-AT-ONCE through :func:`encode_runs`, one run
+    per (term_id, range_id), so per-term Python work is a few byte-slices
+    (pinned against per-term encodes by
     tests/test_codec.py::test_encode_kernel_vectorized_identity and
-    ::test_encode_kernel_pfor_identity)."""
+    ::test_encode_kernel_pfor_identity).  Rows come out in (term_id,
+    range_id) order."""
 
     cols = [
         "term_id", "range_id", "df_slice", "cf_slice", "doc_ids", "tfs",
@@ -192,12 +226,15 @@ def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: s
         if not len(pdf):
             return pd.DataFrame([], columns=cols)
         terms = pdf["term_id"].to_numpy(np.int64)
+        rng = pdf["range_id"].to_numpy(np.int32)
         d = pdf["doc_id"].to_numpy(np.int64)
-        order = np.lexsort((d, terms))
-        terms, d = terms[order], d[order]
+        order = np.lexsort((d, rng, terms))
+        terms, rng, d = terms[order], rng[order], d[order]
         tf = pdf["tf"].to_numpy(np.int64)[order]
         dl = pdf["dl"].to_numpy(np.int64)[order]
-        runs = np.flatnonzero(np.r_[True, terms[1:] != terms[:-1]])  # term runs
+        runs = np.flatnonzero(np.r_[
+            True, (terms[1:] != terms[:-1]) | (rng[1:] != rng[:-1])
+        ])
         out = encode_runs(d, tf, dl, runs, avgdl, k1, b, block_size, codec)
         if positions:
             pos_blobs = pdf["pos_blob"].to_numpy()[order]
@@ -206,7 +243,7 @@ def encode_slice_fn(avgdl: float, k1: float, b: float, block_size: int, codec: s
                 VARINT_TAG + b"".join(pos_blobs[s:e]) for s, e in zip(runs, ends)
             ]
         out["term_id"] = terms[runs]
-        out["range_id"] = np.full(runs.size, np.int32(pdf["range_id"].iloc[0]))
+        out["range_id"] = rng[runs]
         return pd.DataFrame(out, columns=cols)
 
     return encode_vectorized
@@ -233,6 +270,75 @@ def _write_stats(index_dir: str, stats: dict) -> None:
 
 def _read_stats(index_dir: str) -> dict:
     return pads.dataset(os.path.join(index_dir, "stats")).to_table().to_pylist()[0]
+
+
+def _write_parquet(tbl: pa.Table, path: str, row_group_bytes: int | None = None) -> None:
+    """Write one parquet file of a driver-side stage so it reads back, in
+    pyarrow and in Spark, as the Spark stage's file does: snappy, no
+    schema metadata (pandas' and Arrow's keys made small files ~13%
+    larger), timestamps as INT96 (Spark's default, read back as
+    timestamp[ns] by pyarrow), and row groups of about *row_group_bytes*
+    (Spark's ``parquet.block.size``) so term_id row-group pruning sees
+    the same granularity."""
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    rows = None
+    if row_group_bytes and tbl.num_rows:
+        rows = max(1, tbl.num_rows * row_group_bytes // max(1, tbl.nbytes))
+    pq.write_table(
+        tbl.replace_schema_metadata(None), path, row_group_size=rows,
+        compression="snappy", store_schema=False,
+        use_deprecated_int96_timestamps=True,
+    )
+
+
+def _write_bucketed(tbl: pa.Table, root: str, n_buckets: int) -> None:
+    """One term_id-sorted file per ``term_bucket=pmod(term_id, B)`` dir
+    under *root* — the layout of the Spark stages' bucket-aligned writes.
+    The sort is stable, so rows of one term keep their input order."""
+    os.makedirs(root, exist_ok=True)
+    if not tbl.num_rows:
+        return
+    tid = tbl["term_id"].to_numpy()
+    bucket = np.mod(tid, n_buckets)
+    order = np.lexsort((tid, bucket))
+    tbl, bucket = tbl.take(order), bucket[order]
+    cuts = np.flatnonzero(np.r_[True, bucket[1:] != bucket[:-1], True])
+    for a, z in zip(cuts[:-1].tolist(), cuts[1:].tolist()):
+        _write_parquet(
+            tbl.slice(a, z - a),
+            os.path.join(root, f"term_bucket={bucket[a]}", "part-00000.parquet"),
+            row_group_bytes=1 << 20,
+        )
+
+
+def _termstats_table(
+    posts: pa.Table, vocab_ids: np.ndarray, vocab: pa.Array
+) -> pa.Table:
+    """termstats rows (term_id, df, cf, max_ub, term) of the slice rows
+    *posts*, term strings looked up in the sorted *vocab_ids* and their
+    aligned *vocab*; a term_id not in the vocabulary drops, as in the
+    Spark stage's inner join."""
+    tid = posts["term_id"].to_numpy()
+    if not tid.size:
+        return arrow_schema(TERMSTATS_SCHEMA).empty_table()
+    order = np.argsort(tid, kind="stable")
+    tid = tid[order]
+    runs = np.flatnonzero(np.r_[True, tid[1:] != tid[:-1]])
+    ids = tid[runs]
+    loc = np.searchsorted(vocab_ids, ids)
+    keep = loc < vocab_ids.size
+    keep[keep] = vocab_ids[loc[keep]] == ids[keep]
+
+    def agg(col, fn):
+        return fn.reduceat(posts[col].to_numpy()[order], runs)[keep]
+
+    return pa.table({
+        "term_id": ids[keep],
+        "df": agg("df_slice", np.add).astype(np.int64),
+        "cf": agg("cf_slice", np.add).astype(np.int64),
+        "max_ub": agg("max_ub", np.maximum).astype(np.float32),
+        "term": vocab.take(pa.array(loc[keep])),
+    }, schema=arrow_schema(TERMSTATS_SCHEMA))
 
 
 def _fingerprint(src_tag: str, cfg: IndexConfig) -> str:
@@ -265,7 +371,7 @@ def _write_termstats(
     """Write ``termstats`` from the written postings joined, in the same
     job, with the term strings of *terms* (any (term, term_id) frame).
     The inner join keeps only terms that still have postings."""
-    posts = spark.read.parquet(p["postings"])
+    posts = spark.read.schema(SLICE_STATS_SCHEMA).parquet(p["postings"])
     termstats = (
         posts.groupBy("term_id")
         .agg(
@@ -326,7 +432,9 @@ def build_index(
         )
         tokens.write.mode("overwrite").partitionBy("bgroup").parquet(p["staging"])
         ledger.commit("tokens", 0, input_fingerprint=fp)
-    tokens = spark.read.parquet(p["staging"])
+    tokens = spark.read.schema(
+        (TOKENS_POS_SCHEMA if cfg.positions else TOKENS_SCHEMA) + ", term_bucket int"
+    ).parquet(p["staging"])
 
     # ---- stage: docmeta + corpus stats ----
     if 0 not in ledger.completed("docmeta", fp):
@@ -410,6 +518,116 @@ def build_index(
     return stats
 
 
+def _stage_timer():
+    """``(timings, mark)``: ``mark(name)`` records under *name* the
+    seconds since the previous mark (or since the timer was made)."""
+    import time
+
+    timings: dict[str, float] = {}
+    t0 = [time.perf_counter()]
+
+    def mark(name: str) -> None:
+        now = time.perf_counter()
+        timings[name] = round(now - t0[0], 2)
+        t0[0] = now
+
+    return timings, mark
+
+
+def _collect_small(df: DataFrame) -> pa.Table | None:
+    """*df* as one Arrow table — one Spark job — when it has fewer than
+    :data:`LOCAL_DOCS` rows; None when it has more (the build goes to
+    Spark).  The limit makes the row count decide the route at no extra
+    job."""
+    tbl = pa.Table.from_batches(
+        df.limit(LOCAL_DOCS)._collect_as_arrow(empty_list_if_zero_records=False)
+    )
+    return tbl if tbl.num_rows < LOCAL_DOCS else None
+
+
+def _plain(col):
+    """Arrow's large string/binary as the regular types a Spark-written
+    file reads back as."""
+    if pa.types.is_large_string(col.type):
+        return col.cast(pa.string())
+    if pa.types.is_large_binary(col.type):
+        return col.cast(pa.binary())
+    return col
+
+
+def _build_local(
+    batch: pa.Table, texts: pd.Series, index_dir: str, cfg: IndexConfig, timer
+) -> dict:
+    """The one-shot build of a small batch on the driver, with no Spark
+    job: the token stage's body (:func:`tokenize.tokens_frame`) over the
+    whole batch, ONE :func:`encode_slice_fn` call over a global (term_id,
+    range_id, doc_id) lexsort, termstats from the encoded rows, and
+    pyarrow writes in the Spark build's layout — ``postings/bgroup=0/
+    term_bucket=*`` and ``termstats/term_bucket=*`` with term_id-sorted
+    rows, docmeta sorted by doc_id, :func:`_write_stats`, the ledger's
+    finalize.  *batch* holds doc_id, url and the docvalue columns,
+    aligned with *texts*.  Identity with the Spark build is pinned by
+    tests/test_local_route.py."""
+    timings, mark = timer
+    p = _paths(index_dir)
+    for d in p.values():
+        shutil.rmtree(d, ignore_errors=True)
+    threads = pa.cpu_count()
+    try:
+        tokens = tokens_frame(batch["doc_id"].to_numpy(), texts, cfg.positions)
+    finally:
+        pa.set_cpu_count(threads)  # the tokenizer pins Arrow to one thread
+    dic = pa.array(tokens["term"]).dictionary_encode()
+    vocab_ids = xxh64_signed_arrow(dic.dictionary)  # each distinct term once
+    tokens["term_id"] = vocab_ids[dic.indices.to_numpy()]
+    tokens["range_id"] = range_ids(tokens["doc_id"].to_numpy(), cfg.range_bits)
+    mark("t_tokens")
+
+    # docmeta: one row per doc with tokens, as the Spark stage's groupBy
+    ids, first = np.unique(tokens["doc_id"].to_numpy(), return_index=True)
+    doc_len = tokens["dl"].to_numpy()[first].astype(np.int32)
+    bid = batch["doc_id"].to_numpy()
+    by_id = np.argsort(bid, kind="stable")
+    meta = batch.take(by_id[np.searchsorted(bid, ids, sorter=by_id)])
+    url = pc.coalesce(_plain(meta["url"]), pc.cast(meta["doc_id"], pa.string()))
+    extra = [c for c in batch.column_names if c not in ("doc_id", "url")]
+    docmeta = pa.table({
+        "doc_id": ids, "url": url, "doc_len": doc_len,
+        **{c: _plain(meta[c]) for c in extra},
+    })
+    total_tokens = int(doc_len.sum())
+    avgdl = (total_tokens / ids.size) if ids.size else 0.0
+    stats = {
+        "n_docs": int(ids.size),
+        "total_tokens": total_tokens,
+        "avgdl": avgdl,
+        **cfg.to_dict(),
+    }
+    _write_stats(index_dir, stats)
+    _write_parquet(docmeta, os.path.join(p["docmeta"], "part-00000.parquet"))
+    mark("t_docmeta")
+
+    encode = encode_slice_fn(
+        avgdl, cfg.k1, cfg.b, cfg.block_size, cfg.codec, positions=cfg.positions
+    )
+    posts = pa.Table.from_pandas(
+        encode(tokens),
+        schema=arrow_schema(SLICE_SCHEMA_POS if cfg.positions else SLICE_SCHEMA),
+        preserve_index=False,
+    )
+    _write_bucketed(posts, os.path.join(p["postings"], "bgroup=0"), cfg.n_buckets)
+    mark("t_encode")
+    by_tid = np.argsort(vocab_ids, kind="stable")
+    _write_bucketed(
+        _termstats_table(posts, vocab_ids[by_tid], dic.dictionary.take(by_tid)),
+        p["termstats"], cfg.n_buckets,
+    )
+    mark("t_termstats")
+    stats["timings"] = json.dumps(timings)
+    Ledger(index_dir).commit("finalize", 0, token_count=total_tokens)
+    return stats
+
+
 def build_oneshot(
     spark: SparkSession,
     pages: DataFrame,
@@ -419,7 +637,15 @@ def build_oneshot(
 ) -> dict:
     """One-shot (non-resumable) build — the throughput-bench path.
     *field_cols*: extra pages columns stored as docvalues (filtered
-    search)."""
+    search).  Fewer than :data:`LOCAL_DOCS` pages in the indexed
+    language build on the driver (:func:`_build_local`)."""
+    timer = _stage_timer()
+    batch = _collect_small(
+        with_doc_id(pages, cfg).select("html", "doc_id", "url", *field_cols)
+    )
+    if batch is not None:
+        texts = extract_text_series(batch["html"].to_pandas())
+        return _build_local(batch.remove_column(0), texts, index_dir, cfg, timer)
     return build_oneshot_tokens(
         spark, tokenize_stage(pages, cfg), index_dir, cfg,
         doc_src=doc_src_from_pages(pages, cfg, field_cols),
@@ -438,14 +664,21 @@ def build_oneshot_text(
     """Build over a pre-extracted-text table (id, text) — e.g. the
     driver's `documents` table; no html extraction, no lang filter.
     *field_cols*: extra docs columns stored as docvalues (filtered
-    search)."""
-    tokens = tokenize_stage_text(
-        docs, id_col=id_col, text_col=text_col, positions=cfg.positions
-    )
-    doc_src = docs.select(
+    search).  Fewer than :data:`LOCAL_DOCS` docs build on the driver
+    (:func:`_build_local`)."""
+    timer = _stage_timer()
+    src_cols = [
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(id_col).cast("string").alias("url"),
         *field_cols,
+    ]
+    batch = _collect_small(docs.select(F.col(text_col), *src_cols))
+    if batch is not None:
+        texts = batch.column(0).to_pandas()
+        return _build_local(batch.remove_column(0), texts, index_dir, cfg, timer)
+    doc_src = docs.select(*src_cols)
+    tokens = tokenize_stage_text(
+        docs, id_col=id_col, text_col=text_col, positions=cfg.positions
     )
     return build_oneshot_tokens(spark, tokens, index_dir, cfg, doc_src=doc_src)
 
@@ -520,21 +753,12 @@ def build_oneshot_tokens(
     terms/urls ~free), sequential, and gives each consumer a column-pruned
     scan — docmeta never reads `term`, the posting encode never reads
     `url`.  Same shape as the resumable build's staging, so oneshot and
-    resumable share physics."""
-    import time as _time
-
-    timings: dict[str, float] = {}
-    _t0 = _time.perf_counter()
-
-    def _mark(name: str) -> None:
-        nonlocal _t0
-        now = _time.perf_counter()
-        timings[name] = round(now - _t0, 2)
-        _t0 = now
-
+    resumable share physics.  Tables whose schema is in hand are read
+    back with it (``spark.read.schema``): an inferring read costs a job."""
+    timings, _mark = _stage_timer()
     p = _paths(index_dir)
     tokens_df.write.mode("overwrite").parquet(p["staging"])
-    tokens = spark.read.parquet(p["staging"])
+    tokens = spark.read.schema(tokens_df.schema).parquet(p["staging"])
     _mark("t_tokens")
 
     dls = tokens.groupBy("doc_id").agg(F.first("dl").alias("doc_len"))
@@ -556,7 +780,7 @@ def build_oneshot_tokens(
         .write.mode("overwrite")
         .parquet(p["docmeta"])
     )
-    dm = spark.read.parquet(p["docmeta"])
+    dm = spark.read.schema(docmeta.schema).parquet(p["docmeta"])
     agg = dm.agg(
         F.count("*").alias("n_docs"), F.sum("doc_len").alias("total_tokens")
     ).collect()[0]

@@ -98,3 +98,24 @@ SLICE_SCHEMA = (
 # positional slices append one column; per-doc position counts are the
 # decoded tfs, so no extra offsets are stored
 SLICE_SCHEMA_POS = SLICE_SCHEMA + ", positions binary"
+# the slice columns termstats folds per term (index/build.py)
+SLICE_STATS_SCHEMA = "term_id long, df_slice long, cf_slice long, max_ub float"
+# the term dictionary: one row per term with postings (index/build.py)
+TERMSTATS_SCHEMA = "term_id long, df long, cf long, max_ub float, term string"
+
+_ARROW_TYPES = {
+    "long": "int64", "int": "int32", "float": "float32",
+    "binary": "binary", "string": "string",
+}
+
+
+def arrow_schema(ddl: str):
+    """The pyarrow schema of one of the flat DDL strings above — what the
+    driver writers give a table so it reads back as the Spark-written
+    one does."""
+    import pyarrow as pa
+
+    return pa.schema([
+        (n, pa.type_for_alias(_ARROW_TYPES[t]))
+        for n, t in (f.split() for f in ddl.split(","))
+    ])

@@ -243,8 +243,10 @@ def search_dsl(
             filters=filters, distributed=distributed)
     if kind == "match_all":
         from .filtered import _meta_ids_vals
+        from .scoring import _member_sorted
 
-        ids = _meta_ids_vals(searcher, ())[0][:k]
+        ids = _meta_ids_vals(searcher, ())[0]
+        ids = ids[~_member_sorted(ids, searcher.deleted)][:k]
         return [(int(d), 1.0) for d in ids.tolist()]
     if kind in ("match", "term"):
         from .boolquery import search_bool

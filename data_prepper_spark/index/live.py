@@ -2,12 +2,18 @@
 
 The north star's accept→filter→transform→index pipeline, run as a
 STREAM: each micro-batch of new pages builds a DELTA index (the normal
-one-shot build, unchanged) and MERGES it into the serving index via
+one-shot build) and MERGES it into the serving index via
 index/merge.py — Lucene's segment-commit model recast on Spark's
 exactly-once micro-batch engine.  The fold is one merge_indexes call:
 docs superseded by a newer delta (upserts) and tombstoned docs are
 dropped inside the same posting rewrite, so the base is rewritten once
 per fold.
+
+Below ``build.LOCAL_DOCS`` both halves run on the driver with the Spark
+stages' own kernels: a batch costs two Spark jobs (the emptiness check
+and the Arrow collect of the batch) instead of ~40, and becomes visible
+in about a second rather than ~11 s (tests/test_local_route.py pins the
+job count and the identity of the two routes).
 
 Layout under *index_dir*:
     CURRENT            — "<version>,<last_batch_id>" (atomic pointer)
@@ -156,7 +162,8 @@ def _doc_id_set(index_dir: str) -> np.ndarray:
     """Sorted doc_ids of one DELTA segment, read from its docmeta with
     pyarrow on the driver (no Spark job): delta docsets are bounded by a
     micro-batch's worth of docs.  The BASE index's docmeta is never read
-    here — merge_indexes semi-joins it against the drop set Spark-side."""
+    here — merge_indexes matches it against the drop set (Spark-side,
+    unless the fold is small enough for its driver route)."""
     tbl = pads.dataset(os.path.join(index_dir, "docmeta")).to_table(columns=["doc_id"])
     return np.sort(tbl["doc_id"].to_numpy())
 
@@ -179,9 +186,10 @@ def _fold(
         the docsets of the deltas newer than it;
       - merge_indexes adds each source's on-disk tombstones
         (live_delete_docs) to its drop set, keeps only the dropped docs
-        each source really holds (a Spark-side semi-join, so the BASE
-        docmeta is never collected), and drops their postings in the
-        same pass that recomputes the merged bounds.
+        each source really holds (a Spark-side semi-join, so a big BASE
+        docmeta is never collected; a small fold reads it on the
+        driver), and drops their postings in the same pass that
+        recomputes the merged bounds.
 
     A lone source with nothing to drop is published without a rewrite.
     """

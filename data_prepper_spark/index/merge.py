@@ -28,7 +28,7 @@ re-encodes only the rows that lost postings.
 
 Corpus stats come from data in hand: the sources' stored stats minus
 the dropped docs' doc_len, fetched by one semi-join collect bounded by
-the drop sets (the docmeta itself never reaches the driver), and the
+the drop sets (on the Spark route the docmeta never reaches the driver), and the
 driver writes the merged stats row (build._write_stats).  Term strings
 come from the union of the sources' termstats; the merged termstats
 inner-joins them with the merged postings, so a term whose postings
@@ -36,6 +36,17 @@ all dropped leaves the vocabulary.  Every Spark job of a merge moves
 posting or doc data.  Rank identity is pinned by tests/test_merge.py,
 tests/test_deletes.py and the ft_merged_bm25 / ft_purged_bm25 oracle
 entries.
+
+Small merges run on the driver.  When the sources' stored n_docs sum to
+fewer than ``build.LOCAL_DOCS`` (read from their stats rows, no job),
+the drop-set lookup and the three write stages — docmeta, postings,
+termstats — read the sources with pyarrow, run the same :func:`fold_fn`
+over each source's postings as one batch and write through the driver
+writers of index/build.py, in the same layout: no Spark job at all (the
+live fold of a micro-batch).  Validation, drop sets, stats and the ledger are
+shared by both routes; tests/test_local_route.py pins that they write
+the same rows.  The Spark route reads postings and termstats with their
+known schema: an inferring read costs a job per table.
 
 Each merge stage commits to the checkpoint ledger, so a killed merge
 resumes without recomputation — the same lease/positive-ack recast as
@@ -60,13 +71,18 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import SparkSession, functions as F
 
 from ..hashing import xxh64_signed
+from . import build
 from .build import _cuts, _paths, _read_stats, _write_stats, _write_termstats
+from .build import _termstats_table, _write_bucketed, _write_parquet
 from .build import encode_runs, run_bounds
 from .codec import (
     VARINT_TAG,
@@ -74,7 +90,14 @@ from .codec import (
     decode_uints_batch,
     varint_value_ends,
 )
-from .config import IndexConfig
+from .config import (
+    SLICE_SCHEMA,
+    SLICE_SCHEMA_POS,
+    SLICE_STATS_SCHEMA,
+    TERMSTATS_SCHEMA,
+    IndexConfig,
+    arrow_schema,
+)
 from .deletes import read_tombstones
 from .ledger import Ledger
 from .scoring import _member_sorted
@@ -193,6 +216,148 @@ def _dropped_docs(
     ]
 
 
+def _merge_docmeta_spark(spark, src_dirs, gone, out: str) -> None:
+    dm = None
+    for d, (ids, _) in zip(src_dirs, gone):
+        part = spark.read.parquet(os.path.join(d, "docmeta"))
+        if ids.size:
+            ids_df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
+            part = part.join(F.broadcast(ids_df), "doc_id", "left_anti")
+        dm = part if dm is None else dm.unionByName(part)
+    dup = dm.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
+    if dup:
+        _raise_overlap(dup[0]["doc_id"])
+    (
+        dm.repartitionByRange(8, "doc_id")
+        .sortWithinPartitions("doc_id")
+        .write.mode("overwrite")
+        .parquet(out)
+    )
+
+
+def _raise_overlap(doc_id) -> None:
+    raise ValueError(
+        f"doc_id {doc_id} appears in more than one source "
+        "index — merge requires disjoint doc-id spaces"
+    )
+
+
+def _merge_postings_spark(spark, src_dirs, cfgs, gone, avgdl, out: str) -> None:
+    posts = None
+    for i, (d, c, (ids, _)) in enumerate(zip(src_dirs, cfgs, gone)):
+        # collapse each source's bucket-groups into one bgroup id per
+        # source: the dir level is only a physical grouping, and a
+        # stable per-source id keeps the merged layout deterministic
+        src = spark.read.schema(
+            SLICE_SCHEMA_POS if c.positions else SLICE_SCHEMA
+        ).parquet(os.path.join(d, "postings")).withColumn(
+            "bgroup", F.lit(i).cast("int")
+        )
+        # dropped postings re-encode in their own source's codec
+        part = src.mapInPandas(fold_fn(ids, avgdl, c), schema=src.schema)
+        posts = part if posts is None else posts.unionByName(part)
+    (
+        # narrow local sort only — input files are term_id-sorted and
+        # never shuffled, this just restores per-output-file order when
+        # a task coalesced several small input files
+        posts.sortWithinPartitions("bgroup", "term_bucket", "term_id")
+        .write.mode("overwrite")
+        .option("parquet.block.size", 1 << 20)
+        .partitionBy("bgroup", "term_bucket")
+        .parquet(out)
+    )
+
+
+def _merge_termstats_spark(spark, src_dirs, p: dict, cfg: IndexConfig) -> None:
+    terms = None
+    for d in src_dirs:
+        part = spark.read.schema(TERMSTATS_SCHEMA).parquet(
+            os.path.join(d, "termstats")
+        ).select("term", "term_id")
+        terms = part if terms is None else terms.unionByName(part)
+    _write_termstats(spark, p, cfg, terms.dropDuplicates(["term_id"]))
+
+
+def _dropped_docs_local(
+    src_dirs: list[str], drops: list[np.ndarray]
+) -> list[tuple[np.ndarray, int]]:
+    """:func:`_dropped_docs` on the driver: each source's docmeta
+    (doc_id, doc_len) read with pyarrow — small sources only."""
+    out = []
+    for d, x in zip(src_dirs, drops):
+        if not x.size:
+            out.append((np.empty(0, dtype=np.int64), 0))
+            continue
+        t = _read_local(os.path.join(d, "docmeta"))
+        ids = t["doc_id"].to_numpy()
+        hit = _member_sorted(ids, x)
+        out.append((np.sort(ids[hit]), int(t["doc_len"].to_numpy()[hit].sum())))
+    return out
+
+
+def _read_local(table_dir: str, schema: pa.Schema | None = None) -> pa.Table:
+    """A table dir read with pyarrow: every column, or the columns of
+    *schema* cast to it (an empty table when the dir holds no file)."""
+    ds = pads.dataset(table_dir, partitioning="hive")
+    if schema is None:
+        return ds.to_table()
+    if not ds.files:
+        return schema.empty_table()
+    return ds.to_table(columns=schema.names).cast(schema)
+
+
+def _merge_docmeta_local(src_dirs, gone, out: str) -> None:
+    """The docmeta union minus the dropped docs, disjointness checked,
+    written sorted by doc_id as one file."""
+    shutil.rmtree(out, ignore_errors=True)
+    parts = []
+    for d, (ids, _) in zip(src_dirs, gone):
+        t = _read_local(os.path.join(d, "docmeta"))
+        if ids.size:
+            t = t.filter(pa.array(~_member_sorted(t["doc_id"].to_numpy(), ids)))
+        parts.append(t)
+    # Spark writes doc_id/url as required columns in a build and as
+    # optional ones in a merge: compare and concatenate types only
+    schema = pa.schema([f.with_nullable(True) for f in parts[0].schema])
+    dm = pa.concat_tables([t.cast(schema) for t in parts])
+    ids = dm["doc_id"].to_numpy()
+    order = np.argsort(ids, kind="stable")
+    dup = np.flatnonzero(ids[order][1:] == ids[order][:-1])
+    if dup.size:
+        _raise_overlap(ids[order][dup[0]])
+    _write_parquet(dm.take(order), os.path.join(out, "part-00000.parquet"))
+
+
+def _merge_postings_local(src_dirs, cfgs, gone, avgdl, out: str) -> None:
+    """Each source's slice rows through :func:`fold_fn` as one batch,
+    written under ``bgroup=<source index>`` per term_bucket."""
+    shutil.rmtree(out, ignore_errors=True)
+    for i, (d, c, (ids, _)) in enumerate(zip(src_dirs, cfgs, gone)):
+        schema = arrow_schema(SLICE_SCHEMA_POS if c.positions else SLICE_SCHEMA)
+        pdf = _read_local(os.path.join(d, "postings"), schema).to_pandas()
+        folded = next(fold_fn(ids, avgdl, c)([pdf]))
+        _write_bucketed(
+            pa.Table.from_pandas(folded, schema=schema, preserve_index=False),
+            os.path.join(out, f"bgroup={i}"), c.n_buckets,
+        )
+
+
+def _merge_termstats_local(src_dirs, p: dict, cfg: IndexConfig) -> None:
+    """termstats of the merged postings, term strings from the sources'
+    termstats."""
+    shutil.rmtree(p["termstats"], ignore_errors=True)
+    ts = arrow_schema(TERMSTATS_SCHEMA)
+    vocab = pa.concat_tables(
+        [_read_local(os.path.join(d, "termstats"), ts) for d in src_dirs]
+    )
+    ids, first = np.unique(vocab["term_id"].to_numpy(), return_index=True)
+    posts = _read_local(p["postings"], arrow_schema(SLICE_STATS_SCHEMA))
+    _write_bucketed(
+        _termstats_table(posts, ids, vocab["term"].take(first)),
+        p["termstats"], cfg.n_buckets,
+    )
+
+
 def merge_indexes(
     spark: SparkSession,
     src_dirs: list[str],
@@ -236,7 +401,12 @@ def merge_indexes(
                 f"{d}: cannot drop docs from a fields index — docmeta stores "
                 "no per-field lengths, so fields_json cannot be recomputed"
             )
-    gone = _dropped_docs(spark, src_dirs, drops)
+    # small merges run on the driver: same kernel, pyarrow reads/writes
+    local = sum(int(s["n_docs"]) for s in stats) < build.LOCAL_DOCS
+    gone = (
+        _dropped_docs_local(src_dirs, drops) if local
+        else _dropped_docs(spark, src_dirs, drops)
+    )
     n_docs = sum(int(s["n_docs"]) - g[0].size for s, g in zip(stats, gone))
     total_tokens = sum(int(s["total_tokens"]) - g[1] for s, g in zip(stats, gone))
     if n_docs == 0:
@@ -289,63 +459,28 @@ def merge_indexes(
 
     # ---- stage: doc metadata union minus drops + disjointness + stats ----
     if 0 not in ledger.completed("merge_docmeta", fp):
-        dm = None
-        for d, (ids, _) in zip(src_dirs, gone):
-            part = spark.read.parquet(os.path.join(d, "docmeta"))
-            if ids.size:
-                ids_df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}))
-                part = part.join(F.broadcast(ids_df), "doc_id", "left_anti")
-            dm = part if dm is None else dm.unionByName(part)
-        dup = dm.groupBy("doc_id").count().filter(F.col("count") > 1).limit(1).collect()
-        if dup:
-            raise ValueError(
-                f"doc_id {dup[0]['doc_id']} appears in more than one source "
-                "index — merge requires disjoint doc-id spaces"
-            )
-        (
-            dm.repartitionByRange(8, "doc_id")
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .parquet(p["docmeta"])
-        )
+        if local:
+            _merge_docmeta_local(src_dirs, gone, p["docmeta"])
+        else:
+            _merge_docmeta_spark(spark, src_dirs, gone, p["docmeta"])
         _write_stats(out_dir, merged_stats)
         ledger.commit("merge_docmeta", 0, token_count=total_tokens, input_fingerprint=fp)
 
     # ---- stage: posting union, drops applied, exact bounds (no shuffle) ----
     if 0 not in ledger.completed("merge_postings", fp):
-        posts = None
-        for i, (d, c, (ids, _)) in enumerate(zip(src_dirs, cfgs, gone)):
-            # collapse each source's bucket-groups into one bgroup id per
-            # source: the dir level is only a physical grouping, and a
-            # stable per-source id keeps the merged layout deterministic
-            src = spark.read.parquet(os.path.join(d, "postings")).withColumn(
-                "bgroup", F.lit(i).cast("int")
-            )
-            # dropped postings re-encode in their own source's codec
-            part = src.mapInPandas(fold_fn(ids, avgdl, c), schema=src.schema)
-            posts = part if posts is None else posts.unionByName(part)
-        (
-            # narrow local sort only — input files are term_id-sorted and
-            # never shuffled, this just restores per-output-file order when
-            # a task coalesced several small input files
-            posts.sortWithinPartitions("bgroup", "term_bucket", "term_id")
-            .write.mode("overwrite")
-            .option("parquet.block.size", 1 << 20)
-            .partitionBy("bgroup", "term_bucket")
-            .parquet(p["postings"])
-        )
+        if local:
+            _merge_postings_local(src_dirs, cfgs, gone, avgdl, p["postings"])
+        else:
+            _merge_postings_spark(spark, src_dirs, cfgs, gone, avgdl, p["postings"])
         ledger.commit("merge_postings", 0, input_fingerprint=fp)
 
     # ---- stage: global termstats; term strings from the sources'
     # termstats (terms whose postings all dropped vanish in its join) ----
     if 0 not in ledger.completed("termstats", fp):
-        terms = None
-        for d in src_dirs:
-            part = spark.read.parquet(os.path.join(d, "termstats")).select(
-                "term", "term_id"
-            )
-            terms = part if terms is None else terms.unionByName(part)
-        _write_termstats(spark, p, base, terms.dropDuplicates(["term_id"]))
+        if local:
+            _merge_termstats_local(src_dirs, p, base)
+        else:
+            _merge_termstats_spark(spark, src_dirs, p, base)
         ledger.commit("termstats", 0, input_fingerprint=fp)
 
     ledger.commit("finalize", 0, input_fingerprint=fp)

@@ -38,7 +38,7 @@ def tokenize_positions_arrow(texts: pd.Series):
     from .codec import varint_encode_arr
 
     pa.set_cpu_count(1)
-    arr = pa.Array.from_pandas(texts.astype("object"))
+    arr = pa.Array.from_pandas(texts.astype("object"), type=pa.string())
     cleaned = pc.replace_substring_regex(
         pc.utf8_lower(arr), pattern="[^a-z0-9]+", replacement=" "
     )
@@ -87,6 +87,28 @@ def tokenize_positions_arrow(texts: pd.Series):
     return owners, terms, tfs, lens, pos_blobs
 
 
+def tokens_frame(doc_ids: np.ndarray, texts: pd.Series, positions: bool) -> pd.DataFrame:
+    """One batch of docs → its token rows (doc_id, term, tf, dl[,
+    pos_blob]): the body of every token stage, run per Arrow batch by the
+    Spark stages' mapInPandas and once over the whole batch by the
+    driver build (index/build.py)."""
+    if positions:
+        owners, terms, tfs, lens, blobs = tokenize_positions_arrow(texts)
+        extra = {"pos_blob": blobs}
+    else:
+        owners, terms, tfs, lens = tokenize_counts_arrow(texts)
+        extra = {}
+    return pd.DataFrame(
+        {
+            "doc_id": doc_ids[owners],
+            "term": terms,
+            "tf": tfs.astype("int32"),
+            "dl": lens[owners].astype("int32"),
+            **extra,
+        }
+    )
+
+
 def with_doc_id(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
     """Filter to the indexed language and assign stable docIDs (JVM-side).
 
@@ -109,6 +131,14 @@ def range_id_col(cfg: IndexConfig, doc_id_col: str = "doc_id"):
     ).cast("int")
 
 
+def range_ids(doc_ids: np.ndarray, range_bits: int) -> np.ndarray:
+    """:func:`range_id_col` over a numpy docID array (>> is arithmetic
+    on int64, as Spark's shiftright is on a long)."""
+    if range_bits == 0:
+        return np.zeros(doc_ids.size, dtype=np.int32)
+    return ((doc_ids >> (64 - range_bits)) + (1 << (range_bits - 1))).astype(np.int32)
+
+
 def tokenize_stage(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
     """pages(url, html, lang) → tokens(doc_id, term, tf, dl[, pos_blob])."""
     src = with_doc_id(pages, cfg).select("doc_id", "html")
@@ -116,29 +146,9 @@ def tokenize_stage(pages: DataFrame, cfg: IndexConfig) -> DataFrame:
 
     def fn(batches):
         for b in batches:
-            texts = extract_text_series(b["html"])
-            doc_ids = b["doc_id"].to_numpy()
-            if positions:
-                owners, terms, tfs, lens, blobs = tokenize_positions_arrow(texts)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": doc_ids[owners],
-                        "term": terms,
-                        "tf": tfs.astype("int32"),
-                        "dl": lens[owners].astype("int32"),
-                        "pos_blob": blobs,
-                    }
-                )
-            else:
-                owners, terms, tfs, lens = tokenize_counts_arrow(texts)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": doc_ids[owners],
-                        "term": terms,
-                        "tf": tfs.astype("int32"),
-                        "dl": lens[owners].astype("int32"),
-                    }
-                )
+            yield tokens_frame(
+                b["doc_id"].to_numpy(), extract_text_series(b["html"]), positions
+            )
 
     return src.mapInPandas(
         fn, schema=TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA
@@ -205,28 +215,7 @@ def tokenize_stage_text(
 
     def fn(batches):
         for b in batches:
-            doc_ids = b["doc_id"].to_numpy()
-            if positions:
-                owners, terms, tfs, lens, blobs = tokenize_positions_arrow(b["text"])
-                yield pd.DataFrame(
-                    {
-                        "doc_id": doc_ids[owners],
-                        "term": terms,
-                        "tf": tfs.astype("int32"),
-                        "dl": lens[owners].astype("int32"),
-                        "pos_blob": blobs,
-                    }
-                )
-            else:
-                owners, terms, tfs, lens = tokenize_counts_arrow(b["text"])
-                yield pd.DataFrame(
-                    {
-                        "doc_id": doc_ids[owners],
-                        "term": terms,
-                        "tf": tfs.astype("int32"),
-                        "dl": lens[owners].astype("int32"),
-                    }
-                )
+            yield tokens_frame(b["doc_id"].to_numpy(), b["text"], positions)
 
     return src.mapInPandas(
         fn, schema=TOKENS_POS_SCHEMA if positions else TOKENS_SCHEMA

@@ -79,7 +79,7 @@ def tokenize_counts_arrow(texts: pd.Series):
     import pyarrow.compute as pc
 
     pa.set_cpu_count(1)  # one core per Spark worker; no nested pools
-    arr = pa.Array.from_pandas(texts.astype("object"))
+    arr = pa.Array.from_pandas(texts.astype("object"), type=pa.string())
     cleaned = pc.replace_substring_regex(
         pc.utf8_lower(arr), pattern="[^a-z0-9]+", replacement=" "
     )

@@ -101,3 +101,40 @@ def full_decode(monkeypatch):
             monkeypatch.setattr(scoring, "decode_slice_lazy", real)
 
     return cm
+
+
+@pytest.fixture
+def spark_route(monkeypatch):
+    """Context manager factory: inside it, every one-shot build and every
+    merge takes the Spark route (``build.LOCAL_DOCS`` = 0), whatever its
+    size — the reference the driver route must equal."""
+    from contextlib import contextmanager
+
+    from data_prepper_spark.index import build
+
+    @contextmanager
+    def cm():
+        with monkeypatch.context() as m:
+            m.setattr(build, "LOCAL_DOCS", 0)
+            yield
+
+    return cm
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``spark_jobs(fn)``: the Spark jobs started while *fn* runs, counted
+    from the status tracker's job ids (the listener bus drained before
+    each read)."""
+    sc = spark.sparkContext
+
+    def ids():
+        sc._jsc.sc().listenerBus().waitUntilEmpty(60_000)
+        return set(sc.statusTracker().getJobIdsForGroup(None))
+
+    def count(fn) -> int:
+        before = ids()
+        fn()
+        return len(ids() - before)
+
+    return count

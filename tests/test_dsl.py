@@ -82,6 +82,29 @@ def test_dsl_filter_context(spark, pos_dir):
     assert [d for d, _ in ma] == sorted(d for d, _ in ma)
 
 
+def test_dsl_match_all_skips_tombstones(workdir, pos_dir):
+    """match_all lists live docs only: on a tombstoned copy, the lowest
+    live doc_ids, and every live doc when ``size`` exceeds the live
+    count."""
+    import shutil
+
+    from data_prepper_spark.index.deletes import delete_docs
+
+    tomb = os.path.join(workdir, "index_dsl_pos_tomb")
+    shutil.rmtree(tomb, ignore_errors=True)
+    shutil.copytree(pos_dir, tomb)
+    ids = sorted(d for d, _ in search_dsl(
+        BM25Searcher(None, tomb), {"query": {"match_all": {}}, "size": 10**6}))
+    dead = set(ids[:3] + ids[5::4])
+    delete_docs(tomb, sorted(dead))
+    s = BM25Searcher(None, tomb)
+    live = [i for i in ids if i not in dead]
+    assert search_dsl(s, {"query": {"match_all": {}}, "size": 5}) == \
+        [(i, 1.0) for i in live[:5]]
+    every = search_dsl(s, {"query": {"match_all": {}}, "size": len(ids) + 10})
+    assert every == [(i, 1.0) for i in live]
+
+
 def test_dsl_positional_and_expansions(spark, pos_dir):
     from data_prepper_spark.index.boolquery import (
         search_fuzzy,

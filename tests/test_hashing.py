@@ -21,3 +21,23 @@ def test_matches_spark_xxhash64(spark):
     for r in df.collect():
         assert xxh64_signed(r["s"]) == r["h"], r["s"]
         assert pmod(xxh64_signed(r["s"]), 16) == r["b"], r["s"]
+
+
+def test_arrow_batch_matches_spark_xxhash64(spark):
+    """The vectorized hash equals Spark's on every length class: the
+    32-byte stripe loop, 8/4/1-byte tails, empty and non-ASCII."""
+    import random
+
+    import pyarrow as pa
+
+    from data_prepper_spark.hashing import xxh64_signed_arrow
+
+    rnd = random.Random(7)
+    vals = ["", "üñïçødé ✓", "x" * 31, "y" * 32, "z" * 100] + [
+        "".join(rnd.choice("abcxyz019") for _ in range(n)) for n in range(70)
+    ]
+    got = xxh64_signed_arrow(pa.array(vals)).tolist()
+    want = [r["h"] for r in spark.createDataFrame([(v,) for v in vals], "s string")
+            .select(F.xxhash64("s").alias("h")).collect()]
+    assert got == want
+    assert xxh64_signed_arrow(pa.array(vals).slice(3, 9)).tolist() == want[3:12]

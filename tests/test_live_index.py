@@ -309,8 +309,9 @@ def test_fold_never_collects_base_docmeta(spark, workdir, monkeypatch):
     """Scale invariant of the upsert/merge path: _fold must never collect
     the BASE index's docmeta to the driver (at 10^12 docs that is ~TBs of
     int64).  Only batch-bounded DELTA docsets may be collected; the
-    base's superseded set is computed Spark-side (semi-join against the
-    broadcast drop set) inside merge_indexes."""
+    base's superseded set is computed inside merge_indexes (Spark-side,
+    a semi-join against the broadcast drop set, unless the whole fold is
+    small enough for its driver route)."""
     from data_prepper_spark.index import live
     from data_prepper_spark.index.build import build_oneshot_text
 
