@@ -271,6 +271,23 @@ def _py(v):
     return v.item() if hasattr(v, "item") else v
 
 
+def _has_value(vals: np.ndarray):
+    """Mask of the docs that hold a value of a docvalue column, or None
+    when all do.  A nullable string column reads as an object array with
+    None for a missing value; aggregations skip those docs and sort puts
+    them last, as OpenSearch does."""
+    if vals.dtype != object:
+        return None
+    has = pd.notna(vals)
+    return None if has.all() else has
+
+
+def _present(vals: np.ndarray) -> np.ndarray:
+    """*vals* without its missing values."""
+    has = _has_value(vals)
+    return vals if has is None else vals[has]
+
+
 def pa_filter_expr(filters):
     """[(col, op, val), …] → pyarrow dataset expression (AND of all)."""
     expr = None
@@ -591,16 +608,28 @@ def search_sorted(
     Driver mode reads the (doc_id, field) docvalues columns wholesale —
     the ms-latency path for sandbox-scale indexes.  Distributed mode
     cogroups per docID range (field values never leave their range
-    partition) and is the web-scale path."""
+    partition) and is the web-scale path.  Docs without a value sort
+    last, by doc_id, in either direction (OpenSearch's ``missing:
+    _last``)."""
+    def partial(d, cols):
+        vals = cols[0]
+        has = _has_value(vals)
+        if has is None:
+            return _topk_by_field(d, vals, k, ascending)
+        top_d, top_v = _topk_by_field(d[has], vals[has], k, ascending)
+        n_miss = k - top_d.size  # docs without a value follow, doc_id ASC
+        return (np.concatenate([top_d, d[~has][:n_miss]]),
+                np.concatenate([top_v, vals[~has][:n_miss]]))
+
     got = _match_set(
-        searcher, query_text, [sort_field], filters,
-        lambda d, cols: _topk_by_field(d, cols[0], k, ascending),
-        distributed, schema=lambda t: f"doc_id long, sort_v {t[0]}",
+        searcher, query_text, [sort_field], filters, partial, distributed,
+        schema=lambda t: f"doc_id long, sort_v {t[0]}",
     )
     if got is None:
         return []
     if distributed:
-        direction = F.asc("sort_v") if ascending else F.desc("sort_v")
+        direction = (F.asc_nulls_last("sort_v") if ascending
+                     else F.desc_nulls_last("sort_v"))
         out = got.orderBy(direction, F.asc("doc_id")).limit(k).collect()
         return [(int(r["doc_id"]), r["sort_v"]) for r in out]
     return [(int(d), _py(v)) for d, v in zip(*got)]
@@ -1277,11 +1306,12 @@ def match_value_hist(
     them per value — cost bounded by the FIELD CARDINALITY, not the
     match count (the OpenSearch analog computes stats/t-digest sketches
     per shard; an exact value histogram is the strictly-stronger partial
-    for bounded-cardinality docvalues)."""
+    for bounded-cardinality docvalues).  Docs without a value are
+    skipped."""
     got = _match_set(
         searcher, query_text, [field], filters,
-        lambda d, cols: np.unique(cols[0], return_counts=True), distributed,
-        schema=lambda t: f"v {t[0]}, n long",
+        lambda d, cols: np.unique(_present(cols[0]), return_counts=True),
+        distributed, schema=lambda t: f"v {t[0]}, n long",
     )
     if got is None:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.int64)
@@ -1478,6 +1508,8 @@ def _fold_terms_stats(keys, vals):
     else:
         s = np.zeros(uniq.size, dtype=np.float64)
     np.add.at(s, inv, vals)
+    if not vals.size:
+        return uniq, n, s, vals, vals
     mn = np.full(uniq.size, vals.max())
     np.minimum.at(mn, inv, vals)
     mx = np.full(uniq.size, vals.min())
@@ -1496,8 +1528,13 @@ def _bucket_stats(
     *key_type* is then the bucket's Spark type."""
 
     def partial(d, cols):
-        keys = cols[0] if key_bucketer is None else key_bucketer(cols[0])
-        return _fold_terms_stats(keys, cols[1])
+        keys, vals = cols
+        has = _has_value(keys)  # a doc without a key joins no bucket
+        if has is not None:
+            keys, vals = keys[has], vals[has]
+        if key_bucketer is not None:
+            keys = key_bucketer(keys)
+        return _fold_terms_stats(keys, vals)
 
     def schema(t):
         s_t = ("bigint" if t[1] in ("bigint", "int", "smallint", "tinyint")
@@ -1545,7 +1582,8 @@ def match_agg_significant_terms(
     rank by (score DESC, bucket ASC).  Returns (bucket, score_e6, fg_n,
     bg_n).  The foreground is the terms aggregation; distributed mode
     takes the background from one docmeta groupBy — only (value, count)
-    pairs cross the shuffle."""
+    pairs cross the shuffle.  Docs without a value of *field* belong to
+    neither set."""
     fg = dict(match_agg_terms(searcher, query_text, field, filters,
                               distributed))
     if not fg:
@@ -1559,7 +1597,8 @@ def match_agg_significant_terms(
                 ~F.col("doc_id").isin([int(d) for d in searcher.deleted])
             )
         bg_rows = (
-            meta.groupBy(F.col(field).alias("v"))
+            meta.filter(F.col(field).isNotNull())
+            .groupBy(F.col(field).alias("v"))
             .agg(F.count("*").alias("n"))
             .collect()
         )
@@ -1571,7 +1610,7 @@ def match_agg_significant_terms(
             meta_vals = meta_vals[live]
         bg = {
             _py(u): int(c)
-            for u, c in zip(*np.unique(meta_vals, return_counts=True))
+            for u, c in zip(*np.unique(_present(meta_vals), return_counts=True))
         }
     f_tot = sum(fg.values())
     b_tot = sum(bg.values())

@@ -128,17 +128,23 @@ def apply_batch(
     accumulate on disk and one N-WAY merge folds base + k deltas at
     once — per-batch base-rewrite cost drops k×, at the price of up to
     k-1 batches of visibility lag.  Call :func:`compact` to fold any
-    pending deltas immediately (e.g. after an availableNow drain)."""
+    pending deltas immediately (e.g. after an availableNow drain).
+
+    A batch that indexes no doc (no rows, or none in the indexed
+    language) advances the batch watermark and publishes no version; as
+    the first batch it creates nothing."""
     cur = _read_current(index_dir)
     if cur is not None and batch_id <= cur[1]:
         return  # replayed batch — already committed
-    if batch_df.isEmpty():
+    delta = os.path.join(index_dir, "_delta", f"batch={batch_id}")
+    shutil.rmtree(delta, ignore_errors=True)  # partial replay leftovers
+    # the build's one collect already sees the rows: its n_docs decides
+    # emptiness, with no Spark job of its own
+    if builder(spark, batch_df, delta, cfg)["n_docs"] == 0:
+        shutil.rmtree(delta, ignore_errors=True)
         if cur is not None:
             _write_current(index_dir, cur[0], batch_id)
         return
-    delta = os.path.join(index_dir, "_delta", f"batch={batch_id}")
-    shutil.rmtree(delta, ignore_errors=True)  # partial replay leftovers
-    builder(spark, batch_df, delta, cfg)
     os.makedirs(index_dir, exist_ok=True)
     cur = _read_current(index_dir)
     if cur is None and merge_every <= 1:

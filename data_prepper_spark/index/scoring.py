@@ -6,9 +6,11 @@ Two strategies over decoded posting slices:
   docIDs (the correctness anchor).
 - ``score_bmw``: block-max pruning — segments the docID space at every
   term's block boundary, upper-bounds each segment by Σ idf·block_ub,
-  processes segments in descending bound order and stops when the bound
-  falls below the running top-k threshold. Exact top-k (prune is strict
-  ``<`` so score ties, broken by doc_id ASC, are never lost).
+  scores segments in descending bound order, in batches of 1, 2, 4, …
+  (one read per chain, one ``score_brute`` pass and one threshold update
+  per batch), and stops at the first segment whose bound falls below the
+  running top-k threshold. Exact top-k (prune is strict ``<`` so score
+  ties, broken by doc_id ASC, are never lost).
 
 A query is ONE pass: ``score_bmw`` takes the slices of every docID range
 at once, lazy or decoded, and groups each term's slices into chains of
@@ -17,7 +19,8 @@ never by range_id (:func:`_chain_groups`) — so one threshold prunes the
 whole docID space.  Lazy slices read blocks through stream objects that
 promote themselves to a memoized full decode once their cumulative reads
 reach the stream length (:class:`_Stream`), so a warm searcher stops
-re-decoding hot terms.
+re-decoding hot terms; a chain whose members are all memo-backed reads a
+batch's segments out of one concatenated array (:meth:`_Chain.spans_values`).
 
 Every query family reads postings the same way: one block-lazy
 :class:`TermView` per term (:func:`term_views`) holds that term's slices
@@ -60,8 +63,9 @@ from .codec import (
 
 class _Stream:
     """Random-access view of one tagged value stream of ``n`` values, with
-    the hot-promotion rule every read shares (``decode_range`` for BMW
-    segment reads, ``gather`` for conjunctive block reads).
+    the hot-promotion rule every read shares (``gather`` for block reads —
+    BMW segment batches and conjunctive candidates — and ``decode_range``
+    for a slice's last block).
 
     Promotion (amortized 2×): each read adds its value count to a
     per-stream counter.  Once the cumulative count reaches ``n``, or one
@@ -225,10 +229,6 @@ class TermSlice:
     def last_doc(self) -> int:
         return int(self.doc_ids[-1])
 
-    def segment_values(self, lo: int, hi: int):
-        a, z = np.searchsorted(self.doc_ids, [lo, hi], side="left")
-        return self.doc_ids[a:z], self.tfs[a:z], self.dls[a:z]
-
     def to_term_slice(self) -> TermSlice:
         return self
 
@@ -323,26 +323,6 @@ class LazySlice:
             va = (self.block_firsts.size - 1) * self.block_size
             d._last = int(self._ids_range(va, self.n)[-1])
         return d._last
-
-    def segment_values(self, lo: int, hi: int):
-        """(doc_ids, tfs, dls) for postings with lo <= docID < hi —
-        decodes only the covering blocks of each stream."""
-        bs = self.block_size
-        lo_b = int(np.searchsorted(self.block_firsts, lo, side="right")) - 1
-        if lo_b < 0:
-            lo_b = 0
-        hi_b = int(np.searchsorted(self.block_firsts, hi, side="left"))
-        va, vz = lo_b * bs, min(hi_b * bs, self.n)
-        if vz <= va:
-            return (np.empty(0, np.int64),) * 3
-        ids = self._ids_range(va, vz)
-        a = int(np.searchsorted(ids, lo, side="left"))
-        z = int(np.searchsorted(ids, hi, side="left"))
-        if z <= a:
-            return (np.empty(0, np.int64),) * 3
-        tfs = self.tf_s.decode_range(va + a, va + z).astype(np.int64)
-        dls = self.dl_s.decode_range(va + a, va + z).astype(np.int64)
-        return ids[a:z], tfs, dls
 
     def covering_blocks(self, cand: np.ndarray) -> np.ndarray:
         """Sorted unique block indices whose docID span may contain any of
@@ -555,12 +535,12 @@ def _chain_groups(slices: list) -> list[list]:
 
 class _Chain:
     """A chain of slices read as one slice by :func:`score_bmw`:
-    concatenated block metadata for the segment upper bounds, and each
-    segment read from the one member that can hold it (every member's
-    first docID is a segment bound, so no segment straddles two)."""
+    concatenated block metadata for the segment upper bounds, and a batch
+    of segments read in one go (:meth:`spans_values`).  Every member's
+    first docID is a segment bound, so no segment straddles two members."""
 
     __slots__ = ("parts", "term", "idf", "avgdl", "block_firsts",
-                 "block_ubs", "block_lasts", "_firsts")
+                 "block_ubs", "block_lasts", "_firsts", "_memo")
 
     def __init__(self, parts: list):
         self.parts = parts
@@ -573,10 +553,75 @@ class _Chain:
             [p.last_doc() for p in parts], [p.block_firsts.size for p in parts]
         )
         self._firsts = np.array([int(p.block_firsts[0]) for p in parts])
+        self._memo = None
 
-    def segment_values(self, lo: int, hi: int):
-        j = int(np.searchsorted(self._firsts, lo, side="right")) - 1
-        return self.parts[max(j, 0)].segment_values(lo, hi)
+    def _memo_arrays(self):
+        """(doc_ids, tfs, dls) of the whole chain as one array each, once
+        every member is memo-backed (a decoded TermSlice, or a LazySlice
+        whose three streams are promoted); None before that.  Concatenated
+        once per query: members are disjoint and in docID order."""
+        if self._memo is None:
+            if not all(isinstance(p, TermSlice) or (
+                p.doc_s._all is not None and p.tf_s._all is not None
+                and p.dl_s._all is not None
+            ) for p in self.parts):
+                return None
+            ts = [p.to_term_slice() for p in self.parts]
+            cols = ([t.doc_ids for t in ts], [t.tfs for t in ts], [t.dls for t in ts])
+            self._memo = tuple(c[0] if len(c) == 1 else np.concatenate(c)
+                               for c in cols)
+        return self._memo
+
+    def spans_values(self, lo: np.ndarray, hi: np.ndarray):
+        """(doc_ids, tfs, dls) of the postings inside the disjoint, sorted
+        docID spans [lo[i], hi[i]), in docID order.  A memo-backed chain
+        slices its one array; otherwise each member that holds a span
+        reads its covering blocks in one gathered decode per stream."""
+        memo = self._memo_arrays()
+        if memo is not None:
+            return _take_spans(*memo, lo, hi)
+        j = np.maximum(np.searchsorted(self._firsts, lo, side="right") - 1, 0)
+        cuts = (np.flatnonzero(np.diff(j)) + 1).tolist()
+        out = [
+            _member_spans(self.parts[int(j[a])], lo[a:z], hi[a:z])
+            for a, z in zip([0] + cuts, cuts + [j.size])
+        ]
+        if len(out) == 1:
+            return out[0]
+        return tuple(np.concatenate(c) for c in zip(*out))
+
+
+def _take_spans(ids, tfs, dls, lo, hi):
+    """The [lo[i], hi[i]) docID spans of sorted *ids* and its aligned
+    columns, concatenated: two searchsorted calls and one gather."""
+    a = np.searchsorted(ids, lo, side="left")
+    z = np.searchsorted(ids, hi, side="left")
+    if a.size == 1:
+        a, z = int(a[0]), int(z[0])
+        return ids[a:z], tfs[a:z], dls[a:z]
+    n = z - a
+    idx = np.arange(int(n.sum())) + np.repeat(a - (np.cumsum(n) - n), n)
+    return ids[idx], tfs[idx], dls[idx]
+
+
+def _member_spans(p, lo, hi):
+    """One chain member's postings inside the sorted docID spans
+    [lo[i], hi[i]): a decoded member slices its arrays, a lazy one decodes
+    the blocks covering the spans (:meth:`LazySlice.block_values`) and
+    keeps the postings inside them."""
+    if isinstance(p, TermSlice):
+        return _take_spans(p.doc_ids, p.tfs, p.dls, lo, hi)
+    bf = p.block_firsts
+    first_b = np.maximum(np.searchsorted(bf, lo, side="right") - 1, 0)
+    end_b = np.searchsorted(bf, hi, side="left")
+    nb = bf.size
+    # blocks inside any [first_b, end_b) run: a +1/-1 sweep over the blocks
+    depth = np.cumsum(np.bincount(first_b, minlength=nb + 1)
+                      - np.bincount(end_b, minlength=nb + 1))[:nb]
+    ids, tfs, dls = p.block_values(np.flatnonzero(depth > 0))
+    at = np.searchsorted(lo, ids, side="right") - 1
+    keep = (at >= 0) & (ids < hi[np.maximum(at, 0)])
+    return ids[keep], tfs[keep], dls[keep]
 
 
 class TermView:
@@ -740,10 +785,14 @@ def mask_term_slice(s: TermSlice, deleted: np.ndarray) -> TermSlice:
                      s.block_firsts, s.block_ubs, avgdl=s.avgdl)
 
 
-# Pruning-convergence guard of score_bmw: after this many scored
-# segments without the threshold beating the remaining upper bounds, the
-# kernel concedes and finishes with one exact brute pass (decode memos make
-# the concession cheap for hot slices).  Tunable for measurement.
+# Pruning-convergence guard of score_bmw, checked between segment
+# batches: once at least this many segments are scored without the
+# threshold beating the remaining upper bounds, the kernel concedes and
+# finishes with one exact brute pass (decode memos make the concession
+# cheap for hot slices).  The batches double, so a call scores at most
+# 2·BMW_MAX_SEG − 1 segments (31) before it concedes.  Keep the guard:
+# without it a non-converging query gathers scattered lazy blocks, which
+# costs more than one vectorized full decode.  Tunable for measurement.
 BMW_MAX_SEG = 16
 
 
@@ -764,15 +813,26 @@ def score_bmw(
     theta0: float = -np.inf,
     deny: np.ndarray | None = None,
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Block-max top-k in ONE pass over the slices of any docID ranges.
+    """Block-max top-k in ONE call over the slices of any docID ranges.
     Exact (score DESC, doc_id ASC).  Slices are LazySlices (block-lazy
     decode: only the blocks of scored segments are read) or decoded
     TermSlices; either way they
     are grouped into chains (:func:`_chain_groups`), so a query scores its
     whole docID space on one segment grid under one running threshold.
     Lazy and eager decodes of the same slices give identical output;
-    pinned by tests/test_index_build.py::test_lazy_bmw_identity and
-    ::test_one_pass_bmw_identity.
+    pinned by tests/test_index_build.py::test_lazy_bmw_identity,
+    ::test_one_pass_bmw_identity and tests/test_bmw_properties.py.
+
+    Batches: segments are taken in descending bound order, 1, 2, 4, 8, …
+    at a time, so the interpreter cost is paid per batch, not per
+    segment.  A batch drops its segments whose bound is below theta
+    (a suffix: bounds descend), then makes one read per chain over the
+    batch's docID spans, one ``score_brute`` pass and one theta update.
+    The loop stops at the first segment whose bound is below theta, so
+    every unscored segment's bound is strictly below the final theta
+    and the top-k, ties included, is the one a segment-at-a-time loop
+    finds.  A call of S scored segments makes at most ⌈log2(S+1)⌉
+    passes.
 
     ``theta0``: an externally-known lower bound on the global k-th score
     (WAND across index segments — a family searcher carries the running
@@ -799,56 +859,49 @@ def score_bmw(
     makes EVERY segment's upper bound exceed theta (the rare term's few
     wide blocks overlap the whole grid), so the segment loop degenerates
     to per-segment Python overhead × ~1k segments (measured 2-5 s per
-    query at 1M docs).  After BMW_MAX_SEG segments without a break, exact
-    brute scoring in ONE vectorized pass is strictly cheaper (~ms) —
-    output is identical either way (both paths score exactly; only the
-    pruning strategy differs)."""
+    query at 1M docs).  Once BMW_MAX_SEG segments are scored without a
+    break (checked between batches), exact brute scoring in ONE
+    vectorized pass is strictly cheaper (~ms) — output is identical
+    either way (both paths score exactly; only the pruning strategy
+    differs)."""
+    empty = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     slices = [s for s in slices if s.n]
     if not slices:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        return empty
     chains = [_Chain(c) for c in _chain_groups(slices)]
     bounds = np.unique(np.concatenate([c.block_firsts for c in chains]))
     n_seg = bounds.size
     seg_ub = np.zeros(n_seg, dtype=np.float64)
+    covers = []  # per chain: the segments it can hold postings in
     for c in chains:
         blk = np.searchsorted(c.block_firsts, bounds, side="right") - 1
         valid = (blk >= 0) & (bounds <= c.block_lasts[np.maximum(blk, 0)])
         contrib = np.zeros(n_seg, dtype=np.float64)
         contrib[valid] = c.idf * c.block_ubs[blk[valid]].astype(np.float64)
         seg_ub += contrib
+        covers.append(valid)
     seg_order = np.argsort(-seg_ub, kind="stable")
+    seg_end = np.append(bounds[1:], np.iinfo(np.int64).max)
 
     got_ids: list[np.ndarray] = []
     got_scores: list[np.ndarray] = []
     n_got = 0
     theta = theta0
-    seg_end = np.append(bounds[1:], np.iinfo(np.int64).max)
-    for n_seen, si in enumerate(seg_order):
-        if seg_ub[si] < theta:
-            break
-        if n_seen >= BMW_MAX_SEG:
-            full = [p.to_term_slice() for c in chains for p in c.parts]
-            if allowed is not None:
-                masked = []
-                for s in full:
-                    keep = _member_sorted(s.doc_ids, allowed)
-                    if keep.any():
-                        masked.append(
-                            TermSlice(
-                                s.term, s.idf, s.doc_ids[keep], s.tfs[keep],
-                                s.dls[keep], s.block_firsts, s.block_ubs,
-                                avgdl=s.avgdl,
-                            )
-                        )
-                full = masked
-            if not full:
-                return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
-            ids, sc = _live(*score_brute(full, k1, b, avgdl), deny)
-            return topk_select(ids, sc, k)
-        lo, hi = bounds[si], seg_end[si]
+    pos, size = 0, 1
+    while pos < n_seg and seg_ub[seg_order[pos]] >= theta:
+        if pos >= BMW_MAX_SEG:
+            return _brute_topk(chains, k1, b, avgdl, k, allowed, deny)
+        batch = seg_order[pos : pos + size]
+        # bounds descend along seg_order: the live part is a prefix
+        batch = np.sort(batch[: int(np.count_nonzero(seg_ub[batch] >= theta))])
+        pos += batch.size
+        size *= 2
         sub = []
-        for c in chains:
-            ids, tfs, dls = c.segment_values(int(lo), int(hi))
+        for c, cov in zip(chains, covers):
+            sel = batch[cov[batch]]
+            if not sel.size:
+                continue
+            ids, tfs, dls = c.spans_values(bounds[sel], seg_end[sel])
             if allowed is not None and ids.size:
                 keep = _member_sorted(ids, allowed)
                 ids, tfs, dls = ids[keep], tfs[keep], dls[keep]
@@ -867,8 +920,31 @@ def score_bmw(
             allsc = np.concatenate(got_scores)
             theta = max(theta, np.partition(-allsc, k - 1)[k - 1] * -1.0)
     if not got_ids:
-        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+        return empty
     return topk_select(np.concatenate(got_ids), np.concatenate(got_scores), k)
+
+
+def _brute_topk(chains, k1, b, avgdl, k, allowed, deny):
+    """score_bmw's concession: exact top-k of every posting of *chains*
+    in one brute pass (the decode memos make it cheap for hot slices)."""
+    full = [p.to_term_slice() for c in chains for p in c.parts]
+    if allowed is not None:
+        masked = []
+        for s in full:
+            keep = _member_sorted(s.doc_ids, allowed)
+            if keep.any():
+                masked.append(
+                    TermSlice(
+                        s.term, s.idf, s.doc_ids[keep], s.tfs[keep],
+                        s.dls[keep], s.block_firsts, s.block_ubs,
+                        avgdl=s.avgdl,
+                    )
+                )
+        full = masked
+    if not full:
+        return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
+    ids, sc = _live(*score_brute(full, k1, b, avgdl), deny)
+    return topk_select(ids, sc, k)
 
 
 def idf_value(n_docs: int, df: int) -> float:

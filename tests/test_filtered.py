@@ -951,6 +951,52 @@ def _agg_matched(oracle_tiny, query_text="the data"):
     return matched
 
 
+def test_nullable_string_docvalue(spark, agg_index, oracle_tiny, tiny_pages_pd):
+    """Aggregations and sort over a docvalue with missing values
+    (agg_index's nullable string ``alt``): driver == distributed, and
+    missing values are skipped as OpenSearch does — each aggregation
+    equals its form over the docs that hold a value (an ``exists``
+    filter) — while sort ranks docs without a value last, by doc_id."""
+    from collections import Counter
+
+    from data_prepper_spark.index import filtered as fl
+
+    q, has = "the data", [("alt", "exists", None)]
+    alt = {xxh64_signed(r.url): r.lang if len(r.text) % 3 else None
+           for r in tiny_pages_pd.itertuples(index=False)}
+    matched = _agg_matched(oracle_tiny)
+    missing = sorted(d for d in matched if alt[d] is None)
+    assert missing and len(missing) < len(matched)
+    s = BM25Searcher(spark, agg_index)
+    entries = {
+        "terms": lambda f, d: fl.match_agg_terms(s, q, "alt", f, d),
+        "cardinality": lambda f, d: fl.match_agg_cardinality(s, q, "alt", f, d),
+        "value_hist": lambda f, d: [
+            a.tolist() for a in fl.match_value_hist(s, q, "alt", f, d)],
+        "terms_stats": lambda f, d: fl.match_agg_terms_stats(
+            s, q, "alt", "n_chars", f, d),
+        "significant_terms": lambda f, d: fl.match_agg_significant_terms(
+            s, q, "alt", 5, f, d),
+        "string_stats": lambda f, d: fl.match_agg_string_stats(
+            s, q, "alt", f, d),
+    }
+    for name, fn in entries.items():
+        got = fn((), False)
+        assert got == fn((), True), name
+        assert got == fn(has, False), name
+    assert fl.match_agg_terms(s, q, "alt") == sorted(
+        Counter(alt[d] for d in matched if alt[d] is not None).items())
+
+    n_present = len(matched) - len(missing)
+    k = n_present + 3  # reaches into the docs without a value
+    for asc in (True, False):
+        got = fl.search_sorted(s, q, "alt", k, asc)
+        assert got == fl.search_sorted(s, q, "alt", k, asc, distributed=True)
+        present = fl.search_sorted(s, q, "alt", k, asc, filters=has)
+        assert len(present) == n_present
+        assert got == present + [(d, None) for d in missing[:3]]
+
+
 def test_match_agg_boxplot(spark, agg_index, oracle_tiny, tiny_pages_pd):
     """boxplot: min / nearest-rank quartiles / max — driver ==
     distributed == a direct sorted-list oracle."""

@@ -210,7 +210,8 @@ def test_live_sequence_routes_identical(spark, spark_route, workdir):
 
 def test_small_batch_spark_jobs(spark, spark_jobs, workdir, pages):
     """Below the crossover a whole apply_batch — delta build and fold —
-    starts at most two Spark jobs: the emptiness check and the collect."""
+    starts at most one Spark job: the build's collect, whose row count
+    also decides whether the batch is empty."""
     import functools
 
     out = os.path.join(workdir, "local_route_jobs")
@@ -223,4 +224,35 @@ def test_small_batch_spark_jobs(spark, spark_jobs, workdir, pages):
     assert os.path.basename(resolve_current(out)) == "v=1"
     assert BM25Searcher(None, resolve_current(out)).n_docs == 900
     print(f"below-crossover apply_batch spark jobs: {jobs}")
-    assert jobs <= 2
+    assert jobs <= 1
+
+
+@pytest.mark.parametrize("route", ["local", "spark"])
+def test_empty_batch_publishes_nothing(spark, spark_route, workdir, pages, route):
+    """A batch that indexes no doc — no rows, or no page in the indexed
+    language — advances the watermark and publishes no version; as the
+    first batch it creates no v=0; a replay of a committed batch id is
+    skipped.  On both build routes."""
+    from contextlib import nullcontext
+
+    from data_prepper_spark.index.live import _read_current
+
+    out = os.path.join(workdir, f"local_route_empty_{route}")
+    shutil.rmtree(out, ignore_errors=True)
+    none = pages.limit(0)
+    foreign = pages.withColumn("lang", F.lit("xx"))
+    with spark_route() if route == "spark" else nullcontext():
+        apply_batch(spark, none, 0, out, CFG)
+        assert _read_current(out) is None
+        assert not os.path.exists(os.path.join(out, "v=0"))
+        apply_batch(spark, pages, 1, out, CFG)
+        assert _read_current(out) == (0, 1)
+        n_docs = BM25Searcher(None, resolve_current(out)).n_docs
+        for bid, batch in ((2, none), (3, foreign)):
+            apply_batch(spark, batch, bid, out, CFG)
+            assert _read_current(out) == (0, bid)
+        apply_batch(spark, pages, 3, out, CFG)  # replay: skipped
+        assert _read_current(out) == (0, 3)
+    assert sorted(n for n in os.listdir(out) if n.startswith("v=")) == ["v=0"]
+    assert not os.listdir(os.path.join(out, "_delta"))
+    assert BM25Searcher(None, resolve_current(out)).n_docs == n_docs
